@@ -2,10 +2,8 @@ package graft.core
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.values.bloomfilter.BloomFilter
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -343,7 +341,7 @@ object BloomPruning {
     }
     val loaded: Option[Seq[Option[Prover]]] = {
       footerOpens.incrementAndGet()
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(absPath), conf))
+      val reader = RecordIO.openParquet(absPath, conf)
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
         val perGroup = reader.getFooter.getBlocks.asScala.toSeq.map { block =>

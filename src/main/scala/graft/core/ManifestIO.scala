@@ -5,7 +5,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.statistics.{BinaryStatistics, DoubleStatistics, FloatStatistics, IntStatistics, LongStatistics, Statistics}
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
@@ -147,7 +146,7 @@ object ManifestIO {
     val status = p.getFileSystem(conf).getFileStatus(p)
     val inputFile = HadoopInputFile.fromStatus(status, conf)
     val fileBytes = status.getLen
-    val reader = ParquetFileReader.open(inputFile)
+    val reader = RecordIO.openParquet(inputFile, conf)
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala.toSeq
@@ -340,7 +339,7 @@ object ManifestIO {
       storage: Storage,
       absPath: String,
       conf: Configuration): graft.format.ManifestSummary = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(absPath), conf))
+    val reader = RecordIO.openParquet(absPath, conf)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
       val numFiles = blocks.map(_.getRowCount).sum

@@ -4,12 +4,19 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageTypeParser
+import org.apache.parquet.internal.column.columnindex.OffsetIndex
+import org.apache.parquet.internal.filter2.columnindex.RowRanges
+import org.apache.parquet.io.InputFile
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+import org.apache.parquet.schema.{GroupType, MessageTypeParser}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -29,9 +36,13 @@ import graft.format._
   * flow straight into the distributed index write: a single job, no row
   * through the driver, no staging copy.
   *
-  * Read: addresses are stitched by an equi-join against the record files
-  * keyed by `(file, _metadata.row_index)` — only the record files the
-  * filtered index rows actually reference are opened.
+  * Read: positional stitch. Each index row's address is fetched from its
+  * record file by row position ([[PositionalFile]]): the footer is opened
+  * once per task, the offset index names the page that holds the row,
+  * and only that page is read and decoded ([[RecordCache]] keeps decoded
+  * pages for the rest of the task). Only the record files the filtered
+  * index rows reference are opened, and the read stays one scan of the
+  * index files: no join, no shuffle, no extra job.
   */
 object RecordIO {
 
@@ -130,8 +141,7 @@ object RecordIO {
       spark.sparkContext
         .parallelize(withAbs, math.max(1, math.min(withAbs.size, 32)))
         .map { case (rel, fid, abs) =>
-          val reader = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(abs), serConf.value))
+          val reader = openParquet(abs, serConf.value)
           try {
             val blocks = reader.getFooter.getBlocks.asScala
             (rel, fid, blocks.map(_.getRowCount).sum, blocks.map(_.getTotalByteSize).sum)
@@ -163,9 +173,11 @@ object RecordIO {
   }
 
   /** Stitch record values back into a physical-schema DataFrame
-    * (read.py:155-205: group addresses by file, fetch, restore). The
-    * re-order the reference does with `__RECORD_KEY` falls out of the
-    * join keeping index rows as the probe side. */
+    * (read.py:155-205: fetch each address from its record file by
+    * position). Each record field becomes a deterministic projection
+    * over its address struct, so Catalyst still pushes later filters and
+    * projections into the index scan, and a projection without the field
+    * never opens a record file. Rows keep the index scan's order. */
   def stitch(
       spark: SparkSession,
       storage: Storage,
@@ -173,46 +185,277 @@ object RecordIO {
       fields: Option[Seq[String]]): DataFrame = {
     val wanted = fields.getOrElse(storage.schema.fieldNames.toSeq)
     val present = storage.recordFields.filter(wanted.contains)
+    if (present.isEmpty) return physicalDF
+    // the SESSION's Hadoop conf, for the spark.hadoop.* reason above;
+    // broadcast, not captured: the projection ships inside every task
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf()))
+    val root = new Path(storage.location)
     present.foldLeft(physicalDF) { (df, rf) =>
-      stitchOne(spark, storage, df, rf)
+      // inverse payload codec (base.py:30-108: serializers apply in the
+      // record read path)
+      val fetch = udf(new FetchRecord(root, conf, SerializerRegistry.resolve(storage.schema(rf))))
+      df.withColumn(rf, fetch(col(s"$rf._FILE"), col(s"$rf._ROW_ID")))
     }
   }
 
-  private def stitchOne(spark: SparkSession, storage: Storage, df: DataFrame, rf: String): DataFrame = {
-    // only open record files this (possibly filtered) result references
-    val files = df.select(col(s"$rf._FILE")).na.drop().distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (files.isEmpty)
-      return df.withColumn(rf, lit(null).cast(BinaryType))
+  // ------------------------------------------------- positional reads
 
-    // map each scanned file back to the exact path spelling the address
-    // column uses, via FULL normalized paths (basenames collide for
-    // externally-ingested record files)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val relByKey = DmlOps.relByQualifiedKey(storage, conf, files)
-    val bc = spark.sparkContext.broadcast(relByKey)
-    val toAddressPath = udf((p: String) => bc.value(BitmapCache.normKey(p)))
+  /** Leaf column of a record file. */
+  private[graft] val ValueColumn: Seq[Seq[String]] = Seq(Seq("value"))
 
-    val fileKey = s"__${rf}_file"
-    val rowKey = s"__${rf}_row"
-    // inverse payload codec (base.py:30-108: serializers apply in the
-    // record read path)
-    val ser = SerializerRegistry.resolve(storage.schema(rf))
-    val valueCol =
-      if (SerializerRegistry.isPassthrough(ser)) col("value")
-      else udf((b: Array[Byte]) => if (b == null) null else ser.deserialize(b)).apply(col("value"))
-    val records = spark.read.parquet(files.map(storage.absolute): _*)
-      .select(
-        valueCol.as(s"__${rf}_value"),
-        toAddressPath(col("_metadata.file_path")).as(fileKey),
-        col("_metadata.row_index").cast(IntegerType).as(rowKey))
+  /** Decoded-page budget of one task's [[RecordCache]]: a sixteenth of
+    * the heap, so four concurrent tasks hold at most a quarter. */
+  private[graft] def cacheBytes: Long = Runtime.getRuntime.maxMemory / 16
 
-    df
-      .withColumn(fileKey, col(s"$rf._FILE"))
-      .withColumn(rowKey, col(s"$rf._ROW_ID"))
-      .join(records, Seq(fileKey, rowKey), "left")
-      .withColumn(rf, col(s"__${rf}_value"))
-      .drop(fileKey, rowKey, s"__${rf}_value")
+  private[core] val positionalOpens = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Observability: files opened by [[PositionalFile]] in this JVM
+    * (record files, and index files read by [[RandomAccessReader]]). */
+  private[graft] def positionalFileOpens: Long = positionalOpens.get()
+
+  /** Open a Parquet file with read options built from `conf`.
+    * `ParquetFileReader.open(InputFile)` alone builds a fresh Hadoop
+    * `Configuration` per call and re-parses the XML defaults, which
+    * outweighs reading a small footer; every footer open in the engine
+    * goes through here. */
+  private[graft] def openParquet(file: InputFile, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(file, HadoopReadOptions.builder(conf).build())
+
+  private[graft] def openParquet(absPath: String, conf: Configuration): ParquetFileReader =
+    openParquet(HadoopInputFile.fromPath(new Path(absPath), conf), conf)
+
+  private val taskCaches = new java.util.concurrent.ConcurrentHashMap[(Long, Path), RecordCache]()
+
+  /** The running task's record cache for the table at `root` (addresses
+    * are relative to it), closed when the task completes. */
+  private[core] def taskCache(tc: TaskContext, conf: => Configuration, root: Path): RecordCache =
+    taskCaches.computeIfAbsent((tc.taskAttemptId(), root), key => {
+      val c = new RecordCache(conf, ValueColumn, cacheBytes, Storage.absolute(root, _))
+      tc.addTaskCompletionListener[Unit] { _ => taskCaches.remove(key); c.close() }
+      c
+    })
+}
+
+/** The stitch projection: (address file, row) → payload. A task shares
+  * one [[RecordCache]] per table; a call outside a task (a driver-side
+  * plan evaluation) opens and closes its own. */
+private final class FetchRecord(
+    root: Path,
+    conf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
+    ser: FieldSerializer) extends ((String, Int) => Array[Byte]) with Serializable {
+  def apply(file: String, row: Int): Array[Byte] = {
+    if (file == null) return null
+    val tc = TaskContext.get()
+    val bytes =
+      if (tc != null) RecordIO.taskCache(tc, conf.value.value, root).bytes(file, row)
+      else {
+        val c = new RecordCache(conf.value.value, RecordIO.ValueColumn, RecordIO.cacheBytes,
+          Storage.absolute(root, _))
+        try c.bytes(file, row) finally c.close()
+      }
+    if (bytes == null) null else ser.deserialize(bytes)
+  }
+}
+
+/** Decoded rows `[first, first + values(c).length)` of one file: per
+  * leaf column, the value at each row (`Binary`, boxed `Int`, or null). */
+private[graft] final class Span(val first: Long, val values: Array[Array[AnyRef]], val bytes: Long) {
+  def contains(row: Long): Boolean = row >= first && row < first + values(0).length
+  def get(column: Int, row: Long): AnyRef = values(column)((row - first).toInt)
+}
+
+/** One Parquet file read by row position: the footer is opened once, the
+  * rows of a page are found through the offset index, and only that
+  * page is read and decoded (for every requested column, the pages that
+  * overlap it). A row group without an offset index is read and decoded
+  * whole. `columns` are leaf paths of binary or int32 columns (payloads,
+  * addresses). */
+private[graft] final class PositionalFile(
+    absPath: String,
+    conf: Configuration,
+    columns: Seq[Seq[String]]) extends java.io.Closeable {
+  private val reader = RecordIO.openParquet(absPath, conf)
+  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
+  private val createdBy = reader.getFooter.getFileMetaData.getCreatedBy
+  private val descs = columns.map(c => fileSchema.getColumnDescription(c.toArray)).toArray
+  reader.setRequestedSchema(descs.toList.asJava)
+  private val blocks = reader.getFooter.getBlocks.asScala.toIndexedSeq
+  private val groupStart: Array[Long] = blocks.scanLeft(0L)(_ + _.getRowCount).toArray
+  // per row group: the offset index of the first column (None = decode
+  // the whole group), read on first use
+  private val offsets = new Array[Option[OffsetIndex]](blocks.size)
+
+  /** Decoded spans held by the owning [[RecordCache]], by (group, page),
+    * and the last one served (the cache's fast path). */
+  private[core] val decoded = new java.util.HashMap[java.lang.Long, Span]()
+  private[core] var hot: Span = _
+
+  def numRows: Long = groupStart.last
+
+  private def offsetIndex(g: Int): Option[OffsetIndex] = {
+    if (offsets(g) == null) {
+      val chunks = blocks(g).getColumns.asScala
+      val idx = descs.map(d => chunks.find(_.getPath.toArray.sameElements(d.getPath))
+        .flatMap(cc => Option(reader.readOffsetIndex(cc))))
+      offsets(g) = if (idx.forall(_.isDefined)) idx.head else None
+    }
+    offsets(g)
+  }
+
+  /** (row group, page) holding file row `row`. */
+  def locate(row: Long): (Int, Int) = {
+    if (row < 0 || row >= numRows)
+      throw new IndexOutOfBoundsException(s"row $row outside [0, $numRows) of $absPath")
+    var g = java.util.Arrays.binarySearch(groupStart, row) match {
+      case i if i >= 0 => i
+      case i => -i - 2
+    }
+    while (groupStart(g + 1) <= row) g += 1 // past empty row groups
+    val p = offsetIndex(g).fold(0) { oi =>
+      val r = row - groupStart(g)
+      var lo = 0
+      var hi = oi.getPageCount - 1
+      while (lo < hi) {
+        val mid = (lo + hi + 1) / 2
+        if (oi.getFirstRowIndex(mid) <= r) lo = mid else hi = mid - 1
+      }
+      lo
+    }
+    (g, p)
+  }
+
+  /** Read and decode page `p` of row group `g`. */
+  def decode(g: Int, p: Int): Span = {
+    val groupRows = blocks(g).getRowCount
+    val (store, first, count) = offsetIndex(g) match {
+      case Some(oi) =>
+        val ranges = RowRanges.create(groupRows, java.util.stream.IntStream.of(p).iterator(), oi)
+        (reader.readFilteredRowGroup(g, ranges), oi.getFirstRowIndex(p),
+          oi.getLastRowIndex(p, groupRows) - oi.getFirstRowIndex(p) + 1)
+      case None => (reader.readRowGroup(g), 0L, groupRows)
+    }
+    // a page range that spans the whole group comes back unfiltered,
+    // with `first` = 0: the column readers start at row `first` either way
+    val columnStore = new ColumnReadStoreImpl(store, PositionalFile.noopConverter(fileSchema),
+      fileSchema, createdBy)
+    var bytes = 0L
+    val values = descs.map { d =>
+      val cr = columnStore.getColumnReader(d)
+      val maxDef = d.getMaxDefinitionLevel
+      val out = new Array[AnyRef](count.toInt)
+      var j = 0
+      while (j < out.length) {
+        if (cr.getCurrentDefinitionLevel == maxDef) {
+          out(j) = d.getPrimitiveType.getPrimitiveTypeName match {
+            case PrimitiveTypeName.BINARY =>
+              val b = cr.getBinary
+              bytes += b.length()
+              b
+            case PrimitiveTypeName.INT32 => Int.box(cr.getInteger)
+            case other => throw new UnsupportedOperationException(
+              s"positional read of $other column ${d.getPath.mkString(".")} in $absPath")
+          }
+        }
+        cr.consume()
+        j += 1
+      }
+      bytes += 16L * out.length
+      out
+    }
+    new Span(groupStart(g) + first, values, bytes)
+  }
+
+  def close(): Unit = reader.close()
+}
+
+private object PositionalFile {
+  /** Converters the column readers require but that are never written
+    * to: values are pulled with `getBinary`/`getInteger`/... instead. */
+  def noopConverter(t: GroupType): GroupConverter = new GroupConverter {
+    private val kids = new Array[Converter](t.getFieldCount)
+    def getConverter(i: Int): Converter = {
+      if (kids(i) == null) kids(i) = t.getType(i) match {
+        case g: GroupType => noopConverter(g)
+        case _ => new PrimitiveConverter {}
+      }
+      kids(i)
+    }
+    def start(): Unit = ()
+    def end(): Unit = ()
+  }
+}
+
+/** Open [[PositionalFile]]s (footers and offset indexes) and their
+  * decoded pages, keyed by the path spelling the caller uses; `resolve`
+  * maps it to an absolute path on open. Pages are evicted least recently
+  * used past `budgetBytes`, files past a fixed count of open files.
+  * Not thread-safe: one per task, or one per driver-side batch. */
+private[graft] final class RecordCache(
+    conf: Configuration,
+    columns: Seq[Seq[String]],
+    budgetBytes: Long,
+    resolve: String => String) extends java.io.Closeable {
+  // each open file holds a file handle
+  private val MaxOpenFiles = 64
+  private val files = new java.util.LinkedHashMap[String, PositionalFile](16, 0.75f, true)
+  // access-ordered: eldest = least recently used
+  private val lru = new java.util.LinkedHashMap[Span, PositionalFile](16, 0.75f, true)
+  private var heldBytes = 0L
+
+  private def file(path: String): PositionalFile = {
+    val hit = files.get(path)
+    if (hit != null) return hit
+    if (files.size >= MaxOpenFiles) drop(files.keySet.iterator.next())
+    RecordIO.positionalOpens.incrementAndGet()
+    val f = new PositionalFile(resolve(path), conf, columns)
+    files.put(path, f)
+    f
+  }
+
+  private def drop(path: String): Unit = {
+    val f = files.remove(path)
+    f.decoded.values.forEach { s => lru.remove(s); heldBytes -= s.bytes }
+    f.close()
+  }
+
+  /** The decoded span of `path` that holds `row`. */
+  def span(path: String, row: Long): Span = {
+    val f = file(path)
+    if (f.hot != null && f.hot.contains(row)) return f.hot
+    val (g, p) = f.locate(row)
+    val key = Long.box((g.toLong << 32) | p)
+    var s = f.decoded.get(key)
+    if (s != null) lru.get(s)
+    else {
+      s = f.decode(g, p)
+      f.decoded.put(key, s)
+      lru.put(s, f)
+      heldBytes += s.bytes
+      val it = lru.entrySet.iterator
+      while (heldBytes > budgetBytes && it.hasNext) {
+        val e = it.next()
+        val (old, owner) = (e.getKey, e.getValue)
+        if (old ne s) {
+          owner.decoded.values.remove(old)
+          if (owner.hot eq old) owner.hot = null
+          heldBytes -= old.bytes
+          it.remove()
+        }
+      }
+    }
+    f.hot = s
+    s
+  }
+
+  /** Bytes of the first column at `row` of `path`; null for a null value. */
+  def bytes(path: String, row: Long): Array[Byte] = span(path, row).get(0, row) match {
+    case null => null
+    case b: Binary => b.getBytes
+  }
+
+  def close(): Unit = {
+    files.values.forEach(_.close())
+    files.clear(); lru.clear(); heldBytes = 0L
   }
 }
 

@@ -158,10 +158,7 @@ final class Storage(val location: String, val conf: Configuration) {
   /** Resolve a manifest path: table-root-relative normally; absolute
     * paths pass through (zero-copy-ingested EXTERNAL files live outside
     * the table root, loaders/parquet.py:30-74 semantics). */
-  def absolute(rel: String): String = {
-    val p = new Path(rel)
-    if (p.isAbsolute || rel.contains("://")) rel else new Path(rootPath, rel).toString
-  }
+  def absolute(rel: String): String = Storage.absolute(rootPath, rel)
 
   // ---------------------------------------------------------------- IO
 
@@ -1052,6 +1049,13 @@ final class Storage(val location: String, val conf: Configuration) {
 }
 
 object Storage {
+
+  /** `rel` resolved against the table root; absolute paths and URIs
+    * (zero-copy-ingested external files) pass through. */
+  def absolute(root: Path, rel: String): String = {
+    val p = new Path(rel)
+    if (p.isAbsolute || rel.contains("://")) rel else new Path(root, rel).toString
+  }
 
   /** Process-wide LRU of parsed delete-vector files (immutable once
     * written, like manifests) — a bench/driver process re-loads Storage

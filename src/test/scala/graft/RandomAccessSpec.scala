@@ -17,15 +17,20 @@ class RandomAccessSpec extends AnyFunSuite {
     val ds = SpaceDataset.create(spark, loc, docs.schema, Seq("doc_id"), Seq("text"))
     ds.append(docs.repartition(4))
 
-    val reader = new RandomAccessReader(ds, "text")
     val n = docs.count()
+    // no Spark job: the file list comes from the cached manifest rows,
+    // the payloads from positional reads on the driver
+    val ((reader, all), jc) = JobCount.of(spark) {
+      val r = new RandomAccessReader(ds, "text")
+      (r, r.getBatch(0L until n))
+    }
+    assert(jc.jobs == 0, jc)
     assert(reader.length == n)
 
     val expected = Tables.read(spark, sfDir, "documents")
       .select("text").collect().map(_.getString(0)).toSet
 
     // full sweep: every ordinal resolves to a real payload, all distinct
-    val all = reader.getBatch(0L until n)
     assert(all.size == n)
     assert(all.map(new String(_, "UTF-8")).toSet == expected)
 
@@ -45,6 +50,31 @@ class RandomAccessSpec extends AnyFunSuite {
     assert(new String(reader.get(0), "UTF-8") == new String(all(0), "UTF-8"))
     intercept[IllegalArgumentException](reader.get(n))
     intercept[IllegalArgumentException](reader.get(-1))
+  }
+
+  test("ordinals follow manifest order and match a full scan, also under delete vectors") {
+    val docs = Tables.read(spark, sfDir, "documents")
+      .withColumn("text", encode(col("text"), "UTF-8"))
+    val loc = Files.createTempDirectory("graft_ra_dv_").toString + "/tbl"
+    val ds = SpaceDataset.create(spark, loc, docs.schema, Seq("doc_id"), Seq("text"))
+    ds.append(docs.filter(col("doc_id") % 2 === 0).repartition(3))
+    ds.append(docs.filter(col("doc_id") % 2 === 1).repartition(3))
+    RecordScans.check(ds, "text", "doc_id")
+
+    // scattered merge-on-read delete: vectors on several index files
+    spark.conf.set(DeleteVectorOps.DvMaxFractionKey, "1.0")
+    try ds.delete(col("doc_id") % 5 === 0 || col("doc_id") < 20L)
+    finally spark.conf.unset(DeleteVectorOps.DvMaxFractionKey)
+    val sid = ds.storage.metadata.currentSnapshotId
+    val vectors = ds.storage.deleteVectors(sid).count(_._2.bitmapB64.isDefined)
+    assert(vectors > 1, s"expected vectors on several index files, got $vectors")
+    val ((ra, _), jc) = JobCount.of(spark) {
+      val r = new RandomAccessReader(ds, "text")
+      (r, r.getBatch(Seq(r.length - 1, 0L, r.length / 2, 0L)))
+    }
+    assert(jc.jobs == 0, jc)
+    assert(ra.length == docs.filter(!(col("doc_id") % 5 === 0 || col("doc_id") < 20L)).count())
+    RecordScans.check(ds, "text", "doc_id")
   }
 
   test("catalog create/list/load/delete lifecycle") {

@@ -2,6 +2,18 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.bytes.BytesInput
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +30,81 @@ class RecordFieldSpec extends AnyFunSuite {
   // documents with `text` as a binary record field
   private def docsBinary = Tables.read(spark, sfDir, "documents")
     .withColumn("text", encode(col("text"), "UTF-8"))
+
+  private val RecordType =
+    MessageTypeParser.parseMessageType("message graft_record { required binary value; }")
+
+  /** A record file of `payloads` in row groups of 100 rows and pages of
+    * 9. With `pageIndex = false` the pages are written through the
+    * page-write call that takes no row count, which leaves the offset
+    * index out of the file. */
+  private def writeRecordFile(path: String, payloads: Seq[Array[Byte]], pageIndex: Boolean): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (pageIndex) {
+      val w = ExampleParquetWriter.builder(new Path(path)).withConf(conf).withType(RecordType)
+        .withRowGroupRowCountLimit(100).withPageRowCountLimit(9)
+        .withMinRowCountForPageSizeCheck(1).build()
+      val groups = new SimpleGroupFactory(RecordType)
+      try payloads.foreach(p => w.write(groups.newGroup().append("value",
+        Binary.fromConstantByteArray(p))))
+      finally w.close()
+    } else {
+      val w = new ParquetFileWriter(conf, RecordType, new Path(path))
+      val desc = RecordType.getColumns.get(0)
+      w.start()
+      payloads.grouped(100).foreach { group =>
+        w.startBlock(group.size.toLong)
+        w.startColumn(desc, group.size.toLong, CompressionCodecName.UNCOMPRESSED)
+        group.grouped(9).foreach { page =>
+          val plain = java.nio.ByteBuffer.allocate(page.map(_.length + 4).sum)
+            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          page.foreach(p => plain.putInt(p.length).put(p))
+          w.writeDataPage(page.size, plain.capacity, BytesInput.from(plain.array),
+            Encoding.BIT_PACKED, Encoding.BIT_PACKED, Encoding.PLAIN)
+        }
+        w.endColumn()
+        w.endBlock()
+      }
+      w.end(new java.util.HashMap[String, String]())
+    }
+  }
+
+  /** (row groups, pages of the first group, whether every chunk has an
+    * offset index) of a Parquet file. */
+  private def pageLayout(path: String): (Int, Int, Boolean) = {
+    val reader = RecordIO.openParquet(path, spark.sparkContext.hadoopConfiguration)
+    try {
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val indexes = blocks.map(b => Option(reader.readOffsetIndex(b.getColumns.get(0))))
+      (blocks.size, indexes.head.map(_.getPageCount).getOrElse(1), indexes.forall(_.isDefined))
+    } finally reader.close()
+  }
+
+  /** A table over one external record file of `n` payloads
+    * `"<id>\u0001<filler>"` of varying length. */
+  private def externalTable(n: Int, pageIndex: Boolean): (SpaceDataset, String) = {
+    val ext = Files.createTempDirectory("graft_pos_").toString + "/records.parquet"
+    writeRecordFile(ext, (0 until n).map(i =>
+      (s"$i\u0001" + "abcdefgh" * (i % 23)).getBytes("UTF-8")), pageIndex)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType, nullable = false),
+      org.apache.spark.sql.types.StructField("body", org.apache.spark.sql.types.BinaryType)))
+    val ds = SpaceDataset.create(spark, freshLoc(), schema, Seq("id"), Seq("body"))
+    RecordLoader.loadRecordParquet(spark, ds, "body", Seq(ext), Map(
+      "id" -> expr("CAST(split(decode(value, 'UTF-8'), '\u0001', 2)[0] AS BIGINT)")))
+    (ds, ext)
+  }
+
+  private def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] = p match {
+      case f: FileSourceScanExec => Seq(f)
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(q.plan)
+      case other => other.children.flatMap(scans)
+    }
+    scans(df.queryExecution.executedPlan).head.metrics("numFiles").value
+  }
 
   test("append + read stitches record payloads back, in order") {
     val docs = docsBinary
@@ -110,6 +197,7 @@ class RecordFieldSpec extends AnyFunSuite {
     assert(ra.length == docs.count())
     val one = new String(ra.get(0), "UTF-8")
     assert(one.contains("\u0001"))
+    RecordScans.check(ds, "body", "doc_id")
   }
 
   test("migrates a pre-addressed payload layout (ArrayRecord export shape)") {
@@ -156,6 +244,7 @@ class RecordFieldSpec extends AnyFunSuite {
     // and the migrated table serves random access like any native one
     val ra = new RandomAccessReader(ds, "body")
     assert(ra.length == docs.count())
+    RecordScans.check(ds, "body", "doc_id")
   }
 
   test("field serializer: payloads encoded on write, decoded on read and random access") {
@@ -188,6 +277,7 @@ class RecordFieldSpec extends AnyFunSuite {
     // random access decodes too
     val ra = new RandomAccessReader(ds, "text")
     assert(plainTexts.contains(new String(ra.get(0), "UTF-8")))
+    RecordScans.check(ds, "text", "doc_id")
   }
 
   test("File-typed column resolves relative paths against the directory prefix on read") {
@@ -222,6 +312,80 @@ class RecordFieldSpec extends AnyFunSuite {
     assert(ExtTypes.isFile(reloaded.schema("img")))
     assert(ExtTypes.fileDirectory(reloaded.schema("img")).contains("/data/images"))
     assert(ExtTypes.fullPath(reloaded.schema("img"), "z.png") == "/data/images/z.png")
+  }
+
+  test("positional stitch over many row groups and pages matches a full scan") {
+    val (ds, ext) = externalTable(1000, pageIndex = true)
+    val (groups, pages, indexed) = pageLayout(ext)
+    assert(groups == 10 && pages > 5 && indexed, s"layout ($groups, $pages, $indexed)")
+    RecordScans.check(ds, "body", "id")
+    // a filtered read stitches only the surviving rows, from the pages
+    // that hold them
+    val got = ds.read(filter = Some(col("id").between(95L, 310L)))
+      .select(col("id"), decode(col("body"), "UTF-8")).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
+    assert(got == (95 to 310).map(i => i.toLong -> (s"$i\u0001" + "abcdefgh" * (i % 23))))
+  }
+
+  test("positional stitch falls back to whole row groups without a page index") {
+    val (ds, ext) = externalTable(450, pageIndex = false)
+    val (groups, _, indexed) = pageLayout(ext)
+    assert(groups == 5 && !indexed, s"layout ($groups, indexed = $indexed)")
+    RecordScans.check(ds, "body", "id")
+  }
+
+  test("null payloads stitch and fetch as null") {
+    val docs = docsBinary.withColumn("text",
+      when(col("doc_id") % 3 === 0, lit(null).cast("binary")).otherwise(col("text")))
+    val ds = SpaceDataset.create(spark, freshLoc(), docs.schema, Seq("doc_id"), Seq("text"))
+    ds.append(docs.repartition(3))
+    val nulls = ds.readAll().filter(col("text").isNull).count()
+    assert(nulls > 0 && nulls == docs.filter(col("doc_id") % 3 === 0).count())
+    RecordScans.check(ds, "text", "doc_id")
+  }
+
+  test("addresses of two tables stitched in one task resolve against their own roots") {
+    // the join-view shape: payloads of both sides stitched after the join
+    val docs = docsBinary.filter(col("doc_id") < 200L)
+    val a = SpaceDataset.create(spark, freshLoc(), docs.schema, Seq("doc_id"), Seq("text"))
+    a.append(docs)
+    val bDocs = docs.select(col("doc_id"), concat(col("text"), col("text")).as("rtext"))
+    val b = SpaceDataset.create(spark, freshLoc(), bDocs.schema, Seq("doc_id"), Seq("rtext"))
+    b.append(bDocs)
+    val joined = a.read(referenceRead = true).join(b.read(referenceRead = true), "doc_id")
+      .coalesce(1)
+    val both = RecordIO.stitch(spark, b.storage,
+      RecordIO.stitch(spark, a.storage, joined, Some(Seq("text"))), Some(Seq("rtext")))
+    val got = both.select(col("doc_id"), col("text"), col("rtext")).collect()
+    assert(got.length == docs.count())
+    assert(got.forall { r =>
+      val t = r.getAs[Array[Byte]](1).toSeq
+      r.getAs[Array[Byte]](2).toSeq == t ++ t
+    })
+  }
+
+  test("plan shape: one job per filtered read, pruning after readAll, no record opens for index fields") {
+    val docs = docsBinary
+    val ds = SpaceDataset.create(spark, freshLoc(), docs.schema, Seq("doc_id"), Seq("text"))
+    ds.append(docs.repartitionByRange(4, col("doc_id")))
+    val total = ds.plan().files.size
+    assert(total > 1, s"need several index files, got $total")
+
+    // the stitch is a projection over the index scan: no file-list
+    // collect, no broadcast, no join
+    val (rows, jc) = JobCount.of(spark)(ds.read(filter = Some(col("doc_id") < 50L)).collect())
+    assert(rows.length == docs.filter(col("doc_id") < 50L).count())
+    assert(jc.jobs == 1 && jc.stages == 1 && jc.shuffleBytes == 0L, jc)
+
+    // a filter applied after read() still reaches the index scan
+    assert(filesRead(ds.readAll().filter(col("doc_id") < 50L)) < total)
+
+    // a projection to index fields never opens a record file
+    val opens = RecordIO.positionalFileOpens
+    assert(ds.readAll().select("doc_id", "lang").collect().length == docs.count())
+    assert(RecordIO.positionalFileOpens == opens)
+    assert(ds.readAll().select("text").collect().length == docs.count())
+    assert(RecordIO.positionalFileOpens > opens)
   }
 
   test("upsert replaces record payloads") {
