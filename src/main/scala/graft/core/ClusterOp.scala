@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.format._
 
@@ -73,11 +74,12 @@ object ClusterOp {
     val snap = storage.snapshotOrFail(snapshotId)
     if (snap.manifestFiles.indexManifestFiles.isEmpty) return None
 
-    val mdf = ManifestIO.readIndexManifests(
-      spark, storage, snap.manifestFiles.indexManifestFiles)
-    val allFiles = mdf
-      .select(col(ManifestIO.FileCol), col(ManifestIO.NumRowsCol))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val mrows = ManifestIO.readIndexManifestRowsDriver(storage,
+      spark.sparkContext.hadoopConfiguration, snap.manifestFiles.indexManifestFiles).map(_._2)
+    val mschema = ManifestIO.manifestSchema(storage)
+    val fIdx = mschema.fieldIndex(ManifestIO.FileCol)
+    val nIdx = mschema.fieldIndex(ManifestIO.NumRowsCol)
+    val allFiles = mrows.map(r => (r.getString(fIdx), r.getLong(nIdx)))
     if (allFiles.isEmpty) return None
 
     // INCREMENTAL maintenance: keep the maximum-rows subset of files
@@ -93,7 +95,7 @@ object ClusterOp {
     // tiers when the delta tier has grown enough to matter.
     val files =
       if (!incremental) allFiles
-      else incrementalRewriteSet(spark, storage, sortCols.head, mdf) match {
+      else incrementalRewriteSet(spark, storage, sortCols.head, allFiles, mschema, mrows) match {
         case None => return None // already ≤2 clean tiers
         case Some(dirty) => allFiles.filter(f => dirty.contains(f._1))
       }
@@ -165,20 +167,22 @@ object ClusterOp {
       spark: SparkSession,
       storage: Storage,
       field: String,
-      mdf: DataFrame): Option[Set[String]] = {
-    val all = mdf.select(col(ManifestIO.FileCol)).collect().map(_.getString(0)).toSet
+      files: Seq[(String, Long)],
+      mschema: StructType,
+      mrows: Seq[Row]): Option[Set[String]] = {
+    val all = files.map(_._1).toSet
     val f = ManifestIO.fieldAtPath(storage.schema, field)
       .filter(x => ManifestIO.statsEligible(x.dataType))
       .getOrElse(return Some(all)) // no stats possible: full rewrite
-    val cname = ManifestIO.statsColName(FieldIds.fieldId(f))
-    if (!mdf.columns.contains(cname)) return Some(all)
-    val rows = mdf.select(col(ManifestIO.FileCol), col(ManifestIO.NumRowsCol),
-      col(s"$cname._MIN"), col(s"$cname._MAX")).collect()
-    val (withStats, statless) = rows.toSeq.partition(r => !r.isNullAt(2) && !r.isNullAt(3))
-    val iv = withStats.map(r => (r.getString(0), r.getLong(1), r.get(2), r.get(3)))
+    val si = mschema.fieldNames.indexOf(ManifestIO.statsColName(FieldIds.fieldId(f)))
+    if (si < 0) return Some(all)
+    val stats = mrows.map(r => if (r.isNullAt(si)) null else r.getStruct(si))
+    val (withStats, statless) = files.zip(stats)
+      .partition { case (_, s) => s != null && !s.isNullAt(0) && !s.isNullAt(1) }
+    val iv = withStats.map { case ((file, n), s) => (file, n, s.get(0), s.get(1)) }
     val keep = maxDisjointByRows(iv)
     val rest = iv.filterNot(r => keep.contains(r._1))
-    val dirty = rest.map(_._1).toSet ++ statless.map(_.getString(0))
+    val dirty = rest.map(_._1).toSet ++ statless.map(_._1._1)
     if (dirty.isEmpty) return None // fully clustered
 
     val mergeFraction = spark.conf.getOption(MergeFractionKey).map { raw =>
@@ -194,7 +198,7 @@ object ClusterOp {
       v
     }.getOrElse(DefaultMergeFraction)
     val backboneRows = iv.filter(r => keep.contains(r._1)).map(_._2).sum
-    val deltaRows = rest.map(_._2).sum + statless.map(_.getLong(1)).sum
+    val deltaRows = rest.map(_._2).sum + statless.map(_._1._2).sum
     if (deltaRows > mergeFraction * backboneRows && backboneRows > 0)
       Some(all) // delta tier outgrew the threshold: merge the tiers
     else if (statless.isEmpty && pairwiseDisjoint(rest)) None // clean 2 tiers
@@ -212,7 +216,7 @@ object ClusterOp {
   /** Stats-value total order, matching the order the footer stats were
     * harvested under (numeric natural order; UTF-8 unsigned bytes for
     * strings — parquet's binary min/max comparator). */
-  private def cmpStat(a: Any, b: Any): Int = (a, b) match {
+  private[core] def cmpStat(a: Any, b: Any): Int = (a, b) match {
     case (x: Long, y: Long) => java.lang.Long.compare(x, y)
     case (x: Int, y: Int) => Integer.compare(x, y)
     case (x: Double, y: Double) => java.lang.Double.compare(x, y)

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 import graft.format._
 
@@ -70,9 +71,6 @@ object CompactOp {
     if (snap.manifestFiles.indexManifestFiles.isEmpty) return None
 
     val threshold = math.max(1L, (targetFileRows * smallFraction).toLong)
-    val mdf = ManifestIO.readIndexManifests(
-      spark, storage, snap.manifestFiles.indexManifestFiles)
-    import org.apache.spark.sql.functions.col
     // merge-on-read vectors FOLD on compact: by default every
     // vector-carrying file joins the rewrite set regardless of size, so
     // routine compaction returns a MoR-deleted table to its vectors-free
@@ -82,19 +80,8 @@ object CompactOp {
     // barely-dirty big files keep their vectors (see [[DvDebtFractionKey]]).
     val dvs = storage.deleteVectors(snapshotId)
     val debtFrac = dvDebtFraction(spark)
-    // size-selected files, plus big vector-carrying files (disjoint
-    // union); the DV set routes through filterFileSet — a broad MoR
-    // delete can carry tens of thousands of vector entries, too many
-    // for an IN literal list
-    val bySize = mdf.filter(col(ManifestIO.NumRowsCol) < threshold)
-    val selected =
-      if (dvs.isEmpty) bySize
-      else bySize.unionByName(DmlOps.filterFileSet(spark,
-        mdf.filter(col(ManifestIO.NumRowsCol) >= threshold),
-        ManifestIO.FileCol, dvs.keySet, keep = true))
-    val small0 = selected
-      .select(col(ManifestIO.FileCol), col(ManifestIO.NumRowsCol))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val small0 = ManifestIO.fileRowCounts(storage, spark.sparkContext.hadoopConfiguration,
+        snap.manifestFiles.indexManifestFiles)
       .filter { case (f, rows) =>
         rows < threshold || (dvs.contains(f) &&
           (debtFrac == 0 || dvs(f).numRows.toDouble / rows >= debtFrac))

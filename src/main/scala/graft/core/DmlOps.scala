@@ -94,16 +94,14 @@ object DmlOps {
     // SMALL-TABLE fast path (O(1) gate from the manifest-list
     // summaries): with only a handful of files there is nothing worth
     // pruning — the stats-prefilter construction (persist + probe
-    // collect) and the planner's manifest-scan job cost MORE than
-    // scanning every file. Candidates come off the driver-side
-    // manifest read; everything downstream (exact semi/anti joins,
-    // bitmaps, CDC) is identical. MV state sweeps hit this on every
-    // refresh commit.
+    // collect) costs MORE than scanning every file. Candidates are
+    // every file of the manifests; everything downstream (exact
+    // semi/anti joins, bitmaps, CDC) is identical. MV state sweeps hit
+    // this on every refresh commit.
     val candidates = ManifestIO.summarizedFileCount(storage, manifests) match {
       case Some(n) if n <= DriverScanMaxFiles =>
-        val fIdx = ManifestIO.manifestSchema(storage).fieldIndex(ManifestIO.FileCol)
-        ManifestIO.readIndexManifestRowsDriver(storage,
-          spark.sparkContext.hadoopConfiguration, manifests).map(_._2.getString(fIdx))
+        ManifestIO.fileRowCounts(storage, spark.sparkContext.hadoopConfiguration, manifests)
+          .map(_._1)
       case _ =>
         ReadOp.plan(spark, storage, snapshotId,
           keyLookupPredicate(spark, k, storage, keyCols)).files
@@ -150,10 +148,9 @@ object DmlOps {
     }
   }
 
-  /** Below this many FILES in a snapshot, metadata passes (candidate
-    * listing, carryover, MoR row-count lookups) run on the driver via
-    * [[ManifestIO.readIndexManifestRowsDriver]] instead of Spark jobs —
-    * the job-scheduling overhead dominates at this size. */
+  /** Up to this many FILES in a snapshot, a key delete skips stats
+    * pruning (every file is a candidate) and its bitmap query runs with
+    * AQE off — at this size job scheduling dominates. */
   private[core] val DriverScanMaxFiles = 256L
 
   /** A point-shaped key lookup is one the planner can prune EXACTLY:
@@ -439,33 +436,6 @@ object DmlOps {
       dvRemoved = dvRemoved))
   }
 
-  /** Above this many members a file-set filter becomes a broadcast
-    * semi/anti join instead of an IN literal list: a broad delete
-    * touching tens of thousands of files would otherwise build a huge
-    * expression tree on the manifest-scan paths (ADVICE r11). */
-  private[core] val MaxFileSetLiterals = 1000
-
-  /** `df` restricted to (keep = true) or stripped of (keep = false) the
-    * rows whose `c` is in `files` — IN list below [[MaxFileSetLiterals]],
-    * broadcast left_semi/left_anti join above it. Public: every
-    * manifest-scan path that restricts to a file set (incl. the shim's
-    * metadata tables and compaction's vector-debt selection) routes
-    * through here so no caller rebuilds the unbounded-IN hazard. */
-  def filterFileSet(
-      spark: SparkSession,
-      df: DataFrame,
-      c: String,
-      files: Set[String],
-      keep: Boolean): DataFrame =
-    if (files.size <= MaxFileSetLiterals) {
-      val in = col(c).isin(files.toSeq: _*)
-      df.filter(if (keep) in else !in)
-    } else {
-      import spark.implicits._
-      val fdf = broadcast(files.toSeq.toDF(c))
-      df.join(fdf, Seq(c), if (keep) "left_semi" else "left_anti")
-    }
-
   /** Physical row count per file (manifest projection) for a specific
     * file set — the merge-on-read split needs counts BEFORE deciding
     * which files the carryover pass will cover. */
@@ -473,26 +443,10 @@ object DmlOps {
       spark: SparkSession,
       storage: Storage,
       snapshotId: Long,
-      files: Set[String]): Map[String, Long] = {
-    val manifests = storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles
-    ManifestIO.summarizedFileCount(storage, manifests) match {
-      case Some(n) if n <= DriverScanMaxFiles =>
-        // small-table fast path: counts off the driver-read manifests
-        val schema = ManifestIO.manifestSchema(storage)
-        val fIdx = schema.fieldIndex(ManifestIO.FileCol)
-        val nIdx = schema.fieldIndex(ManifestIO.NumRowsCol)
-        return ManifestIO.readIndexManifestRowsDriver(storage,
-            spark.sparkContext.hadoopConfiguration, manifests)
-          .collect { case (_, r) if files.contains(r.getString(fIdx)) =>
-            r.getString(fIdx) -> r.getLong(nIdx) }.toMap
-      case _ =>
-    }
-    filterFileSet(spark,
-      ManifestIO.readIndexManifests(spark, storage, manifests),
-      ManifestIO.FileCol, files, keep = true)
-      .select(col(ManifestIO.FileCol), col(ManifestIO.NumRowsCol))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-  }
+      files: Set[String]): Map[String, Long] =
+    ManifestIO.fileRowCounts(storage, spark.sparkContext.hadoopConfiguration,
+      storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles)
+      .filter { case (f, _) => files.contains(f) }.toMap
 
   final case class CarryoverResult(
       removedManifests: List[String],
@@ -501,14 +455,18 @@ object DmlOps {
       affectedFileRows: Map[String, Long],
       summaries: Map[String, ManifestSummary] = Map.empty)
 
-  /** Driver-side [[manifestCarryover]] for small tables: identical
-    * outputs, zero Spark jobs — pure set arithmetic over the driver-
-    * read manifest rows. */
-  private def manifestCarryoverDriver(
+  /** Manifest carryover for a CoW rewrite of `affectedRel` files: drop
+    * the manifests that list them and re-emit their UNTOUCHED rows as
+    * one carryover manifest (delete.py:144-150). Also returns the
+    * negative stats delta of the affected files and their per-file row
+    * counts. Shared by delete and compaction. Pure set arithmetic over
+    * the driver-loaded manifest rows — no Spark job. */
+  private[core] def manifestCarryover(
       spark: SparkSession,
       storage: Storage,
-      manifests: Seq[String],
+      snapshotId: Long,
       affectedRel: Set[String]): CarryoverResult = {
+    val manifests = storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles
     val conf = spark.sparkContext.hadoopConfiguration
     val schema = ManifestIO.manifestSchema(storage)
     val fIdx = schema.fieldIndex(ManifestIO.FileCol)
@@ -539,121 +497,6 @@ object DmlOps {
       summaries)
   }
 
-  /** Above this many surviving rows the carryover manifest is written by
-    * a distributed job instead of a driver collect (the same cutover
-    * shape as AppendOp's footer harvest): collecting is fine at
-    * thousands of files but is the first thing to break past ~10⁶. */
-  private[core] val CarryoverDriverMaxRows = 50000
-
-  /** Manifest carryover for a CoW rewrite of `affectedRel` files: drop
-    * the manifests that list them and re-emit their UNTOUCHED rows as
-    * carryover manifest(s) (delete.py:144-150). Also returns the
-    * negative stats delta of the affected files and their per-file row
-    * counts. Shared by delete and compaction. Small carryovers (≤
-    * `driverMaxRows`, the overwhelmingly common case) write driver-side
-    * without a Spark job; larger ones write distributed, one manifest
-    * per task output. */
-  private[core] def manifestCarryover(
-      spark: SparkSession,
-      storage: Storage,
-      snapshotId: Long,
-      affectedRel: Set[String],
-      driverMaxRows: Int = CarryoverDriverMaxRows): CarryoverResult = {
-    val manifests = storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles
-    // SMALL-TABLE fast path: the whole carryover is set arithmetic over
-    // a few manifest rows — do it on the driver (zero Spark jobs; the
-    // Spark path below launches two) when the O(1) summary gate allows
-    ManifestIO.summarizedFileCount(storage, manifests) match {
-      case Some(n) if n <= DriverScanMaxFiles =>
-        return manifestCarryoverDriver(spark, storage, manifests, affectedRel)
-      case _ =>
-    }
-    val mdf = ManifestIO.readIndexManifests(spark, storage, manifests)
-      .withColumn("__mfile", element_at(split(col("_metadata.file_path"), "/"), -1))
-    val manifestRelByName = manifests.map(m => new Path(m).getName -> m).toMap
-    // ONE job over the affected rows yields the touched manifests, the
-    // negative stats delta, and the per-file row counts (previously
-    // three jobs; file-set filters join instead of IN past the literal
-    // bound — ADVICE r11)
-    val affectedRows = filterFileSet(spark, mdf, ManifestIO.FileCol, affectedRel, keep = true)
-      .select(col("__mfile"), col(ManifestIO.FileCol), col(ManifestIO.NumRowsCol),
-        col(ManifestIO.CompressedCol), col(ManifestIO.UncompressedCol))
-      .collect()
-    val affectedManifestNames = affectedRows.map(_.getString(0)).distinct.toSeq
-    val removedManifests = affectedManifestNames.map(manifestRelByName).toList
-
-    val carryover = filterFileSet(spark,
-      filterFileSet(spark, mdf, "__mfile", affectedManifestNames.toSet, keep = true),
-      ManifestIO.FileCol, affectedRel, keep = false)
-      .drop("__mfile")
-    // probe one past the cutover: a short collect decides the path
-    // without a separate count job
-    val head = carryover.limit(driverMaxRows + 1).collect().toSeq
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (carryoverManifest, summaries) =
-      if (head.isEmpty) (Nil, Map.empty[String, ManifestSummary])
-      else if (head.size <= driverMaxRows) {
-        val rel = StoragePaths.newIndexManifestFile()
-        DriverParquet.write(conf, storage.absolute(rel), carryover.schema, head)
-        (List(rel),
-          Map(rel -> ManifestIO.summarizeRows(storage, carryover.schema, head)))
-      } else {
-        val pairs = writeCarryoverDistributed(spark, storage, carryover)
-        (pairs.map(_._1), pairs.toMap)
-      }
-
-    // negative stats of the removed files (delete.py's stats delta) and
-    // per-file numRows for allRows detection — both from the one
-    // collected affected-row pass above
-    val removed = StorageStatistics(
-      numRows = -affectedRows.map(_.getLong(2)).sum,
-      indexCompressedBytes = -affectedRows.map(_.getLong(3)).sum,
-      indexUncompressedBytes = -affectedRows.map(_.getLong(4)).sum)
-    val fileRows: Map[String, Long] =
-      affectedRows.map(r => r.getString(1) -> r.getLong(2)).toMap
-
-    CarryoverResult(removedManifests, carryoverManifest, removed, fileRows, summaries)
-  }
-
-  /** Distributed carryover write: executors write the surviving manifest
-    * rows as parquet; the driver renames each non-empty part file into a
-    * manifest name and returns it WITH its manifest-list summary.
-    * Driver work is O(part files), never O(rows) — and one footer read
-    * per part: the summary's `numFiles` IS the part's row count, so the
-    * 0-row skip and the summary share the same open. */
-  private[core] def writeCarryoverDistributed(
-      spark: SparkSession,
-      storage: Storage,
-      carryover: DataFrame): List[(String, ManifestSummary)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmpRel = s"${StoragePaths.MetadataDir}/tmp_carry_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val tmpAbs = storage.absolute(tmpRel)
-    carryover.write.mode("overwrite")
-      // tmp-dir write consumed and deleted by this call: no _SUCCESS,
-      // single-pass committer (see AppendOp.bloomWriter)
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .parquet(tmpAbs)
-    val fs = new Path(tmpAbs).getFileSystem(conf)
-    val parts = fs.listStatus(new Path(tmpAbs)).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val rels = parts.toList.flatMap { p =>
-      // a task whose partition lost every row still writes a 0-row part;
-      // it never becomes a manifest
-      val summary = ManifestIO.summarizeManifestFile(storage, p.toString, conf)
-      if (summary.numFiles == 0L) None
-      else {
-        val rel = StoragePaths.newIndexManifestFile()
-        if (!fs.rename(p, new Path(storage.absolute(rel))))
-          throw new java.io.IOException(s"rename $p failed")
-        Some(rel -> summary)
-      }
-    }
-    fs.delete(new Path(tmpAbs), true)
-    rels
-  }
-
   /** Atomic whole-table overwrite (SQL `INSERT OVERWRITE` = truncate +
     * append in ONE snapshot): drop every index/record manifest of the
     * pinned snapshot, negate its statistics, log every current row as
@@ -672,11 +515,8 @@ object DmlOps {
     // manifests and positive record-byte statistics (CoW delete only
     // rewrites the index side) — the overwrite must still drop those and
     // negate the stats, or phantom record files stay referenced forever
-    val fileRows =
-      if (manifests.isEmpty) Array.empty[(String, Long)]
-      else ManifestIO.readIndexManifests(spark, storage, manifests)
-        .select(col(ManifestIO.FileCol), col(ManifestIO.NumRowsCol))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
+    val fileRows = ManifestIO.fileRowCounts(storage,
+      spark.sparkContext.hadoopConfiguration, manifests).sortBy(_._1)
     val s = snap.storageStatistics
     // merge-on-read: a vector-carrying file's DELETE rowset is its LIVE
     // rows (the complement of the vector) — logging allRows would

@@ -10,23 +10,20 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** Tiny driver-side parquet writer/READER for MANIFEST files (flat
-  * schema + one-level min/max stat structs). Manifest rows are already
-  * on the driver when a commit assembles its patch — spinning a Spark
-  * job (+ temp dir + part-file rename) per manifest write is pure
-  * overhead; this writes them directly. The reader is the mirror
-  * (round 13): small-table DML spends more time scheduling the
-  * manifest-scan jobs than reading the bytes — a state-table sweep in
-  * an MV refresh launches 3+ Spark actions over manifests holding a
-  * handful of rows. Data files still go through distributed Spark
+/** The driver-side parquet writer/READER for every index and record
+  * MANIFEST file (flat schema + one-level min/max stat structs). All
+  * manifest IO runs here, on the driver, with no Spark job: manifest
+  * rows are already on the driver when a commit assembles its patch,
+  * and planning, DML metadata passes, maintenance and GC read them back
+  * through [[ManifestIO.readIndexManifestRowsDriver]] (plans via its
+  * process-wide cache). Data files still go through distributed Spark
   * reads/writes — this path is metadata-only. */
 object DriverParquet {
 
   /** Read a manifest file back as Rows of `schema` — the exact inverse
     * of [[write]] (primitives + one-level structs; a column missing
     * from the file, e.g. written before a stats field was added, reads
-    * as null — the same normalization the Spark path's explicit read
-    * schema applies). */
+    * as null). */
   def read(conf: Configuration, absPath: String, schema: StructType): Seq[Row] = {
     val c = new Configuration(conf)
     // the requested projection must be a SUBTREE of the FILE's schema
@@ -35,8 +32,7 @@ object DriverParquet {
     // top-level name and coerce values to the wanted Spark types while
     // building rows (a stat struct written before a type widening
     // holds int32 where the current schema says int64). Absent columns
-    // surface as nulls — the same normalization the Spark path's
-    // explicit read schema applies.
+    // surface as nulls.
     val path = new Path(absPath)
     val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
       c, path, org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)

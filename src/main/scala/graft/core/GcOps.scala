@@ -2,7 +2,6 @@ package graft.core
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 
 import graft.format._
 
@@ -122,11 +121,10 @@ object GcOps {
       val cl = MetadataJson.readChangeLog(storage.readString(f))
       (cl.addedRows ++ cl.deletedRows).map(_.file)
     }
-    val dataFiles: Seq[String] =
-      if (manifestFiles.isEmpty) Nil
-      else ManifestIO.readIndexManifests(spark, storage, manifestFiles)
-        .select(col(ManifestIO.FileCol)).distinct()
-        .collect().map(_.getString(0)).toSeq
+    // data and record files listed by every live index and record
+    // manifest (both carry `_FILE`), off the uncached driver loader
+    val dataFiles: Seq[String] = ManifestIO.fileRowCounts(storage,
+      spark.sparkContext.hadoopConfiguration, manifestFiles).map(_._1)
 
     val reachable: Set[String] =
       (manifestFiles ++ changeLogFiles ++ changeLogRefs ++ dataFiles ++ dvFiles ++

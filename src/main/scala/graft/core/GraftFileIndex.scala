@@ -72,7 +72,7 @@ final class GraftFileIndex(
     * repeated plans of an unchanged table — every fresh FileIndex a new
     * read constructs, every snapshot of a CDC walk sharing manifests —
     * are memory-resident instead of re-reading manifest parquet
-    * (small sets load on the driver, larger via one Spark read). */
+    * (misses load on the driver). */
   private def rowsOf(ms: Seq[String]): Seq[Row] = {
     val byM = ManifestIO.readIndexManifestRowsCached(spark, storage, ms)
     ms.flatMap(m => byM.get(m).map(_.toSeq).getOrElse(Nil))

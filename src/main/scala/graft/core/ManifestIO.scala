@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.statistics.{BinaryStatistics, DoubleStatistics, FloatStatistics, IntStatistics, LongStatistics, Statistics}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
 import graft.format.{FieldIds, StoragePaths}
@@ -244,9 +244,8 @@ object ManifestIO {
     *
     * When every manifest carries a manifest-list summary, the range
     * reduces over the summaries — a pure metadata lookup, NO manifest is
-    * opened and no job runs. */
+    * opened. Otherwise it reduces over the (cached) manifest rows. */
   def keyRange(spark: SparkSession, storage: Storage, field: String): Option[(Any, Any)] = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
     val f = fieldAtPath(storage.schema, field) match {
       case Some(fld) if statsEligible(fld.dataType) => fld
       case _ => return None
@@ -263,14 +262,12 @@ object ManifestIO {
         ranges.map(s => decodeStat(s.max, dt)).reduce(maxAny)))
     }
 
-    val cname = statsColName(FieldIds.fieldId(f))
-    val mdf = readIndexManifests(spark, storage, ms)
-    if (!mdf.columns.contains(cname)) return None
-    val r = mdf.agg(
-      min(col(s"$cname._MIN")), max(col(s"$cname._MAX")),
-      count(lit(1)), count(col(s"$cname._MIN"))).collect()(0)
-    if (r.isNullAt(0) || r.getLong(2) != r.getLong(3)) None
-    else Some((r.get(0), r.get(1)))
+    val idx = manifestSchema(storage).fieldNames.indexOf(statsColName(FieldIds.fieldId(f)))
+    if (idx < 0) return None
+    val rows = readIndexManifestRowsCached(spark, storage, ms).values.flatten.toSeq
+    val stats = rows.map(r => if (r.isNullAt(idx)) null else r.getStruct(idx))
+    if (stats.isEmpty || stats.exists(s => s == null || s.isNullAt(0) || s.isNullAt(1))) None
+    else Some((stats.map(_.get(0)).reduce(minAny), stats.map(_.get(1)).reduce(maxAny)))
   }
 
   // ------------------------------------------- manifest-list summaries
@@ -328,42 +325,6 @@ object ManifestIO {
       }
     }.toMap
     graft.format.ManifestSummary(rows.size.toLong, stats)
-  }
-
-  /** Manifest-list entry from a manifest FILE's own parquet footer (the
-    * distributed carryover path): the `_STATS_f<id>._MIN/_MAX` column
-    * chunks' statistics ARE the per-manifest range. A column with ANY
-    * null (a file without stats) is skipped — its range would not cover
-    * that file. */
-  def summarizeManifestFile(
-      storage: Storage,
-      absPath: String,
-      conf: Configuration): graft.format.ManifestSummary = {
-    val reader = RecordIO.openParquet(absPath, conf)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val numFiles = blocks.map(_.getRowCount).sum
-      def footerRange(path: String, wantMin: Boolean): Option[Any] = {
-        val per = blocks.flatMap { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == path).map(_.getStatistics)
-        }
-        // getNumNulls == -1 means UNKNOWN — as unsafe as a real null
-        if (per.size < blocks.size ||
-            per.exists(s => s == null || !s.hasNonNullValue || s.getNumNulls != 0)) None
-        else {
-          val vals = per.map(s => if (wantMin) statsValues(s)._1 else statsValues(s)._2)
-          Some(vals.reduce(if (wantMin) minAny else maxAny))
-        }
-      }
-      val stats = summaryCols(storage).flatMap { case (c, f) =>
-        val cname = statsColName(FieldIds.fieldId(f))
-        for {
-          mn <- footerRange(s"$cname._MIN", wantMin = true)
-          mx <- footerRange(s"$cname._MAX", wantMin = false)
-        } yield c -> graft.format.SummaryStats(encodeStat(mn), encodeStat(mx))
-      }.toMap
-      graft.format.ManifestSummary(numFiles, stats)
-    } finally reader.close()
   }
 
   /** Summaries as rows of the MANIFEST schema (`_FILE` = manifest path,
@@ -442,32 +403,16 @@ object ManifestIO {
     rel
   }
 
-  /** Manifests as a DataFrame of the CURRENT manifest schema (explicit
-    * — manifests written before a stats-field drop or before evidence
-    * markers normalize to it, missing columns reading as null, instead
-    * of the read inferring whichever generation's schema it samples). */
-  def readIndexManifests(spark: SparkSession, storage: Storage, manifests: Seq[String]): DataFrame = {
-    require(manifests.nonEmpty)
-    spark.read.schema(manifestSchema(storage)).parquet(manifests.map(storage.absolute): _*)
-  }
-
   // ------------------------------------------- process-wide row cache
 
   /** Total parsed-row budget of the process-wide manifest cache; an
     * entry larger than a quarter of it is never cached. Manifest rows
     * are a few hundred bytes each, so the default (1M rows) bounds the
     * driver at low hundreds of MB while keeping repeated planning of
-    * unchanged tables memory-resident — the r13 driver-read path
-    * covered only ≤256-file tables; every OTHER plan re-read its
-    * manifest parquet (VERDICT r13 queue #3). `0` disables caching. */
+    * unchanged tables memory-resident. The one sizing decision of the
+    * manifest read path. `0` disables caching. */
   val CacheMaxRowsKey = "spark.graft.manifest.cacheMaxRows"
   val DefaultCacheMaxRows = 1000L * 1000
-
-  /** Largest summarized file count a scan PLAN serves from driver-local
-    * (cached) manifest rows; above it planning keeps the distributed
-    * manifest read, where only pruned file names reach the driver. */
-  val DriverPlanMaxFilesKey = "spark.graft.manifest.driverPlanMaxFiles"
-  val DefaultDriverPlanMaxFiles = 200L * 1000
 
   /** Manifests are IMMUTABLE once written (rewrites mint new files), so
     * parsed rows are cacheable by absolute path — the schema is part of
@@ -499,11 +444,9 @@ object ManifestIO {
     }
 
   /** Rows of `manifests` under `storage`'s CURRENT manifest schema,
-    * served from the process-wide cache. Misses load in bulk — on the
-    * driver when the summaries prove the set small (no Spark job), via
-    * one distributed read otherwise — and populate the cache per
-    * manifest. Both paths read with the explicit schema, so manifests
-    * written before a stats-field change normalize identically. */
+    * served from the process-wide cache; misses load through
+    * [[readIndexManifestRowsDriver]] and populate the cache per
+    * manifest. */
   def readIndexManifestRowsCached(
       spark: SparkSession,
       storage: Storage,
@@ -515,24 +458,10 @@ object ManifestIO {
     }.toMap
     val missing = manifests.filterNot(hits.contains)
     if (missing.isEmpty) return hits
-    parquetOpens.addAndGet(missing.size.toLong)
-    val loaded: Map[String, Array[Row]] =
-      if (summarizedFileCount(storage, missing).exists(_ <= DmlOps.DriverScanMaxFiles)) {
-        val byM = readIndexManifestRowsDriver(storage,
-          spark.sparkContext.hadoopConfiguration, missing)
-          .groupBy(_._1).map { case (m, rs) => m -> rs.map(_._2).toArray }
-        missing.map(m => m -> byM.getOrElse(m, Array.empty[Row])).toMap
-      } else {
-        import org.apache.spark.sql.functions.{col, element_at, split}
-        val byName = spark.read.schema(schema)
-          .parquet(missing.map(storage.absolute): _*)
-          .withColumn("__mfile", element_at(split(col("_metadata.file_path"), "/"), -1))
-          .collect()
-          .groupBy(_.getAs[String]("__mfile"))
-          .map { case (k, rs) => k -> rs.map(r => Row.fromSeq(r.toSeq.dropRight(1))) }
-        missing.map(m =>
-          m -> byName.getOrElse(new Path(m).getName, Array.empty[Row])).toMap
-      }
+    val byM = readIndexManifestRowsDriver(storage,
+      spark.sparkContext.hadoopConfiguration, missing)
+      .groupBy(_._1).map { case (m, rs) => m -> rs.map(_._2).toArray }
+    val loaded = missing.map(m => m -> byM.getOrElse(m, Array.empty[Row])).toMap
     loaded.foreach { case (m, rows) =>
       cachePut((storage.absolute(m), schema), rows, budget)
     }
@@ -540,48 +469,38 @@ object ManifestIO {
   }
 
   /** O(1) total file count across `manifests` from the manifest-list
-    * summaries — None when any manifest predates summaries (legacy),
-    * which disqualifies the driver-side fast paths below. */
+    * summaries — None when any manifest predates summaries (legacy). */
   def summarizedFileCount(storage: Storage, manifests: Seq[String]): Option[Long] = {
     val sums = storage.metadata.manifestSummaries
     if (manifests.forall(sums.contains)) Some(manifests.map(sums(_).numFiles).sum)
     else None
   }
 
-  /** Small-table fast path: manifests read ON THE DRIVER as
-    * (manifestRel, row-of-[[manifestSchema]]) pairs — no Spark job.
-    * A handful of manifest rows costs more to SCHEDULE as a job than
-    * to read (MV state sweeps, small-batch streaming upserts); callers
-    * gate on [[summarizedFileCount]] ≤ a few hundred rows. Missing
-    * columns (manifests written before a stats field was added)
-    * surface as nulls, same as the Spark path's explicit schema. */
+  /** The one manifest loader: `manifests` read ON THE DRIVER as
+    * (manifestRel, row-of-[[manifestSchema]]) pairs, in manifest order —
+    * no Spark job. Missing columns (manifests written before a stats
+    * field was added) surface as nulls. Uncached: history-wide and
+    * one-shot readers (GC, DML metadata passes) call it directly; plans
+    * go through [[readIndexManifestRowsCached]]. */
   def readIndexManifestRowsDriver(
       storage: Storage,
-      conf: org.apache.hadoop.conf.Configuration,
+      conf: Configuration,
       manifests: Seq[String]): Seq[(String, Row)] = {
     val schema = manifestSchema(storage)
+    parquetOpens.addAndGet(manifests.size.toLong)
     manifests.flatMap(m =>
       DriverParquet.read(conf, storage.absolute(m), schema).map(m -> _))
   }
 
-  /** Write a small driver-built DataFrame as a SINGLE parquet file at
-    * `rel` (Spark writes a directory; we move the lone part file). */
-  def writeSingleParquet(spark: SparkSession, storage: Storage, df: DataFrame, rel: String): Unit = {
-    val tmpRel = s"${StoragePaths.MetadataDir}/tmp_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val tmpAbs = storage.absolute(tmpRel)
-    df.coalesce(1).write.mode("overwrite")
-      // tmp-dir write consumed and deleted by this call: no _SUCCESS,
-      // single-pass committer (see AppendOp.bloomWriter)
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .parquet(tmpAbs)
-    val fs = new Path(tmpAbs).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val part = fs.listStatus(new Path(tmpAbs))
-      .map(_.getPath).find(_.getName.startsWith("part-"))
-      .getOrElse(throw new IllegalStateException(s"no part file under $tmpAbs"))
-    val dst = new Path(storage.absolute(rel))
-    if (!fs.rename(part, dst))
-      throw new java.io.IOException(s"rename $part -> $dst failed")
-    fs.delete(new Path(tmpAbs), true)
+  /** (file, physical row count) of every row of `manifests`, off the
+    * uncached loader. */
+  def fileRowCounts(
+      storage: Storage,
+      conf: Configuration,
+      manifests: Seq[String]): Seq[(String, Long)] = {
+    val schema = manifestSchema(storage)
+    val (f, n) = (schema.fieldIndex(FileCol), schema.fieldIndex(NumRowsCol))
+    readIndexManifestRowsDriver(storage, conf, manifests)
+      .map { case (_, r) => r.getString(f) -> r.getLong(n) }
   }
 }

@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Scan planning + execution (reference `Storage.data_files`
@@ -56,7 +55,13 @@ object ReadOp {
     * file-level stats prune within the surviving manifests. Driver work
     * for a selective query is O(manifests + surviving files), not
     * O(all files). Tables whose manifests predate summaries fall back to
-    * reading everything (conservative). */
+    * reading everything (conservative).
+    *
+    * Manifest rows come from the process-wide cache on the driver: a
+    * repeated plan of an unchanged table costs zero Spark jobs and zero
+    * manifest IO. The stats filter runs over them as a LOCAL relation
+    * (folded driver-side by ConvertToLocalRelation); without a
+    * keep-condition no DataFrame is built at all. */
   def plan(
       spark: SparkSession,
       storage: Storage,
@@ -67,62 +72,26 @@ object ReadOp {
     if (manifests.isEmpty) return ScanPlan(Nil, 0)
     val keep = predicate.flatMap(p =>
       Pruning.keepCondition(spark, storage.schema, storage.statsColumns, p))
-    // PREDICATE-LESS small scan: the file list comes off a driver-side
-    // manifest read — no Spark job for a plan that cannot prune anyway
-    // (stats/bloom layers need a predicate; bucket pruning needs
-    // filters). The O(1) summary gate bounds the driver work.
-    if (keep.isEmpty && predicate.isEmpty)
-      ManifestIO.summarizedFileCount(storage, manifests) match {
-        case Some(n) if n <= DmlOps.DriverScanMaxFiles =>
-          val fIdx = ManifestIO.manifestSchema(storage).fieldIndex(ManifestIO.FileCol)
-          val files = ManifestIO.readIndexManifestRowsDriver(storage,
-            spark.sparkContext.hadoopConfiguration, manifests).map(_._2.getString(fIdx))
-          return ScanPlan(files, files.size, manifests.size, 0)
-        case _ =>
-      }
-    val summaries = storage.metadata.manifestSummaries
-    val allSummarized = manifests.forall(summaries.contains)
-
     val surviving: Seq[String] =
       ManifestIO.pruneManifestsBySummary(spark, storage, manifests, keep)
-    val total: Int =
-      if (allSummarized) manifests.map(summaries(_).numFiles).sum.toInt else -1
     val prunedM = manifests.size - surviving.size
-
-    if (surviving.isEmpty)
-      return ScanPlan(Nil, math.max(total, 0), manifests.size, prunedM)
-    // summarized tables within the driver-plan bound serve manifest
-    // rows from the process-wide cache as a LOCAL relation: the filter/
-    // collect below folds driver-side (ConvertToLocalRelation), so a
-    // REPEATED plan of an unchanged table costs zero Spark jobs and
-    // zero manifest IO. Oversized tables keep the distributed read —
-    // only the pruned file NAMES ever reach the driver there.
-    val survivingFiles: Option[Long] =
-      if (allSummarized) Some(surviving.map(summaries(_).numFiles).sum) else None
-    val driverBound = Confs.longConf(spark,
-      ManifestIO.DriverPlanMaxFilesKey, ManifestIO.DefaultDriverPlanMaxFiles)
-    val mdf =
-      if (survivingFiles.exists(_ <= driverBound)) {
-        val rows = ManifestIO.readIndexManifestRowsCached(spark, storage, surviving)
-        spark.createDataFrame(
-          surviving.flatMap(m => rows.getOrElse(m, Array.empty[Row]).toSeq).asJava,
-          ManifestIO.manifestSchema(storage))
-      } else ManifestIO.readIndexManifests(spark, storage, surviving)
-    val kept = keep.fold(mdf)(mdf.filter)
-    // one collect carries both the surviving file list and the
-    // membership-evidence markers (file, column) → usable?, so the
-    // bloom layer can skip footer RPCs for evidence-less files
-    val evidNames: Seq[(String, String)] = ManifestIO.evidenceColumns(storage).flatMap(c =>
-      ManifestIO.fieldAtPath(storage.schema, c).map(f =>
-        c -> ManifestIO.evidColName(graft.format.FieldIds.fieldId(f))))
-    val collected = kept.select(
-      (col(ManifestIO.FileCol) +: evidNames.map { case (_, n) => col(n) }): _*).collect()
-    val files0 = collected.map(_.getString(0)).toSeq
+    val schema = ManifestIO.manifestSchema(storage)
+    val byM = ManifestIO.readIndexManifestRowsCached(spark, storage, surviving)
+    val rows = surviving.flatMap(byM(_).toSeq)
+    val kept = keep.fold(rows)(k =>
+      spark.createDataFrame(rows.asJava, schema).filter(k).collect().toSeq)
+    val fIdx = schema.fieldIndex(ManifestIO.FileCol)
+    val files0 = kept.map(_.getString(fIdx))
     val files = predicate match {
       case Some(p) =>
-        val evidence: Map[(String, String), Boolean] = collected.iterator.flatMap { r =>
-          evidNames.iterator.zipWithIndex.collect {
-            case ((c, _), i) if !r.isNullAt(i + 1) => (r.getString(0), c) -> r.getBoolean(i + 1)
+        // membership-evidence markers (file, column) → usable?, so the
+        // bloom layer can skip footer RPCs for evidence-less files
+        val evidIdx: Seq[(String, Int)] = ManifestIO.evidenceColumns(storage).flatMap(c =>
+          ManifestIO.fieldAtPath(storage.schema, c).map(f =>
+            c -> schema.fieldIndex(ManifestIO.evidColName(graft.format.FieldIds.fieldId(f)))))
+        val evidence: Map[(String, String), Boolean] = kept.iterator.flatMap { r =>
+          evidIdx.iterator.collect {
+            case (c, i) if !r.isNullAt(i) => (r.getString(fIdx), c) -> r.getBoolean(i)
           }
         }.toMap
         val exprs = Seq(org.apache.spark.sql.graftshim.ColumnExpr.catalystExpression(p))
@@ -130,9 +99,10 @@ object ReadOp {
           BucketPruning.pruneFiles(storage, snapshotId, exprs, files0), evidence)
       case None => files0
     }
-    // legacy (unsummarized) tables read every manifest, so mdf IS the total
-    val totalFinal = if (total >= 0) total else mdf.count().toInt
-    ScanPlan(files, totalFinal, manifests.size, prunedM)
+    // legacy (unsummarized) tables are never manifest-pruned, so the
+    // loaded rows ARE the total
+    val total = ManifestIO.summarizedFileCount(storage, manifests).fold(rows.size)(_.toInt)
+    ScanPlan(files, total, manifests.size, prunedM)
   }
 
   /** Read a snapshot as a DataFrame of the PHYSICAL schema (record fields

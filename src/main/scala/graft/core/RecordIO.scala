@@ -150,6 +150,21 @@ object RecordIO {
         .collect().toSeq.sortBy(r => (r._2, r._1))
     }
 
+  /** Record manifest schema: one row per (record file, field)
+    * (record.py:27-32). */
+  private[core] val RecordManifestSchema = StructType(Seq(
+    StructField("_FILE", StringType, nullable = false),
+    StructField("_FIELD_ID", IntegerType, nullable = false),
+    StructField("_NUM_ROWS", LongType, nullable = false),
+    StructField("_UNCOMPRESSED_BYTES", LongType, nullable = false)))
+
+  /** Rows of record `manifests`, read on the driver. */
+  private[core] def readRecordManifests(
+      storage: Storage,
+      conf: Configuration,
+      manifests: Seq[String]): Seq[Row] =
+    manifests.flatMap(m => DriverParquet.read(conf, storage.absolute(m), RecordManifestSchema))
+
   /** Write a record manifest for `metas`; None when there is nothing to
     * record. The stats delta counts record payload bytes. */
   private[core] def recordManifestPatch(
@@ -157,15 +172,10 @@ object RecordIO {
       storage: Storage,
       metas: Seq[(String, Int, Long, Long)]): Option[Patch] = {
     if (metas.isEmpty) return None
-    val manifestSchema = StructType(Seq(
-      StructField("_FILE", StringType, nullable = false),
-      StructField("_FIELD_ID", IntegerType, nullable = false),
-      StructField("_NUM_ROWS", LongType, nullable = false),
-      StructField("_UNCOMPRESSED_BYTES", LongType, nullable = false)))
     val rows = metas.map(m => Row(m._1, m._2, m._3, m._4))
     val rel = StoragePaths.newRecordManifestFile()
     DriverParquet.write(spark.sparkContext.hadoopConfiguration,
-      storage.absolute(rel), manifestSchema, rows)
+      storage.absolute(rel), RecordManifestSchema, rows)
     Some(Patch(
       addedRecordManifests = List(rel),
       statsDelta = StorageStatistics(

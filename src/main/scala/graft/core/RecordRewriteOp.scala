@@ -1,9 +1,10 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.format.{Patch, StoragePaths, StorageStatistics}
 
@@ -89,8 +90,8 @@ object RecordRewriteOp {
     }
 
     // totals per record file (record manifests; metadata plane)
-    val manDF = spark.read.parquet(recMans.map(storage.absolute): _*)
-    val totalsDF = manDF
+    val recRows = RecordIO.readRecordManifests(storage, conf, recMans)
+    val totalsDF = spark.createDataFrame(recRows.asJava, RecordIO.RecordManifestSchema)
       .groupBy(col("_FILE").as("__rfile"))
       .agg(sum(col("_NUM_ROWS")).as("__total"),
         sum(col("_UNCOMPRESSED_BYTES")).as("__bytes"))
@@ -141,21 +142,13 @@ object RecordRewriteOp {
 
     // record-manifest carryover: every row of an UNPICKED file survives;
     // picked rows are dropped (their bytes leave the statistics)
-    val keptRows = manDF.join(broadcast(pickedDF),
-        manDF("_FILE") === pickedDF("__rfile"), "leftanti")
-      .select(col("_FILE"), col("_FIELD_ID"), col("_NUM_ROWS"), col("_UNCOMPRESSED_BYTES"))
-      .collect().toSeq
+    val pickedSet = picked.toSet
+    val keptRows = recRows.filterNot(r => pickedSet.contains(r.getString(0)))
     val recCarry =
       if (keptRows.isEmpty) Nil
       else {
-        val schema = StructType(Seq(
-          StructField("_FILE", StringType, nullable = false),
-          StructField("_FIELD_ID", IntegerType, nullable = false),
-          StructField("_NUM_ROWS", LongType, nullable = false),
-          StructField("_UNCOMPRESSED_BYTES", LongType, nullable = false)))
         val rel = StoragePaths.newRecordManifestFile()
-        DriverParquet.write(conf, storage.absolute(rel), schema,
-          keptRows.map(r => Row(r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3))))
+        DriverParquet.write(conf, storage.absolute(rel), RecordIO.RecordManifestSchema, keptRows)
         List(rel)
       }
 

@@ -1,7 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Row, SparkSession}
 
 import graft.format._
 
@@ -29,21 +28,16 @@ import graft.format._
   *  - The replaced manifests stay on disk for time travel until
   *    snapshot expiry + GC reclaim them, like any rewrite.
   *
-  * Small tables pack driver-side (no Spark job); histories past
-  * [[DmlOps.CarryoverDriverMaxRows]] rows pack with one distributed
-  * range-partitioned write — driver work stays O(output manifests).
+  * Driver-only: the selected manifests load through the one manifest
+  * loader, sort and chunk in memory, and write with [[DriverParquet]] —
+  * no Spark job.
   */
 object RewriteManifestsOp {
 
   final case class RewriteManifestsResult(
       rewrittenManifests: Int,
       outputManifests: Int,
-      files: Long,
-      /** Record manifests left UNPACKED because their row count
-        * exceeded the driver bound — surfaced (not silent, VERDICT
-        * r12/r13 #5) so an operator sees the record plane still
-        * fragmented and can raise the bound or pack off-peak. */
-      recordManifestsSkipped: Int = 0)
+      files: Long)
 
   /** Build the rewrite patch, or None when there is nothing to gain.
     * INCREMENTAL: only UNDER-FILLED manifests (fewer rows than the
@@ -57,10 +51,7 @@ object RewriteManifestsOp {
       spark: SparkSession,
       storage: Storage,
       snapshotId: Long,
-      targetFilesPerManifest: Long = 100000L,
-      /** Driver-write cutover (visible for the distributed-path spec). */
-      driverMaxRows: Long = DmlOps.CarryoverDriverMaxRows.toLong)
-      : Option[(Patch, RewriteManifestsResult)] = {
+      targetFilesPerManifest: Long = 100000L): Option[(Patch, RewriteManifestsResult)] = {
     require(targetFilesPerManifest > 0,
       s"targetFilesPerManifest must be positive, got $targetFilesPerManifest")
     val snap = storage.snapshotOrFail(snapshotId)
@@ -68,19 +59,15 @@ object RewriteManifestsOp {
     if (manifests.size <= 1) return None
 
     // per-manifest file counts: from the manifest-list summaries when
-    // complete (pure metadata), else one grouped count over the rows
+    // complete (pure metadata), else counted over the loaded rows
+    val conf = spark.sparkContext.hadoopConfiguration
     val summaries = storage.metadata.manifestSummaries
     val sizes: Map[String, Long] =
       if (manifests.forall(summaries.contains))
         manifests.map(m => m -> summaries(m).numFiles).toMap
       else {
-        import org.apache.spark.sql.functions.{count, element_at, lit, split}
-        val byName = ManifestIO.readIndexManifests(spark, storage, manifests)
-          .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("__m"))
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        manifests.map(m =>
-          m -> byName.getOrElse(new org.apache.hadoop.fs.Path(m).getName, 0L)).toMap
+        val byM = ManifestIO.readIndexManifestRowsDriver(storage, conf, manifests).groupBy(_._1)
+        manifests.map(m => m -> byM.get(m).fold(0L)(_.size.toLong)).toMap
       }
     // under-filled manifests only — the already-packed bulk never rereads
     val small = manifests.filter(m => sizes(m) < targetFilesPerManifest)
@@ -89,44 +76,32 @@ object RewriteManifestsOp {
     val parts = math.max(1, math.ceil(totalFiles.toDouble / targetFilesPerManifest).toInt)
     if (small.size <= parts) return None // the tail is already as packed as it gets
 
-    val mdf = ManifestIO.readIndexManifests(spark, storage, small)
-    // sort by the first stats column's _MIN when the schema carries one
-    // (falls back to the file path — still deterministic packing)
-    val sortCol = storage.statsColumns.headOption
+    // sort by the first stats column's _MIN (nulls first) when the
+    // schema carries one, then by file path — deterministic packing
+    val schema = ManifestIO.manifestSchema(storage)
+    val fIdx = schema.fieldIndex(ManifestIO.FileCol)
+    val sortIdx = storage.statsColumns.headOption
       .flatMap(c => ManifestIO.fieldAtPath(storage.schema, c)
         .filter(f => ManifestIO.statsEligible(f.dataType)))
-      .map(f => ManifestIO.statsColName(graft.format.FieldIds.fieldId(f)))
-      .filter(mdf.columns.contains)
-      .map(n => col(s"$n._MIN"))
-      .getOrElse(col(ManifestIO.FileCol))
-
-    val conf = spark.sparkContext.hadoopConfiguration
-    val written: List[(String, ManifestSummary)] =
-      if (totalFiles <= driverMaxRows) {
-        // driver path: one sorted collect, chunked into target-size
-        // manifests — no Spark write job for the common small history
-        val rows = mdf.orderBy(sortCol, col(ManifestIO.FileCol)).collect().toSeq
-          .map(backfillStatus(mdf.schema, storage.location, conf))
-        rows.grouped(targetFilesPerManifest.toInt).map { chunk =>
-          val rel = StoragePaths.newIndexManifestFile()
-          DriverParquet.write(conf, storage.absolute(rel), mdf.schema, chunk)
-          rel -> ManifestIO.summarizeRows(storage, mdf.schema, chunk)
-        }.toList
-      } else {
-        // distributed path: one range-partitioned write, each task's
-        // part file becomes one manifest (same shape as the carryover
-        // writer — driver work is O(part files)); the backfill rides
-        // the tasks, one stat per LEGACY row, spread across executors
-        val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-        val mschema = mdf.schema
-        val root = storage.location
-        val filled = mdf.repartitionByRange(parts, sortCol)
-          .sortWithinPartitions(sortCol)
-          .mapPartitions(it =>
-            it.map(backfillStatus(mschema, root, serConf.value)))(
-            org.apache.spark.sql.Encoders.row(mschema))
-        DmlOps.writeCarryoverDistributed(spark, storage, filled.toDF())
+      .map(f => schema.fieldIndex(ManifestIO.statsColName(FieldIds.fieldId(f))))
+    def minOf(r: Row): Option[Any] = sortIdx.collect {
+      case i if !r.isNullAt(i) && !r.getStruct(i).isNullAt(0) => r.getStruct(i).get(0)
+    }
+    val order: Ordering[Row] = (a, b) => {
+      val c = (minOf(a), minOf(b)) match {
+        case (Some(x), Some(y)) => ClusterOp.cmpStat(x, y)
+        case (x, y) => java.lang.Boolean.compare(x.isDefined, y.isDefined)
       }
+      if (c != 0) c else a.getString(fIdx).compareTo(b.getString(fIdx))
+    }
+    val rows = ManifestIO.readIndexManifestRowsDriver(storage, conf, small).map(_._2)
+      .sorted(order).map(backfillStatus(schema, storage.location, conf))
+    val written: List[(String, ManifestSummary)] =
+      rows.grouped(targetFilesPerManifest.toInt).map { chunk =>
+        val rel = StoragePaths.newIndexManifestFile()
+        DriverParquet.write(conf, storage.absolute(rel), schema, chunk)
+        rel -> ManifestIO.summarizeRows(storage, schema, chunk)
+      }.toList
 
     val outFiles = written.map(_._2.numFiles).sum
     require(outFiles == totalFiles,
@@ -135,32 +110,24 @@ object RewriteManifestsOp {
 
     // RECORD manifests pack along (each append of a record-field table
     // mints one): same bin-pack, no stats sorting (their rows are
-    // (file, field) pairs), driver-side only — their row count is
-    // record files × fields, orders of magnitude below the index rows;
-    // past the driver bound they are left as-is (the index plane is the
-    // planning cost; record manifests are read whole by GC/reclamation).
+    // (file, field) pairs)
     val recMans = snap.manifestFiles.recordManifestFiles
-    val (recAdded, recRemoved, recSkipped) =
-      if (recMans.size <= 1) (Nil, Nil, 0)
+    val (recAdded, recRemoved) =
+      if (recMans.size <= 1) (Nil, Nil)
       else {
-        val rdf = spark.read.parquet(recMans.map(storage.absolute): _*)
-        val rows = rdf.limit(driverMaxRows.toInt + 1).collect().toSeq
-        if (rows.size > driverMaxRows) (Nil, Nil, recMans.size)
+        val recRows = RecordIO.readRecordManifests(storage, conf, recMans)
+        val recParts = math.max(1,
+          math.ceil(recRows.size.toDouble / targetFilesPerManifest).toInt)
+        if (recMans.size <= recParts) (Nil, Nil)
         else {
-          val recParts = math.max(1,
-            math.ceil(rows.size.toDouble / targetFilesPerManifest).toInt)
-          if (recMans.size <= recParts) (Nil, Nil, 0)
-          else {
-            val fi = rdf.schema.fieldIndex("_FILE")
-            val sorted = rows.sortBy(_.getString(fi))
-            val rels = sorted.grouped(
-              math.max(1, math.ceil(sorted.size.toDouble / recParts).toInt)).map { chunk =>
-              val rel = StoragePaths.newRecordManifestFile()
-              DriverParquet.write(conf, storage.absolute(rel), rdf.schema, chunk)
-              rel
-            }.toList
-            (rels, recMans, 0)
-          }
+          val sorted = recRows.sortBy(_.getString(0))
+          val rels = sorted.grouped(
+            math.max(1, math.ceil(sorted.size.toDouble / recParts).toInt)).map { chunk =>
+            val rel = StoragePaths.newRecordManifestFile()
+            DriverParquet.write(conf, storage.absolute(rel), RecordIO.RecordManifestSchema, chunk)
+            rel
+          }.toList
+          (rels, recMans)
         }
       }
 
@@ -171,8 +138,7 @@ object RewriteManifestsOp {
       removedRecordManifests = recRemoved,
       changeLog = None,
       manifestSummaries = written.toMap)
-    Some((patch,
-      RewriteManifestsResult(small.size, written.size, totalFiles, recSkipped)))
+    Some((patch, RewriteManifestsResult(small.size, written.size, totalFiles)))
   }
 
   /** Fill a legacy manifest row's null `_FILE_BYTES`/`_FILE_MTIME`

@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -642,22 +644,17 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
   /** Filterable index-manifest table (storage.py:459-480). */
   def indexManifest(): DataFrame = {
     val ms = storage.metadata.currentSnapshot.manifestFiles.indexManifestFiles
-    if (ms.isEmpty)
-      ReadOp.emptyDF(spark, ManifestIO.manifestSchema(storage))
-    else ManifestIO.readIndexManifests(spark, storage, ms)
+    val byM = ManifestIO.readIndexManifestRowsCached(spark, storage, ms)
+    spark.createDataFrame(ms.flatMap(byM(_)).asJava, ManifestIO.manifestSchema(storage))
   }
 
   /** Filterable record-manifest table (`_FILE,_FIELD_ID,_NUM_ROWS,
     * _UNCOMPRESSED_BYTES`; record.py:27-32, storage.py:459-480). */
-  def recordManifest(): DataFrame = {
-    import org.apache.spark.sql.types._
-    val ms = storage.metadata.currentSnapshot.manifestFiles.recordManifestFiles
-    if (ms.isEmpty)
-      ReadOp.emptyDF(spark, StructType(Seq(
-        StructField("_FILE", StringType), StructField("_FIELD_ID", IntegerType),
-        StructField("_NUM_ROWS", LongType), StructField("_UNCOMPRESSED_BYTES", LongType))))
-    else spark.read.parquet(ms.map(storage.absolute): _*)
-  }
+  def recordManifest(): DataFrame =
+    spark.createDataFrame(RecordIO.readRecordManifests(storage,
+      spark.sparkContext.hadoopConfiguration,
+      storage.metadata.currentSnapshot.manifestFiles.recordManifestFiles).asJava,
+      RecordIO.RecordManifestSchema)
 
   def refresh(): Unit = storage.reload()
 }

@@ -158,12 +158,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           val dvs = ds.storage.deleteVectors(sid)
           val physRows: Map[String, Long] =
             if (dvs.isEmpty) Map.empty
-            else graft.core.DmlOps.filterFileSet(spark,
-                graft.core.ManifestIO.readIndexManifests(spark, ds.storage,
-                  ds.storage.snapshotOrFail(sid).manifestFiles.indexManifestFiles),
-                graft.core.ManifestIO.FileCol, dvs.keySet, keep = true)
-              .select(graft.core.ManifestIO.FileCol, graft.core.ManifestIO.NumRowsCol)
-              .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+            else graft.core.ManifestIO.fileRowCounts(ds.storage,
+                spark.sparkContext.hadoopConfiguration,
+                ds.storage.snapshotOrFail(sid).manifestFiles.indexManifestFiles)
+              .filter { case (f, _) => dvs.contains(f) }.toMap
           val rows = dvs.toSeq.sortBy(_._1).map { case (f, e) =>
             val phys = physRows.get(f)
             org.apache.spark.sql.Row(f, e.numRows,

@@ -156,12 +156,10 @@ object GraftProcedures {
         StructType(Seq(
           StructField("rewritten_manifests", IntegerType, nullable = false),
           StructField("output_manifests", IntegerType, nullable = false),
-          StructField("files", LongType, nullable = false),
-          StructField("record_manifests_skipped", IntegerType, nullable = false)))) {
+          StructField("files", LongType, nullable = false)))) {
         override def run(input: InternalRow): Seq[InternalRow] =
           ds(input).rewriteManifests(input.getLong(1)).toSeq
-            .map(r => InternalRow(r.rewrittenManifests, r.outputManifests, r.files,
-              r.recordManifestsSkipped))
+            .map(r => InternalRow(r.rewrittenManifests, r.outputManifests, r.files))
       },
 
       new Proc("rebucket",

@@ -58,8 +58,8 @@ class StreamingWriteSpec extends AnyFunSuite {
     assert(manifests.forall(ds.storage.metadata.manifestSummaries.contains),
       "streamed manifests must carry manifest-list summaries")
     // no orphan files: every parquet under data/ is in the manifest
-    val listed = ManifestIO.readIndexManifests(spark, ds.storage, manifests)
-      .select(ManifestIO.FileCol).collect().map(_.getString(0)).toSet
+    val listed = ManifestIO.fileRowCounts(ds.storage,
+      spark.sparkContext.hadoopConfiguration, manifests).map(_._1).toSet
     val onDisk = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "ev", "data"))
       try s.filter(p => p.toString.endsWith(".parquet"))

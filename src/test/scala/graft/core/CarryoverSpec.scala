@@ -6,14 +6,16 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
+import graft.format.{FieldIds, StorageStatistics}
 
-/** Manifest carryover: the driver-collect path and the distributed
-  * cutover ([[DmlOps.manifestCarryover]]) must emit the same surviving
-  * manifest content. In graft.core for access to the private op. */
+/** Manifest carryover ([[DmlOps.manifestCarryover]]) must re-emit exactly
+  * the untouched rows of the affected manifests, checked against a plain
+  * Spark read of the input manifests. In graft.core for access to the
+  * private op. */
 class CarryoverSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("distributed carryover writes the same surviving rows as the driver path") {
+  test("carryover writes the input manifests' rows minus the affected files") {
     val orders = Tables.read(spark, sfDir, "orders")
     val dir = Files.createTempDirectory("graft_carry_").toString
     val ds = SpaceDataset.create(spark, dir + "/tbl", orders.schema, Seq("o_orderkey"))
@@ -29,43 +31,40 @@ class CarryoverSpec extends AnyFunSuite {
 
     def readManifests(rels: Seq[String]) =
       spark.read.parquet(rels.map(ds.storage.absolute): _*)
-        .collect().map(_.toString).sorted.toSeq
+    // reference: the input manifests, split by the affected file set
+    val manifests = ds.storage.snapshotOrFail(snap).manifestFiles.indexManifestFiles
+    val input = readManifests(manifests)
+    val isAffected = col(ManifestIO.FileCol).isin(affected.toSeq: _*)
+    val expected = input.filter(!isAffected)
+    val gone = input.filter(isAffected).collect()
 
-    val viaDriver = DmlOps.manifestCarryover(spark, ds.storage, snap, affected)
-    val viaJob = DmlOps.manifestCarryover(spark, ds.storage, snap, affected,
-      driverMaxRows = 5)
-    assert(viaDriver.carryoverManifests.size == 1)
-    assert(viaJob.carryoverManifests.nonEmpty)
-    assert(readManifests(viaDriver.carryoverManifests) ==
-      readManifests(viaJob.carryoverManifests),
-      "both paths must carry over identical manifest rows")
-    assert(readManifests(viaJob.carryoverManifests).size == 14)
-    assert(viaDriver.removedManifests == viaJob.removedManifests)
-    assert(viaDriver.removedStats == viaJob.removedStats)
-    assert(viaDriver.affectedFileRows == viaJob.affectedFileRows)
+    val co = DmlOps.manifestCarryover(spark, ds.storage, snap, affected)
+    assert(co.carryoverManifests.size == 1)
+    assert(readManifests(co.carryoverManifests).collect().map(_.toString).sorted.toSeq ==
+      expected.collect().map(_.toString).sorted.toSeq,
+      "carryover must re-emit every untouched manifest row unchanged")
+    assert(expected.count() == 14)
+    assert(co.removedManifests == manifests)
+    assert(co.removedStats == StorageStatistics(
+      numRows = -gone.map(_.getAs[Long](ManifestIO.NumRowsCol)).sum,
+      indexCompressedBytes = -gone.map(_.getAs[Long](ManifestIO.CompressedCol)).sum,
+      indexUncompressedBytes = -gone.map(_.getAs[Long](ManifestIO.UncompressedCol)).sum))
+    assert(co.affectedFileRows == gone.map(r =>
+      r.getAs[String](ManifestIO.FileCol) -> r.getAs[Long](ManifestIO.NumRowsCol)).toMap)
 
-    // both paths emit manifest-list summaries covering the same files
-    // with the same combined key range (the distributed path derives
-    // them from the part files' own parquet footers)
-    assert(viaDriver.summaries.keySet == viaDriver.carryoverManifests.toSet)
-    assert(viaJob.summaries.keySet == viaJob.carryoverManifests.toSet)
-    assert(viaDriver.summaries.values.map(_.numFiles).sum ==
-      viaJob.summaries.values.map(_.numFiles).sum)
-    val dStats = viaDriver.summaries.values.head.stats("o_orderkey")
-    val jMins = viaJob.summaries.values.map(_.stats("o_orderkey").min.toLong)
-    val jMaxs = viaJob.summaries.values.map(_.stats("o_orderkey").max.toLong)
-    assert(jMins.min == dStats.min.toLong && jMaxs.max == dStats.max.toLong,
-      "distributed summaries must cover the same combined range")
+    // the summary covers the carried files with their combined key range
+    assert(co.summaries.keySet == co.carryoverManifests.toSet)
+    assert(co.summaries.values.map(_.numFiles).sum == 14)
+    val stats = ManifestIO.statsColName(FieldIds.fieldId(ds.storage.schema("o_orderkey")))
+    val range = expected.agg(min(col(s"$stats._MIN")), max(col(s"$stats._MAX"))).collect()(0)
+    val s = co.summaries.values.head.stats("o_orderkey")
+    assert(s.min.toLong == range.getLong(0) && s.max.toLong == range.getLong(1),
+      "the summary must cover the carried rows' key range")
 
-    // end-to-end: a delete that crosses the cutover stays correct
-    // (tiny threshold forces the distributed branch inside deleteCore)
+    // end-to-end: a delete through the real carryover stays correct
     val before = ds.readAll().count()
-    val ds2 = {
-      // exercise the real path at default threshold for regression too
-      ds.delete(col("o_orderkey") % 5 === 0)
-      ds
-    }
-    assert(ds2.readAll().count() ==
+    ds.delete(col("o_orderkey") % 5 === 0)
+    assert(ds.readAll().count() ==
       before - orders.filter(col("o_orderkey") % 5 === 0).count())
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Tables, TestSpark}
+import graft.{JobCount, Tables, TestSpark}
 
 /** The manifest-list level: per-manifest summaries in snapshot metadata
   * prune WHOLE manifests at plan time; file-level stats prune within the
@@ -164,7 +164,7 @@ class ManifestListSpec extends AnyFunSuite {
     assert(ds.readAll().count() == total + 20)
   }
 
-  test("rewrite_manifests takes the distributed path past the driver row bound") {
+  test("rewrite_manifests splits a pack into several target-size manifests") {
     val orders = Tables.read(spark, sfDir, "orders")
     val loc = Files.createTempDirectory("graft_mlrwd_").toString + "/tbl"
     val ds = SpaceDataset.create(spark, loc, orders.schema, Seq("o_orderkey"))
@@ -172,21 +172,14 @@ class ManifestListSpec extends AnyFunSuite {
       orders.filter(col("o_orderkey") % 3 === i).repartitionByRange(4, col("o_orderkey"))))
     val nFiles = ds.storage.metadata.currentSnapshot.manifestFiles.indexManifestFiles
       .map(ds.storage.metadata.manifestSummaries(_).numFiles).sum
-    // force the distributed writer by shrinking the driver cutover to 0
-    val res = ds.storage.transaction(policy = ConflictPolicy.Rewrite) { pinned =>
-      RewriteManifestsOp.rewriteManifests(spark, ds.storage, pinned,
-        targetFilesPerManifest = math.max(1L, nFiles / 2),
-        driverMaxRows = 0L) match {
-        case Some((patch, r)) => (Some(patch), Some(r))
-        case None => (None, None)
-      }
-    }
+    val res = ds.rewriteManifests(targetFilesPerManifest = math.max(1L, nFiles / 2))
     assert(res.isDefined && res.get.files == nFiles)
+    assert(res.get.outputManifests >= 2, s"expected several outputs, got ${res.get}")
     val meta = ds.storage.metadata
     val after = meta.currentSnapshot.manifestFiles.indexManifestFiles
     assert(after.size == res.get.outputManifests)
     assert(after.forall(meta.manifestSummaries.contains),
-      "distributed-path manifests must carry footer-derived summaries")
+      "packed manifests must carry summaries")
     assert(ds.readAll().count() == orders.count())
   }
 
@@ -209,40 +202,6 @@ class ManifestListSpec extends AnyFunSuite {
       "record manifests must bin-pack alongside the index manifests")
     // payload stitching and counts survive the metadata reorganization
     assert(ds.readAll().count() == docs.count())
-    assert(ds.readAll().filter(col("payload").isNull).count() == 0)
-  }
-
-  test("record-manifest pack past the driver bound is SKIPPED and surfaced") {
-    import org.apache.spark.sql.functions.encode
-    val docs = Tables.read(spark, sfDir, "documents")
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-    val loc = Files.createTempDirectory("graft_mlrws_").toString + "/tbl"
-    val ds = SpaceDataset.create(spark, loc, docs.schema, Seq("doc_id"),
-      recordFields = Seq("payload"))
-    (0 until 4).foreach(i => ds.append(docs.filter(col("doc_id") % 4 === i)))
-    val before = ds.storage.metadata.currentSnapshot
-    assert(before.manifestFiles.recordManifestFiles.size == 4)
-    // driverMaxRows = 0 forces the INDEX plane distributed and the
-    // RECORD plane past its (driver-only) bound: the pack must still
-    // land, leave record manifests as-is, and REPORT the skip instead
-    // of silently dropping it (VERDICT r12/r13 #5)
-    val res = ds.storage.transaction(policy = ConflictPolicy.Rewrite) { pinned =>
-      RewriteManifestsOp.rewriteManifests(spark, ds.storage, pinned,
-        targetFilesPerManifest = 100L, driverMaxRows = 0L) match {
-        case Some((patch, r)) => (Some(patch), Some(r))
-        case None => (None, None)
-      }
-    }.get
-    assert(res.recordManifestsSkipped == 4,
-      s"skip must be surfaced, got ${res.recordManifestsSkipped}")
-    val after = ds.storage.metadata.currentSnapshot
-    assert(after.manifestFiles.recordManifestFiles.toSet ==
-      before.manifestFiles.recordManifestFiles.toSet,
-      "skipped record manifests must be untouched")
-    assert(after.manifestFiles.indexManifestFiles.size == res.outputManifests)
-    // the driver-path pack reports zero skips on the same table
-    val res2 = ds.rewriteManifests(targetFilesPerManifest = 100L)
-    assert(res2.forall(_.recordManifestsSkipped == 0))
     assert(ds.readAll().filter(col("payload").isNull).count() == 0)
   }
 
@@ -297,5 +256,89 @@ class ManifestListSpec extends AnyFunSuite {
     assert(meta.manifestSummaries.keySet.subsetOf(live))
     assert(meta.manifestSummaries.size < before, "expiry must shed dead summaries")
     assert(live.forall(meta.manifestSummaries.contains))
+  }
+
+  test("GC, the manifest table and a key delete's metadata side run no Spark job") {
+    val (ds, orders) = quartered("mljobs_")
+    val (gc, gcJobs) = JobCount.of(spark)(ds.garbageCollect())
+    assert(gc.deleted.isEmpty)
+    assert(gcJobs.jobs == 0, s"GC reachability must not run a job: $gcJobs")
+    val (m, mJobs) = JobCount.of(spark)(ds.indexManifest().collect())
+    assert(m.length == 12)
+    assert(mJobs.jobs == 0, s"indexManifest().collect() ran $mJobs")
+    // a key delete's metadata side: candidate planning by key, then the
+    // carryover of the two rewritten files
+    val sid = ds.storage.metadata.currentSnapshotId
+    val lo = orders.agg(min(col("o_orderkey"))).collect()(0).getLong(0)
+    val (p, planJobs) = JobCount.of(spark)(
+      ReadOp.plan(spark, ds.storage, sid, Some(col("o_orderkey") === lit(lo))))
+    assert(p.files.nonEmpty && planJobs.jobs == 0, s"plan ran $planJobs")
+    val affected = ds.plan().files.take(2).toSet
+    val (co, coJobs) = JobCount.of(spark)(
+      DmlOps.manifestCarryover(spark, ds.storage, sid, affected))
+    assert(co.affectedFileRows.keySet == affected)
+    assert(coJobs.jobs == 0, s"carryover ran $coJobs")
+  }
+
+  test("a table past 256 files: plan, DML and maintenance match full scans") {
+    val orders = Tables.read(spark, sfDir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+    val loc = Files.createTempDirectory("graft_ml300_").toString + "/tbl"
+    val ds = SpaceDataset.create(spark, loc, orders.schema, Seq("o_orderkey"))
+    ds.append(orders.repartitionByRange(300, col("o_orderkey")))
+    val nFiles = ds.plan().files.size
+    assert(nFiles > 256, s"expected > 256 files, got $nFiles")
+    val pred = col("o_orderkey") < 200L
+    // reference model of the table's rows, kept next to every op
+    var model: Set[org.apache.spark.sql.Row] = orders.collect().toSet
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
+    def check(what: String): Unit = {
+      assert(rows(ds.readAll()) == model, s"$what: table differs from the model")
+      // the plan lists exactly the files of a full manifest scan
+      val ms = ds.storage.metadata.currentSnapshot.manifestFiles.indexManifestFiles
+      val listed = spark.read.parquet(ms.map(ds.storage.absolute): _*)
+        .select(ManifestIO.FileCol).collect().map(_.getString(0)).toSet
+      assert(ds.plan().files.toSet == listed, s"$what: plan(None) lost files")
+      // a filtered plan keeps every file holding a match
+      val planned = ds.plan(Some(pred)).files
+      assert(rows(spark.read.parquet(planned.map(ds.storage.absolute): _*).filter(pred)) ==
+        model.filter(_.getLong(0) < 200L), s"$what: the filtered plan dropped a match")
+    }
+    check("append")
+    assert(ds.plan(Some(pred)).files.size < nFiles, "the filtered plan must prune")
+
+    // key delete (carryover past 256 files)
+    val keys = orders.filter(col("o_orderkey") % 7 === 0).select("o_orderkey")
+    ds.storage.commitTransaction(policy = ConflictPolicy.Rewrite) { pinned =>
+      DmlOps.deleteByKeys(spark, ds.storage, pinned, keys)
+    }
+    model = model.filterNot(_.getLong(0) % 7 == 0)
+    check("key delete")
+
+    // upsert: replace some rows, add new ones
+    val up = orders.filter(col("o_orderkey") % 11 === 1)
+      .withColumn("o_totalprice", lit(1.0))
+      .union(orders.filter(col("o_orderkey") < 40L)
+        .withColumn("o_orderkey", col("o_orderkey") + 1000000L))
+    ds.upsert(up)
+    val upRows = rows(up)
+    model = model.filterNot(r => upRows.exists(_.getLong(0) == r.getLong(0))) ++ upRows
+    check("upsert")
+
+    assert(ds.rewriteManifests(targetFilesPerManifest = 1000L).isDefined)
+    check("rewriteManifests")
+
+    assert(ds.compact(targetFileRows = 100L).isDefined)
+    assert(ds.plan().files.size < nFiles)
+    check("compact")
+
+    ds.expireSnapshots(olderThanMs = -1L, keepLast = 1)
+    assert(ds.garbageCollect(minAgeMs = 0L).deleted.nonEmpty)
+    check("garbageCollect")
+    val onDisk = {
+      val s = Files.walk(java.nio.file.Paths.get(loc, "data"))
+      try s.filter(_.toString.endsWith(".parquet")).count() finally s.close()
+    }
+    assert(onDisk == ds.plan().files.size, "GC must keep exactly the live data files")
   }
 }
