@@ -114,38 +114,40 @@ object DmlOps {
       extraAdds = extraAdds)
   }
 
-  /** A view state commit's delete+append as ONE maintenance call: the
-    * key sweep's CoW survivor rewrite and the replacement rows land in
-    * a single write pass (separate files via [[AppendOp
+  /** The one sweep-and-append entry point: a key sweep (`keys` on
+    * `keyCols`) and an append (`adds`) as ONE patch, already merged —
+    * what every view state commit, upsert and merge goes through. With
+    * both present, the sweep's CoW survivor rewrite and the replacement
+    * rows land in a single write pass (separate files via [[AppendOp
     * .writeSplitFiles]], so the changelog still tells carryover from
     * ADDs) — the two-pass commit was every refresh's residual cost
-    * (VERDICT r14 next #3). Write-clustered tables fuse too — the
-    * split write range-sorts both groups into tier shape (VERDICT r15
-    * #2). Falls back to the classic two calls when the layout needs
-    * the full append path (record fields, buckets) or when the sweep
-    * matches nothing. Returns the patches to merge into one commit. */
+    * (VERDICT r14 next #3). Write-clustered tables fuse too — the split
+    * write range-sorts both groups into tier shape (VERDICT r15 #2).
+    * The fused pass falls back to sweep-then-append when the layout
+    * needs the full append path (record fields, buckets) or when the
+    * sweep matches nothing. One side alone is a plain [[deleteByKeysOn]]
+    * or [[RecordIO.writeWithRecords]]; with neither side the result is
+    * None. */
   def deleteByKeysAndAppend(
       spark: SparkSession,
       storage: Storage,
       snapshotId: Long,
-      keys: DataFrame,
+      keys: Option[DataFrame],
       keyCols: Seq[String],
-      adds: DataFrame,
+      adds: Option[DataFrame],
       /** Per-call merge-on-read threshold for the sweep leg (see
         * [[delete]]): a view refresh passes its state-sweep fraction,
         * so steady-state maintenance soft-deletes instead of CoW-
         * rewriting every touched state file. */
-      dvFracOverride: Option[Double] = None): Seq[Patch] = {
-    val fusible = storage.recordFields.isEmpty && storage.metadata.numBuckets == 0
-    if (!fusible)
-      return deleteByKeysOn(spark, storage, snapshotId, keys, keyCols,
-        dvFracOverride = dvFracOverride).toSeq :+
-        RecordIO.writeWithRecords(spark, storage, adds)
-    deleteByKeysOn(spark, storage, snapshotId, keys, keyCols, Some(adds),
-      dvFracOverride = dvFracOverride) match {
-      case Some(p) => Seq(p) // adds written inside the fused pass
-      case None => Seq(RecordIO.writeWithRecords(spark, storage, adds))
-    }
+      dvFracOverride: Option[Double] = None): Option[Patch] = {
+    val fused = adds.filter(_ =>
+      keys.isDefined && storage.recordFields.isEmpty && storage.metadata.numBuckets == 0)
+    val swept = keys.flatMap(k =>
+      deleteByKeysOn(spark, storage, snapshotId, k, keyCols, fused, dvFracOverride))
+    // the fused pass wrote the adds only when its sweep matched something
+    val appended = adds.filterNot(_ => fused.isDefined && swept.isDefined)
+      .map(RecordIO.writeWithRecords(spark, storage, _))
+    Patch.merge(swept.toSeq ++ appended)
   }
 
   /** Up to this many FILES in a snapshot, a key delete skips stats
@@ -226,10 +228,6 @@ object DmlOps {
       ()
     }
   }
-
-  /** Back-compat shim for the pre-point-form name. */
-  private[graft] def keyRangePredicate(spark: SparkSession, keys: DataFrame, storage: Storage): Option[Column] =
-    keyLookupPredicate(spark, keys, storage, storage.primaryKeys)
 
   /** Canonical identity of a data file for executor↔driver matching:
     * scheme + authority + path. `_metadata.file_path` renders a qualified
@@ -559,7 +557,7 @@ object DmlOps {
     try {
       failOnInternalDupes(pinned, pks)
       val keys = pinned.select(pks.map(col): _*)
-      val rangePred = keyRangePredicate(spark, keys, storage)
+      val rangePred = keyLookupPredicate(spark, keys, storage, pks)
       val existing = ReadOp.scanPhysical(spark, storage, snapshotId, rangePred)
         .select(pks.map(col): _*)
       val dupes = existing.join(keys, pks, "left_semi").limit(1).count()
@@ -579,8 +577,8 @@ object DmlOps {
       failOnInternalDupes(pinned, storage.primaryKeys)
       // fused: the matched-key CoW sweep and the incoming rows land in
       // one write pass (plain layouts; see deleteByKeysAndAppend)
-      Patch.merge(deleteByKeysAndAppend(spark, storage, snapshotId,
-        pinned, storage.primaryKeys, pinned)).get
+      deleteByKeysAndAppend(spark, storage, snapshotId,
+        Some(pinned), storage.primaryKeys, Some(pinned)).get
     } finally { pinned.unpersist(); () }
   }
 
@@ -638,7 +636,7 @@ object DmlOps {
     val src = source.persist()
     try {
       val keys = src.select(pks.map(col): _*)
-      val rangePred = keyRangePredicate(spark, keys, storage)
+      val rangePred = keyLookupPredicate(spark, keys, storage, pks)
       val targetKeys = ReadOp.scanPhysical(spark, storage, snapshotId, rangePred)
         .select(pks.map(col): _*)
       val matched = src.join(targetKeys, pks, "left_semi")
@@ -701,13 +699,7 @@ object DmlOps {
           nmbsUpdatedRows.toSeq
       val appendRows = toAppend.reduceOption(_.unionByName(_)).filter(!_.isEmpty)
       // fused: the one CoW pass and the one append share a write job
-      (deleteKeys, appendRows) match {
-        case (Some(k), Some(a)) =>
-          Patch.merge(deleteByKeysAndAppend(spark, storage, snapshotId, k, pks, a))
-        case (Some(k), None) => deleteByKeys(spark, storage, snapshotId, k)
-        case (None, Some(a)) => Some(RecordIO.writeWithRecords(spark, storage, a))
-        case (None, None) => None
-      }
+      deleteByKeysAndAppend(spark, storage, snapshotId, deleteKeys, pks, appendRows)
     } finally {
       src.unpersist()
       ()

@@ -73,9 +73,26 @@ final case class AggPlan(
     else aggs.filter(a => a.kind == "min" || a.kind == "max")
 }
 
-/** Common refresh surface of row-wise and aggregate materialized
-  * views — what `CALL system.refresh_mv` dispatches over. */
+/** Common refresh surface of every view kind (row-wise, aggregate and
+  * join views) — what `CALL system.refresh_mv` dispatches over.
+  *
+  * [[refresh]] is the one shared wrapper: it runs the view kind's own
+  * maintenance walk ([[refreshInner]]) and, when that committed
+  * anything, self-maintains each of the view's [[stateDatasets]]
+  * (bin-pack past the file threshold, [[ViewMaintenance
+  * .maybeCompactState]]; CDC-silent, so chained views are unaffected).
+  * Every state commit of a walk goes through
+  * [[ViewMaintenance.commitUnlessApplied]]. */
 trait Refreshable {
+  def spark: SparkSession
+  /** The view's main state table (a join view's inner state). */
+  def dataset: SpaceDataset
+  /** Every state table the view maintains, in auto-compaction order. */
+  protected def stateDatasets: Seq[SpaceDataset] = Seq(dataset)
+
+  /** The view kind's maintenance walk; returns the state commits made. */
+  protected def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int
+
   def refresh(targetVersion: Option[String] = None): Int =
     refresh(targetVersion, coalesce = false)
   /** `coalesce = true` folds the ENTIRE watermark→target CDC walk into
@@ -90,8 +107,13 @@ trait Refreshable {
     * `spark.graft.mv.autoCoalesceSnapshots` (default 8) coalesces on
     * its own: past that depth the per-snapshot cost is pathological
     * and chained views see the window as one coarser commit (set the
-    * conf to 0 to force per-snapshot regardless of depth). */
-  def refresh(targetVersion: Option[String], coalesce: Boolean): Int
+    * conf to 0 to force per-snapshot regardless of depth). Returns the
+    * number of state commits made. */
+  def refresh(targetVersion: Option[String], coalesce: Boolean): Int = {
+    val commits = refreshInner(targetVersion, coalesce)
+    if (commits > 0) stateDatasets.foreach(ViewMaintenance.maybeCompactState(spark, _))
+    commits
+  }
   def refreshedTo: Option[Long]
 }
 
@@ -220,13 +242,6 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
     st.select(out: _*)
   }
 
-  /** Refresh to the source's `targetVersion` (default: head). The
-    * FIRST refresh full-builds the state with one aggregation scan AT
-    * the target snapshot (one commit — no CDC replay, so it works even
-    * when the source's early history has been expired/GC'd, and costs
-    * one pass instead of one per historical snapshot); every later
-    * refresh is incremental from the watermark, one state commit per
-    * source snapshot. Returns the number of state commits made. */
   /** The partial-state schema is FIXED at create from the source's
     * column types; a later metadata-only TYPE WIDENING of a consumed
     * source column (int→double on a summed/min'd column) changes what
@@ -259,15 +274,14 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
     }
   }
 
-  override def refresh(targetVersion: Option[String], coalesce: Boolean): Int = {
-    val commits = refreshInner(targetVersion, coalesce)
-    // self-maintenance: bin-pack the state table when refresh churn
-    // crossed the file threshold (CDC-silent; chained views unaffected)
-    if (commits > 0) ViewMaintenance.maybeCompactState(spark, dataset)
-    commits
-  }
-
-  private def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int = {
+  /** Refresh to the source's `targetVersion` (default: head). The
+    * FIRST refresh full-builds the state with one aggregation scan AT
+    * the target snapshot (one commit — no CDC replay, so it works even
+    * when the source's early history has been expired/GC'd, and costs
+    * one pass instead of one per historical snapshot); every later
+    * refresh is incremental from the watermark, one state commit per
+    * source snapshot. Returns the number of state commits made. */
+  protected def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int = {
     val source = SpaceDataset.load(spark, plan.sourceLocation)
     requireStateCompatible(source)
     val target = targetVersion.map(source.storage.versionToSnapshotId)
@@ -307,11 +321,10 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
     // re-check on the next refresh.
     val dataSids = sids.filter(sid =>
       source.storage.snapshotOrFail(sid).changeLogFile.isDefined)
-    if (dataSids.isEmpty) return maybeAdvanceSilent(target, sids, dataSids)
 
     // a backlog deeper than the auto-coalesce bound merges on its own
     // (VERDICT r14 #2): one merged delta, one state commit
-    if (ViewMaintenance.shouldCoalesce(spark, coalesce, dataSids.size)) {
+    if (dataSids.nonEmpty && ViewMaintenance.shouldCoalesce(spark, coalesce, dataSids.size)) {
       // the whole backlog as ONE merged delta and ONE state commit:
       // the maintenance arithmetic is additive, so adds/deletes from
       // every snapshot in the walk merge exactly like one snapshot's
@@ -321,56 +334,27 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
         deletesPksOnly = false)
       val estRows = dataSids.map(sid =>
         ViewMaintenance.changelogRows(source.storage, sid, addsOnly = false)).sum
-      var applied = false
-      dataset.storage.transaction() { pinned =>
-        if (dataset.storage.metadata.mvSourceSnapshotId.exists(_ >= target)) {
-          applied = false
-          (None, ())
-        } else {
-          val patch = applyBatches(source, target, batches, pinned, estRows)
-          applied = true
-          (Some(patch.copy(sourceSnapshotId = Some(target))), ())
-        }
+      return ViewMaintenance.commitUnlessApplied(dataset.storage,
+          ViewMaintenance.reached(target)) { pinned =>
+        applyBatches(source, target, batches, pinned, estRows)
+          .copy(sourceSnapshotId = Some(target))
       }
-      return if (applied) 1 else 0
     }
 
-    var commits = 0
-    for (sid <- dataSids) {
+    val commits = dataSids.map { sid =>
       val parent = source.storage.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L)
       // full delete rows: the state must SUBTRACT their contribution
       val batches = ChangeData.diff(spark, source.storage, parent, sid,
         deletesPksOnly = false)
       val estRows = ViewMaintenance.changelogRows(source.storage, sid, addsOnly = false)
-      var applied = false
-      dataset.storage.transaction() { pinned =>
-        if (dataset.storage.metadata.mvSourceSnapshotId.exists(_ >= sid)) {
-          applied = false
-          (None, ())
-        } else {
-          val patch = applyBatches(source, sid, batches, pinned, estRows)
-          applied = true
-          (Some(patch.copy(sourceSnapshotId = Some(sid))), ())
-        }
+      ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(sid)) {
+        pinned =>
+          applyBatches(source, sid, batches, pinned, estRows)
+            .copy(sourceSnapshotId = Some(sid))
       }
-      if (applied) commits += 1
-    }
-    commits + maybeAdvanceSilent(target, sids, dataSids)
-  }
-
-  /** ONE empty (CDC-silent) commit advancing the watermark to `target`
-    * when the walk's silent tail crossed the configured bound — keeps
-    * a long-silent source from expiring the recorded watermark
-    * snapshot and forcing a data-identical full rebuild (VERDICT r14
-    * #3). */
-  private def maybeAdvanceSilent(target: Long, sids: Seq[Long], dataSids: Seq[Long]): Int = {
-    if (!ViewMaintenance.silentTailNeedsAdvance(spark, sids, dataSids)) return 0
-    var applied = false
-    dataset.storage.transaction() { _ =>
-      if (dataset.storage.metadata.mvSourceSnapshotId.exists(_ >= target)) (None, ())
-      else { applied = true; (Some(Patch().copy(sourceSnapshotId = Some(target))), ()) }
-    }
-    if (applied) 1 else 0
+    }.sum
+    commits + ViewMaintenance.advanceSilent(spark, dataset.storage, sids, dataSids,
+      ViewMaintenance.reached(target))(Patch(sourceSnapshotId = Some(target)))
   }
 
   /** One-commit whole-state (re)build: a single aggregation scan of
@@ -381,50 +365,37 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
   private def fullBuild(source: SpaceDataset, target: Long, overwrite: Boolean): Int = {
     val stateSchema = dataset.storage.logicalSchema
     val pexprs = partialExprs(plan)
-    var applied = false
-    dataset.storage.transaction() { pinned =>
-      val watermark = dataset.storage.metadata.mvSourceSnapshotId
-      if (watermark.exists(_ >= target) || (watermark.isDefined && !overwrite)) {
-        (None, ())
-      } else {
-        val srcRows = source.read(version = Some(target.toString))
-        val partial = srcFilter.fold(srcRows)(srcRows.filter)
-          .groupBy(groups.map(col): _*).agg(pexprs.head, pexprs.tail: _*)
-          .persist()
-        try {
-          val nullKey = groups.map(g => col(g).isNull).reduce(_ || _)
-          val bad = partial.agg(max(when(nullKey, 1).otherwise(0))).collect()(0)
-          require(bad.isNullAt(0) || bad.getInt(0) == 0,
-            s"aggregate view ${dataset.location}: NULL group-by key in source " +
-              s"snapshot $target (null groups are unsupported — filter them in a view)")
-          val rows = partial.select(stateSchema.fields.toSeq.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)): _*)
-          val patch =
-            if (overwrite) DmlOps.overwriteAll(spark, dataset.storage, pinned, rows)
-            else RecordIO.writeWithRecords(spark, dataset.storage, rows)
-          applied = true
-          (Some(patch.copy(sourceSnapshotId = Some(target))), ())
-        } finally partial.unpersist()
-      }
+    // a non-overwrite build never lands on an already-built state
+    ViewMaintenance.commitUnlessApplied(dataset.storage, m =>
+      m.mvSourceSnapshotId.exists(_ >= target) ||
+        (m.mvSourceSnapshotId.isDefined && !overwrite)) { pinned =>
+      val srcRows = source.read(version = Some(target.toString))
+      val partial = srcFilter.fold(srcRows)(srcRows.filter)
+        .groupBy(groups.map(col): _*).agg(pexprs.head, pexprs.tail: _*)
+        .persist()
+      try {
+        val nullKey = groups.map(g => col(g).isNull).reduce(_ || _)
+        val bad = partial.agg(max(when(nullKey, 1).otherwise(0))).collect()(0)
+        require(bad.isNullAt(0) || bad.getInt(0) == 0,
+          s"aggregate view ${dataset.location}: NULL group-by key in source " +
+            s"snapshot $target (null groups are unsupported — filter them in a view)")
+        val rows = partial.select(stateSchema.fields.toSeq.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)): _*)
+        val patch =
+          if (overwrite) DmlOps.overwriteAll(spark, dataset.storage, pinned, rows)
+          else RecordIO.writeWithRecords(spark, dataset.storage, rows)
+        patch.copy(sourceSnapshotId = Some(target))
+      } finally partial.unpersist()
     }
-    if (applied) 1 else 0
   }
 
   /** CONTINUOUS maintenance through Structured Streaming, identical in
-    * shape to [[MaterializedView.refreshStream]]: the source's CDC
-    * stream is pure trigger + offset bookkeeping; each micro-batch
-    * runs an incremental [[refresh]] whose own `refreshedTo` watermark
-    * provides exactly-once under replays and overlapping refreshers. */
+    * shape to [[MaterializedView.refreshStream]] (see
+    * [[ViewMaintenance.refreshOnCdc]]): each micro-batch runs an
+    * incremental [[refresh]] whose own `refreshedTo` watermark provides
+    * exactly-once under replays and overlapping refreshers. */
   def refreshStream(checkpointLocation: String): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("graft-cdc")
-      .option("location", plan.sourceLocation)
-      .load()
-      .writeStream
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        refresh(); ()
-      }
-      .start()
+    ViewMaintenance.refreshOnCdc(this, plan.sourceLocation, checkpointLocation)
 
   /** Merge one source snapshot's change batches into the state table:
     * per-group delta partials → arithmetic merge against the affected
@@ -614,10 +585,9 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
 
       // fused delete+append: the affected-group sweep's survivors and
       // the merged state rows land in ONE write pass (VERDICT r14 #3)
-      val patches = DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
-        affectedKeys, dataset.storage.primaryKeys, newRows,
-        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-      Patch.merge(patches).getOrElse(Patch())
+      DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
+        Some(affectedKeys), dataset.storage.primaryKeys, Some(newRows),
+        dvFracOverride = ViewMaintenance.stateDvFraction(spark)).getOrElse(Patch())
     } finally {
       annotated.unpersist()
       delta.unpersist()

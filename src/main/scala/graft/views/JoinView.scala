@@ -227,19 +227,10 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       unmatchedRightDataset.map(d =>
         UmRightPin -> d.storage.metadata.currentSnapshotId)).toMap
 
-  override def refresh(targetVersion: Option[String], coalesce: Boolean): Int = {
-    val commits = refreshInner(targetVersion, coalesce)
-    // self-maintenance: bin-pack the state tables when refresh churn
-    // crossed the file threshold (CDC-silent; chained views unaffected)
-    if (commits > 0) {
-      ViewMaintenance.maybeCompactState(spark, dataset)
-      unmatchedDataset.foreach(ViewMaintenance.maybeCompactState(spark, _))
-      unmatchedRightDataset.foreach(ViewMaintenance.maybeCompactState(spark, _))
-    }
-    commits
-  }
+  override protected def stateDatasets: Seq[SpaceDataset] =
+    dataset +: (unmatchedDataset.toSeq ++ unmatchedRightDataset.toSeq)
 
-  private def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int = {
+  protected def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int = {
     require(targetVersion.isEmpty,
       "join view refresh has no single target version (two sources " +
         "advance independently); refresh always goes to both heads")
@@ -322,7 +313,8 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
           commits += step(left, LeftSide, sid, plan.leftFields, rightAtW,
             deltaIsLeft = true, cache)
     }
-    commits += maybeAdvanceSilent(dataset.storage, LeftSide, lT, lAll, lSids)
+    commits += ViewMaintenance.advanceSilent(spark, dataset.storage, lAll, lSids,
+      ViewMaintenance.reached(LeftSide, lT))(Patch(sourceSnapshotIds = Map(LeftSide -> lT)))
 
     val (rAll, rSids) =
       try sidWalk(right, rW, rT)
@@ -340,7 +332,8 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
           commits += step(right, RightSide, sid, plan.rightFields, leftAtT,
             deltaIsLeft = false, cache)
     }
-    commits += maybeAdvanceSilent(dataset.storage, RightSide, rT, rAll, rSids)
+    commits += ViewMaintenance.advanceSilent(spark, dataset.storage, rAll, rSids,
+      ViewMaintenance.reached(RightSide, rT))(Patch(sourceSnapshotIds = Map(RightSide -> rT)))
     commits
   }
 
@@ -430,11 +423,11 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       // silent-tail advance, same companions-first order; the inner
       // advance (last) stamps the fresh pins
       for ((tb, (all, data, born)) <- tables.zip(walks) if born) {
-        val extra =
-          if (tb.st eq dataset.storage) () => companionIds()
-          else () => Map.empty[String, Long]
-        val n = maybeAdvanceSilent(tb.st, side, t, all, data, extra)
-        if (tb.st eq dataset.storage) in_+(n) else um_+(n)
+        val isInner = tb.st eq dataset.storage
+        val n = ViewMaintenance.advanceSilent(spark, tb.st, all, data,
+          ViewMaintenance.reached(side, t))(Patch(sourceSnapshotIds = Map(side -> t) ++
+            (if (isInner) companionIds() else Map.empty)))
+        if (isInner) in_+(n) else um_+(n)
         c += n
       }
       Some(c)
@@ -541,47 +534,19 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
 
   /** CONTINUOUS maintenance through Structured Streaming — the shape of
     * [[MaterializedView.refreshStream]], doubled: BOTH sources' CDC
-    * streams (`graft-cdc`, snapshot-id offsets) trigger an incremental
-    * [[refresh]], so the view follows whichever side commits. Neither
-    * stream consumes its batch rows — refresh() applies change data
-    * itself with the bi-delta algebra, one state commit per source
-    * snapshot — so the streams are pure trigger + offset bookkeeping
-    * and a row never flows twice. Exactly-once comes from the per-side
-    * watermarks, not the checkpoints: an overlapping or replayed batch
-    * finds its snapshots already applied and no-ops. Checkpoints land
-    * under `<checkpointLocation>/left` and `/right`. */
+    * streams trigger an incremental [[refresh]] (each through
+    * [[ViewMaintenance.refreshOnCdc]]), so the view follows whichever
+    * side commits. refresh() applies change data itself with the
+    * bi-delta algebra, one state commit per source snapshot, and
+    * exactly-once comes from the per-side watermarks, not the
+    * checkpoints. Checkpoints land under `<checkpointLocation>/left`
+    * and `/right`. */
   def refreshStreams(checkpointLocation: String)
       : Seq[org.apache.spark.sql.streaming.StreamingQuery] =
     Seq(plan.leftLocation -> s"$checkpointLocation/left",
         plan.rightLocation -> s"$checkpointLocation/right").map {
-      case (srcLoc, ckpt) =>
-        spark.readStream.format("graft-cdc")
-          .option("location", srcLoc)
-          .load()
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            refresh(); ()
-          }
-          .start()
+      case (srcLoc, ckpt) => ViewMaintenance.refreshOnCdc(this, srcLoc, ckpt)
     }
-
-  /** Poll-and-refresh loop (committed-snapshot granularity). BLOCKS
-    * the calling thread with Thread.sleep between polls — a test
-    * harness / cron-job body, not a scheduler: long-running production
-    * maintenance should use [[refreshStreams]] (checkpointed, restart-
-    * safe, trigger-driven). Stops after `maxPolls`; returns total
-    * state commits. */
-  def refreshContinuously(pollIntervalMs: Long, maxPolls: Int): Int = {
-    var total = 0
-    var i = 0
-    while (i < maxPolls) {
-      total += refresh()
-      i += 1
-      if (i < maxPolls) Thread.sleep(pollIntervalMs)
-    }
-    total
-  }
 
   /** Keys + this side's fields, nothing else (column pruning reaches
     * the scan through the projection). */
@@ -595,36 +560,10 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
     * data-bearing commit, and a purely-silent tail costs only an O(1)
     * metadata re-check per refresh until it crosses the
     * [[ViewMaintenance.SilentTailMaxSnapshotsKey]] bound (then ONE
-    * empty advance commit — see [[maybeAdvanceSilent]]). */
+    * empty advance commit — see [[ViewMaintenance.advanceSilent]]). */
   private def sidWalk(src: SpaceDataset, w: Long, t: Long): (Seq[Long], Seq[Long]) = {
     val all = src.storage.orderedSnapshotIds(w, t)
     (all, all.filter(sid => src.storage.snapshotOrFail(sid).changeLogFile.isDefined))
-  }
-
-  /** ONE empty (CDC-silent) commit advancing `side`'s watermark to `t`
-    * when the walk's silent tail crossed the configured bound — keeps
-    * a long-silent source (hourly compactions, no data) from expiring
-    * the recorded watermark snapshot and forcing a data-identical full
-    * rebuild (VERDICT r14 #3). */
-  private def maybeAdvanceSilent(
-      st: Storage,
-      side: String,
-      t: Long,
-      allSids: Seq[Long],
-      dataSids: Seq[Long],
-      /** Evaluated INSIDE the transaction: the inner table's advance
-        * stamps the fresh companion pins ([[companionIds]]). */
-      extra: () => Map[String, Long] = () => Map.empty): Int = {
-    if (!ViewMaintenance.silentTailNeedsAdvance(spark, allSids, dataSids)) return 0
-    var applied = false
-    st.transaction() { _ =>
-      if (st.metadata.mvSourceSnapshotIds.get(side).exists(_ >= t)) (None, ())
-      else {
-        applied = true
-        (Some(Patch().copy(sourceSnapshotIds = Map(side -> t) ++ extra())), ())
-      }
-    }
-    if (applied) 1 else 0
   }
 
   /** One source snapshot applied as one state commit (exactly-once via
@@ -639,57 +578,33 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       cache: DiffCache): Int = {
     val parent = src.storage.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L)
     val batches = cache.diff(src.storage, parent, sid, diffPksOnly)
-    val srcPks = src.primaryKeys
     // O(1) delta size from the changelog bitmaps — gates the broadcast
     // hint below (a fat backfill commit must NOT be force-broadcast)
     val addRows = ViewMaintenance.changelogRows(src.storage, sid, addsOnly = true)
-    var applied = false
-    dataset.storage.transaction() { pinned =>
-      if (dataset.storage.metadata.mvSourceSnapshotIds.get(side).exists(_ >= sid)) {
-        applied = false
-        (None, ())
-      } else {
-        // ADD batch → join rows to append: broadcast only under the
-        // configured row bound; above it the join is left to AQE
-        // (still delta ⋈ big-side, just shuffled) — correctness is
-        // hint-independent
-        def joinRows(b: ChangeBatch): DataFrame = {
-          val delta = ViewMaintenance.maybeBroadcast(
-            spark, sideProjection(b.data, sideFields), addRows)
-          val joined =
-            if (deltaIsLeft) delta.join(other, plan.keys, "inner")
-            else other.join(delta, plan.keys, "inner")
-          joined.select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
-        }
-        val dels = batches.filter(_.changeType == ChangeType.Delete)
-        val adds = batches.filter(_.changeType == ChangeType.Add)
-        val patches = (dels, adds) match {
-          // the per-snapshot shape: fused delete+append — the sweep by
-          // the SOURCE's PK columns (part of the state PK by
-          // construction, so exactly this source row's derived join
-          // rows disappear) and the delta-join append land in ONE
-          // write pass (VERDICT r14 #3)
-          case (Seq(d), Seq(a)) =>
-            DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
-              d.data, srcPks, joinRows(a),
-              dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-          case _ => batches.flatMap { b =>
-            b.changeType match {
-              case ChangeType.Delete =>
-                DmlOps.deleteByKeysOn(spark, dataset.storage, pinned, b.data, srcPks,
-                  dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-              case ChangeType.Add =>
-                Some(RecordIO.writeWithRecords(spark, dataset.storage, joinRows(b)))
-            }
-          }
-        }
-        val merged = Patch.merge(patches).getOrElse(Patch())
-          .copy(sourceSnapshotIds = Map(side -> sid) ++ companionIds())
-        applied = true
-        (Some(merged), ())
+    ViewMaintenance.commitUnlessApplied(dataset.storage,
+        ViewMaintenance.reached(side, sid)) { pinned =>
+      // ADD batch → join rows to append: broadcast only under the
+      // configured row bound; above it the join is left to AQE
+      // (still delta ⋈ big-side, just shuffled) — correctness is
+      // hint-independent
+      val adds = batches.find(_.changeType == ChangeType.Add).map { a =>
+        val delta = ViewMaintenance.maybeBroadcast(
+          spark, sideProjection(a.data, sideFields), addRows)
+        val joined =
+          if (deltaIsLeft) delta.join(other, plan.keys, "inner")
+          else other.join(delta, plan.keys, "inner")
+        joined.select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
       }
+      // the sweep by the SOURCE's PK columns (part of the state PK by
+      // construction, so exactly this source row's derived join rows
+      // disappear) and the delta-join append land in ONE write pass
+      // (VERDICT r14 #3)
+      DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
+        batches.find(_.changeType == ChangeType.Delete).map(_.data), src.primaryKeys, adds,
+        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+        .getOrElse(Patch())
+        .copy(sourceSnapshotIds = Map(side -> sid) ++ companionIds())
     }
-    if (applied) 1 else 0
   }
 
   /** One side's ENTIRE watermark→target backlog as ONE state commit
@@ -719,34 +634,25 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
     val touched = batches.map(_.data.select(srcPks.map(col): _*))
       .reduceOption(_.unionByName(_)).map(_.distinct().persist())
       .getOrElse(return 0)
-    var applied = false
-    try {
-      dataset.storage.transaction() { pinned =>
-        if (dataset.storage.metadata.mvSourceSnapshotIds.get(side).exists(_ >= t)) {
-          applied = false
-          (None, ())
-        } else {
-          val live = src.read(version = Some(t.toString))
-            .join(ViewMaintenance.maybeBroadcast(spark, touched, estRows),
-              srcPks, "left_semi")
-          val delta = ViewMaintenance.maybeBroadcast(
-            spark, sideProjection(live, sideFields), estRows)
-          val joined =
-            if (deltaIsLeft) delta.join(other, plan.keys, "inner")
-            else other.join(delta, plan.keys, "inner")
-          val out = joined.select(
-            (plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
-          // fused delete+append: one write pass per coalesced commit
-          val patches = DmlOps.deleteByKeysAndAppend(spark, dataset.storage,
-            pinned, touched, srcPks, out,
-            dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-          applied = true
-          (Some(Patch.merge(patches).getOrElse(Patch())
-            .copy(sourceSnapshotIds = Map(side -> t) ++ companionIds())), ())
-        }
-      }
+    try ViewMaintenance.commitUnlessApplied(dataset.storage,
+        ViewMaintenance.reached(side, t)) { pinned =>
+      val live = src.read(version = Some(t.toString))
+        .join(ViewMaintenance.maybeBroadcast(spark, touched, estRows),
+          srcPks, "left_semi")
+      val delta = ViewMaintenance.maybeBroadcast(
+        spark, sideProjection(live, sideFields), estRows)
+      val joined =
+        if (deltaIsLeft) delta.join(other, plan.keys, "inner")
+        else other.join(delta, plan.keys, "inner")
+      val out = joined.select(
+        (plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
+      // fused delete+append: one write pass per coalesced commit
+      DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
+        Some(touched), srcPks, Some(out),
+        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+        .getOrElse(Patch())
+        .copy(sourceSnapshotIds = Map(side -> t) ++ companionIds())
     } finally touched.unpersist()
-    if (applied) 1 else 0
   }
 
   /** One-commit whole-state (re)build: one join of both sides at the
@@ -756,35 +662,27 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       right: SpaceDataset,
       lT: Long,
       rT: Long,
-      overwrite: Boolean): Int = {
-    var applied = false
-    dataset.storage.transaction() { pinned =>
-      val wm = dataset.storage.metadata.mvSourceSnapshotIds
-      // Non-overwrite build: ANY existing watermark means the state was
-      // already built — a concurrent refresher that landed at OLDER
-      // source heads included. Appending another full live⋈live join on
-      // top would permanently duplicate every row alive at both
-      // snapshots (ADVICE r14 high); the caller's incremental walk
-      // advances from the observed watermarks instead.
-      if ((wm.get(LeftSide).exists(_ >= lT) && wm.get(RightSide).exists(_ >= rT)) ||
-          (wm.nonEmpty && !overwrite)) {
-        (None, ())
-      } else {
-        val joined = sideProjection(left.read(version = Some(lT.toString)),
-            plan.leftFields)
-          .join(sideProjection(right.read(version = Some(rT.toString)),
-            plan.rightFields), plan.keys, "inner")
-          .select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
-        val patch =
-          if (overwrite) DmlOps.overwriteAll(spark, dataset.storage, pinned, joined)
-          else RecordIO.writeWithRecords(spark, dataset.storage, joined)
-        applied = true
-        (Some(patch.copy(sourceSnapshotIds =
-          Map(LeftSide -> lT, RightSide -> rT) ++ companionIds())), ())
-      }
+      overwrite: Boolean): Int =
+    // Non-overwrite build: ANY existing watermark means the state was
+    // already built — a concurrent refresher that landed at OLDER
+    // source heads included. Appending another full live⋈live join on
+    // top would permanently duplicate every row alive at both
+    // snapshots (ADVICE r14 high); the caller's incremental walk
+    // advances from the observed watermarks instead.
+    ViewMaintenance.commitUnlessApplied(dataset.storage, m =>
+      (ViewMaintenance.reached(LeftSide, lT)(m) && ViewMaintenance.reached(RightSide, rT)(m)) ||
+        (m.mvSourceSnapshotIds.nonEmpty && !overwrite)) { pinned =>
+      val joined = sideProjection(left.read(version = Some(lT.toString)),
+          plan.leftFields)
+        .join(sideProjection(right.read(version = Some(rT.toString)),
+          plan.rightFields), plan.keys, "inner")
+        .select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
+      val patch =
+        if (overwrite) DmlOps.overwriteAll(spark, dataset.storage, pinned, joined)
+        else RecordIO.writeWithRecords(spark, dataset.storage, joined)
+      patch.copy(sourceSnapshotIds =
+        Map(LeftSide -> lT, RightSide -> rT) ++ companionIds())
     }
-    if (applied) 1 else 0
-  }
 
   private def rebuild(left: SpaceDataset, right: SpaceDataset, lT: Long, rT: Long): Int =
     fullBuild(left, right, lT, rT, overwrite = true)
@@ -827,27 +725,19 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
   /** One-commit (re)build of an unmatched table: `OWN@ownT anti
     * OTHER@otherT`. Same non-overwrite no-op rule as the inner
     * [[fullBuild]]. */
-  private def umBuild(u: UmSide, ownT: Long, otherT: Long, overwrite: Boolean): Int = {
-    var applied = false
-    u.um.storage.transaction() { pinned =>
-      val w = u.um.storage.metadata.mvSourceSnapshotIds
-      if ((w.get(u.ownSide).exists(_ >= ownT) && w.get(u.otherSide).exists(_ >= otherT)) ||
-          (w.nonEmpty && !overwrite)) {
-        (None, ())
-      } else {
-        val rows = u.ownProjection(u.own.read(version = Some(ownT.toString)))
-          .join(u.other.read(version = Some(otherT.toString))
-            .select(plan.keys.map(col): _*), plan.keys, "left_anti")
-        val patch =
-          if (overwrite) DmlOps.overwriteAll(spark, u.um.storage, pinned, rows)
-          else RecordIO.writeWithRecords(spark, u.um.storage, rows)
-        applied = true
-        (Some(patch.copy(sourceSnapshotIds =
-          Map(u.ownSide -> ownT, u.otherSide -> otherT))), ())
-      }
+  private def umBuild(u: UmSide, ownT: Long, otherT: Long, overwrite: Boolean): Int =
+    ViewMaintenance.commitUnlessApplied(u.um.storage, m =>
+      (ViewMaintenance.reached(u.ownSide, ownT)(m) &&
+        ViewMaintenance.reached(u.otherSide, otherT)(m)) ||
+        (m.mvSourceSnapshotIds.nonEmpty && !overwrite)) { pinned =>
+      val rows = u.ownProjection(u.own.read(version = Some(ownT.toString)))
+        .join(u.other.read(version = Some(otherT.toString))
+          .select(plan.keys.map(col): _*), plan.keys, "left_anti")
+      val patch =
+        if (overwrite) DmlOps.overwriteAll(spark, u.um.storage, pinned, rows)
+        else RecordIO.writeWithRecords(spark, u.um.storage, rows)
+      patch.copy(sourceSnapshotIds = Map(u.ownSide -> ownT, u.otherSide -> otherT))
     }
-    if (applied) 1 else 0
-  }
 
   /** Δown applied to an unmatched table: the exact mirror of [[step]]
     * with the join replaced by an anti-join on the keys. */
@@ -858,40 +748,17 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       cache: DiffCache): Int = {
     val parent = u.own.storage.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L)
     val batches = cache.diff(u.own.storage, parent, sid, diffPksOnly)
-    val ownPks = u.own.primaryKeys
-    var applied = false
-    u.um.storage.transaction() { pinned =>
-      if (u.um.storage.metadata.mvSourceSnapshotIds.get(u.ownSide).exists(_ >= sid)) {
-        applied = false
-        (None, ())
-      } else {
-        def umAdds(b: ChangeBatch): DataFrame =
-          u.ownProjection(b.data).join(otherKeysAtW, plan.keys, "left_anti")
-        val dels = batches.filter(_.changeType == ChangeType.Delete)
-        val adds = batches.filter(_.changeType == ChangeType.Add)
-        val patches = (dels, adds) match {
-          // fused per-snapshot shape: PK sweep + anti-join append in
-          // one write pass (VERDICT r14 #3)
-          case (Seq(d), Seq(a)) =>
-            DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
-              d.data, ownPks, umAdds(a),
-              dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-          case _ => batches.flatMap { b =>
-            b.changeType match {
-              case ChangeType.Delete =>
-                DmlOps.deleteByKeysOn(spark, u.um.storage, pinned, b.data, ownPks,
-                  dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-              case ChangeType.Add =>
-                Some(RecordIO.writeWithRecords(spark, u.um.storage, umAdds(b)))
-            }
-          }
-        }
-        applied = true
-        (Some(Patch.merge(patches).getOrElse(Patch())
-          .copy(sourceSnapshotIds = Map(u.ownSide -> sid))), ())
-      }
+    ViewMaintenance.commitUnlessApplied(u.um.storage,
+        ViewMaintenance.reached(u.ownSide, sid)) { pinned =>
+      // PK sweep + anti-join append in one write pass (VERDICT r14 #3)
+      DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
+        batches.find(_.changeType == ChangeType.Delete).map(_.data), u.own.primaryKeys,
+        batches.find(_.changeType == ChangeType.Add).map(a =>
+          u.ownProjection(a.data).join(otherKeysAtW, plan.keys, "left_anti")),
+        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+        .getOrElse(Patch())
+        .copy(sourceSnapshotIds = Map(u.ownSide -> sid))
     }
-    if (applied) 1 else 0
   }
 
   /** Δother applied to an unmatched table: keys that DIED at `sid` push
@@ -906,59 +773,34 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
     val batches = cache.diff(u.other.storage, parent, sid, pksOnly = false)
     val ownPks = u.um.primaryKeys
     val deltaRows = ViewMaintenance.changelogRows(u.other.storage, sid, addsOnly = false)
-    var applied = false
-    u.um.storage.transaction() { pinned =>
-      if (u.um.storage.metadata.mvSourceSnapshotIds.get(u.otherSide).exists(_ >= sid)) {
-        applied = false
-        (None, ())
-      } else {
-        val otherKeysAtSid = u.other.read(version = Some(sid.toString))
-          .select(plan.keys.map(col): _*)
-        val umPinned = u.um.read(version = Some(pinned.toString))
-        // own-rows of a dying key, unless the key survives at sid
-        // (another other-side row, or a same-snapshot re-add) or
-        // the own row is already unmatched
-        def entrants(b: ChangeBatch): DataFrame = {
-          val delKeys = ViewMaintenance.maybeBroadcast(
-            spark, keysOf(b.data), deltaRows)
-          ownAtT.join(delKeys, plan.keys, "left_semi")
-            .join(otherKeysAtSid, plan.keys, "left_anti")
-            .join(umPinned.select(ownPks.map(col): _*), ownPks, "left_anti")
-        }
-        // unmatched rows whose key came ALIVE leave
-        def leavers(b: ChangeBatch): DataFrame = {
-          val addKeys = ViewMaintenance.maybeBroadcast(
-            spark, keysOf(b.data), deltaRows)
-          umPinned.join(addKeys, plan.keys, "left_semi")
-            .select(ownPks.map(col): _*)
-        }
-        val dels = batches.filter(_.changeType == ChangeType.Delete)
-        val adds = batches.filter(_.changeType == ChangeType.Add)
-        val patches = (dels, adds) match {
-          // fused: the leavers' sweep and the entrants' append share one
-          // write pass — disjoint keys (a key cannot die and come alive
-          // at the same snapshot; a same-snapshot key move shows as
-          // delete+add of DIFFERENT keys)
-          case (Seq(d), Seq(a)) =>
-            DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
-              leavers(a), ownPks, entrants(d),
-              dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-          case _ => batches.flatMap { b =>
-            b.changeType match {
-              case ChangeType.Delete =>
-                Some(RecordIO.writeWithRecords(spark, u.um.storage, entrants(b)))
-              case ChangeType.Add =>
-                DmlOps.deleteByKeysOn(spark, u.um.storage, pinned, leavers(b), ownPks,
-                  dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-            }
-          }
-        }
-        applied = true
-        (Some(Patch.merge(patches).getOrElse(Patch())
-          .copy(sourceSnapshotIds = Map(u.otherSide -> sid))), ())
-      }
+    ViewMaintenance.commitUnlessApplied(u.um.storage,
+        ViewMaintenance.reached(u.otherSide, sid)) { pinned =>
+      val otherKeysAtSid = u.other.read(version = Some(sid.toString))
+        .select(plan.keys.map(col): _*)
+      val umPinned = u.um.read(version = Some(pinned.toString))
+      def batchKeys(b: ChangeBatch): DataFrame =
+        ViewMaintenance.maybeBroadcast(spark, keysOf(b.data), deltaRows)
+      // own-rows of a dying key, unless the key survives at sid
+      // (another other-side row, or a same-snapshot re-add) or
+      // the own row is already unmatched
+      val entrants = batches.find(_.changeType == ChangeType.Delete).map(d =>
+        ownAtT.join(batchKeys(d), plan.keys, "left_semi")
+          .join(otherKeysAtSid, plan.keys, "left_anti")
+          .join(umPinned.select(ownPks.map(col): _*), ownPks, "left_anti"))
+      // unmatched rows whose key came ALIVE leave
+      val leavers = batches.find(_.changeType == ChangeType.Add).map(a =>
+        umPinned.join(batchKeys(a), plan.keys, "left_semi")
+          .select(ownPks.map(col): _*))
+      // roles swap here: the leavers are swept and the entrants added,
+      // in one write pass — disjoint keys (a key cannot die and come
+      // alive at the same snapshot; a same-snapshot key move shows as
+      // delete+add of DIFFERENT keys)
+      DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
+        leavers, ownPks, entrants,
+        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+        .getOrElse(Patch())
+        .copy(sourceSnapshotIds = Map(u.otherSide -> sid))
     }
-    if (applied) 1 else 0
   }
 
   /** Coalesced Δown backlog for an unmatched table — the
@@ -978,28 +820,19 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       .map(_.data.select(ownPks.map(col): _*))
       .reduceOption(_.unionByName(_)).map(_.distinct().persist())
       .getOrElse(return 0)
-    var applied = false
-    try {
-      u.um.storage.transaction() { pinned =>
-        if (u.um.storage.metadata.mvSourceSnapshotIds.get(u.ownSide).exists(_ >= t)) {
-          applied = false
-          (None, ())
-        } else {
-          val live = u.own.read(version = Some(t.toString))
-            .join(ViewMaintenance.maybeBroadcast(spark, touched, estRows),
-              ownPks, "left_semi")
-          val adds = u.ownProjection(live).join(otherKeysAtW, plan.keys, "left_anti")
-          // fused delete+append: one write pass per coalesced commit
-          val patches = DmlOps.deleteByKeysAndAppend(spark, u.um.storage,
-            pinned, touched, ownPks, adds,
-            dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-          applied = true
-          (Some(Patch.merge(patches).getOrElse(Patch())
-            .copy(sourceSnapshotIds = Map(u.ownSide -> t))), ())
-        }
-      }
+    try ViewMaintenance.commitUnlessApplied(u.um.storage,
+        ViewMaintenance.reached(u.ownSide, t)) { pinned =>
+      val live = u.own.read(version = Some(t.toString))
+        .join(ViewMaintenance.maybeBroadcast(spark, touched, estRows),
+          ownPks, "left_semi")
+      val adds = u.ownProjection(live).join(otherKeysAtW, plan.keys, "left_anti")
+      // fused delete+append: one write pass per coalesced commit
+      DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
+        Some(touched), ownPks, Some(adds),
+        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+        .getOrElse(Patch())
+        .copy(sourceSnapshotIds = Map(u.ownSide -> t))
     } finally touched.unpersist()
-    if (applied) 1 else 0
   }
 
   /** Coalesced Δother backlog for an unmatched table: split the
@@ -1020,37 +853,28 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       .map(b => b.data.select(plan.keys.map(col): _*))
       .reduceOption(_.unionByName(_)).map(_.distinct().persist())
       .getOrElse(return 0)
-    var applied = false
-    try {
-      u.um.storage.transaction() { pinned =>
-        if (u.um.storage.metadata.mvSourceSnapshotIds.get(u.otherSide).exists(_ >= t)) {
-          applied = false
-          (None, ())
-        } else {
-          val otherKeysAtT = u.other.read(version = Some(t.toString))
-            .select(plan.keys.map(col): _*)
-          val umPinned = u.um.read(version = Some(pinned.toString))
-          val liveAffected = ViewMaintenance.maybeBroadcast(spark,
-            affectedKeys.join(otherKeysAtT, plan.keys, "left_semi"), estRows)
-          val deadAffected = ViewMaintenance.maybeBroadcast(spark,
-            affectedKeys.join(otherKeysAtT, plan.keys, "left_anti"), estRows)
-          val matched = umPinned.join(liveAffected, plan.keys, "left_semi")
-            .select(ownPks.map(col): _*)
-          val cands = ownAtT.join(deadAffected, plan.keys, "left_semi")
-            .join(umPinned.select(ownPks.map(col): _*), ownPks, "left_anti")
-          // fused: the re-matched sweep and the newly-dead entrants
-          // share one write pass (disjoint keys — a key cannot be both
-          // live and dead at the window target)
-          val patches = DmlOps.deleteByKeysAndAppend(spark, u.um.storage,
-            pinned, matched, ownPks, cands,
-            dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-          applied = true
-          (Some(Patch.merge(patches).getOrElse(Patch())
-            .copy(sourceSnapshotIds = Map(u.otherSide -> t))), ())
-        }
-      }
+    try ViewMaintenance.commitUnlessApplied(u.um.storage,
+        ViewMaintenance.reached(u.otherSide, t)) { pinned =>
+      val otherKeysAtT = u.other.read(version = Some(t.toString))
+        .select(plan.keys.map(col): _*)
+      val umPinned = u.um.read(version = Some(pinned.toString))
+      val liveAffected = ViewMaintenance.maybeBroadcast(spark,
+        affectedKeys.join(otherKeysAtT, plan.keys, "left_semi"), estRows)
+      val deadAffected = ViewMaintenance.maybeBroadcast(spark,
+        affectedKeys.join(otherKeysAtT, plan.keys, "left_anti"), estRows)
+      val matched = umPinned.join(liveAffected, plan.keys, "left_semi")
+        .select(ownPks.map(col): _*)
+      val cands = ownAtT.join(deadAffected, plan.keys, "left_semi")
+        .join(umPinned.select(ownPks.map(col): _*), ownPks, "left_anti")
+      // fused: the re-matched sweep and the newly-dead entrants
+      // share one write pass (disjoint keys — a key cannot be both
+      // live and dead at the window target)
+      DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
+        Some(matched), ownPks, Some(cands),
+        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+        .getOrElse(Patch())
+        .copy(sourceSnapshotIds = Map(u.otherSide -> t))
     } finally affectedKeys.unpersist()
-    if (applied) 1 else 0
   }
 }
 

@@ -42,15 +42,7 @@ final class MaterializedView(val spark: SparkSession, val dataset: SpaceDataset)
 
   /** Incrementally refresh to the source's `targetVersion` (default:
     * current head). Returns the number of MV commits made. */
-  override def refresh(targetVersion: Option[String], coalesce: Boolean): Int = {
-    val commits = refreshInner(targetVersion, coalesce)
-    // self-maintenance: bin-pack the state table when refresh churn
-    // crossed the file threshold (CDC-silent; chained views unaffected)
-    if (commits > 0) ViewMaintenance.maybeCompactState(spark, dataset)
-    commits
-  }
-
-  private def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int = {
+  protected def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int = {
     val source = SpaceDataset.load(spark, plan.sourceLocation)
     val target = targetVersion.map(source.storage.versionToSnapshotId)
       .getOrElse(source.storage.metadata.currentSnapshotId)
@@ -75,95 +67,49 @@ final class MaterializedView(val spark: SparkSession, val dataset: SpaceDataset)
     // no data — skip them instead of minting empty watermark-advance
     // commits (VERDICT r13 #3); the watermark folds into the next
     // data-bearing commit, and a purely-silent tail costs only an O(1)
-    // metadata re-check per refresh.
+    // metadata re-check per refresh until it crosses the silent-tail
+    // bound (then ONE empty advance commit).
     val dataSids = sids.filter(sid =>
       source.storage.snapshotOrFail(sid).changeLogFile.isDefined)
-    if (dataSids.isEmpty) return maybeAdvanceSilent(target, sids, dataSids)
 
     // a backlog deeper than the auto-coalesce bound takes the coalesced
     // path on its own (VERDICT r14 #2): one state commit, one transform
     // pass, instead of one commit cycle per backlog snapshot
-    if (ViewMaintenance.shouldCoalesce(spark, coalesce, dataSids.size))
+    if (dataSids.nonEmpty && ViewMaintenance.shouldCoalesce(spark, coalesce, dataSids.size))
       return refreshCoalesced(source, target, dataSids)
 
-    var commits = 0
-    for (sid <- dataSids) {
+    val commits = dataSids.map { sid =>
       // snapshot ids are monotonic but not necessarily contiguous
       // (branch commits also consume ids): diff from the actual parent
       val parent = source.storage.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L)
       val batches = ChangeData.diff(spark, source.storage, parent, sid)
-      var applied = false
-      dataset.storage.transaction() { pinned =>
-        // exactly-once across OVERLAPPING refreshers (a refreshStream
-        // micro-batch racing a manual refresh): the op re-runs on a
-        // Strict-conflict retry from a freshly reloaded head — if the
-        // other refresher already applied this source snapshot, no-op
-        // instead of appending its rows a second time. This is the
-        // refreshedTo-watermark re-check the scaladoc promises.
-        if (dataset.storage.metadata.mvSourceSnapshotId.exists(_ >= sid)) {
-          applied = false
-          (None, ())
-        } else {
+      ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(sid)) {
+        pinned =>
           // delete by the SOURCE-pk columns that survived the
           // transform (they do by contract). For row-wise views
           // these are exactly the MV's own PKs; for EXPAND
           // transforms (one source row → N view rows, e.g. a
           // postings index) the MV PK is a superset and the
           // source key must sweep every derived row.
-          def delKeyCols(b: ChangeBatch): Seq[String] = {
-            val keyCols = b.data.columns.toSeq
-              .filter(dataset.storage.schema.fieldNames.contains)
+          val dels = batches.find(_.changeType == ChangeType.Delete).map(_.data)
+          val delKeyCols = dels.fold(Seq.empty[String]) { d =>
+            val keyCols = d.columns.toSeq.filter(dataset.storage.schema.fieldNames.contains)
             require(keyCols.nonEmpty,
-              s"MV refresh: no source key column of (${b.data.columns.mkString(", ")}) " +
+              s"MV refresh: no source key column of (${d.columns.mkString(", ")}) " +
                 s"survives the transform — cannot apply source deletes")
             keyCols
           }
-          val dels = batches.filter(_.changeType == ChangeType.Delete)
-          val adds = batches.filter(_.changeType == ChangeType.Add)
-          val patches = (dels, adds) match {
-            // the per-snapshot shape (≤1 DELETE + ≤1 ADD batch): fused
-            // delete+append — one write pass per state commit (r14 #3)
-            case (Seq(d), Seq(a)) =>
-              DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
-                d.data, delKeyCols(d), plan.processSource(spark, a.data),
-                dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-            case _ => batches.flatMap { b =>
-              b.changeType match {
-                case ChangeType.Delete =>
-                  DmlOps.deleteByKeysOn(spark, dataset.storage, pinned, b.data,
-                    delKeyCols(b),
-                    dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-                case ChangeType.Add =>
-                  val transformed = plan.processSource(spark, b.data)
-                  Some(RecordIO.writeWithRecords(spark, dataset.storage, transformed))
-              }
-            }
-          }
-          val merged = Patch.merge(patches)
+          val adds = batches.find(_.changeType == ChangeType.Add)
+            .map(a => plan.processSource(spark, a.data))
+          DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
+            dels, delKeyCols, adds,
+            dvFracOverride = ViewMaintenance.stateDvFraction(spark))
             .getOrElse(Patch()) // zero-row data snapshot still advances the MV
             .copy(sourceSnapshotId = Some(sid))
-          applied = true
-          (Some(merged), ())
-        }
       }
-      if (applied) commits += 1
-    }
-    commits + maybeAdvanceSilent(target, sids, dataSids)
-  }
-
-  /** ONE empty (CDC-silent) commit advancing the watermark to `target`
-    * when the walk's silent tail crossed the configured bound — keeps
-    * a long-silent source (hourly compactions, no data) from expiring
-    * the recorded watermark snapshot and forcing a data-identical full
-    * rebuild (VERDICT r14 #3). */
-  private def maybeAdvanceSilent(target: Long, sids: Seq[Long], dataSids: Seq[Long]): Int = {
-    if (!ViewMaintenance.silentTailNeedsAdvance(spark, sids, dataSids)) return 0
-    var applied = false
-    dataset.storage.transaction() { _ =>
-      if (dataset.storage.metadata.mvSourceSnapshotId.exists(_ >= target)) (None, ())
-      else { applied = true; (Some(Patch().copy(sourceSnapshotId = Some(target))), ()) }
-    }
-    if (applied) 1 else 0
+    }.sum
+    commits + ViewMaintenance.advanceSilent(spark, dataset.storage, sids, dataSids,
+      ViewMaintenance.reached(target))(Patch(sourceSnapshotId = Some(target)))
   }
 
   /** The whole watermark→target backlog as ONE state commit.
@@ -189,47 +135,39 @@ final class MaterializedView(val spark: SparkSession, val dataset: SpaceDataset)
         "survives the transform — cannot apply source deletes")
     val estRows = dataSids.map(sid =>
       ViewMaintenance.changelogRows(source.storage, sid, addsOnly = false)).sum
-    var applied = false
-    dataset.storage.transaction() { pinned =>
-      // Branch on the FRESHLY RELOADED watermark, not the `start`
-      // captured before the transaction: a stale handle (loaded before
-      // another refresher's first build) or a concurrent first
-      // coalesced refresh would otherwise take the full-scan branch
-      // and APPEND transform(source@target) onto already-built state,
-      // duplicating every live row (ADVICE r14, same stale-handle race
-      // JoinView.fullBuild / AggregateView.fullBuild guard against).
-      // The sweep path below is sound for ANY watermark in [1, target).
-      val observed = dataset.storage.metadata.mvSourceSnapshotId
-      if (observed.exists(_ >= target)) {
-        applied = false
-        (None, ())
-      } else if (observed.isEmpty) {
-        val transformed = plan.processSource(
-          spark, source.read(version = Some(target.toString)))
-        applied = true
-        (Some(RecordIO.writeWithRecords(spark, dataset.storage, transformed)
-          .copy(sourceSnapshotId = Some(target))), ())
-      } else {
-        val batches = ChangeData.diff(spark, source.storage, observed.get, target)
-        val touched = batches.map(_.data.select(keyCols.map(
-            org.apache.spark.sql.functions.col): _*))
-          .reduce(_.unionByName(_)).distinct().persist()
-        try {
-          val live = source.read(version = Some(target.toString))
-            .join(ViewMaintenance.maybeBroadcast(spark, touched, estRows),
-              keyCols, "left_semi")
-          // fused delete+append: one write pass for the touched-key
-          // sweep's survivors and the re-derived rows (VERDICT r14 #3)
-          val patches = DmlOps.deleteByKeysAndAppend(spark, dataset.storage,
-            pinned, touched, keyCols, plan.processSource(spark, live),
-            dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-          applied = true
-          (Some(Patch.merge(patches).getOrElse(Patch())
-            .copy(sourceSnapshotId = Some(target))), ())
-        } finally touched.unpersist()
-      }
+    ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(target)) {
+      pinned =>
+        // Branch on the FRESHLY RELOADED watermark, not the `start`
+        // captured before the transaction: a stale handle (loaded before
+        // another refresher's first build) or a concurrent first
+        // coalesced refresh would otherwise take the full-scan branch
+        // and APPEND transform(source@target) onto already-built state,
+        // duplicating every live row (ADVICE r14, same stale-handle race
+        // JoinView.fullBuild / AggregateView.fullBuild guard against).
+        // The sweep path below is sound for ANY watermark in [1, target).
+        val patch = dataset.storage.metadata.mvSourceSnapshotId match {
+          case None =>
+            RecordIO.writeWithRecords(spark, dataset.storage, plan.processSource(
+              spark, source.read(version = Some(target.toString))))
+          case Some(observed) =>
+            val batches = ChangeData.diff(spark, source.storage, observed, target)
+            val touched = batches.map(_.data.select(keyCols.map(
+                org.apache.spark.sql.functions.col): _*))
+              .reduce(_.unionByName(_)).distinct().persist()
+            try {
+              val live = source.read(version = Some(target.toString))
+                .join(ViewMaintenance.maybeBroadcast(spark, touched, estRows),
+                  keyCols, "left_semi")
+              // fused delete+append: one write pass for the touched-key
+              // sweep's survivors and the re-derived rows (VERDICT r14 #3)
+              DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
+                Some(touched), keyCols, Some(plan.processSource(spark, live)),
+                dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+                .getOrElse(Patch())
+            } finally touched.unpersist()
+        }
+        patch.copy(sourceSnapshotId = Some(target))
     }
-    if (applied) 1 else 0
   }
 
   /** Expired-history fallback: one transform pass over the source AT
@@ -237,65 +175,23 @@ final class MaterializedView(val spark: SparkSession, val dataset: SpaceDataset)
     * watermark advanced; incremental maintenance resumes from there.
     * Sound because a row-wise/EXPAND view's state is exactly
     * transform(live source rows), independent of arrival order. */
-  private def rebuild(source: SpaceDataset, target: Long): Int = {
-    var applied = false
-    dataset.storage.transaction() { pinned =>
-      if (dataset.storage.metadata.mvSourceSnapshotId.exists(_ >= target)) {
-        (None, ())
-      } else {
+  private def rebuild(source: SpaceDataset, target: Long): Int =
+    ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(target)) {
+      pinned =>
         val transformed = plan.processSource(
           spark, source.read(version = Some(target.toString)))
-        val patch = graft.core.DmlOps.overwriteAll(
-          spark, dataset.storage, pinned, transformed)
-        applied = true
-        (Some(patch.copy(sourceSnapshotId = Some(target))), ())
-      }
+        DmlOps.overwriteAll(spark, dataset.storage, pinned, transformed)
+          .copy(sourceSnapshotId = Some(target))
     }
-    if (applied) 1 else 0
-  }
 
-  /** CONTINUOUS MV maintenance through Structured Streaming: the
-    * source's CDC stream (`graft-cdc`, snapshot-id offsets) drives the
-    * refresh — each micro-batch triggers an incremental [[refresh]] to
-    * the source head, so the MV follows the source under any trigger
-    * (`ProcessingTime`, `AvailableNow`) with streaming's scheduling,
-    * checkpointing and restart story.
-    *
-    * The batch DataFrame is deliberately NOT consumed: change rows are
-    * applied by `refresh()` itself (one MV commit per source snapshot,
-    * the reference's contract), so the stream is pure trigger + offset
-    * bookkeeping and no change row flows twice. Exactly-once comes from
-    * the MV's own `refreshedTo` watermark, not the checkpoint: a
-    * replayed or overlapping batch finds the snapshots already applied
-    * and no-ops. */
+  /** CONTINUOUS MV maintenance through Structured Streaming: each
+    * micro-batch of the source's CDC stream triggers an incremental
+    * [[refresh]] to the source head (see [[ViewMaintenance.refreshOnCdc]]);
+    * change rows are applied by `refresh()` itself, one MV commit per
+    * source snapshot, and exactly-once comes from the MV's own
+    * `refreshedTo` watermark. */
   def refreshStream(checkpointLocation: String): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("graft-cdc")
-      .option("location", plan.sourceLocation)
-      .load()
-      .writeStream
-      .option("checkpointLocation", checkpointLocation)
-      .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        refresh(); ()
-      }
-      .start()
-
-  /** Poll-and-refresh loop (the reference's incrementality is committed-
-    * snapshot granularity, not event streams — SURVEY.md §2.5). BLOCKS
-    * the calling thread with Thread.sleep between polls — a test
-    * harness / cron-job body, not a scheduler: long-running production
-    * maintenance should use [[refreshStream]] (checkpointed, restart-
-    * safe, trigger-driven). Stops after `maxPolls`; returns total MV
-    * commits. */
-  def refreshContinuously(pollIntervalMs: Long, maxPolls: Int): Int = {
-    var total = 0
-    var i = 0
-    while (i < maxPolls) {
-      total += refresh()
-      i += 1
-      if (i < maxPolls) Thread.sleep(pollIntervalMs)
-    }
-    total
-  }
+    ViewMaintenance.refreshOnCdc(this, plan.sourceLocation, checkpointLocation)
 }
 
 object MaterializedView {

@@ -2,12 +2,17 @@ package graft.views
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.{ManifestIO, SpaceDataset, Storage}
+import graft.format.{Patch, StorageMetadata}
 
-/** Self-maintenance shared by the refreshable views.
+/** Maintenance shared by the refreshable views: the one watermark-
+  * guarded state commit ([[commitUnlessApplied]]), the silent-tail
+  * watermark advance, the CDC-stream refresh trigger, and state
+  * self-maintenance.
   *
   * Every refresh commits one state snapshot per source snapshot, and
   * each commit mints at least one small state file — a view refreshed
@@ -63,6 +68,65 @@ object ViewMaintenance {
     * no-rebuild guarantee. `0` disables. */
   val SilentTailMaxSnapshotsKey = "spark.graft.mv.silentTailMaxSnapshots"
   val DefaultSilentTailMaxSnapshots = 32L
+
+  /** The one state commit of every view kind: a transaction on `st`
+    * that re-checks `applied` against the FRESHLY RELOADED metadata
+    * (the refreshed-to watermark) and commits `build(pinned)` only when
+    * the work is still pending. This re-check is what makes refresh
+    * exactly-once across overlapping refreshers (a `refreshStream`
+    * micro-batch racing a manual refresh, a stale view handle): the op
+    * re-runs on a Strict-conflict retry from the new head, and a
+    * snapshot another refresher already applied becomes a no-op instead
+    * of a second application. Returns the number of commits made (0/1). */
+  def commitUnlessApplied(st: Storage, applied: StorageMetadata => Boolean)(
+      build: Long => Patch): Int =
+    st.transaction() { pinned =>
+      if (applied(st.metadata)) (None, 0) else (Some(build(pinned)), 1)
+    }
+
+  /** `applied` predicate of a single-source view: its watermark reached `sid`. */
+  def reached(sid: Long): StorageMetadata => Boolean =
+    _.mvSourceSnapshotId.exists(_ >= sid)
+
+  /** `applied` predicate of a join-view table: `side`'s watermark reached `sid`. */
+  def reached(side: String, sid: Long): StorageMetadata => Boolean =
+    _.mvSourceSnapshotIds.get(side).exists(_ >= sid)
+
+  /** ONE empty (CDC-silent) commit advancing the watermark when a walk's
+    * silent tail crossed [[SilentTailMaxSnapshotsKey]] — keeps a
+    * long-silent source (hourly compactions, no data) from expiring the
+    * recorded watermark snapshot and forcing a data-identical full
+    * rebuild (VERDICT r14 #3). `stamp` is the empty patch carrying the
+    * new watermark; it is evaluated inside the transaction. */
+  def advanceSilent(
+      spark: SparkSession,
+      st: Storage,
+      allSids: Seq[Long],
+      dataSids: Seq[Long],
+      applied: StorageMetadata => Boolean)(stamp: => Patch): Int =
+    if (!silentTailNeedsAdvance(spark, allSids, dataSids)) 0
+    else commitUnlessApplied(st, applied)(_ => stamp)
+
+  /** CONTINUOUS maintenance through Structured Streaming: the source's
+    * CDC stream (`graft-cdc`, snapshot-id offsets) triggers an
+    * incremental `view.refresh()` per micro-batch, so the view follows
+    * the source under any trigger with streaming's scheduling,
+    * checkpointing and restart story. The batch rows are deliberately
+    * NOT consumed — refresh applies change data itself — so the stream
+    * is pure trigger + offset bookkeeping and no change row flows twice.
+    * Exactly-once comes from the view's own watermark, not the
+    * checkpoint: a replayed or overlapping batch no-ops. */
+  def refreshOnCdc(
+      view: Refreshable,
+      sourceLocation: String,
+      checkpointLocation: String): StreamingQuery =
+    view.spark.readStream.format("graft-cdc")
+      .option("location", sourceLocation)
+      .load()
+      .writeStream
+      .option("checkpointLocation", checkpointLocation)
+      .foreachBatch { (_: Dataset[Row], _: Long) => view.refresh(); () }
+      .start()
 
   /** Coalesce decision for one refresh pass: the caller's explicit flag
     * OR a backlog deeper than the auto-coalesce bound. The auto path is

@@ -232,7 +232,7 @@ class StorageSpec extends AnyFunSuite {
     ds.append(li.repartitionByRange(8, col("l_linenumber")))
     val keys = li.filter(col("l_linenumber") === 1)
       .select(col("l_orderkey"), col("l_linenumber"))
-    val pred = DmlOps.keyRangePredicate(spark, keys, ds.storage)
+    val pred = DmlOps.keyLookupPredicate(spark, keys, ds.storage, ds.storage.primaryKeys)
     assert(pred.nonEmpty)
     val p = ds.plan(pred)
     assert(p.totalFiles >= 4)
