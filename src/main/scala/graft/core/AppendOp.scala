@@ -130,14 +130,20 @@ object AppendOp {
     df.select(idSchema.fields.map(typeAligned).toIndexedSeq: _*)
   }
 
-  /** Parquet writer for `frame` with the table's PK/bloom-column bloom
-    * filters attached (adaptive sizing; `spark.graft.pkBloomFilters`
-    * opts out) — shared by the append writer and the fused
-    * survivor+add writer. */
-  private def bloomWriter(
-      spark: SparkSession,
-      storage: Storage,
-      frame: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
+  /** Parquet options of every data file the engine writes, batch or
+    * streamed. BLOOM FILTERS on the primary-key and bloom columns: min/max
+    * stats prune files only when the layout correlates with the key; a
+    * bloom skips row groups on point lookups regardless of layout, the
+    * unbucketed-table complement to hash buckets. ADAPTIVE sizing
+    * (parquet 1.15+) right-sizes the filter to the row group's actual
+    * distinct count under a hard byte cap: a fixed expected-NDV would be
+    * oversized for small files and badly undersized (useless FPP) for
+    * 128 MB row groups holding ~1M distinct keys. Write tax measured ≤
+    * noise (~0.1s on a 600k-row append); the reader consults the filters
+    * for pushed equality predicates. `spark.graft.pkBloomFilters=false`
+    * opts a write-heavy pipeline out (e.g. bulk ingest that will be
+    * compacted or clustered anyway). */
+  def writeOptions(spark: SparkSession, storage: Storage): Map[String, String] = {
     val idSchema = ReadOp.physicalSchemaWithIds(storage.schema, storage.recordFields)
     val bloomEnabled = spark.conf
       .getOption("spark.graft.pkBloomFilters").forall { v =>
@@ -152,80 +158,80 @@ object AppendOp {
       if (!bloomEnabled) Nil
       else (storage.primaryKeys ++ storage.metadata.bloomColumns).distinct.filter(c =>
         idSchema.fields.exists(f => f.name == c && ManifestIO.statsEligible(f.dataType)))
-    bloomCols.foldLeft(
-      frame.write.mode("overwrite")
-        .option("parquet.bloom.filter.adaptive.enabled", "true")
-        .option("parquet.bloom.filter.max.bytes", (128 * 1024).toString)
-        // Every engine write lands in a UUID-named tmp dir whose part
-        // files the footer harvest immediately renames into data/ and
-        // whose directory is then deleted — the engine's manifest IS
-        // the commit marker. The Hadoop committer's _SUCCESS file and
-        // v1's second rename pass (task dir → job dir → output) are
-        // driver-side filesystem round-trips per commit that nothing
-        // ever observes; committer v2 renames task outputs straight
-        // into the (private, single-writer) tmp dir at task commit.
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")) {
-      (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }
+    Map(
+      "parquet.bloom.filter.adaptive.enabled" -> "true",
+      "parquet.bloom.filter.max.bytes" -> (128 * 1024).toString,
+      // Every batch write lands in a UUID-named tmp dir whose part
+      // files the footer harvest immediately renames into data/ and
+      // whose directory is then deleted — the engine's manifest IS
+      // the commit marker. The Hadoop committer's _SUCCESS file and
+      // v1's second rename pass (task dir → job dir → output) are
+      // driver-side filesystem round-trips per commit that nothing
+      // ever observes; committer v2 renames task outputs straight
+      // into the (private, single-writer) tmp dir at task commit.
+      "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false",
+      "mapreduce.fileoutputcommitter.algorithm.version" -> "2") ++
+      bloomCols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
   }
 
-  /** Footer-harvest + move of freshly written part files into their
-    * final `data/` homes: driver loop for a handful, one small Spark
-    * job past that (the driver loop is O(new files) and becomes the
-    * append bottleneck at thousands of task outputs). `assignments` =
-    * (src part path, final rel, final abs). */
-  private def harvestAndMove(
+  /** The one landing tail of every engine write: `frame` is written
+    * into a fresh tmp dir under `data/` (dynamic partitions on
+    * `partitionCols`), every part file is harvested and moved to the
+    * table-relative name `relOf` gives it ([[ManifestIO.harvestLanded]]),
+    * 0-row task outputs are deleted (they never enter a manifest), the
+    * tmp dir is removed and the kept files become one new-files Patch.
+    * Returns that Patch and the kept (part path, meta) pairs in file
+    * order.
+    *
+    * `clustered` (a write-clustered shuffle) runs the write under the
+    * reduced AQE advisory of [[clusterAdvisoryConfs]]. A shuffle-free
+    * plan (scan/broadcast-join/union inputs: every delta-sized view
+    * state commit and plain append) gives AQE nothing to size, since
+    * output files = input partitions either way, yet AQE still runs
+    * each broadcast build as its own job with a replan loop around the
+    * write, so it runs with AQE off. Both scopes use a cloned session:
+    * a set/restore on the shared conf would leak into jobs planning
+    * concurrently in this session. Any other plan keeps AQE for
+    * partition coalescing and skew handling. */
+  private def land(
       spark: SparkSession,
       storage: Storage,
-      assignments: Seq[(String, String, String)]): Seq[IndexFileMeta] = {
+      frame: DataFrame,
+      clustered: Boolean,
+      partitionCols: Seq[String])(
+      relOf: Path => String): (Patch, Seq[(Path, IndexFileMeta)]) = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val pks = storage.statsColumns
-    val evid = ManifestIO.evidenceColumns(storage)
-    if (assignments.size <= 8) {
-      val fs = new Path(storage.location).getFileSystem(conf)
-      assignments.map { case (src, rel, dstAbs) =>
-        val meta = ManifestIO.harvestFooter(src, rel, conf, pks, evid)
-        if (!fs.rename(new Path(src), new Path(dstAbs)))
-          throw new java.io.IOException(s"rename $src failed")
-        meta
-      }
-    } else {
-      // ship the SESSION's Hadoop conf: the table may sit on a
-      // filesystem configured via spark.hadoop.* (credentials, custom
-      // fs impl) that a default Configuration would not resolve
-      val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-      spark.sparkContext
-        .parallelize(assignments, math.min(assignments.size, 32))
-        .map { case (src, rel, dstAbs) =>
-          val c = serConf.value
-          val srcPath = new Path(src)
-          val dst = new Path(dstAbs)
-          val tfs = dst.getFileSystem(c)
-          if (tfs.exists(srcPath)) {
-            val meta = ManifestIO.harvestFooter(src, rel, c, pks, evid)
-            if (!tfs.rename(srcPath, dst))
-              throw new java.io.IOException(s"rename $src -> $dstAbs failed")
-            meta
-          } else if (tfs.exists(dst)) {
-            // task retry after a completed rename: harvest the moved file
-            ManifestIO.harvestFooter(dstAbs, rel, c, pks, evid)
-          } else throw new java.io.IOException(s"missing $src and $dstAbs")
-        }
-        .collect().toSeq
+    val tmpAbs = storage.absolute(
+      s"${StoragePaths.DataDir}/tmp_append_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    def writeOut(f: DataFrame): Unit = {
+      val w = f.write.mode("overwrite").options(writeOptions(spark, storage))
+      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(tmpAbs)
     }
-  }
+    val scoped =
+      if (clustered) clusterAdvisoryConfs(spark)
+      else if (shuffleFree(frame)) NoAqeConfs
+      else Nil
+    if (scoped.isEmpty) writeOut(frame)
+    else org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(frame, scoped)(writeOut)
 
-  /** Write `df` as new data files + one index manifest; returns the Patch
-    * to commit. `df` must carry the table's index schema (record-field
-    * columns already replaced by addresses when record fields exist). */
-  def writeFiles(
-      spark: SparkSession,
-      storage: Storage,
-      df: DataFrame,
-      targetFileRows: Option[Long] = None,
-      writeClustered: Boolean = false): Patch =
-    writeFilesWithMeta(spark, storage, df, targetFileRows, writeClustered).patch
+    val fs = new Path(tmpAbs).getFileSystem(conf)
+    val listed = Seq.newBuilder[Path]
+    val it = fs.listFiles(new Path(tmpAbs), true)
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.startsWith("part-")) listed += p
+    }
+    val parts = listed.result().sortBy(_.toString)
+    val metas = ManifestIO.harvestLanded(storage, conf,
+      parts.map(p => relOf(p) -> Some(p.toString)))
+    val (kept, empties) = parts.zip(metas).partition(_._2.numRows > 0)
+    DriverPool.parMap(empties) { case (_, m) =>
+      fs.delete(new Path(storage.absolute(m.file)), false)
+    }
+    fs.delete(new Path(tmpAbs), true)
+    val byFile = kept.sortBy(_._2.file)
+    (ManifestIO.newFilesPatch(spark, storage, byFile.map(_._2)), byFile)
+  }
 
   /** `writeClustered = true` (APPEND-path callers only) honors the
     * table's `write_cluster_by` columns: the batch is range-partitioned
@@ -243,10 +249,6 @@ object AppendOp {
         * switches to it in the same commit that references the written
         * files). */
       bucketLayoutOverride: Option[(Seq[String], Seq[Int])] = None): AppendResult = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmpRel = s"${StoragePaths.DataDir}/tmp_append_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val tmpAbs = storage.absolute(tmpRel)
-
     // Bucketed tables: EVERY write shuffles rows to
     // pmod(murmur3(bucketColumns), numBuckets) — partition index IS the
     // bucket id (HashPartitioning semantics), and the output file name
@@ -300,115 +302,30 @@ object AppendOp {
           alignedDf.repartition(parts)
         case _ => alignedDf
       }
-    // Parquet BLOOM FILTERS on the primary-key columns: min/max stats
-    // prune files only when the layout correlates with the key; a bloom
-    // skips row groups on PK point lookups regardless of layout — the
-    // unbucketed-table complement to hash buckets at 100 TB. ADAPTIVE
-    // sizing (parquet 1.15+): the filter is right-sized to the row
-    // group's ACTUAL distinct count under a hard byte cap — a fixed
-    // expected-NDV would be oversized for this harness's small files
-    // and badly undersized (useless FPP) for 128 MB row groups holding
-    // ~1M distinct keys at production scale. Write tax measured ≤ noise
-    // (~0.1s on the 600k-row append); the reader consults the filters
-    // automatically for pushed equality predicates.
-    // `spark.graft.pkBloomFilters=false` opts a write-heavy pipeline out
-    // (e.g. bulk ingest that will be compacted/clustered anyway)
-    def writeOut(frame: DataFrame): Unit = {
-      val base = bloomWriter(spark, storage, frame)
-      (if (perColumn) base.partitionBy(
-        AppendOp.bucketDirNames(bucketCounts.size): _*)
-       else base).parquet(tmpAbs)
-    }
-    if (writeClustered && wcb.nonEmpty && numBuckets == 0) {
-      // reduced AQE advisory for the write-clustered shuffle: several
-      // tight-range files per tier beat one 64 MB-coalesced file
-      // (pruning granularity). Overridable for other workloads.
-      // SESSION-SCOPED via a cloned session — a set/restore on the
-      // shared conf would leak the 8 MB advisory to any job planning
-      // concurrently in this session during the write window.
-      org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(aligned,
-        clusterAdvisoryConfs(spark))(writeOut)
-    } else if (AppendOp.shuffleFree(aligned)) {
-      // a shuffle-free write plan (scan/broadcast-join/union inputs —
-      // every delta-sized MV state commit and plain append lands here)
-      // gives AQE nothing to size: output files = input partitions
-      // either way, but AQE still materializes each broadcast build as
-      // its own sequential job with a replan loop around the write.
-      // Scoped off (same clone mechanism); any plan with a shuffle
-      // keeps AQE for partition coalescing / skew handling.
-      org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(aligned,
-        AppendOp.NoAqeConfs)(writeOut)
-    } else writeOut(aligned)
-
-    val fs = new Path(tmpAbs).getFileSystem(conf)
-    val parts: Array[Path] =
-      if (!perColumn)
-        fs.listStatus(new Path(tmpAbs)).map(_.getPath)
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      else {
-        // dynamic-partition layout: tmp/__gb0=X/__gb1=Y/part-*.parquet
-        val out = Array.newBuilder[Path]
-        val it = fs.listFiles(new Path(tmpAbs), true)
-        while (it.hasNext) {
-          val p = it.next().getPath
-          if (p.getName.startsWith("part-")) out += p
-        }
-        out.result().sortBy(_.toString)
-      }
-
-    // footer harvest + move into data/ — one small task per batch of
-    // files for large appends (the driver loop is O(new files) and
-    // becomes the append bottleneck at thousands of task outputs);
-    // driver-side below a small threshold to avoid job overhead
     // part-NNNNN task numbering = partition index = bucket id (an
     // explicit df.repartition(n, expr) is never AQE-coalesced); the
     // per-column layout reads the tuple from the directory names and
     // flattens it row-major into the file-name id
     val partIdxRe = "part-(\\d+)-.*".r
-    val assignments = parts.map { p =>
-      val rel =
-        if (perColumn)
-          StoragePaths.newIndexDataFile(
-            bucket = AppendOp.flatBucketOfDir(p, bucketCounts))
-        else if (numBuckets > 0) p.getName match {
-          case partIdxRe(idx) => StoragePaths.newIndexDataFile(bucket = idx.toInt)
-          case other => throw new IllegalStateException(s"unparseable part file $other")
-        }
-        else StoragePaths.newIndexDataFile()
-      (p.toString, rel, storage.absolute(rel))
-    }.toSeq
-    val harvested = harvestAndMove(spark, storage, assignments)
-    // a task whose partition lost every row still writes a 0-row parquet;
-    // it never enters the manifest, so remove it rather than orphan it
-    val (kept, empties) = harvested.partition(_.numRows > 0)
-    empties.foreach(m => fs.delete(new Path(storage.absolute(m.file)), false))
-    val metas = kept.sortBy(_.file)
-    fs.delete(new Path(tmpAbs), true)
-
-    if (metas.isEmpty) return AppendResult(Patch(), Nil)
-
-    val manifest = ManifestIO.writeIndexManifest(spark, storage, metas)
-    val stats = StorageStatistics(
-      numRows = metas.map(_.numRows).sum,
-      indexCompressedBytes = metas.map(_.compressedBytes).sum,
-      indexUncompressedBytes = metas.map(_.uncompressedBytes).sum)
-    // changelog: every row of every new file is an ADD (append.py:240-241)
-    val changeLog = ChangeLog(addedRows =
-      metas.map(m => RowBitmap(m.file, allRows = true, numRows = m.numRows)).toList)
-    AppendResult(Patch(
-      addedIndexManifests = List(manifest),
-      statsDelta = stats,
-      changeLog = Some(changeLog),
-      manifestSummaries = Map(manifest -> ManifestIO.summarize(storage, metas))), metas)
+    val (patch, landed) = land(spark, storage, aligned,
+      clustered = writeClustered && wcb.nonEmpty && numBuckets == 0,
+      partitionCols = if (perColumn) bucketDirNames(bucketCounts.size) else Nil) { p =>
+      if (perColumn)
+        StoragePaths.newIndexDataFile(bucket = flatBucketOfDir(p, bucketCounts))
+      else if (numBuckets > 0) p.getName match {
+        case partIdxRe(idx) => StoragePaths.newIndexDataFile(bucket = idx.toInt)
+        case other => throw new IllegalStateException(s"unparseable part file $other")
+      }
+      else StoragePaths.newIndexDataFile()
+    }
+    AppendResult(patch, landed.map(_._2))
   }
 
   /** Transient discriminator column of [[writeSplitFiles]] — a dynamic
     * partition, so parquet drops it from the written data. */
   private val KindCol = "__graft_kind"
 
-  /** Scoped override for shuffle-free write plans (see the writeOut
-    * call sites): AQE has nothing to size there but still runs each
-    * broadcast build as its own job with a replan loop. */
+  /** Scoped override for shuffle-free write plans (see [[land]]). */
   private val NoAqeConfs = Seq("spark.sql.adaptive.enabled" -> "false")
 
   /** True when `df`'s STATIC physical plan contains no shuffle
@@ -460,69 +377,29 @@ object AppendOp {
     * file naming / payload plumbing lives in [[writeFilesWithMeta]] /
     * RecordIO.
     *
-    * Returns (patch, addMetas): the patch carries the manifest, stats
-    * and summaries for BOTH file groups but NO changelog — the caller
-    * owns it (deleted-row bitmaps plus `addMetas` as ADD bitmaps). */
+    * The returned patch carries the manifest, stats and summaries for
+    * BOTH file groups; its changelog logs only the add files as ADDs
+    * (survivors are CDC-silent carryover). */
   private[core] def writeSplitFiles(
       spark: SparkSession,
       storage: Storage,
       survivors: DataFrame,
-      adds: DataFrame): (Patch, Seq[IndexFileMeta]) = {
+      adds: DataFrame): Patch = {
     import org.apache.spark.sql.functions.{col, lit}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmpRel = s"${StoragePaths.DataDir}/tmp_append_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val tmpAbs = storage.absolute(tmpRel)
     val union = alignToSchema(storage, survivors).withColumn(KindCol, lit(0))
       .unionByName(alignToSchema(storage, adds).withColumn(KindCol, lit(1)))
     val wcb = storage.metadata.writeClusterBy
-    if (wcb.nonEmpty && storage.metadata.numBuckets == 0) {
-      val cols = (KindCol +: wcb).map(col)
-      val shaped = union.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
-      // same reduced AQE advisory as the clustered append path: several
-      // tight-range files per tier beat one 64 MB-coalesced file
-      org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(shaped,
-        clusterAdvisoryConfs(spark))(f =>
-        bloomWriter(spark, storage, f).partitionBy(KindCol).parquet(tmpAbs))
-    } else if (shuffleFree(union))
-      // same shuffle-free gate as the plain append write: the fused
-      // survivor∪adds plan is scan + broadcast-join + union on every
-      // delta-sized state commit — AQE only adds stage jobs there
-      org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(union,
-        NoAqeConfs)(f =>
-        bloomWriter(spark, storage, f).partitionBy(KindCol).parquet(tmpAbs))
-    else
-      bloomWriter(spark, storage, union).partitionBy(KindCol).parquet(tmpAbs)
-
-    val fs = new Path(tmpAbs).getFileSystem(conf)
-    val parts = Array.newBuilder[(Path, Boolean)] // (part file, isAdd)
-    val it = fs.listFiles(new Path(tmpAbs), true)
-    while (it.hasNext) {
-      val p = it.next().getPath
-      if (p.getName.startsWith("part-"))
-        parts += p -> (p.getParent.getName == s"$KindCol=1")
-    }
-    val assignments = parts.result().sortBy(_._1.toString).map { case (p, isAdd) =>
-      val rel = StoragePaths.newIndexDataFile()
-      ((p.toString, rel, storage.absolute(rel)), isAdd)
-    }.toSeq
-    val harvested = harvestAndMove(spark, storage, assignments.map(_._1))
-      .zip(assignments.map(_._2))
-    // 0-row task outputs never enter the manifest
-    val (kept, empties) = harvested.partition(_._1.numRows > 0)
-    empties.foreach { case (m, _) => fs.delete(new Path(storage.absolute(m.file)), false) }
-    fs.delete(new Path(tmpAbs), true)
-    if (kept.isEmpty) return (Patch(), Nil)
-
-    val metas = kept.map(_._1).sortBy(_.file)
-    val addMetas = kept.collect { case (m, true) => m }.sortBy(_.file)
-    val manifest = ManifestIO.writeIndexManifest(spark, storage, metas)
-    (Patch(
-      addedIndexManifests = List(manifest),
-      statsDelta = StorageStatistics(
-        numRows = metas.map(_.numRows).sum,
-        indexCompressedBytes = metas.map(_.compressedBytes).sum,
-        indexUncompressedBytes = metas.map(_.uncompressedBytes).sum),
-      manifestSummaries = Map(manifest -> ManifestIO.summarize(storage, metas))),
-      addMetas)
+    val clustered = wcb.nonEmpty && storage.metadata.numBuckets == 0
+    val shaped =
+      if (!clustered) union
+      else {
+        val cols = (KindCol +: wcb).map(col)
+        union.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
+      }
+    val (patch, landed) = land(spark, storage, shaped, clustered, Seq(KindCol))(
+      _ => StoragePaths.newIndexDataFile())
+    val addFiles = landed.collect { case (p, m) if p.getParent.getName == s"$KindCol=1" => m.file }.toSet
+    patch.copy(changeLog = patch.changeLog.map(cl =>
+      cl.copy(addedRows = cl.addedRows.filter(b => addFiles(b.file)))))
   }
 }

@@ -34,7 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * The intended 100 TB shape is a small candidate set AFTER stats/bucket
   * pruning (a point read); a broad scan gains nothing from per-file
   * membership tests, so pruning engages only under [[MaxCandidateFiles]],
-  * and the per-file probes run on a bounded driver pool (object-store
+  * and the per-file probes run on the shared [[DriverPool]] (object-store
   * footers are hundreds of RPCs if walked serially).
   *
   * Conservative by construction: any chunk with neither a bloom nor a
@@ -57,22 +57,6 @@ object BloomPruning {
   /** A dictionary bigger than this is a high-NDV chunk that should have
     * carried a bloom instead; decoding it to a set stops paying. */
   private val MaxDictEntries = 1 << 17
-
-  /** Bounded driver-side parallelism for per-file footer probes. ONE
-    * shared daemon pool for the process — planning is called per
-    * micro-batch on streaming point-read paths, and a fresh pool per
-    * call was measurable churn. */
-  private val ProbePoolSize = 16
-  private lazy val probePool = java.util.concurrent.Executors.newFixedThreadPool(
-    ProbePoolSize,
-    new java.util.concurrent.ThreadFactory {
-      private val n = new java.util.concurrent.atomic.AtomicInteger()
-      override def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"graft-membership-probe-${n.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      }
-    })
 
   /** Footer opens performed by the evidence loader (test observability:
     * manifest-marked evidence-less files must cause ZERO of these). */
@@ -223,18 +207,9 @@ object BloomPruning {
       lookups.forall { case (c, _, _) => evidence.get((rel, c)).contains(false) }
 
     val (decided, probed) = files.partition(metadataOnly)
-    val probedKept: Seq[String] =
-      if (probed.size <= 2) probed.filter(keep)
-      else {
-        // bounded fan-out on the shared pool: object-store footer
-        // probes are network RPCs; serial walks of a few hundred
-        // candidates would put seconds of latency inside planning
-        val futs = probed.map(f => f -> probePool.submit(
-          new java.util.concurrent.Callable[Boolean] {
-            def call(): Boolean = keep(f)
-          }))
-        futs.collect { case (f, fut) if fut.get() => f }
-      }
+    // object-store footer probes are network RPCs: a serial walk of a
+    // few hundred candidates would put seconds of latency inside planning
+    val probedKept = probed.zip(DriverPool.parMap(probed)(keep)).collect { case (f, true) => f }
     // preserve input order (downstream file lists are order-stable)
     val keptSet = (decided ++ probedKept).toSet
     files.filter(keptSet.contains)

@@ -369,6 +369,7 @@ object DmlOps {
     // the survivor scan masks its dead rows, the entry retires, and the
     // fold compensates the stats (those rows were already subtracted).
     val emptyCo = CarryoverResult(Nil, Nil, StorageStatistics(), Map.empty)
+    def addsOf(p: Patch) = p.changeLog.toList.flatMap(_.addedRows)
     val (appendPatch, addBitmaps, co, dvRemoved, foldComp) =
       if (cowFiles.isEmpty) extraAdds match {
         case Some(adds) =>
@@ -376,11 +377,9 @@ object DmlOps {
           // still ride THIS commit — one write (cluster-shaped when the
           // table declares write_cluster_by), bitmaps collected for the
           // merged changelog below
-          val ar = AppendOp.writeFilesWithMeta(spark, storage, adds,
-            writeClustered = true)
-          (ar.patch, ar.files.map(m =>
-            RowBitmap(m.file, allRows = true, numRows = m.numRows)).toList,
-            emptyCo, Nil, StorageStatistics())
+          val ap = AppendOp.writeFilesWithMeta(spark, storage, adds,
+            writeClustered = true).patch
+          (ap, addsOf(ap), emptyCo, Nil, StorageStatistics())
         case None =>
           (Patch(), Nil, emptyCo, Nil, StorageStatistics())
       }
@@ -396,12 +395,10 @@ object DmlOps {
             // FUSED: survivors and adds in one write pass, separate
             // files — the add files become ADD bitmaps, the survivor
             // files stay CDC-silent carryover (deleteByKeysAndAppend)
-            val (p, addMetas) = AppendOp.writeSplitFiles(spark, storage, survivors, adds)
-            (p, addMetas.map(m =>
-              RowBitmap(m.file, allRows = true, numRows = m.numRows)).toList,
-              carry, removedDvs, comp)
+            val p = AppendOp.writeSplitFiles(spark, storage, survivors, adds)
+            (p, addsOf(p), carry, removedDvs, comp)
           case None =>
-            val ap = AppendOp.writeFiles(spark, storage, survivors)
+            val ap = AppendOp.writeFilesWithMeta(spark, storage, survivors).patch
             (ap, Nil, carry, removedDvs, comp)
         }
       }

@@ -35,8 +35,8 @@ import graft.format._
   * user's source data.
   *
   * Driver-side planning is O(total files) strings — the same scale class
-  * as the reference's metadata planning; the deletes themselves fan out
-  * to executors above a small threshold.
+  * as the reference's metadata planning; the deletes run on the
+  * [[DriverPool]].
   */
 object GcOps {
 
@@ -147,25 +147,7 @@ object GcOps {
       case (rel, mod) if !reachable.contains(rel) && mod < cutoff => rel
     }
 
-    // executor-fan-out deletes above a small threshold (driver loop is
-    // O(dead files) sequential FS round-trips otherwise)
-    if (doomed.size <= 64) {
-      doomed.foreach(rel => fs.delete(new Path(root, rel), false))
-    } else {
-      val loc = storage.location
-      // session Hadoop conf: executor-side deletes must resolve the same
-      // filesystem (credentials/custom impl via spark.hadoop.*) as the
-      // driver that planned them
-      val serConf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      spark.sparkContext
-        .parallelize(doomed, math.min(doomed.size, 32).max(1))
-        .foreachPartition { part =>
-          val r = new Path(loc)
-          val pfs = r.getFileSystem(serConf.value)
-          part.foreach(rel => pfs.delete(new Path(r, rel), false))
-        }
-    }
+    DriverPool.parMap(doomed)(rel => fs.delete(new Path(root, rel), false))
     GcStats(doomed.sorted, all.size - doomed.size)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, udf}
 import org.apache.spark.sql.types.IntegerType
 
-import graft.format.{ChangeLog, FieldIds, Patch, RowBitmap, StorageStatistics}
+import graft.format.{FieldIds, Patch}
 
 /** Zero-copy ingest of EXTERNAL parquet files (reference
   * `LocalParquetLoadOp` `/root/reference/python/src/space/core/loaders/
@@ -42,26 +42,12 @@ object ParquetLoader {
       require(ext.dataType == f.dataType,
         s"external field ${f.name} has type ${ext.dataType}, table expects ${f.dataType}")
     }
-    ds.storage.commitTransaction() { _ =>
-      val metas = unique.map { f =>
-        val abs = new Path(f)
-        ManifestIO.harvestFooter(abs.toString, abs.toString, conf,
-          ds.storage.statsColumns, ManifestIO.evidenceColumns(ds.storage))
-      }.filter(_.numRows > 0)
-      if (metas.isEmpty) None
-      else {
-        val manifest = ManifestIO.writeIndexManifest(spark, ds.storage, metas)
-        Some(Patch(
-          addedIndexManifests = List(manifest),
-          statsDelta = StorageStatistics(
-            numRows = metas.map(_.numRows).sum,
-            indexCompressedBytes = metas.map(_.compressedBytes).sum,
-            indexUncompressedBytes = metas.map(_.uncompressedBytes).sum),
-          changeLog = Some(ChangeLog(addedRows = metas.map(m =>
-            RowBitmap(m.file, allRows = true, numRows = m.numRows)).toList)),
-          manifestSummaries = Map(manifest -> ManifestIO.summarize(ds.storage, metas))))
-      }
-    }
+    // harvested and written once: the transaction closure re-runs on
+    // every conflict retry and only hands back the prepared Patch
+    val metas = ManifestIO.harvestLanded(ds.storage, conf,
+      unique.map(f => new Path(f).toString -> None)).filter(_.numRows > 0)
+    val patch = ManifestIO.newFilesPatch(spark, ds.storage, metas)
+    ds.storage.commitTransaction()(_ => if (metas.isEmpty) None else Some(patch))
   }
 }
 

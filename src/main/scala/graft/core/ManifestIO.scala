@@ -9,7 +9,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.format.{FieldIds, StoragePaths}
+import graft.format.{ChangeLog, FieldIds, Patch, RowBitmap, StoragePaths, StorageStatistics}
 
 /** Column-level min/max of one data file, keyed by field name. */
 final case class ColumnStats(min: Any, max: Any)
@@ -186,6 +186,56 @@ object ManifestIO {
         fileBytes = Some(fileBytes), fileMtime = Some(status.getModificationTime))
     } finally reader.close()
   }
+
+  /** Harvest the footers of newly landed files on the [[DriverPool]];
+    * metas come back in input order. `landed` pairs each file's
+    * table-relative name with the path it was written at when it still
+    * has to move there (None: it is already in place — a streamed file,
+    * or a zero-copy file outside the root). A move is idempotent, so a
+    * retry after a partial landing resumes it: a source that still
+    * exists is harvested and then renamed, a source already renamed is
+    * harvested at its destination, and a file found at neither path
+    * fails the harvest. */
+  def harvestLanded(
+      storage: Storage,
+      conf: Configuration,
+      landed: Seq[(String, Option[String])]): Seq[IndexFileMeta] = {
+    val pks = storage.statsColumns
+    val evid = evidenceColumns(storage)
+    DriverPool.parMap(landed) { case (rel, from) =>
+      val dst = new Path(storage.absolute(rel))
+      from.map(new Path(_)) match {
+        case None => harvestFooter(dst.toString, rel, conf, pks, evid)
+        case Some(src) =>
+          val fs = dst.getFileSystem(conf)
+          if (fs.exists(src)) {
+            val meta = harvestFooter(src.toString, rel, conf, pks, evid)
+            if (!fs.rename(src, dst)) throw new java.io.IOException(s"rename $src -> $dst failed")
+            meta
+          } else if (fs.exists(dst)) harvestFooter(dst.toString, rel, conf, pks, evid)
+          else throw new java.io.IOException(s"missing $src and $dst")
+      }
+    }
+  }
+
+  /** The Patch that adds `metas` as new files: one index manifest, its
+    * manifest-list summary, the stats delta and an ADD changelog entry
+    * per file (every row of a new file is an ADD, append.py:240-241).
+    * An empty Patch for no files. */
+  def newFilesPatch(spark: SparkSession, storage: Storage, metas: Seq[IndexFileMeta]): Patch =
+    if (metas.isEmpty) Patch()
+    else {
+      val manifest = writeIndexManifest(spark, storage, metas)
+      Patch(
+        addedIndexManifests = List(manifest),
+        statsDelta = StorageStatistics(
+          numRows = metas.map(_.numRows).sum,
+          indexCompressedBytes = metas.map(_.compressedBytes).sum,
+          indexUncompressedBytes = metas.map(_.uncompressedBytes).sum),
+        changeLog = Some(ChangeLog(addedRows =
+          metas.map(m => RowBitmap(m.file, allRows = true, numRows = m.numRows)).toList)),
+        manifestSummaries = Map(manifest -> summarize(storage, metas)))
+    }
 
   private def statsValues(s: Statistics[_]): (Any, Any) = s match {
     case l: LongStatistics => (l.getMin, l.getMax)

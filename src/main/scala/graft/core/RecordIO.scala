@@ -58,7 +58,7 @@ object RecordIO {
   def writeWithRecords(spark: SparkSession, storage: Storage, df: DataFrame): Patch = {
     val recordFields = storage.recordFields
     if (recordFields.isEmpty)
-      return AppendOp.writeFiles(spark, storage, df, writeClustered = true)
+      return AppendOp.writeFilesWithMeta(spark, storage, df, writeClustered = true).patch
 
     val schema = storage.schema
     val physical = ReadOp.physicalSchema(schema, recordFields)
@@ -126,29 +126,21 @@ object RecordIO {
   }
 
   /** One (file, fieldId, numRows, uncompressedBytes) row per record file,
-    * footer-harvested by a Spark job — one small task per batch of files,
-    * not a serial driver loop (the harvest is O(record files)). */
+    * footer-harvested on the [[DriverPool]]. */
   private[core] def harvestRecordFooters(
       spark: SparkSession,
       storage: Storage,
-      files: Seq[(String, Int)]): Seq[(String, Int, Long, Long)] =
-    if (files.isEmpty) Nil
-    else {
-      val withAbs = files.map { case (rel, fid) => (rel, fid, storage.absolute(rel)) }
-      // session Hadoop conf, for the same spark.hadoop.* reason as above
-      val serConf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      spark.sparkContext
-        .parallelize(withAbs, math.max(1, math.min(withAbs.size, 32)))
-        .map { case (rel, fid, abs) =>
-          val reader = openParquet(abs, serConf.value)
-          try {
-            val blocks = reader.getFooter.getBlocks.asScala
-            (rel, fid, blocks.map(_.getRowCount).sum, blocks.map(_.getTotalByteSize).sum)
-          } finally reader.close()
-        }
-        .collect().toSeq.sortBy(r => (r._2, r._1))
-    }
+      files: Seq[(String, Int)]): Seq[(String, Int, Long, Long)] = {
+    // session Hadoop conf, for the same spark.hadoop.* reason as above
+    val conf = spark.sessionState.newHadoopConf()
+    DriverPool.parMap(files) { case (rel, fid) =>
+      val reader = openParquet(storage.absolute(rel), conf)
+      try {
+        val blocks = reader.getFooter.getBlocks.asScala
+        (rel, fid, blocks.map(_.getRowCount).sum, blocks.map(_.getTotalByteSize).sum)
+      } finally reader.close()
+    }.sortBy(r => (r._2, r._1))
+  }
 
   /** Record manifest schema: one row per (record file, field)
     * (record.py:27-32). */

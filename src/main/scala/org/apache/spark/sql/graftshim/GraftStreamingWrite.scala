@@ -12,8 +12,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.{ConflictPolicy, ManifestIO, ReadOp, SpaceDataset}
-import graft.format.{ChangeLog, Patch, RowBitmap, StoragePaths, StorageStatistics, TxnTag}
+import graft.core.{AppendOp, ConflictPolicy, ManifestIO, ReadOp, SpaceDataset}
+import graft.format.{StoragePaths, TxnTag}
 
 /** Native Structured Streaming SINK for graft tables —
   * `df.writeStream.toTable("cat.t")` without the foreachBatch helper:
@@ -53,7 +53,10 @@ final class GraftStreamingWrite(
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val job = Job.getInstance(classic.sessionState.newHadoopConf())
+    // the batch writer's options (bloom filters), so streamed footers
+    // carry the same membership evidence as appended ones
+    val job = Job.getInstance(classic.sessionState.newHadoopConfWithOptions(
+      AppendOp.writeOptions(spark, storage)))
     val factory = new ParquetFileFormat()
       .prepareWrite(classic, job, Map.empty, idSchema)
     GraftStreamingWriterFactory(factory,
@@ -76,29 +79,7 @@ final class GraftStreamingWrite(
       }
       return
     }
-    // footer harvest: driver-side for small epochs, one small task per
-    // batch of files above the same cutover the batch append uses — a
-    // catch-up epoch with hundreds of task outputs must not serialize
-    // hundreds of footer reads on the driver
-    val pks = storage.statsColumns
-    val sortedRels = rels.sorted
-    val harvested =
-      if (sortedRels.size <= 8)
-        sortedRels.map(rel => ManifestIO.harvestFooter(storage.absolute(rel), rel, conf, pks))
-      else {
-        val withAbs = sortedRels.map(rel => (rel, storage.absolute(rel)))
-        // ship the SESSION's Hadoop conf: the table may sit on a
-        // filesystem configured via spark.hadoop.* (credentials, custom
-        // fs impl) that a default Configuration would not resolve
-        val serConf = new SerializableConfiguration(conf)
-        spark.sparkContext
-          .parallelize(withAbs, math.min(withAbs.size, 32))
-          .map { case (rel, abs) =>
-            ManifestIO.harvestFooter(abs, rel, serConf.value, pks)
-          }
-          .collect().toSeq.sortBy(_.file)
-      }
-    val metas = harvested.filter { m =>
+    val metas = ManifestIO.harvestLanded(storage, conf, rels.sorted.map(_ -> None)).filter { m =>
       // a task that received no rows still opened a 0-row file
       val keep = m.numRows > 0
       if (!keep) {
@@ -107,25 +88,12 @@ final class GraftStreamingWrite(
       }
       keep
     }
-    try storage.commitTransaction(ds.getCurrentBranch, ConflictPolicy.Append) { _ =>
-      if (metas.isEmpty) {
-        // commit an EMPTY snapshot anyway: the txn watermark must
-        // advance or a restart would replay this epoch forever
-        Some(Patch(txn = Some(TxnTag(queryId, epochId))))
-      } else {
-        val manifest = ManifestIO.writeIndexManifest(spark, storage, metas)
-        Some(Patch(
-          addedIndexManifests = List(manifest),
-          statsDelta = StorageStatistics(
-            numRows = metas.map(_.numRows).sum,
-            indexCompressedBytes = metas.map(_.compressedBytes).sum,
-            indexUncompressedBytes = metas.map(_.uncompressedBytes).sum),
-          changeLog = Some(ChangeLog(addedRows =
-            metas.map(m => RowBitmap(m.file, allRows = true, numRows = m.numRows)).toList)),
-          manifestSummaries = Map(manifest -> ManifestIO.summarize(storage, metas)),
-          txn = Some(TxnTag(queryId, epochId))))
-      }
-    } catch {
+    // an epoch with no rows still commits an empty snapshot: the txn
+    // watermark must advance or a restart would replay it forever
+    val patch = ManifestIO.newFilesPatch(spark, storage, metas)
+      .copy(txn = Some(TxnTag(queryId, epochId)))
+    try storage.commitTransaction(ds.getCurrentBranch, ConflictPolicy.Append)(_ => Some(patch))
+    catch {
       // a racing replay of this epoch committed between the up-front
       // check and the lock: the rows are in the table; this attempt's
       // files/manifest are unreferenced (GC reaps them)

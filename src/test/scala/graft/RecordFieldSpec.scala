@@ -388,6 +388,21 @@ class RecordFieldSpec extends AnyFunSuite {
     assert(RecordIO.positionalFileOpens > opens)
   }
 
+  test("a record-field append harvests record footers with no Spark job") {
+    val docs = docsBinary
+    val ds = SpaceDataset.create(spark, freshLoc(), docs.schema, Seq("doc_id"), Seq("text"))
+    val (_, append) = JobCount.of(spark)(ds.append(docs))
+    // the append's own jobs: the write, then the address scan that
+    // finds the record files its index rows point at
+    val index = ds.plan().files.map(ds.storage.absolute)
+    val (recordFiles, scan) = JobCount.of(spark)(spark.read.parquet(index: _*)
+      .select(col("text._FILE")).na.drop().distinct().collect().map(_.getString(0)))
+    assert(append.jobs == 1 + scan.jobs, s"append ran $append, its address scan $scan")
+    assert(recordFiles.nonEmpty &&
+      ds.recordManifest().collect().map(_.getString(0)).toSet == recordFiles.toSet)
+    assert(ds.readAll().select("text").collect().length == docs.count())
+  }
+
   test("upsert replaces record payloads") {
     val docs = docsBinary
     val loc = freshLoc()

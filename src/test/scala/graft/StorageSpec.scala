@@ -60,19 +60,54 @@ class StorageSpec extends AnyFunSuite {
     }
   }
 
-  test("many-file append uses the distributed footer harvest") {
+  test("a 16-file append lands on the driver pool with no harvest job") {
     val loc = freshLoc()
     val ds = SpaceDataset.create(spark, loc, orders.schema, Seq("o_orderkey"))
-    // 16 part files > the driver-loop threshold → harvest+rename runs as
-    // a Spark job (the scale path for thousands-of-files appends)
-    ds.append(orders.repartitionByRange(16, col("o_orderkey")))
+    // one landing path at every width: 16 part files are harvested and
+    // renamed on the driver pool like 4 are, so both appends run the
+    // same jobs (range sample, shuffle, write)
+    val (_, narrow) = JobCount.of(spark)(
+      SpaceDataset.create(spark, freshLoc(), orders.schema, Seq("o_orderkey"))
+        .append(orders.repartitionByRange(4, col("o_orderkey"))))
+    val (_, wide) = JobCount.of(spark)(
+      ds.append(orders.repartitionByRange(16, col("o_orderkey"))))
+    assert(wide.jobs == narrow.jobs, s"16-file append ran $wide, 4-file append $narrow")
     assert(ds.indexManifest().count() == 16)
     val back = ds.readAll()
     assert(back.count() == orders.count())
     assert(back.exceptAll(orders).isEmpty && orders.exceptAll(back).isEmpty)
-    // stats survived the distributed harvest: pruning still works
+    // stats survived the harvest: pruning still works
     val plan = ds.plan(Some(col("o_orderkey") < 500L))
     assert(plan.files.size < plan.totalFiles)
+  }
+
+  test("harvesting a partly moved landing set resumes: same metas, in input order") {
+    val ds = SpaceDataset.create(spark, freshLoc(), orders.schema, Seq("o_orderkey"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tmp = ds.storage.absolute("data/tmp_resume")
+    orders.repartitionByRange(6, col("o_orderkey")).write.parquet(tmp)
+    val parts = new java.io.File(tmp).listFiles().toSeq.map(_.getPath)
+      .filter(p => new java.io.File(p).getName.startsWith("part-")).sorted
+    assert(parts.size == 6)
+    val landed = parts.map(p => graft.format.StoragePaths.newIndexDataFile() -> p)
+    // what a clean landing records, read before anything moves
+    val expected = landed.map { case (rel, src) =>
+      ManifestIO.harvestFooter(src, rel, conf, ds.storage.statsColumns,
+        ManifestIO.evidenceColumns(ds.storage))
+    }
+    // an interrupted attempt already moved every other file
+    def dst(rel: String) = java.nio.file.Paths.get(ds.storage.absolute(rel))
+    landed.zipWithIndex.collect { case ((rel, src), i) if i % 2 == 0 =>
+      Files.move(java.nio.file.Paths.get(src), dst(rel))
+    }
+    val got = ManifestIO.harvestLanded(ds.storage, conf,
+      landed.map { case (rel, src) => rel -> Some(src) })
+    assert(got == expected)
+    assert(landed.forall { case (rel, src) =>
+      Files.exists(dst(rel)) && !Files.exists(java.nio.file.Paths.get(src)) })
+    // a file at neither path fails the harvest
+    intercept[java.io.IOException](ManifestIO.harvestLanded(ds.storage, conf,
+      Seq(graft.format.StoragePaths.newIndexDataFile() -> Some(s"$tmp/missing.parquet"))))
   }
 
   test("nested stats fields prune on struct-member filters (API and SQL paths)") {

@@ -69,23 +69,59 @@ class StreamingWriteSpec extends AnyFunSuite {
     assert(onDisk == listed, s"orphans on disk: ${onDisk -- listed}")
   }
 
-  test("a wide epoch (many task outputs) commits through the distributed harvest") {
+  test("a wide epoch (many task outputs) commits with no harvest job") {
     root
-    spark.sql("CREATE TABLE graft_sw.wide (event_id BIGINT, value DOUBLE) " +
-      "TBLPROPERTIES ('primary_keys'='event_id')")
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val q = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sfDir)
-      .select(col("event_id"), col("value"))
-      .repartition(12) // > the 8-file driver-harvest cutover
-      .writeStream
-      .option("checkpointLocation", Files.createTempDirectory("graft_sww_").toString)
-      .toTable("graft_sw.wide")
-    try q.processAllAvailable() finally q.stop()
+    def streamInto(table: String, tasks: Int): JobCount = {
+      spark.sql(s"CREATE TABLE graft_sw.$table (event_id BIGINT, value DOUBLE) " +
+        "TBLPROPERTIES ('primary_keys'='event_id')")
+      JobCount.of(spark) {
+        val q = spark.readStream.schema(schema)
+          .option("pathGlobFilter", "events.parquet").parquet(sfDir)
+          .select(col("event_id"), col("value"))
+          .repartition(tasks)
+          .writeStream
+          .option("checkpointLocation", Files.createTempDirectory("graft_sww_").toString)
+          .toTable(s"graft_sw.$table")
+        try q.processAllAvailable() finally q.stop()
+      }._2
+    }
+    // one landing path at every width: a 12-file epoch commits on the
+    // driver like a 2-file one, so both runs are the epoch's write jobs
+    val narrow = streamInto("narrow", 2)
+    val wide = streamInto("wide", 12)
+    assert(wide.jobs == narrow.jobs, s"12-task epoch ran $wide, 2-task epoch $narrow")
     val expected = spark.read.parquet(s"$sfDir/events.parquet").count()
     assert(spark.sql("SELECT count(*) FROM graft_sw.wide").collect()(0).getLong(0) == expected)
     val ds = new DirCatalog(spark, root).dataset("wide")
-    assert(ds.indexFiles().size > 8, "epoch must have taken the distributed harvest path")
+    assert(ds.indexFiles().size > 8, "epoch must have landed one file per task")
+  }
+
+  test("streamed files record the same membership evidence as a batch append") {
+    root
+    Seq("evs", "evb").foreach(t => spark.sql(s"CREATE TABLE graft_sw.$t " +
+      "(event_id BIGINT, value DOUBLE) TBLPROPERTIES ('primary_keys'='event_id')"))
+    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val q = spark.readStream.schema(schema)
+      .option("pathGlobFilter", "events.parquet").parquet(sfDir)
+      .select(col("event_id"), col("value")).repartition(1)
+      .writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft_swe_").toString)
+      .toTable("graft_sw.evs")
+    try q.processAllAvailable() finally q.stop()
+    val catalog = new DirCatalog(spark, root)
+    catalog.dataset("evb").append(spark.read.parquet(s"$sfDir/events.parquet")
+      .select(col("event_id"), col("value")).repartition(1))
+    def markers(t: String): Seq[Seq[Any]] = {
+      val m = catalog.dataset(t).indexManifest()
+      val cols = m.columns.filter(_.startsWith("_EVID_")).sorted
+      assert(cols.nonEmpty, s"$t: no evidence columns")
+      m.select(cols.map(col).toIndexedSeq: _*).collect().map(_.toSeq).toSeq
+    }
+    val streamed = markers("evs")
+    assert(streamed.size == 1 && streamed.flatten.forall(_ != null),
+      s"streamed evidence markers are missing: $streamed")
+    assert(streamed == markers("evb"))
   }
 
   test("record-field and bucketed tables reject streaming writes clearly") {

@@ -278,6 +278,18 @@ class ManifestListSpec extends AnyFunSuite {
       DmlOps.manifestCarryover(spark, ds.storage, sid, affected))
     assert(co.affectedFileRows.keySet == affected)
     assert(coJobs.jobs == 0, s"carryover ran $coJobs")
+    // sweeping more than 64 unreachable files: the deletes run on the
+    // driver pool, not as a Spark job
+    val dead = (0 until 70).map(i => s"data/orphan_$i.parquet")
+    dead.foreach { rel =>
+      val f = java.nio.file.Paths.get(ds.storage.absolute(rel))
+      Files.write(f, Array[Byte](1))
+      assert(f.toFile.setLastModified(0L))
+    }
+    val (swept, sweepJobs) = JobCount.of(spark)(ds.garbageCollect())
+    assert(swept.deleted.toSet == dead.toSet)
+    assert(sweepJobs.jobs == 0, s"GC of ${dead.size} files ran $sweepJobs")
+    assert(dead.forall(rel => !Files.exists(java.nio.file.Paths.get(ds.storage.absolute(rel)))))
   }
 
   test("a table past 256 files: plan, DML and maintenance match full scans") {
