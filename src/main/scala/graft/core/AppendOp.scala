@@ -18,8 +18,8 @@ import graft.format._
   *
   * The reference caps index files at 1 MiB uncompressed
   * (options.py:66-67) — pathological at 100 TB; we instead inherit
-  * Spark's task partitioning (≈128 MB splits) and expose an optional
-  * `targetFileRows` repartition knob (SURVEY.md §7.3 "small-file
+  * Spark's task partitioning (≈128 MB splits), and [[CompactOp]]
+  * right-sizes small files afterwards (SURVEY.md §7.3 "small-file
   * defaults").
   */
 object AppendOp {
@@ -242,7 +242,6 @@ object AppendOp {
       spark: SparkSession,
       storage: Storage,
       df: DataFrame,
-      targetFileRows: Option[Long] = None,
       writeClustered: Boolean = false,
       /** Rebucket's hook: write under this PER-COLUMN (columns, counts)
         * layout instead of the table's current one (the metadata
@@ -295,13 +294,7 @@ object AppendOp {
         // 64 MB advisory would fold a whole mid-size tier into one
         val cols = wcb.map(org.apache.spark.sql.functions.col)
         alignedDf.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
-      } else targetFileRows match {
-        case Some(n) if n > 0 =>
-          val total = alignedDf.count()
-          val parts = math.max(1, math.ceil(total.toDouble / n).toInt)
-          alignedDf.repartition(parts)
-        case _ => alignedDf
-      }
+      } else alignedDf
     // part-NNNNN task numbering = partition index = bucket id (an
     // explicit df.repartition(n, expr) is never AQE-coalesced); the
     // per-column layout reads the tuple from the directory names and
@@ -350,11 +343,11 @@ object AppendOp {
     * change. */
   private def clusterAdvisoryConfs(
       spark: SparkSession): Seq[(String, String)] = {
-    val advisory = spark.conf.getOption("spark.graft.writeCluster.advisoryBytes")
-      .getOrElse((8L * 1024 * 1024).toString)
-    val floor = math.min(advisory.toLong, 1L * 1024 * 1024).toString
-    Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory,
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> floor)
+    val advisory = Confs.longConf(spark,
+      "spark.graft.writeCluster.advisoryBytes", 8L * 1024 * 1024)
+    Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+        math.min(advisory, 1L * 1024 * 1024).toString)
   }
 
   /** FUSED carryover + append: land CoW `survivors` and fresh `adds`

@@ -101,43 +101,27 @@ object ClusterOp {
       }
     if (files.isEmpty) return None // already fully clustered
 
-    val physical = ReadOp.physicalSchema(storage.schema, storage.recordFields)
     val totalRows = files.map(_._2).sum
     val parts = math.max(1, math.ceil(totalRows.toDouble / targetFileRows).toInt)
-    val rawScan = spark.read.schema(physical)
-      .parquet(files.map(f => storage.absolute(f._1)): _*)
-    // fold merge-on-read delete vectors of the rewritten files (see
-    // DeleteVectorOps: mask dead rows, retire entries, compensate stats)
-    val (scan, dvRemoved, foldComp) = DeleteVectorOps.foldIntoScan(
-      spark, storage, snapshotId, files.map(_._1).toSet, rawScan)
-    val rows =
-      if (!zorder)
-        scan.repartitionByRange(parts, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else {
-        val zk = zorderKey(scan, sortCols)
-        // the interleaved key drives BOTH the range partitioning and the
-        // in-partition sort; AppendOp's schema-align select drops it
-        scan.withColumn("__zkey", zk)
-          .repartitionByRange(parts, col("__zkey"))
-          .sortWithinPartitions(col("__zkey"))
-      }
-    val written = AppendOp.writeFilesWithMeta(spark, storage, rows)
-    val appendPatch = written.patch
-
-    val co = DmlOps.manifestCarryover(spark, storage, snapshotId, files.map(_._1).toSet)
-    val outRows = appendPatch.statsDelta.numRows
-    require(outRows == -co.removedStats.numRows - foldComp.numRows,
-      s"clustering row-count drift: wrote $outRows live rows, removed " +
-        s"${-co.removedStats.numRows} physical minus ${foldComp.numRows} folded dead")
-    val patch = Patch(
-      addedIndexManifests = appendPatch.addedIndexManifests ++ co.carryoverManifests,
-      removedIndexManifests = co.removedManifests,
-      statsDelta = appendPatch.statsDelta + co.removedStats + foldComp,
-      changeLog = None,
-      manifestSummaries = appendPatch.manifestSummaries ++ co.summaries,
-      dvRemoved = dvRemoved)
-    Some((patch, ClusterResult(files.size, written.files.size, outRows)))
+    val (patch, written) = RewriteOp.replaceFiles(spark, storage, snapshotId,
+        files.map(_._1)) { scan =>
+      val rows =
+        if (!zorder)
+          scan.repartitionByRange(parts, sortCols.map(col): _*)
+            .sortWithinPartitions(sortCols.map(col): _*)
+        else {
+          val zk = zorderKey(scan, sortCols)
+          // the interleaved key drives BOTH the range partitioning and the
+          // in-partition sort; AppendOp's schema-align select drops it
+          scan.withColumn("__zkey", zk)
+            .repartitionByRange(parts, col("__zkey"))
+            .sortWithinPartitions(col("__zkey"))
+        }
+      val p = AppendOp.writeFilesWithMeta(spark, storage, rows).patch
+      (p, p.statsDelta.numRows)
+    }
+    Some((patch, ClusterResult(files.size, RewriteOp.fileCount(written),
+      written.statsDelta.numRows)))
   }
 
   /** Merge trigger for incremental clustering: when the delta tier

@@ -46,16 +46,8 @@ object CompactOp {
     * dvMaxFraction cutover on the delete path (VERDICT r11 #1). */
   val DvDebtFractionKey = "spark.graft.compact.dvDebtFraction"
 
-  private[core] def dvDebtFraction(spark: SparkSession): Double = {
-    val raw = spark.conf.getOption(DvDebtFractionKey).getOrElse("0")
-    val v = try raw.toDouble catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$DvDebtFractionKey must be a number in [0, 1], got '$raw'")
-    }
-    require(java.lang.Double.isFinite(v) && v >= 0 && v <= 1,
-      s"$DvDebtFractionKey must be a number in [0, 1], got '$raw'")
-    v
-  }
+  private[core] def dvDebtFraction(spark: SparkSession): Double =
+    Confs.fractionConf(spark, DvDebtFractionKey, 0)
 
   /** Build the compaction patch, or None when fewer than `minInputFiles`
     * files are below the small threshold. */
@@ -106,60 +98,38 @@ object CompactOp {
     val anyFold = small.exists(f => dvs.contains(f._1))
     if (small.size < minInputFiles && !anyFold) return None
 
-    // one distributed, SHUFFLE-FREE rewrite: the manifest already gives
-    // exact row counts, so size the output with coalesce (merges scan
-    // partitions in place) instead of a repartition that would exchange
-    // every compacted byte across the cluster. Physical schema keeps
-    // record addresses opaque (never stitched).
-    val physical = ReadOp.physicalSchema(storage.schema, storage.recordFields)
-    val rawScan = spark.read.schema(physical)
-      .parquet(small.map(f => storage.absolute(f._1)): _*)
-    // fold delete vectors: the rewrite keeps live rows only, the folded
-    // entries retire, and the stats compensation cancels the physical-
-    // row double-count (the dead rows were already subtracted when the
-    // vector was written)
-    val (scan, dvRemoved, foldComp) = DeleteVectorOps.foldIntoScan(
-      spark, storage, snapshotId, small.map(_._1).toSet, rawScan)
+    // one distributed rewrite (see [[RewriteOp.replaceFiles]]), shaped
+    // per layout. Plain: SHUFFLE-FREE — the manifest already gives exact
+    // row counts, so coalesce merges scan partitions in place instead of
+    // exchanging every compacted byte.
     val wcb = storage.metadata.writeClusterBy
     val totalRows = small.map(_._2).sum
     val parts = math.max(1, math.ceil(totalRows.toDouble / targetFileRows).toInt)
-    val written =
-      if (!bucketed && wcb.nonEmpty) {
-        // TIER-AWARE on write-clustered tables: a plain coalesce would
-        // interleave sorted tiers and un-sort every compacted range —
-        // one routine compact used to silently degrade all subsequent
-        // point reads. Instead the selected small files re-range-sort
-        // into ONE disjoint tier (the same shape an append tier has),
-        // so point reads stay ≤ tier-count files. This pays one bounded
-        // shuffle of just the small-file bytes — the identical price
-        // the bucketed branch pays to keep ITS invariant.
-        val cols = wcb.map(col)
-        AppendOp.writeFilesWithMeta(spark, storage,
-          scan.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*))
-      } else if (!bucketed) {
-        AppendOp.writeFilesWithMeta(spark, storage, scan.coalesce(parts))
-      } else {
+    val (patch, written) = RewriteOp.replaceFiles(spark, storage, snapshotId,
+        small.map(_._1)) { scan =>
+      val shaped =
+        if (!bucketed && wcb.nonEmpty) {
+          // TIER-AWARE on write-clustered tables: a plain coalesce would
+          // interleave sorted tiers and un-sort every compacted range —
+          // one routine compact used to silently degrade all subsequent
+          // point reads. Instead the selected small files re-range-sort
+          // into ONE disjoint tier (the same shape an append tier has),
+          // so point reads stay ≤ tier-count files. This pays one bounded
+          // shuffle of just the small-file bytes — the identical price
+          // the bucketed branch pays to keep ITS invariant.
+          val cols = wcb.map(col)
+          scan.repartitionByRange(parts, cols: _*).sortWithinPartitions(cols: _*)
+        } else if (!bucketed) scan.coalesce(parts)
         // bucketed: the standard bucketed write re-hashes the selected
         // small files into one file per bucket. This pays ONE shuffle of
         // just the selected small-file bytes (bounded by construction) —
         // the price of keeping the bucket invariant through the same
         // single code path every other write uses.
-        AppendOp.writeFilesWithMeta(spark, storage, scan)
-      }
-    val appendPatch = written.patch
-
-    val co = DmlOps.manifestCarryover(spark, storage, snapshotId, small.map(_._1).toSet)
-    val outRows = appendPatch.statsDelta.numRows
-    require(outRows == -co.removedStats.numRows - foldComp.numRows,
-      s"compaction row-count drift: wrote $outRows live rows, removed " +
-        s"${-co.removedStats.numRows} physical minus ${foldComp.numRows} folded dead")
-    val patch = Patch(
-      addedIndexManifests = appendPatch.addedIndexManifests ++ co.carryoverManifests,
-      removedIndexManifests = co.removedManifests,
-      statsDelta = appendPatch.statsDelta + co.removedStats + foldComp,
-      changeLog = None,
-      manifestSummaries = appendPatch.manifestSummaries ++ co.summaries,
-      dvRemoved = dvRemoved)
-    Some((patch, CompactResult(small.size, written.files.size, outRows)))
+        else scan
+      val p = AppendOp.writeFilesWithMeta(spark, storage, shaped).patch
+      (p, p.statsDelta.numRows)
+    }
+    Some((patch, CompactResult(small.size, RewriteOp.fileCount(written),
+      written.statsDelta.numRows)))
   }
 }

@@ -1,10 +1,10 @@
 package graft.core
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.format.{RowBitmap, StorageStatistics}
+import graft.format.RowBitmap
 
 /** Merge-on-read delete-vector plumbing shared by every layer that
   * touches data-file rows (beyond the reference, whose DML is pure
@@ -19,13 +19,9 @@ import graft.format.{RowBitmap, StorageStatistics}
   *    (conservative for pruning, exact for IO planning).
   *  - `storageStatistics.numRows` stays the LIVE count: a MoR delete
   *    subtracts the newly-dead rows without touching a byte of data.
-  *  - Maintenance rewrites (compact / cluster / record-rewrite) and CoW
-  *    legs FOLD vectors in: the rewrite scan masks dead rows, the
-  *    file's vector entry retires (`Patch.dvRemoved`), and the fold
-  *    adds back the entry's cardinality to the stats delta — those rows
-  *    were already subtracted when the vector was written, and the
-  *    manifest-based accounting of the rewrite subtracts them a second
-  *    time.
+  *  - Every file rewrite FOLDS vectors in ([[RewriteOp.replaceFiles]]):
+  *    the rewrite scan masks dead rows, the file's vector entry retires
+  *    and the stats delta compensates.
   *  - CDC is UNCHANGED: a MoR delete logs the same per-file bitmaps a
   *    CoW delete logs, and historical row positions stay physical.
   */
@@ -38,16 +34,8 @@ object DeleteVectorOps {
     * 0.2) so a 1 % delete stops rewriting every touched file. */
   val DvMaxFractionKey = "spark.graft.delete.dvMaxFraction"
 
-  def dvMaxFraction(spark: SparkSession): Double = {
-    val raw = spark.conf.getOption(DvMaxFractionKey).getOrElse("0")
-    val v = try raw.toDouble catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"$DvMaxFractionKey must be a number in [0, 1], got '$raw'")
-    }
-    require(java.lang.Double.isFinite(v) && v >= 0 && v <= 1,
-      s"$DvMaxFractionKey must be a number in [0, 1], got '$raw'")
-    v
-  }
+  def dvMaxFraction(spark: SparkSession): Double =
+    Confs.fractionConf(spark, DvMaxFractionKey, 0)
 
   /** Normalized-path → serialized-bitmap map for a vector set, keyed
     * exactly like `_metadata.file_path` renders (the one idiom every
@@ -105,8 +93,8 @@ object DeleteVectorOps {
   /** The live-rows mask for a whole-snapshot read ([[graft.core.ReadOp
     * .scanPhysical]]'s shape): same semantics as [[maskFilter]] over the
     * snapshot's full vector set, with the broadcast REUSED across reads
-    * of the same immutable DV file. Subset callers (CoW delete legs,
-    * maintenance folds) keep the uncached [[maskFilter]]. */
+    * of the same immutable DV file. Subset callers (the delete match,
+    * file rewrites) keep the uncached [[maskFilter]]. */
   def maskFilterForSnapshot(
       spark: SparkSession,
       storage: Storage,
@@ -147,23 +135,4 @@ object DeleteVectorOps {
   private val bcMisses = new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] def broadcastCacheMisses: Long = bcMisses.get()
   private[graft] def broadcastCacheSize: Int = bcCache.synchronized(bcCache.size())
-
-  /** Apply the snapshot's vectors to an explicit-file-list scan (the
-    * maintenance-rewrite shape). Returns the masked frame plus the fold
-    * bookkeeping: the entries being folded (→ `Patch.dvRemoved`) and
-    * the stats compensation (+cardinality — see the object doc). */
-  def foldIntoScan(
-      spark: SparkSession,
-      storage: Storage,
-      snapshotId: Long,
-      files: Set[String],
-      scan: DataFrame): (DataFrame, List[String], StorageStatistics) = {
-    val dvs = storage.deleteVectors(snapshotId).view.filterKeys(files).toMap
-    if (dvs.isEmpty) (scan, Nil, StorageStatistics())
-    else {
-      val masked = scan.filter(maskFilter(spark, storage, dvs).get)
-      (masked, dvs.keys.toList.sorted,
-        StorageStatistics(numRows = dvs.valuesIterator.map(_.numRows).sum))
-    }
-  }
 }

@@ -123,11 +123,10 @@ object DmlOps {
     * ADDs) — the two-pass commit was every refresh's residual cost
     * (VERDICT r14 next #3). Write-clustered tables fuse too — the split
     * write range-sorts both groups into tier shape (VERDICT r15 #2).
-    * The fused pass falls back to sweep-then-append when the layout
-    * needs the full append path (record fields, buckets) or when the
-    * sweep matches nothing. One side alone is a plain [[deleteByKeysOn]]
-    * or [[RecordIO.writeWithRecords]]; with neither side the result is
-    * None. */
+    * The fused pass falls back to sweep-then-append when [[fusesAdds]]
+    * refuses the layout or when the sweep matches nothing. One side
+    * alone is a plain [[deleteByKeysOn]] or [[RecordIO.writeWithRecords]];
+    * with neither side the result is None. */
   def deleteByKeysAndAppend(
       spark: SparkSession,
       storage: Storage,
@@ -140,8 +139,7 @@ object DmlOps {
         * so steady-state maintenance soft-deletes instead of CoW-
         * rewriting every touched state file. */
       dvFracOverride: Option[Double] = None): Option[Patch] = {
-    val fused = adds.filter(_ =>
-      keys.isDefined && storage.recordFields.isEmpty && storage.metadata.numBuckets == 0)
+    val fused = adds.filter(_ => keys.isDefined && fusesAdds(storage))
     val swept = keys.flatMap(k =>
       deleteByKeysOn(spark, storage, snapshotId, k, keyCols, fused, dvFracOverride))
     // the fused pass wrote the adds only when its sweep matched something
@@ -149,6 +147,12 @@ object DmlOps {
       .map(RecordIO.writeWithRecords(spark, storage, _))
     Patch.merge(swept.toSeq ++ appended)
   }
+
+  /** Whether a delete and its adds can share one write pass
+    * ([[AppendOp.writeSplitFiles]]): plain and write-clustered layouts.
+    * Bucketed and record-field layouts need the full append path. */
+  private[core] def fusesAdds(storage: Storage): Boolean =
+    storage.recordFields.isEmpty && storage.metadata.numBuckets == 0
 
   /** Up to this many FILES in a snapshot, a key delete skips stats
     * pruning (every file is a candidate) and its bitmap query runs with
@@ -327,8 +331,8 @@ object DmlOps {
     // deletes a file's vector can never grow past dvMaxFraction of its
     // physical rows — the delete that would cross the line flips the
     // file to CoW, folding its vector — where the per-delete form let
-    // debt accumulate without bound. Pure-CoW tables with the conf at 0
-    // skip the per-file row-count lookup entirely.
+    // debt accumulate without bound. The physical row counts also tell
+    // the changelog which files died whole (allRows).
     val dvFrac = dvFracOverride match {
       case Some(v) =>
         require(java.lang.Double.isFinite(v) && v >= 0 && v <= 1,
@@ -336,11 +340,11 @@ object DmlOps {
         v
       case None => DeleteVectorOps.dvMaxFraction(spark)
     }
-    val needSplit = dvFrac > 0
-    val physRows: Map[String, Long] =
-      if (needSplit) fileNumRows(spark, storage, snapshotId, affectedRel) else Map.empty
+    val physRows = ManifestIO.fileRowCounts(storage, conf,
+        storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles)
+      .filter { case (f, _) => affectedRel.contains(f) }.toMap
     val (morFiles, cowFiles) =
-      if (!needSplit) (Set.empty[String], affectedRel)
+      if (dvFrac == 0) (Set.empty[String], affectedRel)
       else affectedRel.partition { f =>
         val phys = physRows(f)
         val existing = dvs.get(f).map(_.numRows).getOrElse(0L)
@@ -359,54 +363,34 @@ object DmlOps {
       f -> RowBitmap(f, allRows = false, numRows = merged.getLongCardinality,
         bitmapB64 = Some(bitmapToB64(merged)))
     }.toMap
-    val dvObserved: Map[String, Option[String]] =
-      morFiles.iterator.map(f => f -> dvs.get(f).flatMap(_.bitmapB64)).toMap
-    val morDead = morFiles.iterator.map(f => deletedByFile(f).getLongCardinality).sum
+    def deadIn(fs: Set[String]) = fs.iterator.map(f => deletedByFile(f).getLongCardinality).sum
 
-    // ---- copy-on-write leg: rewrite ONLY the CoW files; survivors keep
-    // record addresses as-is (record_address_input=True analog,
-    // delete.py:103). An existing vector on a rewritten file FOLDS in:
-    // the survivor scan masks its dead rows, the entry retires, and the
-    // fold compensates the stats (those rows were already subtracted).
-    val emptyCo = CarryoverResult(Nil, Nil, StorageStatistics(), Map.empty)
+    // ---- copy-on-write leg: rewrite ONLY the CoW files, keeping the
+    // survivors (record addresses as-is, the record_address_input=True
+    // analog, delete.py:103). With `extraAdds` the adds ride the same
+    // write in their own files (ADD bitmaps; survivors stay CDC-silent);
+    // a pure-MoR sweep writes them alone, cluster-shaped.
     def addsOf(p: Patch) = p.changeLog.toList.flatMap(_.addedRows)
-    val (appendPatch, addBitmaps, co, dvRemoved, foldComp) =
-      if (cowFiles.isEmpty) extraAdds match {
-        case Some(adds) =>
-          // pure-MoR sweep (no survivor rewrite to fuse into): the adds
-          // still ride THIS commit — one write (cluster-shaped when the
-          // table declares write_cluster_by), bitmaps collected for the
-          // merged changelog below
-          val ap = AppendOp.writeFilesWithMeta(spark, storage, adds,
-            writeClustered = true).patch
-          (ap, addsOf(ap), emptyCo, Nil, StorageStatistics())
-        case None =>
-          (Patch(), Nil, emptyCo, Nil, StorageStatistics())
-      }
-      else {
-        val affectedDF = spark.read.schema(physical)
-          .parquet(cowFiles.toSeq.map(storage.absolute): _*)
-        val (maskedDF, removedDvs, comp) = DeleteVectorOps.foldIntoScan(
-          spark, storage, snapshotId, cowFiles, affectedDF)
-        val survivors = keepSurvivors(maskedDF)
-        val carry = manifestCarryover(spark, storage, snapshotId, cowFiles)
-        extraAdds match {
-          case Some(adds) =>
-            // FUSED: survivors and adds in one write pass, separate
-            // files — the add files become ADD bitmaps, the survivor
-            // files stay CDC-silent carryover (deleteByKeysAndAppend)
-            val p = AppendOp.writeSplitFiles(spark, storage, survivors, adds)
-            (p, addsOf(p), carry, removedDvs, comp)
-          case None =>
-            val ap = AppendOp.writeFilesWithMeta(spark, storage, survivors).patch
-            (ap, Nil, carry, removedDvs, comp)
+    val (cowPatch, addBitmaps) =
+      if (cowFiles.isEmpty) {
+        val ap = extraAdds.fold(Patch())(adds =>
+          AppendOp.writeFilesWithMeta(spark, storage, adds, writeClustered = true).patch)
+        (ap, addsOf(ap))
+      } else {
+        val (patch, written) = RewriteOp.replaceFiles(spark, storage, snapshotId,
+            cowFiles.toSeq, deletedRows = deadIn(cowFiles)) { live =>
+          val survivors = keepSurvivors(live)
+          extraAdds match {
+            case Some(adds) =>
+              val p = AppendOp.writeSplitFiles(spark, storage, survivors, adds)
+              (p, p.statsDelta.numRows - addsOf(p).map(_.numRows).sum)
+            case None =>
+              val p = AppendOp.writeFilesWithMeta(spark, storage, survivors).patch
+              (p, p.statsDelta.numRows)
+          }
         }
+        (patch, if (extraAdds.isDefined) addsOf(written) else Nil)
       }
-
-    // physical row counts for allRows detection: the carryover pass
-    // covers the CoW files; the split pass covers everything when MoR
-    // was in play (a MoR file is never allRows — it keeps live rows)
-    val fileRows = co.affectedFileRows ++ physRows
 
     val deleteLog = ChangeLog(deletedRows = deletedByFile.toList.sortBy(_._1).map {
       case (file, bm) =>
@@ -414,82 +398,16 @@ object DmlOps {
         // n == physical rows is only possible when the file had no
         // existing vector (masked rows are unmatchable), so allRows
         // stays exact under merge-on-read
-        val all = fileRows.get(file).contains(n)
+        val all = physRows.get(file).contains(n)
         RowBitmap(file, allRows = all, numRows = n,
           bitmapB64 = if (all) None else Some(bitmapToB64(bm)))
     }, addedRows = addBitmaps)
 
-    Some(Patch(
-      addedIndexManifests = appendPatch.addedIndexManifests ++ co.carryoverManifests,
-      removedIndexManifests = co.removedManifests,
-      statsDelta = appendPatch.statsDelta + co.removedStats + foldComp +
-        StorageStatistics(numRows = -morDead),
+    Some(cowPatch.copy(
+      statsDelta = cowPatch.statsDelta + StorageStatistics(numRows = -deadIn(morFiles)),
       changeLog = Some(deleteLog),
-      manifestSummaries = appendPatch.manifestSummaries ++ co.summaries,
       dvAdded = dvAdded,
-      dvObserved = dvObserved,
-      dvRemoved = dvRemoved))
-  }
-
-  /** Physical row count per file (manifest projection) for a specific
-    * file set — the merge-on-read split needs counts BEFORE deciding
-    * which files the carryover pass will cover. */
-  private def fileNumRows(
-      spark: SparkSession,
-      storage: Storage,
-      snapshotId: Long,
-      files: Set[String]): Map[String, Long] =
-    ManifestIO.fileRowCounts(storage, spark.sparkContext.hadoopConfiguration,
-      storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles)
-      .filter { case (f, _) => files.contains(f) }.toMap
-
-  final case class CarryoverResult(
-      removedManifests: List[String],
-      carryoverManifests: List[String],
-      removedStats: StorageStatistics,
-      affectedFileRows: Map[String, Long],
-      summaries: Map[String, ManifestSummary] = Map.empty)
-
-  /** Manifest carryover for a CoW rewrite of `affectedRel` files: drop
-    * the manifests that list them and re-emit their UNTOUCHED rows as
-    * one carryover manifest (delete.py:144-150). Also returns the
-    * negative stats delta of the affected files and their per-file row
-    * counts. Shared by delete and compaction. Pure set arithmetic over
-    * the driver-loaded manifest rows — no Spark job. */
-  private[core] def manifestCarryover(
-      spark: SparkSession,
-      storage: Storage,
-      snapshotId: Long,
-      affectedRel: Set[String]): CarryoverResult = {
-    val manifests = storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles
-    val conf = spark.sparkContext.hadoopConfiguration
-    val schema = ManifestIO.manifestSchema(storage)
-    val fIdx = schema.fieldIndex(ManifestIO.FileCol)
-    val nIdx = schema.fieldIndex(ManifestIO.NumRowsCol)
-    val cIdx = schema.fieldIndex(ManifestIO.CompressedCol)
-    val uIdx = schema.fieldIndex(ManifestIO.UncompressedCol)
-    val rows = ManifestIO.readIndexManifestRowsDriver(storage, conf, manifests)
-    val affected = rows.filter { case (_, r) => affectedRel.contains(r.getString(fIdx)) }
-    val affectedManifests = affected.map(_._1).toSet
-    val removedManifests = manifests.filter(affectedManifests.contains).toList
-    val carryRows = rows.collect {
-      case (m, r) if affectedManifests.contains(m) &&
-        !affectedRel.contains(r.getString(fIdx)) => r
-    }
-    val (carryoverManifest, summaries) =
-      if (carryRows.isEmpty) (Nil, Map.empty[String, ManifestSummary])
-      else {
-        val rel = StoragePaths.newIndexManifestFile()
-        DriverParquet.write(conf, storage.absolute(rel), schema, carryRows)
-        (List(rel), Map(rel -> ManifestIO.summarizeRows(storage, schema, carryRows)))
-      }
-    val removed = StorageStatistics(
-      numRows = -affected.map(_._2.getLong(nIdx)).sum,
-      indexCompressedBytes = -affected.map(_._2.getLong(cIdx)).sum,
-      indexUncompressedBytes = -affected.map(_._2.getLong(uIdx)).sum)
-    CarryoverResult(removedManifests, carryoverManifest, removed,
-      affected.map { case (_, r) => r.getString(fIdx) -> r.getLong(nIdx) }.toMap,
-      summaries)
+      dvObserved = morFiles.iterator.map(f => f -> dvs.get(f).flatMap(_.bitmapB64)).toMap))
   }
 
   /** Atomic whole-table overwrite (SQL `INSERT OVERWRITE` = truncate +

@@ -89,36 +89,38 @@ object RecordLoader {
       s"indexExprs must cover exactly the index fields ${indexFields.mkString(", ")}")
     val conf = spark.sparkContext.hadoopConfiguration
 
-    st.commitTransaction() { _ =>
-      // address _FILE uses the caller's path spelling; map the scanner's
-      // qualified URIs back to it (full-path keys — basenames collide)
-      val relByKey = files.map { f =>
-        val p = new Path(f)
-        DmlOps.pathKey(p.getFileSystem(conf).makeQualified(p).toString) -> f
-      }.toMap
-      val bc = spark.sparkContext.broadcast(relByKey)
-      val toGivenPath = udf((p: String) => bc.value(BitmapCache.normKey(p)))
+    // address _FILE uses the caller's path spelling; map the scanner's
+    // qualified URIs back to it (full-path keys — basenames collide)
+    val relByKey = files.map { f =>
+      val p = new Path(f)
+      DmlOps.pathKey(p.getFileSystem(conf).makeQualified(p).toString) -> f
+    }.toMap
+    val bc = spark.sparkContext.broadcast(relByKey)
+    val toGivenPath = udf((p: String) => bc.value(BitmapCache.normKey(p)))
 
-      val physical = ReadOp.physicalSchema(st.schema, st.recordFields)
-      val raw = spark.read.parquet(files: _*).select(
-        col("value"),
-        toGivenPath(col("_metadata.file_path")).as("__file"),
-        col("_metadata.row_index").cast(IntegerType).as("__row"))
-      val indexDF = raw.select(physical.fields.map { f =>
-        if (f.name == field)
-          struct(col("__file").as("_FILE"), col("__row").as("_ROW_ID")).as(field)
-        else indexExprs(f.name).cast(f.dataType).as(f.name)
-      }.toIndexedSeq: _*)
+    val physical = ReadOp.physicalSchema(st.schema, st.recordFields)
+    val raw = spark.read.parquet(files: _*).select(
+      col("value"),
+      toGivenPath(col("_metadata.file_path")).as("__file"),
+      col("_metadata.row_index").cast(IntegerType).as("__row"))
+    val indexDF = raw.select(physical.fields.map { f =>
+      if (f.name == field)
+        struct(col("__file").as("_FILE"), col("__row").as("_ROW_ID")).as(field)
+      else indexExprs(f.name).cast(f.dataType).as(f.name)
+    }.toIndexedSeq: _*)
 
-      val result = AppendOp.writeFilesWithMeta(spark, st, indexDF)
+    // written and harvested once, like loadParquet's patch, under the
+    // freshest layout: a conflict retry re-commits it, and a rebucket in
+    // between fails it (its layout epoch is stale)
+    st.reload()
+    val result = AppendOp.writeFilesWithMeta(spark, st, indexDF)
+    val patch =
       if (result.files.isEmpty) None
       else {
         val fid = FieldIds.fieldId(st.schema(field))
-        val recordMetas = RecordIO.harvestRecordFooters(
-          spark, st, files.map(_ -> fid))
-        Patch.merge(
-          Seq(result.patch) ++ RecordIO.recordManifestPatch(spark, st, recordMetas))
+        val recordMetas = RecordIO.harvestRecordFooters(spark, st, files.map(_ -> fid))
+        Patch.merge(Seq(result.patch) ++ RecordIO.recordManifestPatch(spark, st, recordMetas))
       }
-    }
+    st.commitTransaction()(_ => patch)
   }
 }

@@ -219,9 +219,10 @@ object ManifestIO {
   }
 
   /** The Patch that adds `metas` as new files: one index manifest, its
-    * manifest-list summary, the stats delta and an ADD changelog entry
-    * per file (every row of a new file is an ADD, append.py:240-241).
-    * An empty Patch for no files. */
+    * manifest-list summary, the stats delta, an ADD changelog entry per
+    * file (every row of a new file is an ADD, append.py:240-241) and the
+    * bucket layout epoch they were written under (see
+    * [[graft.format.Patch.layoutEpoch]]). An empty Patch for no files. */
   def newFilesPatch(spark: SparkSession, storage: Storage, metas: Seq[IndexFileMeta]): Patch =
     if (metas.isEmpty) Patch()
     else {
@@ -234,7 +235,8 @@ object ManifestIO {
           indexUncompressedBytes = metas.map(_.uncompressedBytes).sum),
         changeLog = Some(ChangeLog(addedRows =
           metas.map(m => RowBitmap(m.file, allRows = true, numRows = m.numRows)).toList)),
-        manifestSummaries = Map(manifest -> summarize(storage, metas)))
+        manifestSummaries = Map(manifest -> summarize(storage, metas)),
+        layoutEpoch = Some(storage.metadata.currentBucketLayoutId))
     }
 
   private def statsValues(s: Statistics[_]): (Any, Any) = s match {

@@ -90,39 +90,15 @@ object RebucketOp {
     val snap = storage.snapshotOrFail(pinned)
     val manifests = snap.manifestFiles.indexManifestFiles
 
-    // full physical rewrite at the pinned snapshot: opaque record
-    // addresses, delete vectors folded (the masked scan keeps live rows
-    // only; the fold compensates the stats the carryover double-counts)
-    val files = ReadOp.plan(spark, storage, pinned, None).files.toSet
-    val (written, co, dvRemoved, foldComp) =
-      if (files.isEmpty)
-        (AppendOp.AppendResult(Patch(), Nil),
-          DmlOps.CarryoverResult(Nil, Nil, StorageStatistics(), Map.empty),
-          Nil, StorageStatistics())
-      else {
-        val physical = ReadOp.physicalSchema(storage.schema, storage.recordFields)
-        val rawScan = spark.read.schema(physical)
-          .parquet(files.toSeq.map(storage.absolute): _*)
-        val (scan, removed, comp) = DeleteVectorOps.foldIntoScan(
-          spark, storage, pinned, files, rawScan)
-        val w = AppendOp.writeFilesWithMeta(spark, storage, scan,
-          bucketLayoutOverride = Some((cols, newCounts)))
-        (w, DmlOps.manifestCarryover(spark, storage, pinned, files), removed, comp)
-      }
-    require(co.carryoverManifests.isEmpty,
+    // full rewrite at the pinned snapshot under the new layout
+    val files = ReadOp.plan(spark, storage, pinned, None).files
+    val (patch, written) = RewriteOp.replaceFiles(spark, storage, pinned, files) { scan =>
+      val p = AppendOp.writeFilesWithMeta(spark, storage, scan,
+        bucketLayoutOverride = Some((cols, newCounts))).patch
+      (p, p.statsDelta.numRows)
+    }
+    require(patch.addedIndexManifests == written.addedIndexManifests,
       "rebucket rewrote every file; no carryover rows can remain")
-    val outRows = written.patch.statsDelta.numRows
-    require(outRows == -co.removedStats.numRows - foldComp.numRows,
-      s"rebucket row-count drift: wrote $outRows live rows, removed " +
-        s"${-co.removedStats.numRows} physical minus ${foldComp.numRows} folded dead")
-
-    val patch = Patch(
-      addedIndexManifests = written.patch.addedIndexManifests,
-      removedIndexManifests = co.removedManifests,
-      statsDelta = written.patch.statsDelta + co.removedStats + foldComp,
-      changeLog = None, // physically-reorganizing, logically idempotent
-      manifestSummaries = written.patch.manifestSummaries,
-      dvRemoved = dvRemoved)
     require(patch.removedIndexManifests.toSet == manifests.toSet,
       "rebucket must replace the snapshot's whole manifest list")
 
@@ -159,6 +135,7 @@ object RebucketOp {
                 storage.schema(c).dataType.catalogString)))),
         newLayoutEpoch = true)
     }
-    RebucketResult(files.size, written.files.size, outRows, newCounts)
+    RebucketResult(files.size, RewriteOp.fileCount(written),
+      written.statsDelta.numRows, newCounts)
   }
 }

@@ -104,15 +104,22 @@ object RecordIO {
     }(Encoders.row(physical))
 
     // writeClustered: re-arranging the INDEX rows after the payload
-    // write is safe — addresses are data and ride the shuffle
-    val result = AppendOp.writeFilesWithMeta(spark, storage, indexDF,
-      writeClustered = true)
+    // write is safe — addresses are data and ride the shuffle. The range
+    // shuffle samples its input in a job of its own, which would run the
+    // payload-writing mapPartitions a second time and orphan a second
+    // set of record files: on clustered layouts the (small) index rows
+    // are cached by the first evaluation instead.
+    val clustered = storage.metadata.writeClusterBy.nonEmpty && storage.metadata.numBuckets == 0
+    if (clustered) indexDF.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val result =
+      try AppendOp.writeFilesWithMeta(spark, storage, indexDF, writeClustered = true)
+      finally if (clustered) indexDF.unpersist(blocking = false)
     if (result.files.isEmpty) return result.patch
 
     // record manifest: distinct record files referenced by the new index
     // files, footer-harvested (record.py:27-32)
     val newIndexAbs = result.files.map(f => storage.absolute(f.file))
-    val idxDF = spark.read.parquet(newIndexAbs: _*)
+    val idxDF = spark.read.schema(physical).parquet(newIndexAbs: _*)
     val toHarvest = recordFields.flatMap { rf =>
       val fid = FieldIds.fieldId(schema(rf))
       idxDF.select(col(s"$rf._FILE")).na.drop().distinct()

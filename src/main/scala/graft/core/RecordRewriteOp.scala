@@ -120,26 +120,14 @@ object RecordRewriteOp {
     val affectedRel: Set[String] = affectedFull.map(f => relByKey(DmlOps.pathKey(f))).toSet
 
     // rewrite the affected index files: payloads stitched back in, then
-    // re-written as fresh record + index files
-    val (appendPatch, dvRemoved, foldComp) =
-      if (affectedRel.isEmpty) (Patch(), Nil, StorageStatistics())
-      else {
-        val affectedDF = spark.read.schema(physical)
-          .parquet(affectedRel.toSeq.map(storage.absolute): _*)
-        // fold vectors of the rewritten index files (live rows only;
-        // the folded entries retire and the stats compensate)
-        val (masked, removed, comp) = DeleteVectorOps.foldIntoScan(
-          spark, storage, snapshotId, affectedRel, affectedDF)
-        (RecordIO.writeWithRecords(spark, storage,
-          RecordIO.stitch(spark, storage, masked, None)), removed, comp)
-      }
-    // all-dead picked files have no referencing index file left (their
-    // rows were CoW-deleted already) — nothing to carry over then
-    val co =
-      if (affectedRel.isEmpty)
-        DmlOps.CarryoverResult(Nil, Nil, StorageStatistics(), Map.empty)
-      else DmlOps.manifestCarryover(spark, storage, snapshotId, affectedRel)
-
+    // re-written as fresh record + index files. All-dead picked files
+    // have no referencing index file left (their rows were CoW-deleted
+    // already): then only the record manifests change.
+    val (rewritten, written) = RewriteOp.replaceFiles(spark, storage, snapshotId,
+        affectedRel.toSeq) { live =>
+      val p = RecordIO.writeWithRecords(spark, storage, RecordIO.stitch(spark, storage, live, None))
+      (p, p.statsDelta.numRows)
+    }
     // record-manifest carryover: every row of an UNPICKED file survives;
     // picked rows are dropped (their bytes leave the statistics)
     val pickedSet = picked.toSet
@@ -152,16 +140,11 @@ object RecordRewriteOp {
         List(rel)
       }
 
-    val patch = Patch(
-      addedIndexManifests = appendPatch.addedIndexManifests ++ co.carryoverManifests,
-      removedIndexManifests = co.removedManifests,
-      addedRecordManifests = appendPatch.addedRecordManifests ++ recCarry,
+    val patch = Patch.merge(Seq(rewritten, Patch(
+      addedRecordManifests = recCarry,
       removedRecordManifests = recMans,
-      statsDelta = appendPatch.statsDelta + co.removedStats + foldComp +
-        StorageStatistics(recordUncompressedBytes = -pickedBytes),
-      manifestSummaries = appendPatch.manifestSummaries ++ co.summaries,
-      dvRemoved = dvRemoved)
+      statsDelta = StorageStatistics(recordUncompressedBytes = -pickedBytes)))).get
     Some((patch, RewriteResult(picked.size, affectedRel.size,
-      appendPatch.statsDelta.numRows)))
+      written.statsDelta.numRows)))
   }
 }

@@ -382,9 +382,7 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
         }
       }
       val updated = toPhysicalDf(applied.drop(tmp.map(_._3): _*))
-      val fusible = storage.recordFields.isEmpty &&
-        storage.metadata.numBuckets == 0 && storage.metadata.writeClusterBy.isEmpty
-      if (fusible)
+      if (DmlOps.fusesAdds(storage))
         // fused: the CoW sweep and the rewritten rows share one write
         // pass (None = nothing matched: no-op, returns the current head
         // — zero matches also means zero rewritten rows)

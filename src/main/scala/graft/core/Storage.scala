@@ -827,6 +827,12 @@ final class Storage(val location: String, val conf: Configuration) {
     *    table state read at pin time (PK dup checks, key matching,
     *    whole-table overwrite) — any head movement invalidates it.
     *
+    * Under every policy, a patch whose new files were written under a
+    * bucket layout epoch a rebucket has since replaced
+    * ([[graft.format.Patch.layoutEpoch]]) is invalid: an op that writes
+    * inside `op` re-runs under the new layout; a patch prepared before
+    * the transaction fails the same way on every attempt.
+    *
     * An invalid patch aborts the attempt and `op` RE-RUNS from the new
     * head, up to `maxRetries` times (data files written by a failed
     * attempt are unreferenced and reaped by [[GcOps.garbageCollect]]);
@@ -917,6 +923,11 @@ final class Storage(val location: String, val conf: Configuration) {
             throw new ConcurrentCommitException(
               s"abort commit: branch $branch moved from snapshot $pinned to $head " +
                 s"and the $policy patch no longer applies")
+          patch.flatMap(_.layoutEpoch).filter(_ != meta.currentBucketLayoutId).foreach { e =>
+            throw new ConcurrentCommitException(
+              s"abort commit: files written under bucket layout epoch $e, but a " +
+                s"rebucket moved the table to epoch ${meta.currentBucketLayoutId}")
+          }
           committedId = patch.map(commit(_, branch)).getOrElse(head)
         }
         return mkResult(committedId)

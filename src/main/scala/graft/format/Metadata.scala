@@ -342,7 +342,13 @@ final case class Patch(
     /** Multi-source-view refresh commits: per-side watermark advances
       * (see [[StorageMetadata.mvSourceSnapshotIds]]); merged into the
       * metadata map at commit. */
-    sourceSnapshotIds: Map[String, Long] = Map.empty)
+    sourceSnapshotIds: Map[String, Long] = Map.empty,
+    /** New-files patches: the table's bucket layout epoch
+      * ([[StorageMetadata.currentBucketLayoutId]]) the files were
+      * written under. A transaction refuses the patch once a rebucket
+      * has moved the epoch: the files carry the old layout's bucket
+      * ids, which bucket pruning would trust under the new one. */
+    layoutEpoch: Option[Long] = None)
 
 object Patch {
   /** merge_patches analog (ops/utils.py:94-118): manifest lists concat,
@@ -368,7 +374,9 @@ object Patch {
         a.dvAdded ++ b.dvAdded,
         a.dvObserved ++ b.dvObserved,
         a.dvRemoved ++ b.dvRemoved,
-        a.sourceSnapshotIds ++ b.sourceSnapshotIds)
+        a.sourceSnapshotIds ++ b.sourceSnapshotIds,
+        // the oldest epoch: a stale part makes the whole patch stale
+        (a.layoutEpoch ++ b.layoutEpoch).minOption)
     })
   }
 }

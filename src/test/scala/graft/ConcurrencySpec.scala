@@ -208,4 +208,47 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(new String(java.nio.file.Files.readAllBytes(lock)) == "live-writer-token")
     java.nio.file.Files.delete(lock)
   }
+
+  /** 1000 rows of (id, v) in a table bucketed by id into 4 buckets. */
+  private def bucketedIds(prefix: String): (String, SpaceDataset) = {
+    val loc = Files.createTempDirectory(prefix).toString + "/tbl"
+    val rows = spark.range(0, 1000).select(col("id"), (col("id") * 2).as("v"))
+    val ds = SpaceDataset.create(spark, loc, rows.schema, Seq("id"),
+      bucketColumns = Seq("id"), numBuckets = 4)
+    ds.append(rows)
+    (loc, ds)
+  }
+
+  test("an append racing a rebucket is rewritten under the new layout") {
+    // the source runs a rebucket on a second handle before it returns
+    // its rows: the first write hashes into 4 buckets, commit time is in
+    // the 8-bucket epoch. Committed as is, bucket pruning would look for
+    // the appended keys in the wrong files.
+    val (loc, ds) = bucketedIds("graft_rebucket_race_")
+    val rebucketed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    ds.appendFrom(Seq(() => {
+      if (rebucketed.compareAndSet(false, true))
+        SpaceDataset.load(spark, loc).rebucket(Seq(8))
+      spark.range(1000, 1100).select(col("id"), (col("id") * 2).as("v"))
+    }))
+    assert(ds.storage.metadata.numBuckets == 8)
+    assert(ds.readAll().count() == 1100)
+    val empty = (1000L until 1100L).count(k =>
+      ds.read(filter = Some(col("id") === k)).count() != 1)
+    assert(empty == 0, s"$empty of 100 point lookups of appended keys missed their row")
+  }
+
+  test("a new-files patch prepared before a rebucket fails to commit") {
+    val (loc, ds) = bucketedIds("graft_rebucket_stale_")
+    val patch = RecordIO.writeWithRecords(spark, ds.storage,
+      spark.range(1000, 1010).select(col("id"), (col("id") * 2).as("v")))
+    SpaceDataset.load(spark, loc).rebucket(Seq(8))
+    val head = { ds.storage.reload(); ds.storage.metadata.currentSnapshotId }
+    intercept[ConcurrentCommitException] {
+      ds.storage.commitTransaction(policy = ConflictPolicy.Append)(_ => Some(patch))
+    }
+    ds.storage.reload()
+    assert(ds.storage.metadata.currentSnapshotId == head)
+    assert(ds.readAll().count() == 1000)
+  }
 }

@@ -18,6 +18,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
+import graft.format.StoragePaths
 
 /** Hybrid columnar/row layout: payloads in record parquet, addresses in
   * index parquet, stitched on read (SURVEY.md §1.2). */
@@ -393,14 +394,38 @@ class RecordFieldSpec extends AnyFunSuite {
     val ds = SpaceDataset.create(spark, freshLoc(), docs.schema, Seq("doc_id"), Seq("text"))
     val (_, append) = JobCount.of(spark)(ds.append(docs))
     // the append's own jobs: the write, then the address scan that
-    // finds the record files its index rows point at
+    // finds the record files its index rows point at (under the known
+    // physical schema: no schema-inference job)
     val index = ds.plan().files.map(ds.storage.absolute)
-    val (recordFiles, scan) = JobCount.of(spark)(spark.read.parquet(index: _*)
+    val physical = ReadOp.physicalSchema(ds.storage.schema, ds.storage.recordFields)
+    val (recordFiles, scan) = JobCount.of(spark)(spark.read.schema(physical).parquet(index: _*)
       .select(col("text._FILE")).na.drop().distinct().collect().map(_.getString(0)))
     assert(append.jobs == 1 + scan.jobs, s"append ran $append, its address scan $scan")
+    assert(append.jobs == 3, s"append ran $append")
     assert(recordFiles.nonEmpty &&
       ds.recordManifest().collect().map(_.getString(0)).toSet == recordFiles.toSet)
     assert(ds.readAll().select("text").collect().length == docs.count())
+  }
+
+  test("a write-clustered record-field append writes each payload once") {
+    // the range shuffle of a clustered write samples its input in a job
+    // of its own: the payload write must not run a second time there
+    val rows = spark.range(0, 10000).select(col("id"), (col("id") % 97).as("c"),
+      encode(concat(lit("payload-"), col("id").cast("string")), "UTF-8").as("body"))
+    val ds = SpaceDataset.create(spark, freshLoc(), rows.schema, Seq("id"), Seq("body"),
+      writeClusterBy = Seq("c"))
+    ds.append(rows.repartition(4))
+    val onDisk = Files.list(java.nio.file.Paths.get(ds.storage.absolute(StoragePaths.RecordDataDir)))
+      .iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
+      .map(n => s"${StoragePaths.RecordDataDir}/$n").toSet
+    val inManifest = ds.recordManifest().collect().map(_.getString(0)).toSet
+    assert(onDisk == inManifest,
+      s"${onDisk.size} record files on disk, ${inManifest.size} in the record manifest")
+    val back = ds.readAll().select(col("id"), decode(col("body"), "UTF-8").as("body"))
+    assert(back.count() == 10000)
+    assert(back.filter(col("body") =!= concat(lit("payload-"), col("id").cast("string")))
+      .isEmpty)
   }
 
   test("upsert replaces record payloads") {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{Tables, TestSpark}
 import graft.format.{FieldIds, StorageStatistics}
 
-/** Manifest carryover ([[DmlOps.manifestCarryover]]) must re-emit exactly
+/** Manifest carryover ([[RewriteOp.manifestCarryover]]) must re-emit exactly
   * the untouched rows of the affected manifests, checked against a plain
   * Spark read of the input manifests. In graft.core for access to the
   * private op. */
@@ -38,7 +38,7 @@ class CarryoverSpec extends AnyFunSuite {
     val expected = input.filter(!isAffected)
     val gone = input.filter(isAffected).collect()
 
-    val co = DmlOps.manifestCarryover(spark, ds.storage, snap, affected)
+    val co = RewriteOp.manifestCarryover(spark, ds.storage, snap, affected)
     assert(co.carryoverManifests.size == 1)
     assert(readManifests(co.carryoverManifests).collect().map(_.toString).sorted.toSeq ==
       expected.collect().map(_.toString).sorted.toSeq,

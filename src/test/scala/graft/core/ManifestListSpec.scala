@@ -275,7 +275,7 @@ class ManifestListSpec extends AnyFunSuite {
     assert(p.files.nonEmpty && planJobs.jobs == 0, s"plan ran $planJobs")
     val affected = ds.plan().files.take(2).toSet
     val (co, coJobs) = JobCount.of(spark)(
-      DmlOps.manifestCarryover(spark, ds.storage, sid, affected))
+      RewriteOp.manifestCarryover(spark, ds.storage, sid, affected))
     assert(co.affectedFileRows.keySet == affected)
     assert(coJobs.jobs == 0, s"carryover ran $coJobs")
     // sweeping more than 64 unreachable files: the deletes run on the
