@@ -15,7 +15,7 @@ import graft.format._
   * the two standard maintenance ops (Iceberg-style semantics):
   *
   *  - [[expireSnapshots]] removes old snapshot ENTRIES from metadata
-  *    (a metadata-only edit under the commit lock);
+  *    (a metadata-only edit through [[Storage.mutate]]);
   *  - [[garbageCollect]] deletes files under the table root that no
   *    LIVE snapshot reaches (manifests, data files, change logs, stale
   *    metadata jsons), guarded by a minimum file age so in-flight
@@ -56,9 +56,7 @@ object GcOps {
   def expireSnapshots(
       storage: Storage,
       olderThanMs: Long,
-      keepLast: Int = 1): Seq[Long] = storage.withCommitLock {
-    storage.reload()
-    val meta = storage.metadata
+      keepLast: Int = 1): Seq[Long] = storage.mutate { meta =>
     val cutoff = System.currentTimeMillis() - olderThanMs
     val protectedIds: Set[Long] =
       meta.refs.values.map(_.snapshotId).toSet + meta.currentSnapshotId
@@ -68,7 +66,8 @@ object GcOps {
       .filter(s => s.createTimeMs < cutoff &&
         !protectedIds.contains(s.snapshotId) && !recent.contains(s.snapshotId))
       .map(_.snapshotId)
-    if (expired.nonEmpty) {
+    if (expired.isEmpty) (meta, Nil)
+    else {
       val expiredSet = expired.toSet
       // re-parent survivors whose parent chain is cut so orderedSnapshotIds
       // over the LIVE range keeps working: skip over expired ancestors
@@ -83,14 +82,12 @@ object GcOps {
       // snapshot references (their files are GC candidates now)
       val liveManifests = remaining.values.flatMap(
         _.manifestFiles.indexManifestFiles).toSet
-      storage.persistMetadata(meta.copy(
+      (meta.copy(
         snapshots = remaining,
         manifestSummaries = meta.manifestSummaries.filter {
           case (m, _) => liveManifests.contains(m)
-        },
-        lastUpdateTimeMs = System.currentTimeMillis()))
+        }), expired.sorted)
     }
-    expired.sorted
   }
 
   /** Delete unreachable files under the table root older than

@@ -42,12 +42,13 @@ object ParquetLoader {
       require(ext.dataType == f.dataType,
         s"external field ${f.name} has type ${ext.dataType}, table expects ${f.dataType}")
     }
-    // harvested and written once: the transaction closure re-runs on
-    // every conflict retry and only hands back the prepared Patch
+    // harvested and written once, before the transaction: the patch
+    // does not depend on the pinned head, so it commits with Append
     val metas = ManifestIO.harvestLanded(ds.storage, conf,
       unique.map(f => new Path(f).toString -> None)).filter(_.numRows > 0)
     val patch = ManifestIO.newFilesPatch(spark, ds.storage, metas)
-    ds.storage.commitTransaction()(_ => if (metas.isEmpty) None else Some(patch))
+    ds.storage.commitTransaction(policy = ConflictPolicy.Append)(_ =>
+      if (metas.isEmpty) None else Some(patch))
   }
 }
 
@@ -110,8 +111,8 @@ object RecordLoader {
     }.toIndexedSeq: _*)
 
     // written and harvested once, like loadParquet's patch, under the
-    // freshest layout: a conflict retry re-commits it, and a rebucket in
-    // between fails it (its layout epoch is stale)
+    // freshest layout: it commits with Append, and a rebucket in between
+    // fails it (its layout epoch is stale)
     st.reload()
     val result = AppendOp.writeFilesWithMeta(spark, st, indexDF)
     val patch =
@@ -121,6 +122,6 @@ object RecordLoader {
         val recordMetas = RecordIO.harvestRecordFooters(spark, st, files.map(_ -> fid))
         Patch.merge(Seq(result.patch) ++ RecordIO.recordManifestPatch(spark, st, recordMetas))
       }
-    st.commitTransaction()(_ => patch)
+    st.commitTransaction(policy = ConflictPolicy.Append)(_ => patch)
   }
 }

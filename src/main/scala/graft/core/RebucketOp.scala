@@ -26,10 +26,13 @@ import graft.format._
   *    the old counts, so bucket pruning and SPJ reporting disengage
   *    there (stats/bloom pruning still apply) instead of claiming a
   *    layout those files don't have.
-  *  - Concurrency: Strict-shaped — any head movement between pin and
-  *    commit aborts ([[ConcurrentCommitException]]); a layout change
-  *    cannot merge with concurrent writes hashed under the old counts.
-  *    The caller retries; staged files of a failed attempt are GC'd.
+  *  - Concurrency: a Strict transaction with no retry — any head
+  *    movement between pin and commit aborts
+  *    ([[ConcurrentCommitException]]); a layout change cannot merge with
+  *    concurrent writes hashed under the old counts. The caller retries;
+  *    staged files of a failed attempt are GC'd. The layout switch is
+  *    data on the patch ([[graft.format.Patch.bucketLayout]]), applied
+  *    by the snapshot commit itself.
   */
 object RebucketOp {
 
@@ -84,58 +87,26 @@ object RebucketOp {
     require(branch == SnapshotRef.MainBranch,
       s"rebucket: layout evolution runs on '${SnapshotRef.MainBranch}' only " +
         s"(got branch '$branch') — bucket layout metadata is table-wide")
-    storage.reload()
-
-    val pinned = storage.branchHead(branch)
-    val snap = storage.snapshotOrFail(pinned)
-    val manifests = snap.manifestFiles.indexManifestFiles
-
-    // full rewrite at the pinned snapshot under the new layout
-    val files = ReadOp.plan(spark, storage, pinned, None).files
-    val (patch, written) = RewriteOp.replaceFiles(spark, storage, pinned, files) { scan =>
-      val p = AppendOp.writeFilesWithMeta(spark, storage, scan,
-        bucketLayoutOverride = Some((cols, newCounts))).patch
-      (p, p.statsDelta.numRows)
+    // Strict: the rewrite hashes against the pinned snapshot, so ANY
+    // concurrent commit (even an append — its files carry old-layout
+    // bucket ids) invalidates the layout switch; no retry, the caller
+    // re-runs rebucket
+    storage.transaction(branch, ConflictPolicy.Strict, maxRetries = 0) { pinned =>
+      // full rewrite at the pinned snapshot under the new layout
+      val files = ReadOp.plan(spark, storage, pinned, None).files
+      val (patch, written) = RewriteOp.replaceFiles(spark, storage, pinned, files) { scan =>
+        val p = AppendOp.writeFilesWithMeta(spark, storage, scan,
+          bucketLayoutOverride = Some((cols, newCounts))).patch
+        (p, p.statsDelta.numRows)
+      }
+      require(patch.addedIndexManifests == written.addedIndexManifests,
+        "rebucket rewrote every file; no carryover rows can remain")
+      require(patch.removedIndexManifests.toSet ==
+          storage.snapshotOrFail(pinned).manifestFiles.indexManifestFiles.toSet,
+        "rebucket must replace the snapshot's whole manifest list")
+      (Some(patch.copy(bucketLayout = Some((cols, newCounts)))),
+        RebucketResult(files.size, RewriteOp.fileCount(written),
+          written.statsDelta.numRows, newCounts))
     }
-    require(patch.addedIndexManifests == written.addedIndexManifests,
-      "rebucket rewrote every file; no carryover rows can remain")
-    require(patch.removedIndexManifests.toSet == manifests.toSet,
-      "rebucket must replace the snapshot's whole manifest list")
-
-    // Strict under the lock: the rewrite hashed against the pinned
-    // snapshot; ANY concurrent commit (even an append — its files carry
-    // old-layout bucket ids) invalidates the layout switch
-    var newId = pinned
-    storage.withCommitLock {
-      storage.reload()
-      val head = storage.branchHead(branch)
-      if (head != pinned)
-        throw new ConcurrentCommitException(
-          s"rebucket aborted: branch $branch moved from snapshot $pinned to " +
-            s"$head during the rewrite; re-run rebucket")
-      newId = storage.commit(patch, branch, m => m.copy(
-        bucketColumns = cols.toList,
-        bucketCounts = newCounts.toList,
-        numBuckets = product.toInt,
-        bucketLayoutSince = m.maxSnapshotId,
-        // the new layout EPOCH: the snapshot itself is stamped with
-        // this id (newLayoutEpoch below), and only its descendants
-        // inherit it — branch-lineage-safe where the raw watermark
-        // alone is not
-        currentBucketLayoutId = m.maxSnapshotId,
-        // retire the outgoing layout into history (if bucketed): pure
-        // old-epoch snapshots keep EXACT pruning/SPJ under their own
-        // layout; column types pinned so a later widen of a re-keyed-
-        // away column disengages instead of probing wrong hashes
-        bucketLayoutHistory =
-          if (m.numBuckets == 0) m.bucketLayoutHistory
-          else m.bucketLayoutHistory + (m.currentBucketLayoutId.toString ->
-            BucketLayoutSpec(m.bucketColumns, m.bucketCounts, m.numBuckets,
-              m.bucketColumns.map(c =>
-                storage.schema(c).dataType.catalogString)))),
-        newLayoutEpoch = true)
-    }
-    RebucketResult(files.size, RewriteOp.fileCount(written),
-      written.statsDelta.numRows, newCounts)
   }
 }

@@ -10,6 +10,12 @@ import graft.format._
 
 class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
 
+/** The commit lock stayed held by a live writer past the acquisition
+  * timeout. A [[ConcurrentCommitException]], so existing handlers still
+  * match, but a transaction does not retry it: a retry would re-run the
+  * whole op only to wait out the same lock again. */
+class CommitLockTimeoutException(msg: String) extends ConcurrentCommitException(msg)
+
 /** Thrown by [[Storage.orderedSnapshotIds]] when the CDC walk is
   * impossible because the START snapshot (an MV's refresh watermark) has
   * been EXPIRED out of metadata — the one condition a consumer may
@@ -167,11 +173,21 @@ final class Storage(val location: String, val conf: Configuration) {
     try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
-  /** Write-temp-then-rename. On local filesystems the rename is a true
-    * POSIX atomic replace (no visibility window); on Hadoop FSes it
-    * degrades to delete-then-rename with the same documented small
-    * window as the reference (fs/arrow.py:46-49). */
-  def writeStringAtomic(rel: String, content: String): Unit = {
+  /** Write a new metadata, change-log or DV file in place and return
+    * `rel`. Each has a fresh UUID name and no reader opens it before the
+    * entry point names it, so it needs no temp-then-rename. */
+  private def writeNew(rel: String, content: String): String = {
+    Storage.createExclusive(fs, new Path(rootPath, rel),
+      content.getBytes(StandardCharsets.UTF_8))
+    rel
+  }
+
+  /** Write-temp-then-rename, for the entry point: the one file that is
+    * replaced. On local filesystems the rename is a true POSIX atomic
+    * replace (no visibility window); on Hadoop FSes it degrades to
+    * delete-then-rename with the same documented small window as the
+    * reference (fs/arrow.py:46-49). */
+  private def writeStringAtomic(rel: String, content: String): Unit = {
     val dst = new Path(rootPath, rel)
     val tmp = new Path(rootPath, rel + ".tmp-" + java.util.UUID.randomUUID())
     val out = fs.create(tmp, true)
@@ -249,17 +265,39 @@ final class Storage(val location: String, val conf: Configuration) {
     }
   }
 
-  // --------------------------------------------------------------- refs
+  // ------------------------------------------------------------- mutate
 
-  private[core] def persistMetadata(newMeta: StorageMetadata): Unit = persist(newMeta)
+  /** The one writer of table metadata: under the commit lock, reload the
+    * current metadata, apply `edit` to it, stamp `lastUpdateTimeMs`,
+    * persist the result (a new metadata file, then the entry point) and
+    * return `edit`'s result. An edit that returns its input unchanged
+    * persists nothing. Snapshot commits, schema evolution, refs,
+    * rollback, snapshot expiry and rebucket are all edits passed here,
+    * and no other code writes metadata, so a mutation from a stale
+    * handle applies to the latest metadata and never overwrites what
+    * was committed since the handle loaded. `edit` runs after the
+    * reload: this handle's accessors (`schema`, `branchHead`, ...) read
+    * the same metadata it receives. */
+  private[core] def mutate[A](edit: StorageMetadata => (StorageMetadata, A)): A =
+    withCommitLock {
+      reload()
+      val (next, result) = edit(meta)
+      if (next ne meta) persist(next.copy(lastUpdateTimeMs = System.currentTimeMillis()))
+      result
+    }
+
+  /** [[mutate]] for an edit with no result. */
+  private def update(edit: StorageMetadata => StorageMetadata): Unit =
+    mutate(m => (edit(m), ()))
 
   private def persist(newMeta: StorageMetadata): Unit = {
-    val newFile = StoragePaths.newMetadataFile()
-    writeStringAtomic(newFile, MetadataJson.write(newMeta))
+    val newFile = writeNew(StoragePaths.newMetadataFile(), MetadataJson.write(newMeta))
     writeStringAtomic(StoragePaths.EntryPointFile, MetadataJson.write(EntryPoint(newFile)))
     meta = newMeta
     metaFilePath = newFile
   }
+
+  // ------------------------------------------------------------- schema
 
   /** Metadata-only schema evolution: append a NULLABLE non-key column.
     * Existing data files are untouched — reads null-fill the column
@@ -271,8 +309,7 @@ final class Storage(val location: String, val conf: Configuration) {
   def addColumn(field: StructField): Unit = {
     require(field.nullable, s"added column ${field.name} must be nullable " +
       "(existing files null-fill it)")
-    withCommitLock {
-      reload()
+    update { m =>
       require(!logicalSchema.fieldNames.contains(field.name),
         s"column ${field.name} already exists")
       val start = nextFieldId
@@ -281,7 +318,7 @@ final class Storage(val location: String, val conf: Configuration) {
       // rename entry: old files hold data under the original name, and
       // name-based parquet reads must never resurrect or alias those
       // bytes into the new field
-      val taken = meta.droppedColumns.contains(field.name) ||
+      val taken = m.droppedColumns.contains(field.name) ||
         schema.fieldNames.contains(field.name)
       // the generated name must dodge live physical AND logical names
       // and every ever-dropped name — a user column literally named
@@ -293,12 +330,11 @@ final class Storage(val location: String, val conf: Configuration) {
           .map(i => s"${field.name}_f$start" + (if (i == 0) "" else s"_$i"))
           .find(c => !schema.fieldNames.contains(c) &&
             !logicalSchema.fieldNames.contains(c) &&
-            !meta.droppedColumns.contains(c)).get
+            !m.droppedColumns.contains(c)).get
       val assigned = FieldIds.assign(StructType(Seq(field.copy(name = physName))), start)
-      persist(meta.copy(schemaJson = StructType(schema.fields ++ assigned.fields).json,
-        renames = if (taken) meta.renames + (physName -> field.name) else meta.renames,
-        maxFieldId = FieldIds.maxAssignedId(assigned) max start,
-        lastUpdateTimeMs = System.currentTimeMillis()))
+      m.copy(schemaJson = StructType(schema.fields ++ assigned.fields).json,
+        renames = if (taken) m.renames + (physName -> field.name) else m.renames,
+        maxFieldId = FieldIds.maxAssignedId(assigned) max start)
     }
   }
 
@@ -316,8 +352,7 @@ final class Storage(val location: String, val conf: Configuration) {
     require(parentPath.nonEmpty, "addNestedColumn requires a parent path")
     require(field.nullable, s"added column ${field.name} must be nullable " +
       "(existing files null-fill it)")
-    withCommitLock {
-      reload()
+    update { m =>
       val start = nextFieldId
       // every step of parentPath is a LOGICAL name (a stale physical
       // name must not silently resolve), mapped to physical level by
@@ -332,7 +367,7 @@ final class Storage(val location: String, val conf: Configuration) {
             val droppedKey = (physWalked :+ field.name).mkString(".")
             // dropped before, or still occupied by a renamed-away
             // member's physical name → generated physical name
-            val taken = meta.droppedColumns.contains(droppedKey) ||
+            val taken = m.droppedColumns.contains(droppedKey) ||
               st.fieldNames.contains(field.name)
             // dodge live physical and logical member names and every
             // ever-dropped dotted key under this struct (same
@@ -343,7 +378,7 @@ final class Storage(val location: String, val conf: Configuration) {
                 .map(i => s"${field.name}_f$start" + (if (i == 0) "" else s"_$i"))
                 .find(c => !st.fieldNames.contains(c) &&
                   !logicalHere.contains(c) &&
-                  !meta.droppedColumns.contains((physWalked :+ c).mkString("."))).get
+                  !m.droppedColumns.contains((physWalked :+ c).mkString("."))).get
             val assigned = FieldIds.assign(
               StructType(Seq(field.copy(name = physLeaf))), start).fields.head
             (StructType(st.fields :+ assigned),
@@ -371,10 +406,9 @@ final class Storage(val location: String, val conf: Configuration) {
       // whole-schema maxAssignedId formula assumes contiguous subtree
       // spans, which nested adds break)
       val addedMax = start + FieldIds.consumedIds(StructType(Seq(field))) - 1
-      persist(meta.copy(schemaJson = newSchema.json,
-        nestedRenames = meta.nestedRenames ++ renameEntry,
-        maxFieldId = addedMax,
-        lastUpdateTimeMs = System.currentTimeMillis()))
+      m.copy(schemaJson = newSchema.json,
+        nestedRenames = m.nestedRenames ++ renameEntry,
+        maxFieldId = addedMax)
     }
   }
 
@@ -409,8 +443,7 @@ final class Storage(val location: String, val conf: Configuration) {
     * physical name in data files never changes; only the boundary map
     * ([[StorageMetadata.nestedRenames]], keyed by full physical path)
     * does. `path` is the member's current LOGICAL dotted path. */
-  def renameNestedColumn(path: Seq[String], to: String): Unit = withCommitLock {
-    reload()
+  def renameNestedColumn(path: Seq[String], to: String): Unit = update { m =>
     val (physPath, parent) = resolveNested(path)
     require(path.last != to, "rename to the same name")
     val parentPhys = physPath.init
@@ -422,11 +455,9 @@ final class Storage(val location: String, val conf: Configuration) {
     require(to == physPath.last || !parent.fieldNames.contains(to),
       s"$to collides with an existing physical member of ${path.init.mkString(".")}")
     val key = physPath.mkString(".")
-    val next =
-      if (to == physPath.last) meta.nestedRenames - key // renamed back
-      else meta.nestedRenames - key + (key -> to)
-    persist(meta.copy(nestedRenames = next,
-      lastUpdateTimeMs = System.currentTimeMillis()))
+    m.copy(nestedRenames =
+      if (to == physPath.last) m.nestedRenames - key // renamed back
+      else m.nestedRenames - key + (key -> to))
   }
 
   /** Metadata-only NESTED DROP: remove a struct member (subtree) from
@@ -436,8 +467,7 @@ final class Storage(val location: String, val conf: Configuration) {
     * path joins [[StorageMetadata.droppedColumns]] so a later re-add of
     * the same name can never resurrect old files' bytes. `path` is the
     * member's current LOGICAL dotted path. */
-  def dropNestedColumn(path: Seq[String]): Unit = withCommitLock {
-    reload()
+  def dropNestedColumn(path: Seq[String]): Unit = update { m =>
     val (physPath, parent) = resolveNested(path)
     require(parent.fields.length > 1,
       s"cannot drop the last member of struct ${path.init.mkString(".")} " +
@@ -451,16 +481,14 @@ final class Storage(val location: String, val conf: Configuration) {
         StructType(st.fields.updated(idx, f.copy(dataType =
           remove(f.dataType.asInstanceOf[StructType], rest))))
     }
-    val highWater = math.max(meta.maxFieldId, FieldIds.maxAssignedId(schema))
-    persist(meta.copy(
+    m.copy(
       schemaJson = remove(schema, physPath).json,
-      statsFields = meta.statsFields.filterNot(s =>
+      statsFields = m.statsFields.filterNot(s =>
         s == key || s.startsWith(key + ".")),
-      nestedRenames = meta.nestedRenames.filterNot { case (p, _) =>
+      nestedRenames = m.nestedRenames.filterNot { case (p, _) =>
         p == key || p.startsWith(key + ".") },
-      maxFieldId = highWater,
-      droppedColumns = (meta.droppedColumns :+ key).distinct,
-      lastUpdateTimeMs = System.currentTimeMillis()))
+      maxFieldId = math.max(m.maxFieldId, FieldIds.maxAssignedId(schema)),
+      droppedColumns = (m.droppedColumns :+ key).distinct)
   }
 
   /** Metadata-only TYPE WIDENING: promote a column (or struct member)
@@ -487,8 +515,7 @@ final class Storage(val location: String, val conf: Configuration) {
     * ([[graft.views.AggregateView]], ADVICE r11).
     *
     * `path` is a LOGICAL dotted path (length 1 = top-level). */
-  def widenColumn(path: Seq[String], newType: DataType): Unit = withCommitLock {
-    reload()
+  def widenColumn(path: Seq[String], newType: DataType): Unit = update { m =>
     require(path.nonEmpty, "widenColumn requires a column path")
     val physPath = physicalPathOf(path).toVector
     physPath.indices.foreach { i =>
@@ -497,9 +524,9 @@ final class Storage(val location: String, val conf: Configuration) {
     }
     if (physPath.lengthCompare(1) == 0) {
       val phys = physPath.head
-      require(!meta.recordFields.contains(phys),
+      require(!m.recordFields.contains(phys),
         s"cannot widen record field ${path.head}")
-      require(!meta.bucketColumns.contains(phys),
+      require(!m.bucketColumns.contains(phys),
         s"cannot widen bucket column ${path.head}: the bucket hash of the " +
           "widened type differs, which would break the bucket layout")
     }
@@ -535,8 +562,7 @@ final class Storage(val location: String, val conf: Configuration) {
               s"$p is not a struct (${other.simpleString})")
           }
       }
-    persist(meta.copy(schemaJson = widen(schema, physPath, Vector.empty).json,
-      lastUpdateTimeMs = System.currentTimeMillis()))
+    m.copy(schemaJson = widen(schema, physPath, Vector.empty).json)
   }
 
   /** First field id not yet handed out: past both the live schema's ids
@@ -549,8 +575,7 @@ final class Storage(val location: String, val conf: Configuration) {
     * [[StorageMetadata.renames]] changes. Pruning is untouched because
     * manifest stats are keyed by FIELD ID, not name. `from` is the
     * current logical name. */
-  def renameColumn(from: String, to: String): Unit = withCommitLock {
-    reload()
+  def renameColumn(from: String, to: String): Unit = update { m =>
     val phys = physicalNameOf(from)
     require(schema.fieldNames.contains(phys), s"column $from not found")
     require(from != to, "rename to the same name")
@@ -560,10 +585,9 @@ final class Storage(val location: String, val conf: Configuration) {
     // name either — appends resolve logical→physical by name
     require(to == phys || !schema.fieldNames.contains(to),
       s"$to collides with an existing physical column name")
-    val next =
-      if (to == phys) meta.renames - phys // renamed back to the original
-      else meta.renames - phys + (phys -> to)
-    persist(meta.copy(renames = next, lastUpdateTimeMs = System.currentTimeMillis()))
+    m.copy(renames =
+      if (to == phys) m.renames - phys // renamed back to the original
+      else m.renames - phys + (phys -> to))
   }
 
   /** Metadata-only DROP COLUMN: the field leaves the schema (reads stop
@@ -571,25 +595,24 @@ final class Storage(val location: String, val conf: Configuration) {
     * id is retired forever via [[StorageMetadata.maxFieldId]], and its
     * stats/rename entries are cleaned up. Primary keys and record fields
     * cannot be dropped. `name` is the current logical name. */
-  def dropColumn(name: String): Unit = withCommitLock {
-    reload()
+  def dropColumn(name: String): Unit = update { m =>
     val phys = physicalNameOf(name)
     require(schema.fieldNames.contains(phys), s"column $name not found")
-    require(!meta.primaryKeys.contains(phys), s"cannot drop primary key $name")
-    require(!meta.recordFields.contains(phys), s"cannot drop record field $name")
-    require(!meta.bucketColumns.contains(phys), s"cannot drop bucket column $name")
+    require(!m.primaryKeys.contains(phys), s"cannot drop primary key $name")
+    require(!m.recordFields.contains(phys), s"cannot drop record field $name")
+    require(!m.bucketColumns.contains(phys), s"cannot drop bucket column $name")
     require(schema.fields.length > 1, "cannot drop the last column")
-    val highWater = math.max(meta.maxFieldId, FieldIds.maxAssignedId(schema))
-    persist(meta.copy(
+    m.copy(
       schemaJson = StructType(schema.fields.filterNot(_.name == phys)).json,
-      statsFields = meta.statsFields.filterNot(s =>
+      statsFields = m.statsFields.filterNot(s =>
         s == phys || s.startsWith(phys + ".")),
-      renames = meta.renames - phys,
-      nestedRenames = meta.nestedRenames.filterNot(_._1.startsWith(phys + ".")),
-      maxFieldId = highWater,
-      droppedColumns = (meta.droppedColumns :+ phys).distinct,
-      lastUpdateTimeMs = System.currentTimeMillis()))
+      renames = m.renames - phys,
+      nestedRenames = m.nestedRenames.filterNot(_._1.startsWith(phys + ".")),
+      maxFieldId = math.max(m.maxFieldId, FieldIds.maxAssignedId(schema)),
+      droppedColumns = (m.droppedColumns :+ phys).distinct)
   }
+
+  // --------------------------------------------------------------- refs
 
   /** Is `ancestor` on `of`'s parent chain (inclusive)? The shared walk
     * behind [[rollback]]'s forward guard and [[fastForward]]'s inverse
@@ -611,19 +634,12 @@ final class Storage(val location: String, val conf: Configuration) {
     * jumping to an arbitrary snapshot would silently splice another
     * branch's lineage into this one's CDC feed. */
   def rollback(snapshotId: Long, branch: String = SnapshotRef.MainBranch): Unit =
-    withCommitLock {
-      reload()
+    update { m =>
       val head = branchHead(branch)
       require(snapshotId != head, s"branch $branch is already at snapshot $snapshotId")
       require(isAncestor(ancestor = snapshotId, of = head),
         s"snapshot $snapshotId is not an ancestor of $branch head $head")
-      val now = System.currentTimeMillis()
-      persist(
-        if (branch == SnapshotRef.MainBranch)
-          meta.copy(currentSnapshotId = snapshotId, lastUpdateTimeMs = now)
-        else meta.copy(
-          refs = meta.refs + (branch -> SnapshotRef(branch, SnapshotRef.Branch, snapshotId)),
-          lastUpdateTimeMs = now))
+      moveHead(m, branch, snapshotId)
     }
 
   /** Fast-forward `branch` to the head of `toBranch` — the publish step
@@ -634,26 +650,26 @@ final class Storage(val location: String, val conf: Configuration) {
     * move only appends already-committed audited snapshots — histories
     * stay linear and the CDC feed never splices an unrelated lineage. */
   def fastForward(branch: String, toBranch: String): Unit =
-    withCommitLock {
-      reload()
+    update { m =>
       val target = branchHead(toBranch)
       val head = branchHead(branch)
       // already at the target head: an idempotent no-op, not an error —
       // an unchanged-audit publish or a retried WAP publish step must
       // succeed silently; require failures are for non-ancestor moves
-      if (target != head) {
+      if (target == head) m
+      else {
         require(isAncestor(ancestor = head, of = target),
           s"$branch head $head is not an ancestor of $toBranch head $target " +
             "— fast-forward would rewrite history; use rollback for that")
-        val now = System.currentTimeMillis()
-        persist(
-          if (branch == SnapshotRef.MainBranch)
-            meta.copy(currentSnapshotId = target, lastUpdateTimeMs = now)
-          else meta.copy(
-            refs = meta.refs + (branch -> SnapshotRef(branch, SnapshotRef.Branch, target)),
-            lastUpdateTimeMs = now))
+        moveHead(m, branch, target)
       }
     }
+
+  /** `m` with `branch`'s head moved to `snapshotId`: the one head move
+    * of commits, [[rollback]] and [[fastForward]]. */
+  private def moveHead(m: StorageMetadata, branch: String, snapshotId: Long): StorageMetadata =
+    if (branch == SnapshotRef.MainBranch) m.copy(currentSnapshotId = snapshotId)
+    else m.copy(refs = m.refs + (branch -> SnapshotRef(branch, SnapshotRef.Branch, snapshotId)))
 
   def addTag(name: String, snapshotId: Option[Long] = None): Unit =
     addRef(name, SnapshotRef.Tag, snapshotId)
@@ -661,29 +677,19 @@ final class Storage(val location: String, val conf: Configuration) {
   def addBranch(name: String, snapshotId: Option[Long] = None): Unit =
     addRef(name, SnapshotRef.Branch, snapshotId)
 
-  // Ref mutations take the commit lock AND reload first, like every
-  // other metadata mutator: persist() from a stale in-memory meta would
-  // overwrite (and permanently orphan) snapshots committed concurrently
-  // by another process between this handle's load and the ref edit.
   private def addRef(name: String, refType: String, snapshotId: Option[Long]): Unit =
-    withCommitLock {
-      reload()
+    update { m =>
       require(name != SnapshotRef.MainBranch, s"ref name $name is reserved")
-      require(!meta.refs.contains(name), s"ref $name already exists")
-      val id = snapshotId.getOrElse(meta.currentSnapshotId)
+      require(!m.refs.contains(name), s"ref $name already exists")
+      val id = snapshotId.getOrElse(m.currentSnapshotId)
       snapshotOrFail(id)
-      persist(meta.copy(
-        refs = meta.refs + (name -> SnapshotRef(name, refType, id)),
-        lastUpdateTimeMs = System.currentTimeMillis()))
+      m.copy(refs = m.refs + (name -> SnapshotRef(name, refType, id)))
     }
 
-  def removeRef(name: String): Unit =
-    withCommitLock {
-      reload()
-      require(meta.refs.contains(name), s"ref $name not found")
-      persist(meta.copy(refs = meta.refs - name,
-        lastUpdateTimeMs = System.currentTimeMillis()))
-    }
+  def removeRef(name: String): Unit = update { m =>
+    require(m.refs.contains(name), s"ref $name not found")
+    m.copy(refs = m.refs - name)
+  }
 
   /** Remove a tag; fails if `name` is missing or is a branch
     * (storage.py:287-289, 298-307). */
@@ -697,41 +703,37 @@ final class Storage(val location: String, val conf: Configuration) {
     removeTypedRef(name, SnapshotRef.Branch)
   }
 
-  private def removeTypedRef(name: String, refType: String): Unit =
-    withCommitLock {
-      reload()
-      val ref = meta.refs.getOrElse(name,
-        throw new IllegalArgumentException(s"ref $name not found"))
-      require(ref.refType == refType,
-        s"ref $name is a ${ref.refType}, not a $refType")
-      persist(meta.copy(refs = meta.refs - name,
-        lastUpdateTimeMs = System.currentTimeMillis()))
-    }
+  private def removeTypedRef(name: String, refType: String): Unit = update { m =>
+    val ref = m.refs.getOrElse(name,
+      throw new IllegalArgumentException(s"ref $name not found"))
+    require(ref.refType == refType, s"ref $name is a ${ref.refType}, not a $refType")
+    m.copy(refs = m.refs - name)
+  }
 
   // ------------------------------------------------------------- commit
 
-  /** Apply a patch as a new snapshot on `branch` (storage.py:315-367).
-    * Returns the new snapshot id. Not concurrency-checked by itself —
-    * use [[transaction]] for the optimistic check.
-    *
-    * `metaTransform` (identity by default) edits the metadata ATOMICALLY
-    * with the snapshot — the hook layout-changing rewrites (rebucket)
-    * use so data and the layout claim can never be observed apart. It
-    * runs on the metadata that already contains the new snapshot (its
-    * id = `maxSnapshotId`). */
-  def commit(
-      patch: Patch,
-      branch: String = SnapshotRef.MainBranch,
-      metaTransform: StorageMetadata => StorageMetadata = identity,
-      /** True only for the rebucket commit: its snapshot starts a NEW
-        * layout epoch (stamped with its own id). Every other commit
-        * inherits the parent snapshot's epoch, so layout claims follow
-        * COMMIT LINEAGE, not raw id order (see
-        * [[graft.format.Snapshot.bucketLayoutId]]). */
-      newLayoutEpoch: Boolean = false): Long = {
+  /** Apply a patch as a new snapshot on `branch` (storage.py:315-367),
+    * on top of the latest metadata. Returns the new snapshot id. No
+    * conflict check: use [[transaction]] for the optimistic one. */
+  def commit(patch: Patch, branch: String = SnapshotRef.MainBranch): Long =
+    mutate(applyPatch(_, patch, branch))
+
+  /** The snapshot-commit edit: the new snapshot's manifests, change-log
+    * and DV files, the exactly-once tag, the layout switch of a
+    * rebucket and the head move. Returns the new snapshot id. */
+  private def applyPatch(m: StorageMetadata, patch: Patch, branch: String)
+      : (StorageMetadata, Long) = {
+    // exactly-once writer guard, before any file is written: it runs on
+    // freshly reloaded metadata under the lock, so a duplicate delivery
+    // can NEVER double-commit — the typed exception lets appendOnce
+    // resolve a concurrent redelivery to its documented None result
+    patch.txn.foreach { t =>
+      if (m.txnVersions.getOrElse(t.appId, Long.MinValue) >= t.version)
+        throw new DuplicateTransactionException(t.appId, t.version)
+    }
     val baseId = branchHead(branch)
     val base = snapshotOrFail(baseId)
-    val newId = meta.maxSnapshotId + 1
+    val newId = m.maxSnapshotId + 1
 
     // _patch_manifests (storage.py:513-535): removals must exist exactly once.
     def patched(current: List[String], added: List[String], removed: List[String]): List[String] = {
@@ -743,11 +745,8 @@ final class Storage(val location: String, val conf: Configuration) {
       patched(base.manifestFiles.indexManifestFiles, patch.addedIndexManifests, patch.removedIndexManifests),
       patched(base.manifestFiles.recordManifestFiles, patch.addedRecordManifests, patch.removedRecordManifests))
 
-    val changeLogFile = patch.changeLog.map { cl =>
-      val f = StoragePaths.newChangeLogFile()
-      writeStringAtomic(f, MetadataJson.write(cl))
-      f
-    }
+    val changeLogFile = patch.changeLog.map(cl =>
+      writeNew(StoragePaths.newChangeLogFile(), MetadataJson.write(cl)))
 
     // merge-on-read delete vectors: fold the patch's vector edits into
     // the parent's consolidated set; write a new DV file only when the
@@ -761,45 +760,45 @@ final class Storage(val location: String, val conf: Configuration) {
       else {
         val next = (parentDvs -- patch.dvRemoved) ++ patch.dvAdded
         if (next.isEmpty) None
-        else {
-          val f = StoragePaths.newDeleteVectorFile()
-          writeStringAtomic(f, MetadataJson.write(
-            DeleteVectors(next.toList.sortBy(_._1).map(_._2))))
-          Some(f)
-        }
+        else Some(writeNew(StoragePaths.newDeleteVectorFile(), MetadataJson.write(
+          DeleteVectors(next.toList.sortBy(_._1).map(_._2)))))
       }
 
-    val now = System.currentTimeMillis()
-    val snap = Snapshot(newId, Some(baseId), now, manifests,
+    // a rebucket's snapshot starts a NEW layout epoch (stamped with its
+    // own id); every other commit inherits its parent's, so layout
+    // claims follow COMMIT LINEAGE, not raw id order (see
+    // [[graft.format.Snapshot.bucketLayoutId]])
+    val snap = Snapshot(newId, Some(baseId), System.currentTimeMillis(), manifests,
       base.storageStatistics + patch.statsDelta, changeLogFile, dvFile, patch.txn,
-      bucketLayoutId = if (newLayoutEpoch) newId else base.bucketLayoutId)
-
-    // exactly-once writer guard: runs under the commit lock after a
-    // fresh reload, so a duplicate delivery can NEVER double-commit —
-    // the typed exception lets appendOnce resolve a concurrent
-    // redelivery to its documented None result instead of crashing
-    patch.txn.foreach { t =>
-      if (meta.txnVersions.getOrElse(t.appId, Long.MinValue) >= t.version)
-        throw new DuplicateTransactionException(t.appId, t.version)
-    }
-
-    val withSnap = meta.copy(
-      snapshots = meta.snapshots + (newId.toString -> snap),
+      bucketLayoutId = if (patch.bucketLayout.isDefined) newId else base.bucketLayoutId)
+    val withSnap = m.copy(
+      snapshots = m.snapshots + (newId.toString -> snap),
       maxSnapshotId = newId,
-      manifestSummaries = meta.manifestSummaries ++ patch.manifestSummaries,
-      lastUpdateTimeMs = now,
-      txnVersions = patch.txn.fold(meta.txnVersions)(t =>
-        meta.txnVersions + (t.appId -> t.version)),
-      mvSourceSnapshotId = patch.sourceSnapshotId.orElse(meta.mvSourceSnapshotId),
+      manifestSummaries = m.manifestSummaries ++ patch.manifestSummaries,
+      txnVersions = patch.txn.fold(m.txnVersions)(t =>
+        m.txnVersions + (t.appId -> t.version)),
+      mvSourceSnapshotId = patch.sourceSnapshotId.orElse(m.mvSourceSnapshotId),
       mvSourceSnapshotIds =
-        if (patch.sourceSnapshotIds.isEmpty) meta.mvSourceSnapshotIds
-        else meta.mvSourceSnapshotIds ++ patch.sourceSnapshotIds)
-    val newMeta =
-      if (branch == SnapshotRef.MainBranch) withSnap.copy(currentSnapshotId = newId)
-      else withSnap.copy(refs = withSnap.refs +
-        (branch -> SnapshotRef(branch, SnapshotRef.Branch, newId)))
-    persist(metaTransform(newMeta))
-    newId
+        if (patch.sourceSnapshotIds.isEmpty) m.mvSourceSnapshotIds
+        else m.mvSourceSnapshotIds ++ patch.sourceSnapshotIds)
+    val relaid = patch.bucketLayout.fold(withSnap) { case (cols, counts) =>
+      withSnap.copy(
+        bucketColumns = cols.toList,
+        bucketCounts = counts.toList,
+        numBuckets = counts.product,
+        bucketLayoutSince = newId,
+        currentBucketLayoutId = newId,
+        // retire the outgoing layout into history (if bucketed): pure
+        // old-epoch snapshots keep EXACT pruning/SPJ under their own
+        // layout; column types pinned so a later widen of a re-keyed-
+        // away column disengages instead of probing wrong hashes
+        bucketLayoutHistory =
+          if (m.numBuckets == 0) m.bucketLayoutHistory
+          else m.bucketLayoutHistory + (m.currentBucketLayoutId.toString ->
+            BucketLayoutSpec(m.bucketColumns, m.bucketCounts, m.numBuckets,
+              m.bucketColumns.map(c => schema(c).dataType.catalogString))))
+    }
+    (moveHead(relaid, branch, newId), newId)
   }
 
   /** Optimistic transaction: pin the branch head, run the (distributed,
@@ -827,6 +826,11 @@ final class Storage(val location: String, val conf: Configuration) {
     *    table state read at pin time (PK dup checks, key matching,
     *    whole-table overwrite) — any head movement invalidates it.
     *
+    * A patch built BEFORE the transaction (a zero-copy load, a streaming
+    * commit) does not depend on the pinned head, so it commits with
+    * Append: under Strict a retry would re-pin and commit the same patch
+    * anyway, after a needless abort.
+    *
     * Under every policy, a patch whose new files were written under a
     * bucket layout epoch a rebucket has since replaced
     * ([[graft.format.Patch.layoutEpoch]]) is invalid: an op that writes
@@ -836,18 +840,23 @@ final class Storage(val location: String, val conf: Configuration) {
     * An invalid patch aborts the attempt and `op` RE-RUNS from the new
     * head, up to `maxRetries` times (data files written by a failed
     * attempt are unreferenced and reaped by [[GcOps.garbageCollect]]);
-    * retries exhausted → [[ConcurrentCommitException]]. */
+    * retries exhausted → [[ConcurrentCommitException]]. A commit-lock
+    * timeout is not retried ([[CommitLockTimeoutException]]). */
   def transaction[T](
       branch: String = SnapshotRef.MainBranch,
       policy: ConflictPolicy = ConflictPolicy.Strict,
       maxRetries: Int = 3)(
-      op: Long => (Option[Patch], T)): T =
-    transactionWithCommittedId(branch, policy, maxRetries) { pinned =>
+      op: Long => (Option[Patch], T)): T = {
+    var result: Option[T] = None
+    commitTransaction(branch, policy, maxRetries) { pinned =>
       val (patch, t) = op(pinned)
-      (patch, (_: Long) => t)
+      result = Some(t)
+      patch
     }
+    result.get
+  }
 
-  /** Transaction whose RESULT is the snapshot id the commit actually
+  /** [[transaction]] whose RESULT is the snapshot id the commit actually
     * produced (under the lock), or the branch head at lock time when the
     * op yields no patch (no-op mutation). Callers must use this — never
     * precompute `maxSnapshotId + 1` inside op: under the Append/Rewrite
@@ -857,27 +866,14 @@ final class Storage(val location: String, val conf: Configuration) {
       branch: String = SnapshotRef.MainBranch,
       policy: ConflictPolicy = ConflictPolicy.Strict,
       maxRetries: Int = 3)(
-      op: Long => Option[Patch]): Long =
-    transactionWithCommittedId(branch, policy, maxRetries)(p => (op(p), identity[Long]))
-
-  /** General form: `op(pinnedHead)` returns the patch plus a result
-    * builder that receives the COMMITTED snapshot id (head at lock time
-    * if the patch is None) — the only value of the new id that is correct
-    * under concurrency. */
-  def transactionWithCommittedId[T](
-      branch: String = SnapshotRef.MainBranch,
-      policy: ConflictPolicy = ConflictPolicy.Strict,
-      maxRetries: Int = 3)(
-      op: Long => (Option[Patch], Long => T)): T = {
+      op: Long => Option[Patch]): Long = {
     var attempt = 0
     while (true) {
       reload()
       val pinned = branchHead(branch)
-      val (patch, mkResult) = op(pinned)
+      val patch = op(pinned)
       try {
-        var committedId = pinned
-        withCommitLock {
-          reload()
+        return mutate { m =>
           val head = branchHead(branch)
           val valid = head == pinned || (policy match {
             case ConflictPolicy.Append => true
@@ -923,16 +919,17 @@ final class Storage(val location: String, val conf: Configuration) {
             throw new ConcurrentCommitException(
               s"abort commit: branch $branch moved from snapshot $pinned to $head " +
                 s"and the $policy patch no longer applies")
-          patch.flatMap(_.layoutEpoch).filter(_ != meta.currentBucketLayoutId).foreach { e =>
+          patch.flatMap(_.layoutEpoch).filter(_ != m.currentBucketLayoutId).foreach { e =>
             throw new ConcurrentCommitException(
               s"abort commit: files written under bucket layout epoch $e, but a " +
-                s"rebucket moved the table to epoch ${meta.currentBucketLayoutId}")
+                s"rebucket moved the table to epoch ${m.currentBucketLayoutId}")
           }
-          committedId = patch.map(commit(_, branch)).getOrElse(head)
+          patch.fold((m, head))(applyPatch(m, _, branch))
         }
-        return mkResult(committedId)
       } catch {
-        case _: ConcurrentCommitException if attempt < maxRetries => attempt += 1
+        case e: ConcurrentCommitException
+            if attempt < maxRetries && !e.isInstanceOf[CommitLockTimeoutException] =>
+          attempt += 1
       }
     }
     throw new IllegalStateException("unreachable")
@@ -952,34 +949,21 @@ final class Storage(val location: String, val conf: Configuration) {
       try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8)) finally in.close()
     } catch { case _: java.io.IOException => None }
 
-  /** Exclusive-create lock file carrying an OWNERSHIP TOKEN. Local scheme
-    * uses nio `createFile` (true O_EXCL — Hadoop's LocalFileSystem
-    * `create(overwrite=false)` is check-then-create and NOT atomic);
-    * HDFS-like schemes use create-no-overwrite, atomic at the namenode.
+  /** Exclusive-create ([[Storage.createExclusive]]) lock file carrying
+    * an OWNERSHIP TOKEN; taken only by [[mutate]].
     *
     * Stale locks (crashed writer) are stolen after [[LockStaleMs]] via
     * RENAME — only one concurrent stealer's rename succeeds, so two
     * stealers never both proceed. Release deletes the lock only while it
     * still holds our token: a holder that somehow outlived the stale
     * window cannot delete the stealer's lock out from under it. */
-  private[core] def withCommitLock[A](body: => A): A = {
-    val isLocal = Option(lockPath.toUri.getScheme).forall(_ == "file")
+  private def withCommitLock[A](body: => A): A = {
     val token = java.util.UUID.randomUUID().toString
     val deadline = System.currentTimeMillis() + 30000L
     var acquired = false
     while (!acquired) {
       try {
-        if (isLocal) {
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(lockPath.toUri.getPath),
-            token.getBytes(StandardCharsets.UTF_8),
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-        } else {
-          val out = fs.create(lockPath, false)
-          out.write(token.getBytes(StandardCharsets.UTF_8))
-          out.close()
-        }
+        Storage.createExclusive(fs, lockPath, token.getBytes(StandardCharsets.UTF_8))
         acquired = true
       } catch {
         case _: java.io.IOException => // includes FileAlreadyExistsException
@@ -994,7 +978,7 @@ final class Storage(val location: String, val conf: Configuration) {
             }
           } catch { case _: java.io.IOException => /* lock vanished: retry */ }
           if (System.currentTimeMillis() > deadline)
-            throw new ConcurrentCommitException(s"commit lock timeout at $lockPath")
+            throw new CommitLockTimeoutException(s"commit lock timeout at $lockPath")
           Thread.sleep(20L)
       }
     }
@@ -1199,27 +1183,15 @@ object Storage {
       snapshots = Map("0" -> initial), logicalPlan = logicalPlan,
       logicalPlanSubstrait = logicalPlanSubstrait)
 
+    def createFile(rel: String, content: String): Unit = createExclusive(
+      fs, new Path(root, rel), content.getBytes(StandardCharsets.UTF_8))
     val metaFile = StoragePaths.newMetadataFile()
-    writeTo(fs, root, metaFile, MetadataJson.write(meta))
+    createFile(metaFile, MetadataJson.write(meta))
     // entrypoint birth is EXCLUSIVE: the up-front exists() is
     // check-then-act, so two concurrent creators could both pass it and
-    // the second would silently clobber the first's table. Local scheme
-    // uses nio CREATE_NEW (true O_EXCL — LocalFileSystem's
-    // create(overwrite=false) is itself check-then-create); remote
-    // schemes get create(overwrite=false), atomic at the namenode.
-    val ep = new Path(root, StoragePaths.EntryPointFile)
-    val epBytes = MetadataJson.write(EntryPoint(metaFile)).getBytes(StandardCharsets.UTF_8)
-    try {
-      if (Option(ep.toUri.getScheme).forall(_ == "file"))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(ep.toUri.getPath), epBytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-      else {
-        val out = fs.create(ep, false)
-        try out.write(epBytes) finally out.close()
-      }
-    } catch {
+    // the second would silently clobber the first's table
+    try createFile(StoragePaths.EntryPointFile, MetadataJson.write(EntryPoint(metaFile)))
+    catch {
       // only a genuine exists-collision means "lost the race" — other
       // IOExceptions (transient IO, disk full) must surface as what
       // they are, not be misdiagnosed as an existing table
@@ -1239,8 +1211,18 @@ object Storage {
     root.getFileSystem(conf).exists(new Path(root, StoragePaths.EntryPointFile))
   }
 
-  private def writeTo(fs: FileSystem, root: Path, rel: String, content: String): Unit = {
-    val out = fs.create(new Path(root, rel), true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
+  /** The one file-creation rule of the metadata layer: create `path`
+    * holding `bytes`, failing if it exists. Local scheme uses nio
+    * CREATE_NEW (true O_EXCL — Hadoop LocalFileSystem's
+    * `create(overwrite=false)` is check-then-create and NOT atomic);
+    * remote schemes use create-no-overwrite, atomic at the namenode. */
+  private def createExclusive(fs: FileSystem, path: Path, bytes: Array[Byte]): Unit =
+    if (Option(path.toUri.getScheme).forall(_ == "file"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(path.toUri.getPath), bytes,
+        java.nio.file.StandardOpenOption.CREATE_NEW,
+        java.nio.file.StandardOpenOption.WRITE)
+    else {
+      val out = fs.create(path, false)
+      try out.write(bytes) finally out.close()
+    }
 }

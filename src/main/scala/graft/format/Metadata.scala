@@ -348,7 +348,11 @@ final case class Patch(
       * written under. A transaction refuses the patch once a rebucket
       * has moved the epoch: the files carry the old layout's bucket
       * ids, which bucket pruning would trust under the new one. */
-    layoutEpoch: Option[Long] = None)
+    layoutEpoch: Option[Long] = None,
+    /** Rebucket commits only: the new bucket (columns, per-column
+      * counts). The commit switches the table to it and stamps the new
+      * snapshot as the first of a new layout epoch. */
+    bucketLayout: Option[(Seq[String], Seq[Int])] = None)
 
 object Patch {
   /** merge_patches analog (ops/utils.py:94-118): manifest lists concat,
@@ -376,7 +380,8 @@ object Patch {
         a.dvRemoved ++ b.dvRemoved,
         a.sourceSnapshotIds ++ b.sourceSnapshotIds,
         // the oldest epoch: a stale part makes the whole patch stale
-        (a.layoutEpoch ++ b.layoutEpoch).minOption)
+        (a.layoutEpoch ++ b.layoutEpoch).minOption,
+        a.bucketLayout.orElse(b.bucketLayout))
     })
   }
 }

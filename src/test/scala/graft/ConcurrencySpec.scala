@@ -203,7 +203,10 @@ class ConcurrencySpec extends AnyFunSuite {
     intercept[ConcurrentCommitException] {
       ds.append(orders.withColumn("o_orderkey", col("o_orderkey") + 500000L))
     }
-    assert(System.currentTimeMillis() - t0 >= 29000L, "gave up before the acquisition timeout")
+    val waited = System.currentTimeMillis() - t0
+    assert(waited >= 29000L, "gave up before the acquisition timeout")
+    // one wait, not one per retry: a lock timeout does not re-run the op
+    assert(waited < 60000L, s"a lock timeout was retried: waited $waited ms")
     // the live writer's lock survived the loser's exit
     assert(new String(java.nio.file.Files.readAllBytes(lock)) == "live-writer-token")
     java.nio.file.Files.delete(lock)

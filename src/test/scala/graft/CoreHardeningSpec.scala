@@ -3,12 +3,14 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
+import graft.format.SnapshotRef
 
 /** Regression specs for the round-6 core review findings: stale-handle
-  * ref updates, duplicate-transaction typing, UTF-8 stats merging,
+  * metadata mutations, duplicate-transaction typing, UTF-8 stats merging,
   * overwrite of record-manifest-only snapshots, external-ingest
   * validation, null record payloads, and exclusive table creation. */
 class CoreHardeningSpec extends AnyFunSuite {
@@ -23,23 +25,62 @@ class CoreHardeningSpec extends AnyFunSuite {
     (loc, ds)
   }
 
-  test("addTag from a STALE handle must not orphan concurrently committed snapshots") {
-    val (loc, dsA) = freshTable("graft_hard_ref_")
-    val dsB = SpaceDataset.load(spark, loc) // second process's handle
-    // B commits AFTER A loaded its metadata
-    dsB.append(Tables.read(spark, sfDir, "documents")
-      .select((col("doc_id") + 1000000L).as("doc_id"), col("lang")))
-    val rowsAfterB = dsB.readAll().count()
-    // A's ref edit reloads under the lock — B's snapshot must survive
-    dsA.addTag("v1")
-    val fresh = SpaceDataset.load(spark, loc)
-    assert(fresh.readAll().count() == rowsAfterB,
-      "a stale-handle addTag overwrote a concurrent commit")
-    assert(fresh.storage.metadata.refs.contains("v1"))
+  /** Every metadata mutation, run from a STALE handle: its edit and the
+    * state it must leave. Setup: snapshot 1 holds rows 0..9 and carries
+    * tag t0 and branch b0; the concurrent append is the snapshot after. */
+  private val staleMutations: Seq[(String, Storage => Unit, (Storage, Long) => Boolean)] = Seq(
+    ("addColumn", _.addColumn(StructField("c", StringType, nullable = true)),
+      (st, _) => st.logicalSchema.fieldNames.contains("c")),
+    ("addNestedColumn",
+      _.addNestedColumn(Seq("s"), StructField("c", IntegerType, nullable = true)),
+      (st, _) => st.schema("s").dataType.asInstanceOf[StructType].fieldNames.contains("c")),
+    ("renameColumn", _.renameColumn("v", "w"),
+      (st, _) => st.logicalSchema.fieldNames.toSeq == Seq("id", "w", "s")),
+    ("renameNestedColumn", _.renameNestedColumn(Seq("s", "a"), "z"),
+      (st, _) => st.metadata.nestedRenames == Map("s.a" -> "z")),
+    ("dropColumn", _.dropColumn("v"), (st, _) => st.schema.fieldNames.toSeq == Seq("id", "s")),
+    ("dropNestedColumn", _.dropNestedColumn(Seq("s", "b")),
+      (st, _) => st.metadata.droppedColumns == List("s.b")),
+    ("widenColumn", _.widenColumn(Seq("v"), LongType),
+      (st, _) => st.schema("v").dataType == LongType),
+    ("addTag", _.addTag("v1"), (st, b) => st.versionToSnapshotId("v1") == b),
+    ("addBranch", _.addBranch("dev"), (st, b) => st.branchHead("dev") == b),
+    ("removeTag", _.removeTag("t0"), (st, _) => !st.metadata.refs.contains("t0")),
+    ("removeBranch", _.removeBranch("b0"), (st, _) => !st.metadata.refs.contains("b0")),
+    ("rollback", _.rollback(1L), (st, _) => st.metadata.currentSnapshotId == 1L),
+    ("fastForward", _.fastForward("b0", SnapshotRef.MainBranch),
+      (st, b) => st.branchHead("b0") == b),
+    ("expireSnapshots", GcOps.expireSnapshots(_, olderThanMs = 0L),
+      (st, _) => st.metadata.snapshot(0L).isEmpty),
+    ("commit", _.commit(graft.format.Patch()),
+      (st, b) => st.snapshotOrFail(st.metadata.currentSnapshotId).parentSnapshotId.contains(b)))
+
+  staleMutations.foreach { case (name, mutation, applied) =>
+    test(s"$name from a STALE handle must not orphan concurrently committed snapshots") {
+      val rows = (lo: Long, hi: Long) => spark.range(lo, hi).select(col("id"),
+        col("id").cast("int").as("v"),
+        struct(col("id").cast("int").as("a"), col("id").cast("int").as("b")).as("s"))
+      val loc = Files.createTempDirectory("graft_hard_stale_").toString + "/tbl"
+      val ds = SpaceDataset.create(spark, loc, rows(0, 1).schema, Seq("id"))
+      ds.append(rows(0, 10))
+      ds.addTag("t0")
+      ds.addBranch("b0")
+      val stA = Storage.load(loc) // handle A loads
+      val dsB = SpaceDataset.load(spark, loc) // a second process's handle
+      dsB.append(rows(10, 20)) // B commits AFTER A loaded its metadata
+      val snapB = dsB.storage.metadata.currentSnapshotId
+      val manifestsB = dsB.storage.snapshotOrFail(snapB).manifestFiles
+      mutation(stA) // A mutates from its stale metadata
+      val fresh = SpaceDataset.load(spark, loc)
+      assert(fresh.storage.metadata.snapshot(snapB).map(_.manifestFiles).contains(manifestsB),
+        s"a stale-handle $name overwrote a concurrent commit")
+      assert(fresh.read(version = Some(snapB.toString)).count() == 20)
+      assert(applied(fresh.storage, snapB), s"the stale-handle $name did not apply")
+    }
   }
 
   test("duplicate transaction tags throw typed; appendOnce resolves them to None") {
-    val (_, ds) = freshTable("graft_hard_txn_")
+    val (loc, ds) = freshTable("graft_hard_txn_")
     val more = Tables.read(spark, sfDir, "documents")
       .select((col("doc_id") + 2000000L).as("doc_id"), col("lang"))
     assert(ds.appendOnce(more, "eo", 1L).isDefined)
@@ -53,6 +94,21 @@ class CoreHardeningSpec extends AnyFunSuite {
       }
     }
     assert(e.appId == "eo" && e.version == 1L)
+    // the guard runs before the commit writes any file: a duplicate that
+    // carries a change log and a delete vector leaves no orphan behind
+    def sideFiles = Seq("metadata/changes", "metadata").flatMap(d =>
+      Option(new java.io.File(loc, d).list()).toSeq.flatten
+        .filter(f => f.startsWith("change_") || f.startsWith("dv_")).map(d + "/" + _)).toSet
+    val before = sideFiles
+    val bitmap = graft.format.RowBitmap("data/x.parquet", allRows = true, numRows = 1)
+    intercept[DuplicateTransactionException] {
+      ds.storage.commitTransaction() { _ =>
+        Some(graft.format.Patch(txn = Some(graft.format.TxnTag("eo", 1L)),
+          changeLog = Some(graft.format.ChangeLog(addedRows = List(bitmap))),
+          dvAdded = Map(bitmap.file -> bitmap.copy(allRows = false))))
+      }
+    }
+    assert(sideFiles == before, "a duplicate transaction left change-log or DV files")
   }
 
   test("string stats merge in UTF-8 binary order, not UTF-16 code-unit order") {

@@ -9,7 +9,7 @@ import graft.{JobCount, Tables, TestSpark}
 
 /** The manifest-list level: per-manifest summaries in snapshot metadata
   * prune WHOLE manifests at plan time; file-level stats prune within the
-  * survivors. In graft.core for persistMetadata (legacy-table
+  * survivors. In graft.core for Storage.mutate (legacy-table
   * simulation). */
 class ManifestListSpec extends AnyFunSuite {
   import TestSpark._
@@ -93,7 +93,7 @@ class ManifestListSpec extends AnyFunSuite {
   test("legacy tables without summaries fall back to reading every manifest") {
     val (ds, orders) = quartered("mlistl_")
     val st = ds.storage
-    st.persistMetadata(st.metadata.copy(manifestSummaries = Map.empty)) // simulate pre-summary table
+    st.mutate(m => (m.copy(manifestSummaries = Map.empty), ())) // simulate pre-summary table
     val lo = orders.agg(min(col("o_orderkey"))).collect()(0).getLong(0)
     val p = ds.plan(Some(col("o_orderkey") === lit(lo)))
     assert(p.prunedManifests == 0, "no summaries -> no manifest-level pruning")

@@ -11,7 +11,7 @@ import graft.{Tables, TestSpark}
   * ([[Storage.versionToSnapshotId]] with an ISO-8601 version string /
   * [[Storage.snapshotIdAtTimestamp]]) and the SQL catalog. Snapshot
   * create times are synthesized (no sleeps) by rewriting the metadata —
-  * this file lives in graft.core for [[Storage.persistMetadata]]. */
+  * this file lives in graft.core for [[Storage.mutate]]. */
 class TimestampTravelSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -27,7 +27,7 @@ class TimestampTravelSpec extends AnyFunSuite {
     val shifted = st.metadata.snapshots.map { case (k, s) =>
       k -> s.copy(createTimeMs = 1000L * (s.snapshotId + 1))
     }
-    st.persistMetadata(st.metadata.copy(snapshots = shifted))
+    st.mutate(m => (m.copy(snapshots = shifted), ()))
 
     val atSnap1 = orders.filter(col("o_orderkey") <= 1000L).count()
     val all = orders.count()
