@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -42,17 +40,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(32, "graft-bench")
 
     // warmup: session + codegen + parquet reader paths; also one dedup
     // query so the first timed dedup query doesn't absorb the one-time
@@ -91,19 +79,17 @@ object Bench {
       (results, errors)
     }
 
-    // Per-query MINIMA across repeated sweeps: host IO stalls randomly
-    // spike 1-3 queries per run 3-6×, so a single run's times are not
-    // judgeable — a real regression reproduces in the minimum, a stall
-    // never does. The entrypoint itself runs GRAFT_REPEAT (default 3)
-    // sweeps so the one emitted line natively carries runs_observed ≥ 3
-    // (VERDICT r10's "driver bench self-minima"); each sweep ALSO folds
-    // into a build-keyed history file, so repeated driver invocations
-    // keep accumulating. (Build key = a CONTENT hash of the class files
-    // — see foldHistory — so a recompile with changed code never
-    // inherits stale minima.) A query that FAILED in the LAST sweep
-    // must not surface a healthy-looking historical minimum (the
-    // round-4 trap): errored queries are excluded from the emitted
-    // minima.
+    // Per-query MINIMA across this invocation's repeated sweeps: host
+    // IO stalls randomly spike 1-3 queries per run 3-6×, so a single
+    // run's times are not judgeable — a real regression reproduces in
+    // the minimum, a stall never does. The entrypoint runs GRAFT_REPEAT
+    // (default 3) sweeps so the one emitted line natively carries
+    // runs_observed ≥ 3 (VERDICT r10's "driver bench self-minima"). No
+    // minimum carries over between invocations: a cross-run history
+    // invented speedups on unchanged code and mixed core counts
+    // (VERDICT r17). A query that FAILED in the LAST sweep must not
+    // surface a healthy-looking earlier minimum (the round-4 trap):
+    // errored queries are excluded from the emitted minima.
     val repeat = {
       val raw = sys.env.getOrElse("GRAFT_REPEAT", "3")
       // fail with the env var name on garbage — a bare .toInt threw an
@@ -117,12 +103,12 @@ object Bench {
     }
     var last: (Seq[(String, Double)], scala.collection.mutable.LinkedHashMap[String, String]) = null
     var minTimes = Map.empty[String, Double]
-    var runsObserved = 0
     val sweepProbes = Seq.newBuilder[Double]
     for (i <- 1 to repeat) {
       last = sweep()
-      val (mt, ro) = foldHistory(sfDir, last._1.toMap)
-      minTimes = mt; runsObserved = ro
+      minTimes = last._1.foldLeft(minTimes) { case (m, (k, v)) =>
+        m.updated(k, m.get(k).fold(v)(math.min(_, v)))
+      }
       // a per-sweep probe timestamping each run's IO health — a stall
       // window is attributable to the sweep it contaminated
       val (pMin, _) = hostProbe()
@@ -150,98 +136,8 @@ object Bench {
       s""""after_min_ms":$probeAfterMin,"after_max_ms":$probeAfterMax,""" +
       s""""per_sweep_min_ms":${sweepProbes.result().mkString("[", ",", "]")}}"""
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""min_times":$mins,"runs_observed":$runsObserved,"repeat":$repeat,""" +
+      s""""min_times":$mins,"runs_observed":$repeat,"repeat":$repeat,""" +
       s""""errors":$errs,"load_avg_1m":$load,"host_probe":$probe,"sf":"$sfDir"}""")
     spark.stop()
-  }
-
-  /** Fold this run's times into the per-(build, sf) history and return
-    * (per-query minima across all recorded runs, number of runs). */
-  private def foldHistory(
-      sfDir: String, times: Map[String, Double]): (Map[String, Double], Int) = {
-    import java.nio.file.{Files, Paths, StandardOpenOption}
-    // CONTENT hash of this build's class files (mtimes churn on every
-    // sbt invocation even without source changes; bytes don't) — a
-    // recompile with changed code gets a fresh history, unchanged code
-    // accumulates runs
-    val buildId = {
-      val md = java.security.MessageDigest.getInstance("SHA-1")
-      val loc = new java.io.File(
-        getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-      if (loc.isFile) md.update(Files.readAllBytes(loc.toPath))
-      else {
-        val walk = Files.walk(loc.toPath)
-        try {
-          scala.jdk.CollectionConverters.IteratorHasAsScala(walk.iterator()).asScala
-            .filter(_.toString.endsWith(".class"))
-            .toSeq.sortBy(_.toString)
-            .foreach { p =>
-              md.update(p.toString.getBytes("UTF-8"))
-              md.update(Files.readAllBytes(p))
-            }
-        } finally walk.close()
-      }
-      md.digest().map("%02x".format(_)).mkString.take(16)
-    }
-    // per-user history dir with owner-only perms — a world-shared /tmp
-    // path keyed only by build hash could be poisoned (or symlinked) by
-    // another user on a multi-tenant host
-    val histDir = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_bench_${System.getProperty("user.name", "unknown")}")
-    if (!Files.exists(histDir)) {
-      Files.createDirectories(histDir)
-      scala.util.Try(Files.setPosixFilePermissions(histDir,
-        java.nio.file.attribute.PosixFilePermissions.fromString("rwx------")))
-    }
-    val hist = histDir.resolve(s"b${buildId}_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_") + ".jsonl")
-    val prior: Seq[Map[String, Double]] =
-      if (!Files.exists(hist)) Nil
-      else scala.jdk.CollectionConverters.ListHasAsScala(
-        Files.readAllLines(hist)).asScala.toSeq
-        .filter(_.nonEmpty).flatMap(parseTimesLine)
-        .takeRight(MaxHistoryRuns - 1)
-    val line = times.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // APPEND (atomic for small writes) so a concurrent bench run's line
-    // is never lost to a read-rewrite race. The cap rewrite re-reads the
-    // CURRENT file (keeping any line a concurrent run appended after our
-    // append) and lands via rename — a reader never observes a torn or
-    // truncated file, and two concurrent cap rewrites resolve to one of
-    // the two complete capped snapshots, not an interleaving
-    Files.write(hist, java.util.Arrays.asList(line),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    if (Files.exists(hist) &&
-        Files.readAllLines(hist).size > MaxHistoryRuns * 2) {
-      val kept = scala.jdk.CollectionConverters.ListHasAsScala(
-        Files.readAllLines(hist)).asScala.toSeq
-        .filter(_.nonEmpty).takeRight(MaxHistoryRuns)
-      val tmp = Files.createTempFile(histDir, "hist_", ".tmp")
-      Files.write(tmp, scala.jdk.CollectionConverters.SeqHasAsJava(kept).asJava,
-        StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
-      try Files.move(tmp, hist,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, hist, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    val all = prior :+ times
-    val mins = all.flatMap(_.keys).distinct.map { k =>
-      k -> all.flatMap(_.get(k)).min
-    }.toMap
-    (mins, all.size)
-  }
-
-  /** Retained history lines per (build, sf) key — bounds the file. */
-  private val MaxHistoryRuns = 50
-
-  /** Parse one flat {"name":seconds,...} history line (writer-matched;
-    * a corrupt line is skipped, never fatal to the bench). */
-  private def parseTimesLine(s: String): Option[Map[String, Double]] = {
-    val Entry = "\"([^\"]+)\":([-0-9.Ee]+)".r
-    scala.util.Try {
-      Entry.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }.toOption.filter(_.nonEmpty)
   }
 }

@@ -10,6 +10,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** The local session of the `Bench`, `RunOne` and `Verify` mains:
+    * `local[n]` with `n` = `SPARK_GRAFT_CPUS` (default `defaultCores`)
+    * and as many shuffle partitions, AQE on, UTC session time, the
+    * graft extensions, no UI, WARN logging. */
+  def localSession(defaultCores: Int, appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores.toString)
+    val spark = SparkSession.builder()
+      .appName(appName)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.queries("q1_agg")(spark, "/root/testdata/sf0.001")

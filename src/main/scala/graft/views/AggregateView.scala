@@ -95,20 +95,33 @@ trait Refreshable {
 
   def refresh(targetVersion: Option[String] = None): Int =
     refresh(targetVersion, coalesce = false)
-  /** `coalesce = true` folds the ENTIRE watermark→target CDC walk into
-    * one delta and ONE state commit (per side, for a join view) —
-    * semantically identical to per-snapshot application for PK-keyed
-    * sources, and the backlog-catchup shape at scale: a view that fell
-    * N commits behind pays one maintenance pass, not N commit cycles
-    * and N scans of the joined/recomputed side. Default `false` keeps
-    * the reference contract of one state commit per source snapshot
-    * (runners.py:204-215), which downstream chained views observe as
-    * finer-grained CDC — EXCEPT that a backlog deeper than
-    * `spark.graft.mv.autoCoalesceSnapshots` (default 8) coalesces on
-    * its own: past that depth the per-snapshot cost is pathological
-    * and chained views see the window as one coarser commit (set the
-    * conf to 0 to force per-snapshot regardless of depth). Returns the
-    * number of state commits made. */
+  /** Refresh to `targetVersion` (default: the source head). Returns
+    * the number of state commits made.
+    *
+    * A refresh is a list of CDC WINDOWS `(from, to]`
+    * ([[ViewMaintenance.windows]]), each applied to a state table by
+    * ONE step as ONE state commit stamping the watermark `to` — a
+    * window without change rows still commits its watermark. By
+    * default there is one window per data-bearing source snapshot
+    * `sid`, `(parent(sid), sid]`: the reference contract of one state
+    * commit per source snapshot (runners.py:204-215), which chained
+    * views observe as finer-grained CDC. `coalesce = true` makes the
+    * whole backlog ONE window `(watermark, target]` (per side, for a
+    * join view): a view that fell N commits behind pays one
+    * maintenance pass, not N commit cycles. A backlog of at least
+    * `spark.graft.mv.autoCoalesceSnapshots` (default 8) data snapshots
+    * coalesces on its own (0 forces per-snapshot windows), and chained
+    * views then see the window as one coarser commit.
+    *
+    * Tables keyed by the source PK (row-wise views, the inner join
+    * state, unmatched-own tables) apply a window in delta form
+    * ([[ViewMaintenance.delta]]): sweep the PKs of its DELETE batches,
+    * then append its ADD rows — transformed, joined or anti-joined —
+    * minus any row whose PK a strictly later snapshot of the window
+    * deletes. Exact under source-PK uniqueness, and a one-snapshot
+    * window's plan is the per-snapshot plan. Aggregate state merges a
+    * window's batches arithmetically; an unmatched-other table splits
+    * the window's touched keys by liveness at `to`. */
   def refresh(targetVersion: Option[String], coalesce: Boolean): Int = {
     val commits = refreshInner(targetVersion, coalesce)
     if (commits > 0) stateDatasets.foreach(ViewMaintenance.maybeCompactState(spark, _))
@@ -172,12 +185,12 @@ object AggPlan {
   *  - The state table is a graft table with PK = the group-by columns,
   *    holding PARTIAL-aggregate state per group (`__rows` plus per-agg
   *    sums/counts/extrema) — never final values, so refreshes compose.
-  *  - Refresh walks source snapshots exactly like
-  *    [[MaterializedView.refresh]] (one state commit per source
-  *    snapshot, `mvSourceSnapshotId` watermark, exactly-once across
-  *    overlapping refreshers) but aggregates each ADD/DELETE batch to
-  *    per-group deltas first — the state update shuffles ONLY the
-  *    delta's groups, never the source.
+  *  - Refresh applies the source's CDC windows like every view (one
+  *    state commit per window, `mvSourceSnapshotId` watermark,
+  *    exactly-once across overlapping refreshers — see
+  *    [[Refreshable.refresh]]) but aggregates each window's ADD/DELETE
+  *    batches to per-group deltas first — the state update shuffles
+  *    ONLY the delta's groups, never the source.
   *  - sum/count/avg are INVERTIBLE: deletes subtract; no source reread
   *    ever. min/max are made ~invertible by a bounded EXTREMUM
   *    RESERVOIR per group ([[org.apache.spark.sql.graftshim
@@ -280,7 +293,7 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
     * when the source's early history has been expired/GC'd, and costs
     * one pass instead of one per historical snapshot); every later
     * refresh is incremental from the watermark, one state commit per
-    * source snapshot. Returns the number of state commits made. */
+    * CDC window. Returns the number of state commits made. */
   protected def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int = {
     val source = SpaceDataset.load(spark, plan.sourceLocation)
     requireStateCompatible(source)
@@ -298,63 +311,25 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
       val observed = refreshedTo
       if (built > 0 || observed.isEmpty || observed.exists(_ >= target)) return built
     }
-    val start = refreshedTo.getOrElse(0L)
-    val sids =
-      try source.storage.orderedSnapshotIds(start, target)
-      catch {
-        // ONLY the typed expired-history signal (the watermark snapshot
-        // was expired out of metadata) may fall back to a rebuild; any
-        // other IllegalArgumentException — a refresh target below the
-        // watermark, an unrelated lineage — is a caller bug and
-        // propagates instead of silently becoming a full source scan
-        // (ADVICE r10).
-        case _: graft.core.ExpiredHistoryException =>
-          return fullBuild(source, target, overwrite = true)
-      }
-
-    // CDC-SILENT source snapshots (compact, GC, rewrite_manifests)
-    // change no data: minting an empty watermark-advance commit per
-    // silent snapshot just churns state metadata (an hourly-compacting
-    // source = 24 empty view commits/day — VERDICT r13 #3). Skip them;
-    // the watermark folds into the next data-bearing commit, and a
-    // purely-silent tail costs only this O(1)-per-snapshot metadata
-    // re-check on the next refresh.
-    val dataSids = sids.filter(sid =>
-      source.storage.snapshotOrFail(sid).changeLogFile.isDefined)
-
-    // a backlog deeper than the auto-coalesce bound merges on its own
-    // (VERDICT r14 #2): one merged delta, one state commit
-    if (dataSids.nonEmpty && ViewMaintenance.shouldCoalesce(spark, coalesce, dataSids.size)) {
-      // the whole backlog as ONE merged delta and ONE state commit:
-      // the maintenance arithmetic is additive, so adds/deletes from
-      // every snapshot in the walk merge exactly like one snapshot's
-      // (an add-then-delete within the window cancels — delete batches
-      // carry full values). Recompute reads the source AT the target.
-      val batches = ChangeData.diff(spark, source.storage, start, target,
-        deletesPksOnly = false)
-      val estRows = dataSids.map(sid =>
-        ViewMaintenance.changelogRows(source.storage, sid, addsOnly = false)).sum
-      return ViewMaintenance.commitUnlessApplied(dataset.storage,
-          ViewMaintenance.reached(target)) { pinned =>
-        applyBatches(source, target, batches, pinned, estRows)
-          .copy(sourceSnapshotId = Some(target))
-      }
+    // expired watermark snapshot: one-commit rebuild at the target
+    val walk = ViewMaintenance.walk(source.storage, refreshedTo.getOrElse(0L), target)
+      .getOrElse(return fullBuild(source, target, overwrite = true))
+    // the maintenance arithmetic is additive, so a multi-snapshot
+    // window merges exactly like one snapshot (an add-then-delete
+    // within it cancels — delete batches carry full values)
+    ViewMaintenance.refreshWindows(spark, dataset.storage, source.storage, walk, coalesce) {
+      w =>
+        val estRows = w.changeRows(source.storage, addsOnly = false)
+        ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(w.to)) {
+          pinned =>
+            // full delete rows: the state must SUBTRACT their contribution
+            val batches = ChangeData.diff(spark, source.storage,
+              w.pendingFrom(dataset.storage.metadata.mvSourceSnapshotId), w.to,
+              deletesPksOnly = false)
+            applyBatches(source, w.to, batches, pinned, estRows)
+              .copy(sourceSnapshotId = Some(w.to))
+        }
     }
-
-    val commits = dataSids.map { sid =>
-      val parent = source.storage.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L)
-      // full delete rows: the state must SUBTRACT their contribution
-      val batches = ChangeData.diff(spark, source.storage, parent, sid,
-        deletesPksOnly = false)
-      val estRows = ViewMaintenance.changelogRows(source.storage, sid, addsOnly = false)
-      ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(sid)) {
-        pinned =>
-          applyBatches(source, sid, batches, pinned, estRows)
-            .copy(sourceSnapshotId = Some(sid))
-      }
-    }.sum
-    commits + ViewMaintenance.advanceSilent(spark, dataset.storage, sids, dataSids,
-      ViewMaintenance.reached(target))(Patch(sourceSnapshotId = Some(target)))
   }
 
   /** One-commit whole-state (re)build: a single aggregation scan of
@@ -397,13 +372,13 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
   def refreshStream(checkpointLocation: String): org.apache.spark.sql.streaming.StreamingQuery =
     ViewMaintenance.refreshOnCdc(this, plan.sourceLocation, checkpointLocation)
 
-  /** Merge one source snapshot's change batches into the state table:
+  /** Merge one CDC window's change batches into the state table:
     * per-group delta partials → arithmetic merge against the affected
     * state rows → (rare) extremum recompute → delete+append of exactly
     * the affected groups. All joins are delta-sized. */
   private def applyBatches(
       source: SpaceDataset,
-      sid: Long, // the source snapshot the state advances TO (recompute reads here)
+      sid: Long, // the window's end: the state advances TO it (recompute reads here)
       batches: Seq[ChangeBatch],
       pinned: Long,
       deltaRowBound: Long): Patch = {

@@ -99,27 +99,14 @@ object JoinPlan {
   * Classic sequential bi-delta maintenance. The view tracks one
   * watermark PER SIDE ([[graft.format.StorageMetadata
   * .mvSourceSnapshotIds]], keys "left"/"right"); a refresh to targets
-  * (L1, R1) from watermarks (L0, R0) applies:
-  *
-  *  1. LEFT deltas joined against RIGHT **AT R0** (one state commit per
-  *     left snapshot, DELETE-before-ADD): state goes L0⋈R0 → L1⋈R0.
-  *     Deletes sweep by the LEFT source's PK columns (they are part of
-  *     the state PK); adds are ΔL ⋈ R@R0, delta side broadcast.
-  *  2. RIGHT deltas joined against LEFT **AT L1**: state → L1⋈R1.
-  *
-  * The asymmetric snapshots (R@R0 then L@L1) are what make the algebra
-  * exact — joining both deltas against current heads would double-count
-  * ΔL⋈ΔR. Source UPDATEs (DELETE+ADD in one snapshot) re-derive their
-  * join rows in one state commit; a join-key change moves the row
-  * across join partners correctly because the delete sweeps by source
-  * PK, not by key.
-  *
-  * A refresh that finds MORE pending data snapshots than
-  * `spark.graft.mv.autoCoalesceSnapshots` takes the coalesced path on
-  * its own (one state commit + one other-side scan per side instead of
-  * one per snapshot) — a view that fell a day behind must not depend
-  * on the caller knowing the `coalesce` flag (VERDICT r14 #2); chained
-  * views then observe the backlog as one coarser CDC commit.
+  * (L1, R1) from watermarks (L0, R0) applies the LEFT windows joined
+  * against RIGHT **AT R0** (state L0⋈R0 → L1⋈R0), then the RIGHT
+  * windows joined against LEFT **AT L1** (→ L1⋈R1); windows and
+  * their delta form as in [[Refreshable.refresh]]. The asymmetric
+  * snapshots are what make the algebra exact — joining both deltas
+  * against current heads would double-count ΔL⋈ΔR. Deletes sweep by
+  * source PK, not by key, so a join-key change moves the row across
+  * join partners correctly.
   *
   * Scale shape at 100 TB: deltas are small relative to the corpus, so
   * each maintenance join is broadcast-delta ⋈ big-side — Catalyst
@@ -187,12 +174,12 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
     * the companion tables' snapshot ids ([[companionIds]], keys
     * [[JoinView.UmPin]]/[[JoinView.UmRightPin]]), and the companions
     * here resolve AT those recorded ids — never at their live heads. A
-    * refresh commits companions BEFORE the inner table (per source
-    * snapshot), so a concurrent reader sees either the old cut or the
-    * new cut, never a row's match transition torn across the 2–3
+    * refresh commits companions BEFORE the inner table (per window),
+    * so a concurrent reader sees either the old cut or the new cut,
+    * never a row's match transition torn across the 2–3
     * tables. Fallback to the companion head covers a pre-pinning view
     * and an expired pinned snapshot (both data-identical outside the
-    * crash-recovery window documented on [[outerRefresh]]). */
+    * crash-recovery window documented on [[refreshInner]]). */
   def read(): DataFrame = {
     val schema = dataset.storage.logicalSchema
     val wm = dataset.storage.metadata.mvSourceSnapshotIds
@@ -230,6 +217,24 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
   override protected def stateDatasets: Seq[SpaceDataset] =
     dataset +: (unmatchedDataset.toSeq ++ unmatchedRightDataset.toSeq)
 
+  /** Refresh driver, every join type (an inner view has no companion
+    * tables). The 1–3 state tables keep their own per-side watermarks
+    * (independent crash recovery), but their commits are ORDERED:
+    * companions first, the inner table last, interleaved PER WINDOW
+    * END — and every inner-table commit stamps the companions'
+    * just-committed snapshot ids ([[companionIds]]). [[read]] resolves
+    * companions at the stamped ids, so each inner commit atomically
+    * publishes a consistent cut: a reader during a minutes-wide refresh
+    * sees the old cut until the inner commit lands, then the new one —
+    * never a duplicated or dropped row mid-transition (VERDICT r15 #1).
+    *
+    * Crash recovery: a crash between a companion commit and the inner
+    * commit leaves the companion AHEAD; readers keep the old cut (the
+    * stale pins), and the next refresh's walks no-op the applied
+    * windows and re-publish fresh pins (the final reconciliation
+    * commit below covers the no-inner-work case). The only torn window
+    * left is a view written by a PRE-pinning build mid-crash — it
+    * heals on its first refresh here. */
   protected def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int = {
     require(targetVersion.isEmpty,
       "join view refresh has no single target version (two sources " +
@@ -239,10 +244,8 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
     val lT = left.storage.metadata.currentSnapshotId
     val rT = right.storage.metadata.currentSnapshotId
     val cache = new DiffCache(shareAcrossPasses = isOuter)
-    try {
-      if (!isOuter) innerRefresh(left, right, lT, rT, coalesce, cache)
-      else outerRefresh(left, right, lT, rT, coalesce, cache)
-    } finally cache.close()
+    try refreshSides(left, right, lT, rT, coalesce, cache)
+    finally cache.close()
   }
 
   /** Per-refresh memo of `ChangeData.diff`: an OUTER view's inner and
@@ -274,98 +277,21 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
     * consumes the same frames unchanged). */
   private def diffPksOnly: Boolean = !isOuter
 
-  private def innerRefresh(
-      left: SpaceDataset,
-      right: SpaceDataset,
-      lT: Long,
-      rT: Long,
-      coalesce: Boolean,
-      cache: DiffCache): Int = {
-    if (refreshedToSides.isEmpty) {
-      val built = fullBuild(left, right, lT, rT, overwrite = false)
-      // first-refresh race: a concurrent refresher may have built to
-      // older targets between the check and the transaction — fall
-      // through to the incremental walk from the observed watermarks
-      val observed = refreshedToSides
-      if (built > 0 || observed.isEmpty ||
-          observed.exists { case (l, r) => l >= lT && r >= rT }) return built
-    }
-    val (lW, rW) = refreshedToSides.get
+  /** `side`'s change batches of window `w` still pending on `st` (its
+    * freshly reloaded watermark, inside the state transaction). */
+  private def pendingDiff(cache: DiffCache, src: Storage, st: Storage, side: String,
+      w: ViewMaintenance.Window, pksOnly: Boolean): Seq[ChangeBatch] =
+    cache.diff(src, w.pendingFrom(st.metadata.mvSourceSnapshotIds.get(side)), w.to, pksOnly)
 
-    // the left pass joins ΔL against RIGHT AT the right watermark —
-    // if that snapshot was expired (and left has deltas to apply), the
-    // exact historical join side is gone: rebuild
-    var commits = 0
-    val (lAll, lSids) =
-      try sidWalk(left, lW, lT)
-      catch { case _: ExpiredHistoryException => return rebuild(left, right, lT, rT) }
-    if (lSids.nonEmpty && right.storage.metadata.snapshot(rW).isEmpty)
-      return rebuild(left, right, lT, rT)
-    if (lSids.nonEmpty) {
-      // lazily planned; each delta join re-uses the one frame
-      val rightAtW = sideProjection(right.read(version = Some(rW.toString)),
-        plan.rightFields)
-      if (ViewMaintenance.shouldCoalesce(spark, coalesce, lSids.size))
-        commits += coalescedStep(left, LeftSide, lW, lT, lSids, plan.leftFields,
-          rightAtW, deltaIsLeft = true, cache)
-      else
-        for (sid <- lSids)
-          commits += step(left, LeftSide, sid, plan.leftFields, rightAtW,
-            deltaIsLeft = true, cache)
-    }
-    commits += ViewMaintenance.advanceSilent(spark, dataset.storage, lAll, lSids,
-      ViewMaintenance.reached(LeftSide, lT))(Patch(sourceSnapshotIds = Map(LeftSide -> lT)))
-
-    val (rAll, rSids) =
-      try sidWalk(right, rW, rT)
-      catch { case _: ExpiredHistoryException => return rebuild(left, right, lT, rT) }
-    if (rSids.nonEmpty && left.storage.metadata.snapshot(lT).isEmpty)
-      return rebuild(left, right, lT, rT)
-    if (rSids.nonEmpty) {
-      val leftAtT = sideProjection(left.read(version = Some(lT.toString)),
-        plan.leftFields)
-      if (ViewMaintenance.shouldCoalesce(spark, coalesce, rSids.size))
-        commits += coalescedStep(right, RightSide, rW, rT, rSids, plan.rightFields,
-          leftAtT, deltaIsLeft = false, cache)
-      else
-        for (sid <- rSids)
-          commits += step(right, RightSide, sid, plan.rightFields, leftAtT,
-            deltaIsLeft = false, cache)
-    }
-    commits += ViewMaintenance.advanceSilent(spark, dataset.storage, rAll, rSids,
-      ViewMaintenance.reached(RightSide, rT))(Patch(sourceSnapshotIds = Map(RightSide -> rT)))
-    commits
-  }
-
-  /** One state table's participation in one side pass of an OUTER
-    * refresh: the per-snapshot step and whole-window coalesced commit
-    * with their frozen other-side frames already bound, plus the
-    * check that the frame's snapshot still exists. */
+  /** One state table's participation in one side pass: its window step
+    * with the frozen other-side frame already bound, plus the check
+    * that the frame's snapshot still exists. */
   private final case class PassTable(
       st: Storage,
-      step: Long => Int,
-      coalesced: (Long, Seq[Long]) => Int,
+      step: ViewMaintenance.Window => Int,
       frameOk: () => Boolean)
 
-  /** OUTER refresh driver (VERDICT r15 #1). The 2–3 state tables keep
-    * their own per-side watermarks (independent crash recovery), but
-    * their commits are ORDERED: companions first, the inner table
-    * last, interleaved PER SOURCE SNAPSHOT — and every inner-table
-    * commit stamps the companions' just-committed snapshot ids
-    * ([[companionIds]]). [[read]] resolves companions at the stamped
-    * ids, so each inner commit atomically publishes a consistent cut:
-    * a reader during a minutes-wide refresh sees the old cut until the
-    * inner commit lands, then the new one — never a duplicated or
-    * dropped row mid-transition.
-    *
-    * Crash recovery: a crash between a companion commit and the inner
-    * commit leaves the companion AHEAD; readers keep the old cut (the
-    * stale pins), and the next refresh's walks no-op the applied
-    * snapshots and re-publish fresh pins (the final reconciliation
-    * commit below covers the no-inner-work case). The only torn window
-    * left is a view written by a PRE-pinning build mid-crash — it
-    * heals on its first refresh here. */
-  private def outerRefresh(
+  private def refreshSides(
       left: SpaceDataset,
       right: SpaceDataset,
       lT: Long,
@@ -389,48 +315,30 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       umCommits + innerCommits
     }
 
-    /** One source side across every table: per-table walks from each
-      * table's OWN watermark, interleaved per snapshot with companions
+    /** One source side across every table: each table's windows from
+      * its OWN watermark, applied in window-end order with companions
       * committing before the inner table (the inner entry is LAST in
       * `tables`). One coalesce decision for the whole pass — mixed
-      * per-table modes would break the per-snapshot pairing. Returns
-      * None when source history expired (caller rebuilds all). */
-    def sidePass(src: SpaceDataset, side: String, t: Long,
-        tables: Seq[PassTable]): Option[Int] = {
-      val walks = tables.map { tb =>
-        tb.st.metadata.mvSourceSnapshotIds.get(side) match {
-          case None => (Seq.empty[Long], Seq.empty[Long], false)
-          case Some(w) =>
-            try { val (all, data) = sidWalk(src, w, t); (all, data, true) }
-            catch { case _: ExpiredHistoryException => return None }
-        }
-      }
-      var c = 0
-      if (walks.exists(_._2.nonEmpty)) {
-        if (tables.exists(tb => !tb.frameOk())) return None
-        val deepest = walks.map(_._2.size).max
-        if (ViewMaintenance.shouldCoalesce(spark, coalesce, deepest)) {
-          for ((tb, (_, data, _)) <- tables.zip(walks) if data.nonEmpty)
-            c += tb.coalesced(
-              tb.st.metadata.mvSourceSnapshotIds(side), data)
-        } else {
-          val pending = walks.map(_._2.toSet)
-          for (sid <- walks.flatMap(_._2).distinct.sorted;
-               (tb, p) <- tables.zip(pending) if p(sid))
-            c += tb.step(sid)
-        }
-      }
+      * per-table modes would break the per-window pairing. False when
+      * source history expired (the caller rebuilds all). */
+    def sidePass(src: SpaceDataset, side: String, t: Long, tables: Seq[PassTable]): Boolean = {
+      val walks = tables.map(tb => ViewMaintenance.walk(
+        src.storage, tb.st.metadata.mvSourceSnapshotIds(side), t).getOrElse(return false))
+      val windows = ViewMaintenance.windows(spark, src.storage, walks, coalesce)
+      if (windows.exists(_.nonEmpty) && tables.exists(tb => !tb.frameOk())) return false
+      for (to <- windows.flatten.map(_.to).distinct.sorted;
+           (tb, ws) <- tables.zip(windows); w <- ws if w.to == to)
+        tb.step(w)
       // silent-tail advance, same companions-first order; the inner
       // advance (last) stamps the fresh pins
-      for ((tb, (all, data, born)) <- tables.zip(walks) if born) {
+      for (((tb, walk), ws) <- tables.zip(walks).zip(windows)) {
         val isInner = tb.st eq dataset.storage
-        val n = ViewMaintenance.advanceSilent(spark, tb.st, all, data,
+        val n = ViewMaintenance.advanceSilent(spark, tb.st, walk, ws,
           ViewMaintenance.reached(side, t))(Patch(sourceSnapshotIds = Map(side -> t) ++
             (if (isInner) companionIds() else Map.empty)))
         if (isInner) in_+(n) else um_+(n)
-        c += n
       }
-      Some(c)
+      true
     }
 
     def run(): Int = {
@@ -455,9 +363,7 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
           val otherW = u.um.storage.metadata.mvSourceSnapshotIds(u.otherSide)
           lazy val frame = u.other.read(version = Some(otherW.toString))
             .select(plan.keys.map(col): _*)
-          PassTable(u.um.storage,
-            sid => um_+(umOwnStep(u, sid, frame, cache)),
-            (w, sids) => um_+(umOwnCoalesced(u, w, lT, sids, frame, cache)),
+          PassTable(u.um.storage, w => um_+(umOwnStep(u, w, frame, cache)),
             () => u.other.storage.metadata.snapshot(otherW).isDefined)
         } ++
         umR.toSeq.map { u =>
@@ -465,57 +371,41 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
           // at its own watermark (the other-first bi-delta mirror)
           val ownW = u.um.storage.metadata.mvSourceSnapshotIds(u.ownSide)
           lazy val frame = u.ownProjection(u.own.read(version = Some(ownW.toString)))
-          PassTable(u.um.storage,
-            sid => um_+(umOtherStep(u, sid, frame, cache)),
-            (w, sids) => um_+(umOtherCoalesced(u, w, lT, sids, frame, cache)),
+          PassTable(u.um.storage, w => um_+(umOtherStep(u, w, frame, cache)),
             () => u.own.storage.metadata.snapshot(ownW).isDefined)
         } :+ {
           val rW = dataset.storage.metadata.mvSourceSnapshotIds(RightSide)
           lazy val frame = sideProjection(
             right.read(version = Some(rW.toString)), plan.rightFields)
           PassTable(dataset.storage,
-            sid => in_+(step(left, LeftSide, sid, plan.leftFields, frame,
+            w => in_+(step(left, LeftSide, w, plan.leftFields, frame,
               deltaIsLeft = true, cache)),
-            (w, sids) => in_+(coalescedStep(left, LeftSide, w, lT, sids,
-              plan.leftFields, frame, deltaIsLeft = true, cache)),
             () => right.storage.metadata.snapshot(rW).isDefined)
         }
-      sidePass(left, LeftSide, lT, leftTables) match {
-        case None => return rebuildAll()
-        case Some(_) =>
-      }
+      if (!sidePass(left, LeftSide, lT, leftTables)) return rebuildAll()
 
       // ---- RIGHT pass: Δright joins LEFT frozen at lT (the post-
       // window frame, for every table)
       val rightTables =
         umL.toSeq.map { u =>
           lazy val frame = u.ownProjection(u.own.read(version = Some(lT.toString)))
-          PassTable(u.um.storage,
-            sid => um_+(umOtherStep(u, sid, frame, cache)),
-            (w, sids) => um_+(umOtherCoalesced(u, w, rT, sids, frame, cache)),
+          PassTable(u.um.storage, w => um_+(umOtherStep(u, w, frame, cache)),
             () => u.own.storage.metadata.snapshot(lT).isDefined)
         } ++
         umR.toSeq.map { u =>
           lazy val frame = u.other.read(version = Some(lT.toString))
             .select(plan.keys.map(col): _*)
-          PassTable(u.um.storage,
-            sid => um_+(umOwnStep(u, sid, frame, cache)),
-            (w, sids) => um_+(umOwnCoalesced(u, w, rT, sids, frame, cache)),
+          PassTable(u.um.storage, w => um_+(umOwnStep(u, w, frame, cache)),
             () => u.other.storage.metadata.snapshot(lT).isDefined)
         } :+ {
           lazy val frame = sideProjection(
             left.read(version = Some(lT.toString)), plan.leftFields)
           PassTable(dataset.storage,
-            sid => in_+(step(right, RightSide, sid, plan.rightFields, frame,
+            w => in_+(step(right, RightSide, w, plan.rightFields, frame,
               deltaIsLeft = false, cache)),
-            (w, sids) => in_+(coalescedStep(right, RightSide, w, rT, sids,
-              plan.rightFields, frame, deltaIsLeft = false, cache)),
             () => left.storage.metadata.snapshot(lT).isDefined)
         }
-      sidePass(right, RightSide, rT, rightTables) match {
-        case None => return rebuildAll()
-        case Some(_) =>
-      }
+      if (!sidePass(right, RightSide, rT, rightTables)) return rebuildAll()
       umCommits + innerCommits
     }
 
@@ -537,7 +427,7 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
     * streams trigger an incremental [[refresh]] (each through
     * [[ViewMaintenance.refreshOnCdc]]), so the view follows whichever
     * side commits. refresh() applies change data itself with the
-    * bi-delta algebra, one state commit per source snapshot, and
+    * bi-delta algebra, one state commit per window, and
     * exactly-once comes from the per-side watermarks, not the
     * checkpoints. Checkpoints land under `<checkpointLocation>/left`
     * and `/right`. */
@@ -553,106 +443,50 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
   private def sideProjection(df: DataFrame, fields: Seq[String]): DataFrame =
     df.select((plan.keys ++ fields).map(col): _*)
 
-  /** One watermark→target walk: (all snapshot ids, the data-bearing
-    * subset). CDC-silent source snapshots (compact/GC) change no data —
-    * they are skipped instead of minting empty watermark-advance state
-    * commits (VERDICT r13 #3); the watermark folds into the side's next
-    * data-bearing commit, and a purely-silent tail costs only an O(1)
-    * metadata re-check per refresh until it crosses the
-    * [[ViewMaintenance.SilentTailMaxSnapshotsKey]] bound (then ONE
-    * empty advance commit — see [[ViewMaintenance.advanceSilent]]). */
-  private def sidWalk(src: SpaceDataset, w: Long, t: Long): (Seq[Long], Seq[Long]) = {
-    val all = src.storage.orderedSnapshotIds(w, t)
-    (all, all.filter(sid => src.storage.snapshotOrFail(sid).changeLogFile.isDefined))
-  }
-
-  /** One source snapshot applied as one state commit (exactly-once via
-    * the per-side watermark re-check inside the transaction). */
+  /** One CDC window of `side` applied to the inner state as one commit
+    * (exactly-once via the per-side watermark re-check inside the
+    * transaction): sweep the window's deleted source PKs, append its
+    * surviving ADD rows (see [[ViewMaintenance.delta]]) ⋈ the frozen
+    * other side. */
   private def step(
       src: SpaceDataset,
       side: String,
-      sid: Long,
+      w: ViewMaintenance.Window,
       sideFields: Seq[String],
       other: DataFrame,
       deltaIsLeft: Boolean,
       cache: DiffCache): Int = {
-    val parent = src.storage.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L)
-    val batches = cache.diff(src.storage, parent, sid, diffPksOnly)
-    // O(1) delta size from the changelog bitmaps — gates the broadcast
-    // hint below (a fat backfill commit must NOT be force-broadcast)
-    val addRows = ViewMaintenance.changelogRows(src.storage, sid, addsOnly = true)
+    // O(1) ADD-side size from the changelog bitmaps — gates the
+    // broadcast hint below (a fat backfill commit must NOT be
+    // force-broadcast)
+    val addRows = w.changeRows(src.storage, addsOnly = true)
     ViewMaintenance.commitUnlessApplied(dataset.storage,
-        ViewMaintenance.reached(side, sid)) { pinned =>
-      // ADD batch → join rows to append: broadcast only under the
-      // configured row bound; above it the join is left to AQE
-      // (still delta ⋈ big-side, just shuffled) — correctness is
-      // hint-independent
-      val adds = batches.find(_.changeType == ChangeType.Add).map { a =>
-        val delta = ViewMaintenance.maybeBroadcast(
-          spark, sideProjection(a.data, sideFields), addRows)
-        val joined =
-          if (deltaIsLeft) delta.join(other, plan.keys, "inner")
-          else other.join(delta, plan.keys, "inner")
-        joined.select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
-      }
-      // the sweep by the SOURCE's PK columns (part of the state PK by
-      // construction, so exactly this source row's derived join rows
-      // disappear) and the delta-join append land in ONE write pass
-      // (VERDICT r14 #3)
-      DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
-        batches.find(_.changeType == ChangeType.Delete).map(_.data), src.primaryKeys, adds,
-        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-        .getOrElse(Patch())
-        .copy(sourceSnapshotIds = Map(side -> sid) ++ companionIds())
+        ViewMaintenance.reached(side, w.to)) { pinned =>
+      ViewMaintenance.delta(
+          pendingDiff(cache, src.storage, dataset.storage, side, w, diffPksOnly),
+          src.primaryKeys) { (dels, adds) =>
+        // ADD rows → join rows to append: broadcast only under the
+        // configured row bound; above it the join is left to AQE
+        // (still delta ⋈ big-side, just shuffled) — correctness is
+        // hint-independent
+        val joined = adds.map { a =>
+          val delta = ViewMaintenance.maybeBroadcast(
+            spark, sideProjection(a, sideFields), addRows)
+          val j =
+            if (deltaIsLeft) delta.join(other, plan.keys, "inner")
+            else other.join(delta, plan.keys, "inner")
+          j.select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
+        }
+        // the sweep by the SOURCE's PK columns (part of the state PK by
+        // construction, so exactly this source row's derived join rows
+        // disappear) and the delta-join append land in ONE write pass
+        // (VERDICT r14 #3)
+        DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
+          dels, src.primaryKeys, joined,
+          dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+      }.getOrElse(Patch())
+        .copy(sourceSnapshotIds = Map(side -> w.to) ++ companionIds())
     }
-  }
-
-  /** One side's ENTIRE watermark→target backlog as ONE state commit
-    * (`refresh(coalesce = true)`, or automatic past the
-    * auto-coalesce bound). Sequential per-snapshot application
-    * against the same fixed other-side frame reduces to: every source
-    * key TOUCHED in the window ends in the state iff live at the
-    * side's target, joined at its target version — so sweep the state
-    * by the touched keys and re-derive `(src@target ⋉ touched) ⋈
-    * other`. Besides collapsing N commit cycles into one, this scans
-    * the OTHER side once per backlog instead of once per snapshot
-    * (the N-scan backlog cost VERDICT r13 flagged). */
-  private def coalescedStep(
-      src: SpaceDataset,
-      side: String,
-      w: Long,
-      t: Long,
-      dataSids: Seq[Long],
-      sideFields: Seq[String],
-      other: DataFrame,
-      deltaIsLeft: Boolean,
-      cache: DiffCache): Int = {
-    val srcPks = src.primaryKeys
-    val estRows = dataSids.map(sid =>
-      ViewMaintenance.changelogRows(src.storage, sid, addsOnly = false)).sum
-    val batches = cache.diff(src.storage, w, t, diffPksOnly)
-    val touched = batches.map(_.data.select(srcPks.map(col): _*))
-      .reduceOption(_.unionByName(_)).map(_.distinct().persist())
-      .getOrElse(return 0)
-    try ViewMaintenance.commitUnlessApplied(dataset.storage,
-        ViewMaintenance.reached(side, t)) { pinned =>
-      val live = src.read(version = Some(t.toString))
-        .join(ViewMaintenance.maybeBroadcast(spark, touched, estRows),
-          srcPks, "left_semi")
-      val delta = ViewMaintenance.maybeBroadcast(
-        spark, sideProjection(live, sideFields), estRows)
-      val joined =
-        if (deltaIsLeft) delta.join(other, plan.keys, "inner")
-        else other.join(delta, plan.keys, "inner")
-      val out = joined.select(
-        (plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
-      // fused delete+append: one write pass per coalesced commit
-      DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
-        Some(touched), srcPks, Some(out),
-        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-        .getOrElse(Patch())
-        .copy(sourceSnapshotIds = Map(side -> t) ++ companionIds())
-    } finally touched.unpersist()
   }
 
   /** One-commit whole-state (re)build: one join of both sides at the
@@ -697,10 +531,11 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
   //  - OWN delta: deletes sweep by own PK; adds are Δown anti OTHER@W.
   //  - OTHER delta (full-value deletes — the dying rows' JOIN KEYS are
   //    needed, and the other side's PK may not contain them): own rows
-  //    whose key just DIED enter (guarded by an anti-join against the
-  //    current unmatched state — a key can die while its own-rows were
-  //    already unmatched across an interleaved own-side pass); own
-  //    rows whose key came ALIVE leave.
+  //    of touched keys dead at the window end enter (guarded by an
+  //    anti-join against the current unmatched state — a key can die
+  //    while its own-rows were already unmatched across an interleaved
+  //    own-side pass); unmatched rows of touched keys live at the
+  //    window end leave.
   // The null-extension itself happens at read() — the state rows carry
   // only `keys ++ ownFields`, so no nullable-PK encoding is needed
   // (the reason inner-only shipped first, JoinView r13).
@@ -719,9 +554,6 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       df.select((plan.keys ++ ownFields).map(col): _*)
   }
 
-  private def keysOf(df: DataFrame): DataFrame =
-    df.select(plan.keys.map(col): _*).distinct()
-
   /** One-commit (re)build of an unmatched table: `OWN@ownT anti
     * OTHER@otherT`. Same non-overwrite no-op rule as the inner
     * [[fullBuild]]. */
@@ -739,142 +571,72 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       patch.copy(sourceSnapshotIds = Map(u.ownSide -> ownT, u.otherSide -> otherT))
     }
 
-  /** Δown applied to an unmatched table: the exact mirror of [[step]]
-    * with the join replaced by an anti-join on the keys. */
+  /** Δown window applied to an unmatched table: the exact mirror of
+    * [[step]] with the join replaced by an anti-join on the keys. */
   private def umOwnStep(
       u: UmSide,
-      sid: Long,
+      w: ViewMaintenance.Window,
       otherKeysAtW: DataFrame,
-      cache: DiffCache): Int = {
-    val parent = u.own.storage.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L)
-    val batches = cache.diff(u.own.storage, parent, sid, diffPksOnly)
+      cache: DiffCache): Int =
     ViewMaintenance.commitUnlessApplied(u.um.storage,
-        ViewMaintenance.reached(u.ownSide, sid)) { pinned =>
-      // PK sweep + anti-join append in one write pass (VERDICT r14 #3)
-      DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
-        batches.find(_.changeType == ChangeType.Delete).map(_.data), u.own.primaryKeys,
-        batches.find(_.changeType == ChangeType.Add).map(a =>
-          u.ownProjection(a.data).join(otherKeysAtW, plan.keys, "left_anti")),
-        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-        .getOrElse(Patch())
-        .copy(sourceSnapshotIds = Map(u.ownSide -> sid))
+        ViewMaintenance.reached(u.ownSide, w.to)) { pinned =>
+      ViewMaintenance.delta(
+          pendingDiff(cache, u.own.storage, u.um.storage, u.ownSide, w, diffPksOnly),
+          u.own.primaryKeys) { (dels, adds) =>
+        // PK sweep + anti-join append in one write pass (VERDICT r14 #3)
+        DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
+          dels, u.own.primaryKeys,
+          adds.map(a => u.ownProjection(a).join(otherKeysAtW, plan.keys, "left_anti")),
+          dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+      }.getOrElse(Patch())
+        .copy(sourceSnapshotIds = Map(u.ownSide -> w.to))
     }
-  }
 
-  /** Δother applied to an unmatched table: keys that DIED at `sid` push
-    * their (still-live) own-rows in; keys ADDED pull their rows out. */
+  /** Δother window applied to an unmatched table: split the window's
+    * AFFECTED keys by liveness at OTHER@to — own-rows of dead keys
+    * enter (minus those already unmatched), unmatched rows of live
+    * keys leave. Liveness at the window's end, not per-snapshot
+    * transitions: a key that came alive and died again inside one
+    * window must keep its own-rows. */
   private def umOtherStep(
       u: UmSide,
-      sid: Long,
+      w: ViewMaintenance.Window,
       ownAtT: DataFrame,
       cache: DiffCache): Int = {
-    // full-value deletes: the dying rows' JOIN KEYS drive the update
-    val parent = u.other.storage.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L)
-    val batches = cache.diff(u.other.storage, parent, sid, pksOnly = false)
     val ownPks = u.um.primaryKeys
-    val deltaRows = ViewMaintenance.changelogRows(u.other.storage, sid, addsOnly = false)
+    val estRows = w.changeRows(u.other.storage, addsOnly = false)
     ViewMaintenance.commitUnlessApplied(u.um.storage,
-        ViewMaintenance.reached(u.otherSide, sid)) { pinned =>
-      val otherKeysAtSid = u.other.read(version = Some(sid.toString))
-        .select(plan.keys.map(col): _*)
-      val umPinned = u.um.read(version = Some(pinned.toString))
-      def batchKeys(b: ChangeBatch): DataFrame =
-        ViewMaintenance.maybeBroadcast(spark, keysOf(b.data), deltaRows)
-      // own-rows of a dying key, unless the key survives at sid
-      // (another other-side row, or a same-snapshot re-add) or
-      // the own row is already unmatched
-      val entrants = batches.find(_.changeType == ChangeType.Delete).map(d =>
-        ownAtT.join(batchKeys(d), plan.keys, "left_semi")
-          .join(otherKeysAtSid, plan.keys, "left_anti")
-          .join(umPinned.select(ownPks.map(col): _*), ownPks, "left_anti"))
-      // unmatched rows whose key came ALIVE leave
-      val leavers = batches.find(_.changeType == ChangeType.Add).map(a =>
-        umPinned.join(batchKeys(a), plan.keys, "left_semi")
-          .select(ownPks.map(col): _*))
-      // roles swap here: the leavers are swept and the entrants added,
-      // in one write pass — disjoint keys (a key cannot die and come
-      // alive at the same snapshot; a same-snapshot key move shows as
-      // delete+add of DIFFERENT keys)
-      DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
-        leavers, ownPks, entrants,
-        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-        .getOrElse(Patch())
-        .copy(sourceSnapshotIds = Map(u.otherSide -> sid))
+        ViewMaintenance.reached(u.otherSide, w.to)) { pinned =>
+      // full-value deletes: the dying rows' JOIN KEYS drive the update
+      val affectedKeys = pendingDiff(cache, u.other.storage, u.um.storage, u.otherSide, w,
+          pksOnly = false)
+        .map(b => b.data.select(plan.keys.map(col): _*))
+        .reduceOption(_.unionByName(_)).map(_.distinct().persist())
+      try {
+        val swap = affectedKeys.map { affected =>
+          val otherKeysAtT = u.other.read(version = Some(w.to.toString))
+            .select(plan.keys.map(col): _*)
+          val umPinned = u.um.read(version = Some(pinned.toString))
+          val liveAffected = ViewMaintenance.maybeBroadcast(spark,
+            affected.join(otherKeysAtT, plan.keys, "left_semi"), estRows)
+          val deadAffected = ViewMaintenance.maybeBroadcast(spark,
+            affected.join(otherKeysAtT, plan.keys, "left_anti"), estRows)
+          val matched = umPinned.join(liveAffected, plan.keys, "left_semi")
+            .select(ownPks.map(col): _*)
+          val entrants = ownAtT.join(deadAffected, plan.keys, "left_semi")
+            .join(umPinned.select(ownPks.map(col): _*), ownPks, "left_anti")
+          (matched, entrants)
+        }
+        // fused: the re-matched sweep and the newly-dead entrants
+        // share one write pass (disjoint keys — a key cannot be both
+        // live and dead at the window end)
+        DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
+          swap.map(_._1), ownPks, swap.map(_._2),
+          dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+          .getOrElse(Patch())
+          .copy(sourceSnapshotIds = Map(u.otherSide -> w.to))
+      } finally affectedKeys.foreach(_.unpersist())
     }
-  }
-
-  /** Coalesced Δown backlog for an unmatched table — the
-    * [[coalescedStep]] shape with an anti-join: sweep touched own PKs,
-    * re-derive `(OWN@ownT ⋉ touched) anti OTHER@W`. */
-  private def umOwnCoalesced(
-      u: UmSide,
-      w: Long,
-      t: Long,
-      sids: Seq[Long],
-      otherKeysAtW: DataFrame,
-      cache: DiffCache): Int = {
-    val ownPks = u.own.primaryKeys
-    val estRows = sids.map(sid =>
-      ViewMaintenance.changelogRows(u.own.storage, sid, addsOnly = false)).sum
-    val touched = cache.diff(u.own.storage, w, t, diffPksOnly)
-      .map(_.data.select(ownPks.map(col): _*))
-      .reduceOption(_.unionByName(_)).map(_.distinct().persist())
-      .getOrElse(return 0)
-    try ViewMaintenance.commitUnlessApplied(u.um.storage,
-        ViewMaintenance.reached(u.ownSide, t)) { pinned =>
-      val live = u.own.read(version = Some(t.toString))
-        .join(ViewMaintenance.maybeBroadcast(spark, touched, estRows),
-          ownPks, "left_semi")
-      val adds = u.ownProjection(live).join(otherKeysAtW, plan.keys, "left_anti")
-      // fused delete+append: one write pass per coalesced commit
-      DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
-        Some(touched), ownPks, Some(adds),
-        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-        .getOrElse(Patch())
-        .copy(sourceSnapshotIds = Map(u.ownSide -> t))
-    } finally touched.unpersist()
-  }
-
-  /** Coalesced Δother backlog for an unmatched table: split the
-    * window's AFFECTED keys by liveness at OTHER@t — own-rows of dead
-    * keys enter (minus those already unmatched), unmatched rows of
-    * live keys leave. One commit, one scan of each side. */
-  private def umOtherCoalesced(
-      u: UmSide,
-      w: Long,
-      t: Long,
-      sids: Seq[Long],
-      ownAtT: DataFrame,
-      cache: DiffCache): Int = {
-    val ownPks = u.um.primaryKeys
-    val estRows = sids.map(sid =>
-      ViewMaintenance.changelogRows(u.other.storage, sid, addsOnly = false)).sum
-    val affectedKeys = cache.diff(u.other.storage, w, t, pksOnly = false)
-      .map(b => b.data.select(plan.keys.map(col): _*))
-      .reduceOption(_.unionByName(_)).map(_.distinct().persist())
-      .getOrElse(return 0)
-    try ViewMaintenance.commitUnlessApplied(u.um.storage,
-        ViewMaintenance.reached(u.otherSide, t)) { pinned =>
-      val otherKeysAtT = u.other.read(version = Some(t.toString))
-        .select(plan.keys.map(col): _*)
-      val umPinned = u.um.read(version = Some(pinned.toString))
-      val liveAffected = ViewMaintenance.maybeBroadcast(spark,
-        affectedKeys.join(otherKeysAtT, plan.keys, "left_semi"), estRows)
-      val deadAffected = ViewMaintenance.maybeBroadcast(spark,
-        affectedKeys.join(otherKeysAtT, plan.keys, "left_anti"), estRows)
-      val matched = umPinned.join(liveAffected, plan.keys, "left_semi")
-        .select(ownPks.map(col): _*)
-      val cands = ownAtT.join(deadAffected, plan.keys, "left_semi")
-        .join(umPinned.select(ownPks.map(col): _*), ownPks, "left_anti")
-      // fused: the re-matched sweep and the newly-dead entrants
-      // share one write pass (disjoint keys — a key cannot be both
-      // live and dead at the window target)
-      DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
-        Some(matched), ownPks, Some(cands),
-        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-        .getOrElse(Patch())
-        .copy(sourceSnapshotIds = Map(u.otherSide -> t))
-    } finally affectedKeys.unpersist()
   }
 }
 

@@ -6,18 +6,11 @@ import graft.core._
 import graft.format.{Patch, TableType}
 
 /** Materialized view = a graft table + a persisted logical plan +
-  * incremental snapshot-batch refresh (reference `MaterializedView`
-  * views.py:247-323; refresh loop
-  * `/root/reference/python/src/space/ray/runners.py:174-236`).
-  *
-  * Refresh walks the SOURCE table's snapshots from the MV's refreshed-to
-  * snapshot to the target, and per source snapshot:
-  *   1. DELETE batch (PKs only) → CoW delete on the MV by key semi-join
-  *      (runners.py:238-251),
-  *   2. ADD batch → view transform pipeline → append (runners.py:253-256),
-  *   3. ONE MV commit per source snapshot, stopping early on failure so
-  *      the MV always sits at a consistent source version
-  *      (runners.py:204-215).
+  * incremental refresh from the source's change feed (reference
+  * `MaterializedView` views.py:247-323; refresh loop
+  * `/root/reference/python/src/space/ray/runners.py:174-236`). Each
+  * CDC window of a refresh (see [[Refreshable.refresh]]) is one MV
+  * commit: sweep by the source keys, append the transformed ADD rows.
   *
   * Known caveat carried over from the reference (views.py:166-169): a
   * filter transform is NOT applied to the DELETE stream (PKs only) — a
@@ -46,129 +39,56 @@ final class MaterializedView(val spark: SparkSession, val dataset: SpaceDataset)
     val source = SpaceDataset.load(spark, plan.sourceLocation)
     val target = targetVersion.map(source.storage.versionToSnapshotId)
       .getOrElse(source.storage.metadata.currentSnapshotId)
-    val start = refreshedTo.getOrElse(0L)
-    val sids =
-      try source.storage.orderedSnapshotIds(start, target)
-      catch {
-        // ONLY the typed expired-history signal (the watermark snapshot
-        // itself is gone): the CDC walk is impossible, but a row-wise
-        // view's state is pure transform(live source rows) — rebuild it
-        // at the target in one atomic overwrite commit instead of
-        // failing until someone drops and recreates the view. Any other
-        // IllegalArgumentException (a refresh target below the
-        // watermark, an unrelated lineage) is a caller bug and
-        // PROPAGATES — a blanket catch here used to turn typos into
-        // silent full source rescans (ADVICE r10).
-        case _: graft.core.ExpiredHistoryException =>
-          return rebuild(source, target)
-      }
-
-    // CDC-silent source snapshots (compact/GC/rewrite_manifests) change
-    // no data — skip them instead of minting empty watermark-advance
-    // commits (VERDICT r13 #3); the watermark folds into the next
-    // data-bearing commit, and a purely-silent tail costs only an O(1)
-    // metadata re-check per refresh until it crosses the silent-tail
-    // bound (then ONE empty advance commit).
-    val dataSids = sids.filter(sid =>
-      source.storage.snapshotOrFail(sid).changeLogFile.isDefined)
-
-    // a backlog deeper than the auto-coalesce bound takes the coalesced
-    // path on its own (VERDICT r14 #2): one state commit, one transform
-    // pass, instead of one commit cycle per backlog snapshot
-    if (dataSids.nonEmpty && ViewMaintenance.shouldCoalesce(spark, coalesce, dataSids.size))
-      return refreshCoalesced(source, target, dataSids)
-
-    val commits = dataSids.map { sid =>
-      // snapshot ids are monotonic but not necessarily contiguous
-      // (branch commits also consume ids): diff from the actual parent
-      val parent = source.storage.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L)
-      val batches = ChangeData.diff(spark, source.storage, parent, sid)
-      ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(sid)) {
-        pinned =>
-          // delete by the SOURCE-pk columns that survived the
-          // transform (they do by contract). For row-wise views
-          // these are exactly the MV's own PKs; for EXPAND
-          // transforms (one source row → N view rows, e.g. a
-          // postings index) the MV PK is a superset and the
-          // source key must sweep every derived row.
-          val dels = batches.find(_.changeType == ChangeType.Delete).map(_.data)
-          val delKeyCols = dels.fold(Seq.empty[String]) { d =>
-            val keyCols = d.columns.toSeq.filter(dataset.storage.schema.fieldNames.contains)
-            require(keyCols.nonEmpty,
-              s"MV refresh: no source key column of (${d.columns.mkString(", ")}) " +
-                s"survives the transform — cannot apply source deletes")
-            keyCols
-          }
-          val adds = batches.find(_.changeType == ChangeType.Add)
-            .map(a => plan.processSource(spark, a.data))
-          DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
-            dels, delKeyCols, adds,
-            dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-            .getOrElse(Patch()) // zero-row data snapshot still advances the MV
-            .copy(sourceSnapshotId = Some(sid))
-      }
-    }.sum
-    commits + ViewMaintenance.advanceSilent(spark, dataset.storage, sids, dataSids,
-      ViewMaintenance.reached(target))(Patch(sourceSnapshotId = Some(target)))
+    // expired watermark snapshot: a row-wise view's state is pure
+    // transform(live source rows) — rebuild it at the target in one
+    // atomic overwrite commit instead of failing until someone drops
+    // and recreates the view
+    val walk = ViewMaintenance.walk(source.storage, refreshedTo.getOrElse(0L), target)
+      .getOrElse(return rebuild(source, target))
+    ViewMaintenance.refreshWindows(spark, dataset.storage, source.storage, walk, coalesce)(
+      step(source, _))
   }
 
-  /** The whole watermark→target backlog as ONE state commit.
-    *
-    * Sequential per-snapshot application reduces, for a PK-keyed
-    * source, to: every key TOUCHED in the window (any delete or add)
-    * ends in the state iff it is live at `target`, carrying its
-    * `target`-version transform — untouched keys are unchanged. So:
-    * sweep the state by the touched keys, then re-derive
-    * `transform(source@target ⋉ touched)`. This also collapses the
-    * N-commit CoW cost AND re-applies the transform once per surviving
-    * key instead of once per intermediate version. First refresh
-    * (watermark 0) skips the key bookkeeping: the state is empty, so
-    * it is one transform pass over the source at `target`. */
-  private def refreshCoalesced(
-      source: SpaceDataset,
-      target: Long,
-      dataSids: Seq[Long]): Int = {
-    val keyCols = source.primaryKeys
-      .filter(dataset.storage.schema.fieldNames.contains)
-    require(keyCols.nonEmpty,
-      s"MV refresh: no source primary key of (${source.primaryKeys.mkString(", ")}) " +
-        "survives the transform — cannot apply source deletes")
-    val estRows = dataSids.map(sid =>
-      ViewMaintenance.changelogRows(source.storage, sid, addsOnly = false)).sum
-    ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(target)) {
+  /** One CDC window as one MV commit (exactly-once via the watermark
+    * re-check inside the transaction). */
+  private def step(source: SpaceDataset, w: ViewMaintenance.Window): Int =
+    ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(w.to)) {
       pinned =>
-        // Branch on the FRESHLY RELOADED watermark, not the `start`
-        // captured before the transaction: a stale handle (loaded before
-        // another refresher's first build) or a concurrent first
-        // coalesced refresh would otherwise take the full-scan branch
-        // and APPEND transform(source@target) onto already-built state,
-        // duplicating every live row (ADVICE r14, same stale-handle race
-        // JoinView.fullBuild / AggregateView.fullBuild guard against).
-        // The sweep path below is sound for ANY watermark in [1, target).
+        // Branch on the FRESHLY RELOADED watermark: unset means the
+        // state is still empty — one transform pass over the source at
+        // `to`, no CDC replay. A stale handle or a concurrent first
+        // refresh that already built sees it set and applies only the
+        // pending part of the window instead of appending
+        // transform(source@to) onto built state (ADVICE r14).
         val patch = dataset.storage.metadata.mvSourceSnapshotId match {
           case None =>
             RecordIO.writeWithRecords(spark, dataset.storage, plan.processSource(
-              spark, source.read(version = Some(target.toString))))
-          case Some(observed) =>
-            val batches = ChangeData.diff(spark, source.storage, observed, target)
-            val touched = batches.map(_.data.select(keyCols.map(
-                org.apache.spark.sql.functions.col): _*))
-              .reduce(_.unionByName(_)).distinct().persist()
-            try {
-              val live = source.read(version = Some(target.toString))
-                .join(ViewMaintenance.maybeBroadcast(spark, touched, estRows),
-                  keyCols, "left_semi")
-              // fused delete+append: one write pass for the touched-key
-              // sweep's survivors and the re-derived rows (VERDICT r14 #3)
+              spark, source.read(version = Some(w.to.toString))))
+          case observed =>
+            ViewMaintenance.delta(
+              ChangeData.diff(spark, source.storage, w.pendingFrom(observed), w.to),
+              source.primaryKeys) { (dels, adds) =>
+              // delete by the SOURCE-pk columns that survived the
+              // transform (they do by contract). For row-wise views
+              // these are exactly the MV's own PKs; for EXPAND
+              // transforms (one source row → N view rows, e.g. a
+              // postings index) the MV PK is a superset and the
+              // source key must sweep every derived row.
+              val delKeyCols = dels.fold(Seq.empty[String]) { d =>
+                val keyCols = d.columns.toSeq.filter(dataset.storage.schema.fieldNames.contains)
+                require(keyCols.nonEmpty,
+                  s"MV refresh: no source key column of (${d.columns.mkString(", ")}) " +
+                    s"survives the transform — cannot apply source deletes")
+                keyCols
+              }
               DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
-                Some(touched), keyCols, Some(plan.processSource(spark, live)),
+                dels, delKeyCols, adds.map(plan.processSource(spark, _)),
                 dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-                .getOrElse(Patch())
-            } finally touched.unpersist()
+                .getOrElse(Patch()) // a zero-row window still advances the MV
+            }
         }
-        patch.copy(sourceSnapshotId = Some(target))
+        patch.copy(sourceSnapshotId = Some(w.to))
     }
-  }
 
   /** Expired-history fallback: one transform pass over the source AT
     * `target`, committed as an atomic whole-state overwrite with the
@@ -188,8 +108,8 @@ final class MaterializedView(val spark: SparkSession, val dataset: SpaceDataset)
     * micro-batch of the source's CDC stream triggers an incremental
     * [[refresh]] to the source head (see [[ViewMaintenance.refreshOnCdc]]);
     * change rows are applied by `refresh()` itself, one MV commit per
-    * source snapshot, and exactly-once comes from the MV's own
-    * `refreshedTo` watermark. */
+    * window, and exactly-once comes from the MV's own `refreshedTo`
+    * watermark. */
   def refreshStream(checkpointLocation: String): org.apache.spark.sql.streaming.StreamingQuery =
     ViewMaintenance.refreshOnCdc(this, plan.sourceLocation, checkpointLocation)
 }

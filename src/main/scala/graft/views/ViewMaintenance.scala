@@ -3,18 +3,19 @@ package graft.views
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.functions.{broadcast, col, lit, max}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.{ManifestIO, SpaceDataset, Storage}
+import graft.core.{ChangeBatch, ChangeType, ExpiredHistoryException, ManifestIO, SpaceDataset, Storage}
 import graft.format.{Patch, StorageMetadata}
 
-/** Maintenance shared by the refreshable views: the one watermark-
+/** Maintenance shared by the refreshable views: the refresh's CDC
+  * windows ([[walk]], [[windows]], [[delta]]), the one watermark-
   * guarded state commit ([[commitUnlessApplied]]), the silent-tail
   * watermark advance, the CDC-stream refresh trigger, and state
   * self-maintenance.
   *
-  * Every refresh commits one state snapshot per source snapshot, and
+  * Every refresh commits one state snapshot per CDC window, and
   * each commit mints at least one small state file — a view refreshed
   * every minute accrues ~1.4k files/day, and the state table's own
   * read path (the next refresh's delta joins included) degrades with
@@ -92,20 +93,136 @@ object ViewMaintenance {
   def reached(side: String, sid: Long): StorageMetadata => Boolean =
     _.mvSourceSnapshotIds.get(side).exists(_ >= sid)
 
-  /** ONE empty (CDC-silent) commit advancing the watermark when a walk's
-    * silent tail crossed [[SilentTailMaxSnapshotsKey]] — keeps a
-    * long-silent source (hourly compactions, no data) from expiring the
-    * recorded watermark snapshot and forcing a data-identical full
-    * rebuild (VERDICT r14 #3). `stamp` is the empty patch carrying the
-    * new watermark; it is evaluated inside the transaction. */
+  /** One source's walk for one state table: every snapshot id in
+    * `(from, to]` (`from` = the table's watermark, `to` = the refresh
+    * target) and the data-bearing subset. CDC-silent snapshots
+    * (compact/GC/rewrite_manifests) change no data and get no window
+    * (VERDICT r13 #3): the watermark folds into the next data-bearing
+    * commit, and a purely silent tail costs an O(1) metadata re-check
+    * per refresh until it crosses [[SilentTailMaxSnapshotsKey]]. */
+  final case class Walk(from: Long, to: Long, all: Seq[Long], data: Seq[Long])
+
+  /** The walk `(from, to]`, or None when `from` was expired out of the
+    * source's metadata: the CDC walk is impossible and the caller
+    * rebuilds its state at the target. Only that typed signal falls
+    * back — any other failure (a target below the watermark, an
+    * unrelated lineage) is a caller bug and propagates instead of
+    * silently becoming a full source rescan (ADVICE r10). */
+  def walk(source: Storage, from: Long, to: Long): Option[Walk] =
+    try {
+      val all = source.orderedSnapshotIds(from, to)
+      Some(Walk(from, to, all,
+        all.filter(sid => source.snapshotOrFail(sid).changeLogFile.isDefined)))
+    } catch { case _: ExpiredHistoryException => None }
+
+  /** One CDC window `(from, to]`: the source changes a state table
+    * applies in ONE step and ONE state commit stamped `to`. `dataSids`
+    * are its data-bearing snapshots. */
+  final case class Window(from: Long, to: Long, dataSids: Seq[Long]) {
+    /** Start of the still-pending part on state whose freshly reloaded
+      * watermark is `watermark`: an overlapping refresher (a stale
+      * handle) may already have applied a prefix of a multi-snapshot
+      * window, which must not apply twice. */
+    def pendingFrom(watermark: Option[Long]): Long = watermark.fold(from)(math.max(from, _))
+
+    /** O(1) delta size: the changelogs' bitmap cardinalities. */
+    def changeRows(source: Storage, addsOnly: Boolean): Long =
+      dataSids.map(changelogRows(source, _, addsOnly)).sum
+  }
+
+  /** The windows of one refresh pass over one source, per state table
+    * (one [[Walk]] each, aligned with `walks`): one window per
+    * data-bearing snapshot `sid`, `(parent(sid), sid]`, or — when
+    * coalescing — one window `(watermark, target]` per table. One
+    * [[shouldCoalesce]] decision covers the whole pass, from its
+    * deepest walk. */
+  def windows(
+      spark: SparkSession,
+      source: Storage,
+      walks: Seq[Walk],
+      coalesce: Boolean): Seq[Seq[Window]] = {
+    val deepest = walks.map(_.data.size).foldLeft(0)(math.max)
+    val whole = deepest > 0 && shouldCoalesce(spark, coalesce, deepest)
+    walks.map { w =>
+      if (w.data.isEmpty) Nil
+      else if (whole) Seq(Window(w.from, w.to, w.data))
+      // snapshot ids are monotonic but not contiguous (branch commits
+      // also consume ids): each window starts at the actual parent
+      else w.data.map(sid => Window(
+        source.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L), sid, Seq(sid)))
+    }
+  }
+
+  /** A single-source view's refresh of `st`: `step` applies each window
+    * of `walk` (one commit each), then the silent-tail advance. */
+  def refreshWindows(spark: SparkSession, st: Storage, source: Storage, walk: Walk,
+      coalesce: Boolean)(step: Window => Int): Int = {
+    val ws = windows(spark, source, Seq(walk), coalesce).head
+    ws.map(step).sum + advanceSilent(spark, st, walk, ws, reached(walk.to))(
+      Patch(sourceSnapshotId = Some(walk.to)))
+  }
+
+  /** Applies `body` to a window's change rows in delta form for a
+    * state table keyed by the source PK `pks` (a row-wise view, the
+    * inner join state, an unmatched-own table): (the sweep, the
+    * appends). The sweep is every PK the window deletes; the appends
+    * are its ADD rows minus any row whose PK a STRICTLY LATER snapshot
+    * of the window deletes (an update's delete and add share one
+    * snapshot, delete first, so its add survives). Exact under
+    * source-PK uniqueness: a key live at `from` and touched by the
+    * window was deleted inside it, and an ADD survives to `to` iff no
+    * later snapshot deletes its PK.
+    *
+    * A one-snapshot window passes its batches through unchanged. A
+    * deeper one is one linear plan whatever its depth: each deleted
+    * PK's last delete snapshot (one union, one aggregate), persisted
+    * for the duration of `body` so the delete batches are scanned
+    * once, serves as the sweep and is left-joined once onto the
+    * sid-tagged ADD rows. Its appends are coalesced to the default
+    * parallelism: one scan partition per ADD file would otherwise land
+    * one state file per partition. */
+  def delta[A](batches: Seq[ChangeBatch], pks: Seq[String])(
+      body: (Option[DataFrame], Option[DataFrame]) => A): A = {
+    val (dels, adds) = batches.partition(_.changeType == ChangeType.Delete)
+    def union(dfs: Seq[DataFrame]) = dfs.reduceOption(_.unionByName(_))
+    if (batches.map(_.snapshotId).distinct.size <= 1)
+      body(union(dels.map(_.data)), union(adds.map(_.data)))
+    else {
+      val lastDelete = union(dels.map(d =>
+          d.data.select(pks.map(col) :+ lit(d.snapshotId).as(SidCol): _*)))
+        .map(_.groupBy(pks.map(col): _*).agg(max(SidCol).as(LastDeleteCol)).persist())
+      val appends = union(adds.map(a => a.data.withColumn(SidCol, lit(a.snapshotId)))).map { a =>
+        lastDelete.fold(a)(ld => a.join(ld, pks, "left")
+            .where(col(LastDeleteCol).isNull || col(LastDeleteCol) <= col(SidCol)))
+          .drop(SidCol, LastDeleteCol)
+          .coalesce(a.sparkSession.sparkContext.defaultParallelism)
+      }
+      try body(lastDelete.map(_.drop(LastDeleteCol)), appends)
+      finally lastDelete.foreach(_.unpersist())
+    }
+  }
+
+  private val SidCol = "__window_sid"
+  private val LastDeleteCol = "__window_last_delete"
+
+  /** ONE empty (CDC-silent) commit advancing the watermark when the
+    * walk's silent tail — its snapshots after the last window —
+    * crossed [[SilentTailMaxSnapshotsKey]]: keeps a long-silent source
+    * (hourly compactions, no data) from expiring the recorded watermark
+    * snapshot and forcing a data-identical full rebuild (VERDICT r14
+    * #3). `stamp` is the empty patch carrying the new watermark; it is
+    * evaluated inside the transaction. */
   def advanceSilent(
       spark: SparkSession,
       st: Storage,
-      allSids: Seq[Long],
-      dataSids: Seq[Long],
-      applied: StorageMetadata => Boolean)(stamp: => Patch): Int =
-    if (!silentTailNeedsAdvance(spark, allSids, dataSids)) 0
+      walk: Walk,
+      windows: Seq[Window],
+      applied: StorageMetadata => Boolean)(stamp: => Patch): Int = {
+    val bound = longConf(spark, SilentTailMaxSnapshotsKey, DefaultSilentTailMaxSnapshots)
+    val tail = walk.all.size - 1 - windows.lastOption.fold(-1)(w => walk.all.indexOf(w.to))
+    if (bound <= 0 || tail < bound) 0
     else commitUnlessApplied(st, applied)(_ => stamp)
+  }
 
   /** CONTINUOUS maintenance through Structured Streaming: the source's
     * CDC stream (`graft-cdc`, snapshot-id offsets) triggers an
@@ -134,7 +251,7 @@ object ViewMaintenance {
     * source-snapshot contract, and a chained view's operator seeing one
     * coarse CDC commit where they expected N deserves an attributable
     * line in the maintainer's log. */
-  def shouldCoalesce(spark: SparkSession, requested: Boolean, pendingDataSnapshots: Int): Boolean =
+  private def shouldCoalesce(spark: SparkSession, requested: Boolean, pendingDataSnapshots: Int): Boolean =
     requested || {
       val bound = longConf(spark, AutoCoalesceSnapshotsKey, DefaultAutoCoalesceSnapshots)
       val auto = bound > 0 && pendingDataSnapshots >= bound
@@ -144,18 +261,6 @@ object ViewMaintenance {
           "one coarser CDC commit for this window)")
       auto
     }
-
-  /** Trailing CDC-silent snapshot count of one walk (every snapshot
-    * after the last data-bearing one; the whole walk when none bear
-    * data), and whether it warrants an empty watermark-advance commit. */
-  def silentTailNeedsAdvance(spark: SparkSession, allSids: Seq[Long], dataSids: Seq[Long]): Boolean = {
-    val bound = longConf(spark, SilentTailMaxSnapshotsKey, DefaultSilentTailMaxSnapshots)
-    if (bound <= 0) return false
-    val tail =
-      if (dataSids.isEmpty) allSids.size
-      else allSids.size - allSids.indexOf(dataSids.last) - 1
-    tail >= bound
-  }
 
   /** Merge-on-read threshold for VIEW STATE sweeps (VERDICT r15 #3):
     * every refresh's key sweep used to CoW-rewrite each touched state
@@ -216,7 +321,7 @@ object ViewMaintenance {
   /** O(1) size estimate of one source snapshot's CDC delta: the
     * changelog's bitmap cardinalities, no Spark job. `addsOnly` for
     * consumers that join only the ADD batches (JoinView). */
-  def changelogRows(storage: Storage, snapshotId: Long, addsOnly: Boolean): Long =
+  private def changelogRows(storage: Storage, snapshotId: Long, addsOnly: Boolean): Long =
     storage.changeLog(snapshotId).map { cl =>
       cl.addedRows.map(_.numRows).sum +
         (if (addsOnly) 0L else cl.deletedRows.map(_.numRows).sum)

@@ -566,8 +566,24 @@ class JoinViewSpec extends AnyFunSuite {
     r.update(col("okey") === liveKey, Map("o_totalprice" -> lit(123.0)))
     l.compact(targetFileRows = 1000000L)
     r.compact(targetFileRows = 1000000L)
+    // same-PK churn inside each side's coalesced window: a left row
+    // appended and then deleted, a right PK updated twice, a left row
+    // deleted and re-inserted
+    def leftRow(c: org.apache.spark.sql.Column) = l.readAll().filter(c)
+      .orderBy(col("okey").desc, col("l_linenumber")).limit(1).collect()(0)
+    def deleteRow(row: org.apache.spark.sql.Row): Unit =
+      l.delete(col("okey") === lit(row.getAs[Any]("okey")) &&
+        col("l_linenumber") === lit(row.getAs[Any]("l_linenumber")))
+    deleteRow(leftRow(col("okey") > 700L))
+    r.update(col("okey") === liveKey, Map("o_totalprice" -> lit(456.0)))
+    val back = leftRow(col("okey") <= 700L)
+    deleteRow(back)
+    val lSchema = l.readAll().schema
+    l.append(spark.createDataFrame(java.util.Arrays.asList(back), lSchema)
+      .withColumn("l_quantity",
+        (col("l_quantity") + 1).cast(lSchema("l_quantity").dataType)))
 
-    assert(jv.refresh() == 4, "per-snapshot: 2 left + 2 right data snapshots " +
+    assert(jv.refresh() == 8, "per-snapshot: 5 left + 3 right data snapshots " +
       "(silent compacts mint no commits)")
     assert(twin.refresh(None, coalesce = true) == 2,
       "coalesced: exactly ONE state commit per side")
@@ -575,6 +591,7 @@ class JoinViewSpec extends AnyFunSuite {
     val b = twin.read()
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "coalesced state diverged from per-snapshot application")
+    assertSame(a, expected(l, r))
     assertSame(b, expected(l, r))
     assert(jv.refresh() == 0 && twin.refresh(None, coalesce = true) == 0)
   }

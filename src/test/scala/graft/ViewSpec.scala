@@ -224,7 +224,20 @@ class ViewSpec extends AnyFunSuite {
     src.upsert(orders.filter(col("o_orderkey") > 300L && col("o_orderkey") <= 400L)
       .withColumn("o_totalprice", col("o_totalprice") + 500000.0))
     src.compact(targetFileRows = 1000000L)
-    assert(mv.refresh() == 3,
+    // same-PK churn inside the one coalesced window: a PK appended and
+    // then deleted, a PK updated twice, a PK deleted and re-inserted
+    def liveKey(c: org.apache.spark.sql.Column): Long =
+      src.readAll().filter(c && col("o_totalprice") > 50000)
+        .agg(max(col("o_orderkey"))).collect()(0).getLong(0)
+    src.delete(col("o_orderkey") === liveKey(col("o_orderkey") > 1000L))
+    val twice = liveKey(col("o_orderkey") > 300L && col("o_orderkey") <= 400L)
+    src.upsert(orders.filter(col("o_orderkey") === twice)
+      .withColumn("o_totalprice", col("o_totalprice") + 700000.0))
+    val back = liveKey(col("o_orderkey") <= 300L)
+    src.delete(col("o_orderkey") === back)
+    src.append(orders.filter(col("o_orderkey") === back)
+      .withColumn("o_totalprice", col("o_totalprice") + 1.0))
+    assert(mv.refresh() == 7,
       "per-snapshot refresh: one commit per DATA snapshot, silent compact skipped")
     assert(twin.refresh(None, coalesce = true) == 1,
       "coalesced refresh: the whole backlog in ONE state commit")
@@ -232,6 +245,9 @@ class ViewSpec extends AnyFunSuite {
     val b = twin.dataset.readAll()
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "coalesced state diverged from per-snapshot application")
+    val exp = v.toDF(spark)
+    assert(b.exceptAll(exp).isEmpty && exp.exceptAll(b).isEmpty,
+      "coalesced state diverged from the from-scratch transform")
     // both are no-ops afterwards (the per-snapshot twin re-checks the
     // silent tail without committing)
     assert(mv.refresh() == 0 && twin.refresh(None, coalesce = true) == 0)
