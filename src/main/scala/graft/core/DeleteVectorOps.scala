@@ -3,6 +3,7 @@ package graft.core
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.roaringbitmap.RoaringBitmap
 
 import graft.format.RowBitmap
 
@@ -36,6 +37,15 @@ object DeleteVectorOps {
 
   def dvMaxFraction(spark: SparkSession): Double =
     Confs.fractionConf(spark, DvMaxFractionKey, 0)
+
+  /** The vector entry of file `f` once rows `dead` die too: its entry in
+    * `dvs`, if any, merged with `dead`. */
+  private[core] def withDead(dvs: Map[String, RowBitmap], f: String, dead: RoaringBitmap): RowBitmap = {
+    val merged = dvs.get(f).flatMap(_.bitmapB64)
+      .fold(dead)(b64 => RoaringBitmap.or(DmlOps.deserializeBitmap(b64), dead))
+    RowBitmap(f, allRows = false, numRows = merged.getLongCardinality,
+      bitmapB64 = Some(DmlOps.bitmapToB64(merged)))
+  }
 
   /** Normalized-path → serialized-bitmap map for a vector set, keyed
     * exactly like `_metadata.file_path` renders (the one idiom every

@@ -51,7 +51,6 @@ object DmlOps {
     deleteCore(spark, storage, snapshotId,
       candidates = ReadOp.plan(spark, storage, snapshotId, Some(cond)).files,
       markMatched = df => df.filter(cond),
-      keepSurvivors = df => df.filter(!coalesce(cond, lit(false))),
       dvFracOverride = dvMaxFraction,
       extraAdds = extraAdds)
 
@@ -109,7 +108,6 @@ object DmlOps {
     deleteCore(spark, storage, snapshotId,
       candidates = candidates,
       markMatched = df => df.join(k, keyCols, "left_semi"),
-      keepSurvivors = df => df.join(k, keyCols, "left_anti"),
       dvFracOverride = dvFracOverride,
       extraAdds = extraAdds)
   }
@@ -278,7 +276,6 @@ object DmlOps {
       snapshotId: Long,
       candidates: Seq[String],
       markMatched: DataFrame => DataFrame,
-      keepSurvivors: DataFrame => DataFrame,
       dvFracOverride: Option[Double] = None,
       extraAdds: Option[DataFrame] = None): Option[Patch] = {
     if (candidates.isEmpty) return None
@@ -354,22 +351,17 @@ object DmlOps {
 
     // ---- merge-on-read leg: no data IO — merge each file's new dead
     // rows into its (possibly absent) existing vector
-    val dvAdded: Map[String, RowBitmap] = morFiles.iterator.map { f =>
-      val merged = dvs.get(f).flatMap(_.bitmapB64) match {
-        case Some(b64) =>
-          val bm = deserializeBitmap(b64); bm.or(deletedByFile(f)); bm
-        case None => deletedByFile(f)
-      }
-      f -> RowBitmap(f, allRows = false, numRows = merged.getLongCardinality,
-        bitmapB64 = Some(bitmapToB64(merged)))
-    }.toMap
-    def deadIn(fs: Set[String]) = fs.iterator.map(f => deletedByFile(f).getLongCardinality).sum
+    val dvAdded: Map[String, RowBitmap] = morFiles.iterator.map(f =>
+      f -> DeleteVectorOps.withDead(dvs, f, deletedByFile(f))).toMap
 
     // ---- copy-on-write leg: rewrite ONLY the CoW files, keeping the
     // survivors (record addresses as-is, the record_address_input=True
-    // analog, delete.py:103). With `extraAdds` the adds ride the same
-    // write in their own files (ADD bitmaps; survivors stay CDC-silent);
-    // a pure-MoR sweep writes them alone, cluster-shaped.
+    // analog, delete.py:103). The rewrite scan masks the matched rows by
+    // their bitmaps, so the match is not evaluated a second time: a row
+    // whose condition or key is NULL never matched and so survives.
+    // With `extraAdds` the adds ride the same write in their own files
+    // (ADD bitmaps; survivors stay CDC-silent); a pure-MoR sweep writes
+    // them alone, cluster-shaped.
     def addsOf(p: Patch) = p.changeLog.toList.flatMap(_.addedRows)
     val (cowPatch, addBitmaps) =
       if (cowFiles.isEmpty) {
@@ -378,8 +370,7 @@ object DmlOps {
         (ap, addsOf(ap))
       } else {
         val (patch, written) = RewriteOp.replaceFiles(spark, storage, snapshotId,
-            cowFiles.toSeq, deletedRows = deadIn(cowFiles)) { live =>
-          val survivors = keepSurvivors(live)
+            cowFiles.toSeq, deleted = deletedByFile.view.filterKeys(cowFiles).toMap) { survivors =>
           extraAdds match {
             case Some(adds) =>
               val p = AppendOp.writeSplitFiles(spark, storage, survivors, adds)
@@ -404,7 +395,8 @@ object DmlOps {
     }, addedRows = addBitmaps)
 
     Some(cowPatch.copy(
-      statsDelta = cowPatch.statsDelta + StorageStatistics(numRows = -deadIn(morFiles)),
+      statsDelta = cowPatch.statsDelta + StorageStatistics(
+        numRows = -morFiles.iterator.map(f => deletedByFile(f).getLongCardinality).sum),
       changeLog = Some(deleteLog),
       dvAdded = dvAdded,
       dvObserved = morFiles.iterator.map(f => f -> dvs.get(f).flatMap(_.bitmapB64)).toMap))

@@ -46,12 +46,22 @@ import graft.format._
   */
 object RecordIO {
 
-  /** Per-record-file cap, uncompressed payload bytes (reference default
-    * 100 MiB, options.py:74-75). */
+  /** Per-record-file cap, uncompressed payload bytes. The reference caps
+    * its ArrayRecord files at 100 MiB (options.py:74-75); this cap is
+    * larger because a lookup's cost does not grow with its file: it
+    * decodes one page (see [[RecordPageBytes]]), so a larger file only
+    * means fewer footers to open. */
   val MaxRecordFileBytes: Long = 512L * 1024 * 1024
 
-  private val RecordSchema =
-    "message graft_record { required binary value; }"
+  /** Page byte target of a record file's `value` column. A lookup
+    * decodes the whole page that holds its row, so the page is the unit
+    * of random access, like the reference's ArrayRecord group (default
+    * one record, options.py:80-87, docs/performance.md:44-46). Records
+    * smaller than the target pack into a page of at most the target plus
+    * one record; a record at or above the target closes its page.
+    * Parquet's 1 MiB default made every lookup of a 1 KiB record decode
+    * about a thousand records. */
+  val RecordPageBytes: Int = 64 * 1024
 
   /** Append `df` (logical schema) writing record payloads + index files +
     * both manifests; returns the merged Patch. */
@@ -221,6 +231,11 @@ object RecordIO {
   /** Observability: files opened by [[PositionalFile]] in this JVM
     * (record files, and index files read by [[RandomAccessReader]]). */
   private[graft] def positionalFileOpens: Long = positionalOpens.get()
+
+  private[core] val decodedBytes = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Observability: bytes of the pages [[PositionalFile]] decoded in this
+    * JVM ([[Span.bytes]], record and index files alike). */
+  private[graft] def positionalDecodedBytes: Long = decodedBytes.get()
 
   /** Open a Parquet file with read options built from `conf`.
     * `ParquetFileReader.open(InputFile)` alone builds a fresh Hadoop
@@ -437,6 +452,7 @@ private[graft] final class RecordCache(
     if (s != null) lru.get(s)
     else {
       s = f.decode(g, p)
+      RecordIO.decodedBytes.addAndGet(s.bytes)
       f.decoded.put(key, s)
       lru.put(s, f)
       heldBytes += s.bytes
@@ -488,7 +504,17 @@ final class RecordFileWriter(tableLocation: String, field: String, conf: Configu
     import org.apache.parquet.hadoop.example.GroupWriteSupport
     val c = new Configuration(conf)
     GroupWriteSupport.setSchema(schema, c)
-    writer = ExampleParquetWriter.builder(abs).withConf(c).withType(schema).build()
+    // pages for random access (RecordIO.RecordPageBytes): the size check
+    // runs after every record, not every 100 or more. Payloads are
+    // opaque: a dictionary page would be decoded by every lookup into
+    // the pages it encodes, and min/max statistics of blobs never prune.
+    writer = ExampleParquetWriter.builder(abs).withConf(c).withType(schema)
+      .withPageSize(RecordIO.RecordPageBytes)
+      .withMinRowCountForPageSizeCheck(1)
+      .withMaxRowCountForPageSizeCheck(1)
+      .withDictionaryEncoding(false)
+      .withStatisticsEnabled("value", false)
+      .build()
     rowId = 0
     bytesWritten = 0L
   }

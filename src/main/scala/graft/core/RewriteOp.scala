@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.roaringbitmap.RoaringBitmap
 
 import graft.format._
 
@@ -17,8 +18,9 @@ object RewriteOp {
     *
     *  1. scan `files` under the physical schema, in the given order
     *     (record addresses stay opaque, payload files never move);
-    *  2. fold the snapshot's delete vectors on `files` into the scan, so
-    *     `write` sees live rows only; the folded entries retire
+    *  2. fold the snapshot's delete vectors on `files` into the scan,
+    *     merged with `deleted` (the rows the caller drops, per file), so
+    *     `write` sees the surviving rows only; the folded entries retire
     *     (`dvRemoved`);
     *  3. `write` lands its files and returns the landed Patch plus the
     *     number of scanned rows it carried over (rows it adds from
@@ -28,11 +30,12 @@ object RewriteOp {
     *
     * Conservation, checked before anything is returned (so a failing
     * rewrite commits nothing):
-    * {{{ rows carried = physical rows of files - folded dead rows - deletedRows }}}
-    * where `deletedRows` are the rows the caller dropped on purpose (a
-    * delete's newly dead rows). The stats delta is written + removed +
-    * the fold compensation: folded rows were subtracted when their
-    * vector was written, and the removed manifests subtract them again.
+    * {{{ rows carried = physical rows of files - folded dead rows - deleted rows }}}
+    * where the deleted rows are those of `deleted` (a delete's newly
+    * dead rows, never already dead). The stats delta is written +
+    * removed + the fold compensation: folded rows were subtracted when
+    * their vector was written, and the removed manifests subtract them
+    * again.
     *
     * Returns the assembled Patch (no changelog: callers that log changes
     * add their own) and the written Patch. Empty `files`: two empty
@@ -42,15 +45,17 @@ object RewriteOp {
       storage: Storage,
       snapshotId: Long,
       files: Seq[String],
-      deletedRows: Long = 0L)(
+      deleted: Map[String, RoaringBitmap] = Map.empty)(
       write: DataFrame => (Patch, Long)): (Patch, Patch) = {
     if (files.isEmpty) return (Patch(), Patch())
     val fileSet = files.toSet
     val physical = ReadOp.physicalSchema(storage.schema, storage.recordFields)
     val scan = spark.read.schema(physical).parquet(files.map(storage.absolute): _*)
     val dvs = storage.deleteVectors(snapshotId).view.filterKeys(fileSet).toMap
-    val live = DeleteVectorOps.maskFilter(spark, storage, dvs).fold(scan)(scan.filter)
+    val mask = dvs ++ deleted.map { case (f, bm) => f -> DeleteVectorOps.withDead(dvs, f, bm) }
+    val live = DeleteVectorOps.maskFilter(spark, storage, mask).fold(scan)(scan.filter)
     val folded = dvs.valuesIterator.map(_.numRows).sum
+    val deletedRows = deleted.valuesIterator.map(_.getLongCardinality).sum
 
     val (written, carried) = write(live)
     val co = manifestCarryover(spark, storage, snapshotId, fileSet)

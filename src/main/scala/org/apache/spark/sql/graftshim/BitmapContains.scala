@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInput
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.RoaringBitmap
 
 /** Roaring-bitmap row-mask membership as a NATIVE expression:
   * `(filePath, rowIndex) → bitmap.contains(rowIndex)` against a
@@ -31,17 +32,23 @@ case class BitmapContains(
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_bitmap_contains"
 
-  override def nullSafeEval(file: Any, row: Any): Any =
-    if (missingAbsent)
-      BitmapContains.containsLenient(bitmaps, file.asInstanceOf[UTF8String], row.asInstanceOf[Long])
-    else
-      BitmapContains.contains(bitmaps, file.asInstanceOf[UTF8String], row.asInstanceOf[Long])
+  override def nullSafeEval(file: Any, row: Any): Any = {
+    val bm = BitmapContains.bitmapOf(bitmaps, file.asInstanceOf[UTF8String], missingAbsent)
+    bm != null && bm.contains(row.asInstanceOf[Long].toInt)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("bitmaps", bitmaps, classOf[Broadcast[_]].getName)
-    val fn = if (missingAbsent) "containsLenient" else "contains"
-    defineCodeGen(ctx, ev, (f, r) =>
-      s"org.apache.spark.sql.graftshim.BitmapContains.$fn($ref, $f, $r)")
+    // a file's rows arrive together: its bitmap is looked up once per
+    // run of rows, not once per row
+    val file = ctx.addMutableState(classOf[UTF8String].getName, "bitmapFile")
+    val bitmap = ctx.addMutableState(classOf[RoaringBitmap].getName, "fileBitmap")
+    nullSafeCodeGen(ctx, ev, (f, r) =>
+      s"""if ($file == null || !$file.equals($f)) {
+         |  $file = $f.clone();
+         |  $bitmap = org.apache.spark.sql.graftshim.BitmapContains.bitmapOf($ref, $f, $missingAbsent);
+         |}
+         |${ev.value} = $bitmap != null && $bitmap.contains((int) $r);""".stripMargin)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -50,21 +57,16 @@ case class BitmapContains(
 
 object BitmapContains {
 
-  /** Static entry shared by eval and generated code. */
-  def contains(bc: Broadcast[_], file: UTF8String, row: Long): Boolean = {
-    val map = bc.value.asInstanceOf[Map[String, String]]
-    val k = graft.core.BitmapCache.normKey(file.toString)
-    graft.core.BitmapCache.get(map(k)).contains(row.toInt)
-  }
-
-  /** Like [[contains]], but a file with no map entry is simply "no dead
-    * rows here" — the delete-vector mask shape. */
-  def containsLenient(bc: Broadcast[_], file: UTF8String, row: Long): Boolean = {
+  /** The bitmap of `file`, shared by eval and generated code. A file
+    * without an entry is null when `missingAbsent`, else a bug that
+    * throws. */
+  def bitmapOf(bc: Broadcast[_], file: UTF8String, missingAbsent: Boolean): RoaringBitmap = {
     val map = bc.value.asInstanceOf[Map[String, String]]
     val k = graft.core.BitmapCache.normKey(file.toString)
     map.get(k) match {
-      case Some(b64) => graft.core.BitmapCache.get(b64).contains(row.toInt)
-      case None => false
+      case Some(b64) => graft.core.BitmapCache.get(b64)
+      case None if missingAbsent => null
+      case None => throw new NoSuchElementException(s"key not found: $k")
     }
   }
 

@@ -77,6 +77,79 @@ class RandomAccessSpec extends AnyFunSuite {
     RecordScans.check(ds, "text", "doc_id")
   }
 
+  /** `"<id>\u0001"` and then `8 * copies` bytes of filler. */
+  private def keyedPayload(id: Long, copies: Int): Array[Byte] =
+    (s"$id\u0001" + f"$id%08d" * copies).getBytes("UTF-8")
+
+  /** [[keyedPayload]] of every `id` of a Spark range. */
+  private def keyedRows(from: Long, until: Long, copies: Int) =
+    spark.range(from, until).select(col("id"), encode(concat(col("id").cast("string"),
+      lit("\u0001"), repeat(lpad(col("id").cast("string"), 8, "0"), copies)), "UTF-8").as("body"))
+
+  /** Every payload of `ds`, by the id in its first bytes, read by random
+    * access and by stitch. */
+  private def payloadsByKey(ds: SpaceDataset): (Map[Long, Seq[Byte]], Map[Long, Seq[Byte]]) = {
+    def key(b: Array[Byte]) = new String(b, "UTF-8").takeWhile(_ != '\u0001').toLong
+    val ra = new RandomAccessReader(ds, "body")
+    (ra.getBatch(0L until ra.length).map(b => key(b) -> b.toSeq).toMap,
+      ds.readAll().collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap)
+  }
+
+  test("record files of the 1 MiB-page layout and the paged layout read identically") {
+    // the first 3000 payloads in one file of parquet-mr's default layout
+    // (how record files were written before they were paged), the rest
+    // appended by the engine
+    val (mixed, ext) = RecordScans.externalTable(spark,
+      (0L until 3000L).map(keyedPayload(_, 128)), RecordScans.WriterDefaults)
+    mixed.append(keyedRows(3000, 6000, 128).repartition(2))
+    val paged = SpaceDataset.create(spark,
+      Files.createTempDirectory("graft_ra_paged_").toString + "/tbl",
+      mixed.schema, Seq("id"), Seq("body"))
+    paged.append(keyedRows(0, 6000, 128).repartition(3))
+
+    val pageBytes = (f: String) => RecordScans.pageLayout(spark, f).groups.flatten.map(_.bytes).max
+    assert(pageBytes(ext) > 512 * 1024)
+    val engineFiles = RecordScans.recordFiles(mixed).filterNot(_.endsWith("records.parquet")) ++
+      RecordScans.recordFiles(paged)
+    val record = keyedPayload(5999, 128).length
+    assert(engineFiles.size >= 3 &&
+      engineFiles.forall(pageBytes(_) <= RecordIO.RecordPageBytes + record))
+
+    RecordScans.check(mixed, "body", "id")
+    val want = (0L until 6000L).map(i => i -> keyedPayload(i, 128).toSeq).toMap
+    assert(payloadsByKey(mixed) == ((want, want)))
+    assert(payloadsByKey(paged) == ((want, want)))
+  }
+
+  test("a 64-ordinal batch decodes at most one page and one record per ordinal") {
+    val rows = keyedRows(0, 2000, 1024) // 8 KiB payloads
+    val record = keyedPayload(1999, 1024).length
+    val bound = 64L * (RecordIO.RecordPageBytes + record)
+    val paged = SpaceDataset.create(spark,
+      Files.createTempDirectory("graft_ra_decode_").toString + "/tbl",
+      rows.schema, Seq("id"), Seq("body"))
+    paged.append(rows.coalesce(2))
+    // the same payloads in one file of 1 MiB pages
+    val (unpaged, _) = RecordScans.externalTable(spark,
+      (0L until 2000L).map(keyedPayload(_, 1024)), RecordScans.WriterDefaults)
+
+    val rnd = new scala.util.Random(64)
+    val ordinals = Seq.fill(64)(rnd.nextInt(2000).toLong)
+    def decoded(ds: SpaceDataset): Long = {
+      val ra = new RandomAccessReader(ds, "body")
+      val before = RecordIO.positionalDecodedBytes
+      val got = ra.getBatch(ordinals)
+      val bytes = RecordIO.positionalDecodedBytes - before
+      assert(got.forall(_.length >= 8 * 1024))
+      bytes
+    }
+    val onPages = decoded(paged)
+    assert(onPages <= bound, s"decoded $onPages B, bound $bound B")
+    // the bound tells the layouts apart
+    val unpagedBytes = decoded(unpaged)
+    assert(unpagedBytes > bound, s"1 MiB pages decoded $unpagedBytes B, bound $bound B")
+  }
+
   test("catalog create/list/load/delete lifecycle") {
     val cat = new DirCatalog(spark, Files.createTempDirectory("graft_cat_").toString)
     assert(cat.datasets().isEmpty)

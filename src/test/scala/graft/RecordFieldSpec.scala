@@ -4,15 +4,6 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.bytes.BytesInput
-import org.apache.parquet.column.Encoding
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetFileWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,69 +23,11 @@ class RecordFieldSpec extends AnyFunSuite {
   private def docsBinary = Tables.read(spark, sfDir, "documents")
     .withColumn("text", encode(col("text"), "UTF-8"))
 
-  private val RecordType =
-    MessageTypeParser.parseMessageType("message graft_record { required binary value; }")
-
-  /** A record file of `payloads` in row groups of 100 rows and pages of
-    * 9. With `pageIndex = false` the pages are written through the
-    * page-write call that takes no row count, which leaves the offset
-    * index out of the file. */
-  private def writeRecordFile(path: String, payloads: Seq[Array[Byte]], pageIndex: Boolean): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (pageIndex) {
-      val w = ExampleParquetWriter.builder(new Path(path)).withConf(conf).withType(RecordType)
-        .withRowGroupRowCountLimit(100).withPageRowCountLimit(9)
-        .withMinRowCountForPageSizeCheck(1).build()
-      val groups = new SimpleGroupFactory(RecordType)
-      try payloads.foreach(p => w.write(groups.newGroup().append("value",
-        Binary.fromConstantByteArray(p))))
-      finally w.close()
-    } else {
-      val w = new ParquetFileWriter(conf, RecordType, new Path(path))
-      val desc = RecordType.getColumns.get(0)
-      w.start()
-      payloads.grouped(100).foreach { group =>
-        w.startBlock(group.size.toLong)
-        w.startColumn(desc, group.size.toLong, CompressionCodecName.UNCOMPRESSED)
-        group.grouped(9).foreach { page =>
-          val plain = java.nio.ByteBuffer.allocate(page.map(_.length + 4).sum)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          page.foreach(p => plain.putInt(p.length).put(p))
-          w.writeDataPage(page.size, plain.capacity, BytesInput.from(plain.array),
-            Encoding.BIT_PACKED, Encoding.BIT_PACKED, Encoding.PLAIN)
-        }
-        w.endColumn()
-        w.endBlock()
-      }
-      w.end(new java.util.HashMap[String, String]())
-    }
-  }
-
-  /** (row groups, pages of the first group, whether every chunk has an
-    * offset index) of a Parquet file. */
-  private def pageLayout(path: String): (Int, Int, Boolean) = {
-    val reader = RecordIO.openParquet(path, spark.sparkContext.hadoopConfiguration)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val indexes = blocks.map(b => Option(reader.readOffsetIndex(b.getColumns.get(0))))
-      (blocks.size, indexes.head.map(_.getPageCount).getOrElse(1), indexes.forall(_.isDefined))
-    } finally reader.close()
-  }
-
   /** A table over one external record file of `n` payloads
     * `"<id>\u0001<filler>"` of varying length. */
-  private def externalTable(n: Int, pageIndex: Boolean): (SpaceDataset, String) = {
-    val ext = Files.createTempDirectory("graft_pos_").toString + "/records.parquet"
-    writeRecordFile(ext, (0 until n).map(i =>
-      (s"$i\u0001" + "abcdefgh" * (i % 23)).getBytes("UTF-8")), pageIndex)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("body", org.apache.spark.sql.types.BinaryType)))
-    val ds = SpaceDataset.create(spark, freshLoc(), schema, Seq("id"), Seq("body"))
-    RecordLoader.loadRecordParquet(spark, ds, "body", Seq(ext), Map(
-      "id" -> expr("CAST(split(decode(value, 'UTF-8'), '\u0001', 2)[0] AS BIGINT)")))
-    (ds, ext)
-  }
+  private def externalTable(n: Int, layout: RecordScans.Layout): (SpaceDataset, String) =
+    RecordScans.externalTable(spark, (0 until n).map(i =>
+      (s"$i\u0001" + "abcdefgh" * (i % 23)).getBytes("UTF-8")), layout)
 
   private def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
     df.collect()
@@ -316,9 +249,9 @@ class RecordFieldSpec extends AnyFunSuite {
   }
 
   test("positional stitch over many row groups and pages matches a full scan") {
-    val (ds, ext) = externalTable(1000, pageIndex = true)
-    val (groups, pages, indexed) = pageLayout(ext)
-    assert(groups == 10 && pages > 5 && indexed, s"layout ($groups, $pages, $indexed)")
+    val (ds, ext) = externalTable(1000, RecordScans.NineRowPages)
+    val layout = RecordScans.pageLayout(spark, ext)
+    assert(layout.groups.size == 10 && layout.groups.head.size > 5 && layout.indexed, layout)
     RecordScans.check(ds, "body", "id")
     // a filtered read stitches only the surviving rows, from the pages
     // that hold them
@@ -329,9 +262,44 @@ class RecordFieldSpec extends AnyFunSuite {
   }
 
   test("positional stitch falls back to whole row groups without a page index") {
-    val (ds, ext) = externalTable(450, pageIndex = false)
-    val (groups, _, indexed) = pageLayout(ext)
-    assert(groups == 5 && !indexed, s"layout ($groups, indexed = $indexed)")
+    val (ds, ext) = externalTable(450, RecordScans.NoOffsetIndex)
+    val layout = RecordScans.pageLayout(spark, ext)
+    assert(layout.groups.size == 5 && !layout.indexed, layout)
+    RecordScans.check(ds, "body", "id")
+  }
+
+  test("engine-written record files are paged for random access") {
+    val target = RecordIO.RecordPageBytes
+    val big = target + 4096
+    val rnd = new scala.util.Random(7)
+    def payload(n: Int): Array[Byte] = { val b = new Array[Byte](n); rnd.nextBytes(b); b }
+    // 1 KiB payloads with one past the target in every 500, then a run
+    // of five past the target
+    val rows = (0 until 2000).map(i => (i.toLong, payload(if (i % 500 == 250) big else 1024))) ++
+      (2000 until 2005).map(i => (i.toLong, payload(big)))
+    val df = spark.createDataFrame(rows).toDF("id", "body")
+    val ds = SpaceDataset.create(spark, freshLoc(), df.schema, Seq("id"), Seq("body"))
+    ds.append(df.coalesce(1))
+
+    val Seq(file) = RecordScans.recordFiles(ds)
+    val layout = RecordScans.pageLayout(spark, file)
+    assert(layout.indexed && !layout.dictionary && !layout.statistics, layout)
+    val sizes = RecordScans.byPosition(spark, file, "value").toSeq.sortBy(_._1).map(_._2.length)
+    assert(sizes.size == rows.size)
+    val pages = layout.groups.flatten
+    val pageSizes = pages.scanLeft(0L)(_ + _.rows).sliding(2)
+      .map { case Seq(a, b) => sizes.slice(a.toInt, b.toInt) }.toSeq
+    pages.zip(pageSizes).foreach { case (page, recs) =>
+      // a page closes on the record that brings it to the target, so it
+      // holds at most the target plus that one record
+      assert(recs.init.sum < target, s"$page holds ${recs.init.sum} B before its last record")
+      assert(page.bytes <= target + recs.max, s"$page of records of ${recs.max} B")
+    }
+    // small records pack; a record past the target closes its page, and
+    // one that follows such a record sits alone
+    assert(pageSizes.filter(_.forall(_ == 1024)).map(_.size).max >= target / 2 / 1024)
+    assert(pageSizes.forall(recs => !recs.init.contains(big)))
+    assert(pageSizes.takeRight(4).forall(_ == Seq(big)), pageSizes.takeRight(5))
     RecordScans.check(ds, "body", "id")
   }
 

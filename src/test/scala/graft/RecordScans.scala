@@ -1,26 +1,66 @@
 package graft
 
-import scala.collection.mutable
+import java.nio.file.Files
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.bytes.BytesInput
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 import graft.core._
 
-/** Spark jobs started inside a block, and the shuffle bytes they wrote. */
-final case class JobCount(jobs: Int, stages: Int, shuffleBytes: Long)
+/** Spark jobs started inside a block, and the shuffle bytes they wrote.
+  * `calls` names every job, so a failed count assertion that prints the
+  * JobCount shows which job appeared. */
+final case class JobCount(jobs: Int, stages: Int, shuffleBytes: Long, calls: Seq[JobCount.Call]) {
+  override def toString: String =
+    s"JobCount(jobs = $jobs, stages = $stages, shuffleBytes = $shuffleBytes)" +
+      calls.map("\n  " + _).mkString
+}
 
 object JobCount {
+  /** One job: its SQL execution id (None outside a SQL execution) and
+    * the engine frames (`graft.`) of the call that started it, innermost
+    * first. A job Spark starts from a thread of its own (a broadcast, an
+    * adaptive query stage) has no engine frame; its execution id names
+    * the query it serves. */
+  final case class Call(jobId: Int, sqlExecution: Option[Long], site: Seq[String]) {
+    override def toString: String =
+      s"job $jobId, sql execution ${sqlExecution.getOrElse("-")}: " +
+        (if (site.isEmpty) "no engine frame (a Spark thread)" else site.mkString(" < "))
+  }
+
+  /** The `graft.` frames of a stage's call site, without this object's. */
+  private def engineFrames(details: String): Seq[String] =
+    details.linesIterator.map(_.trim)
+      .filter(l => l.startsWith("graft.") && !l.startsWith("graft.JobCount")).toSeq
+
   def of[T](spark: SparkSession)(body: => T): (T, JobCount) = {
     val sc = spark.sparkContext
-    var jobs = 0
     var stages = 0
     var shuffle = 0L
+    val calls = mutable.ArrayBuffer[Call]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        jobs += 1
         stages += e.stageInfos.size
+        val sqlId = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
+        // the result stage carries the job's own call site
+        val site = e.stageInfos.sortBy(_.stageId).lastOption.fold(Seq.empty[String])(s =>
+          engineFrames(s.details))
+        calls += Call(e.jobId, sqlId, site)
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
         shuffle += Option(e.stageInfo.taskMetrics).map(_.shuffleWriteMetrics.bytesWritten).getOrElse(0L)
@@ -31,15 +71,117 @@ object JobCount {
     try {
       val out = body
       org.apache.spark.sql.graftshim.ListenerBusDrain(sc)
-      (out, listener.synchronized(JobCount(jobs, stages, shuffle)))
+      (out, listener.synchronized(JobCount(calls.size, stages, shuffle, calls.toList)))
     } finally sc.removeSparkListener(listener)
   }
 }
 
 /** Plain full scans of a record-field table's files with Spark's own
   * Parquet reader: the reference the positional reader is checked
-  * against. */
+  * against. Also writes record files of a chosen page layout, and reads
+  * the layout back. */
 object RecordScans {
+
+  private val RecordType =
+    MessageTypeParser.parseMessageType("message graft_record { required binary value; }")
+
+  /** Page layouts of a test record file. */
+  sealed trait Layout
+  /** Row groups of 100 rows, pages of 9 rows. */
+  case object NineRowPages extends Layout
+  /** The same, written through the page-write call that takes no row
+    * count, which leaves the offset index out of the file. */
+  case object NoOffsetIndex extends Layout
+  /** parquet-mr's defaults (1 MiB pages, dictionary encoding, statistics):
+    * how the engine wrote record files before it sized their pages for
+    * random access. */
+  case object WriterDefaults extends Layout
+
+  /** A record file of `payloads` at `path`. */
+  def writeRecordFile(spark: SparkSession, path: String, payloads: Seq[Array[Byte]],
+      layout: Layout): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    layout match {
+      case NoOffsetIndex =>
+        val w = new ParquetFileWriter(conf, RecordType, new Path(path))
+        val desc = RecordType.getColumns.get(0)
+        w.start()
+        payloads.grouped(100).foreach { group =>
+          w.startBlock(group.size.toLong)
+          w.startColumn(desc, group.size.toLong, CompressionCodecName.UNCOMPRESSED)
+          group.grouped(9).foreach { page =>
+            val plain = java.nio.ByteBuffer.allocate(page.map(_.length + 4).sum)
+              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+            page.foreach(p => plain.putInt(p.length).put(p))
+            w.writeDataPage(page.size, plain.capacity, BytesInput.from(plain.array),
+              Encoding.BIT_PACKED, Encoding.BIT_PACKED, Encoding.PLAIN)
+          }
+          w.endColumn()
+          w.endBlock()
+        }
+        w.end(new java.util.HashMap[String, String]())
+      case _ =>
+        val b = ExampleParquetWriter.builder(new Path(path)).withConf(conf).withType(RecordType)
+        val w = (if (layout == NineRowPages)
+          b.withRowGroupRowCountLimit(100).withPageRowCountLimit(9)
+            .withMinRowCountForPageSizeCheck(1)
+        else b).build()
+        val groups = new SimpleGroupFactory(RecordType)
+        try payloads.foreach(p => w.write(groups.newGroup().append("value",
+          Binary.fromConstantByteArray(p))))
+        finally w.close()
+    }
+  }
+
+  /** One page of a record file: its rows, and its bytes as the offset
+    * index gives them (page header included). */
+  final case class Page(rows: Long, bytes: Long)
+
+  /** The page layout of a Parquet file's first column: pages per row
+    * group (one page for a group without an offset index), whether every
+    * chunk has an offset index, a dictionary page, and statistics. */
+  final case class PageLayout(groups: Seq[Seq[Page]], indexed: Boolean, dictionary: Boolean,
+      statistics: Boolean)
+
+  def pageLayout(spark: SparkSession, path: String): PageLayout = {
+    val reader = RecordIO.openParquet(path, spark.sparkContext.hadoopConfiguration)
+    try {
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val chunks = blocks.map(_.getColumns.get(0))
+      val indexes = chunks.map(c => Option(reader.readOffsetIndex(c)))
+      PageLayout(
+        blocks.zip(indexes).map {
+          case (b, Some(oi)) => (0 until oi.getPageCount).map(p =>
+            Page(oi.getLastRowIndex(p, b.getRowCount) - oi.getFirstRowIndex(p) + 1,
+              oi.getCompressedPageSize(p).toLong))
+          case (b, None) => Seq(Page(b.getRowCount, b.getTotalByteSize))
+        },
+        indexed = indexes.forall(_.isDefined),
+        dictionary = chunks.exists(_.hasDictionaryPage),
+        statistics = chunks.exists(c => c.getStatistics != null && !c.getStatistics.isEmpty))
+    } finally reader.close()
+  }
+
+  /** A table `(id, body)` whose `body` payloads are indexed in place in
+    * one external record file, written in `layout` from `payloads`: each
+    * payload starts with its id and `\u0001`. */
+  def externalTable(spark: SparkSession, payloads: Seq[Array[Byte]],
+      layout: Layout): (SpaceDataset, String) = {
+    val dir = Files.createTempDirectory("graft_pos_").toString
+    val ext = dir + "/records.parquet"
+    writeRecordFile(spark, ext, payloads, layout)
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("body", BinaryType)))
+    val ds = SpaceDataset.create(spark, dir + "/tbl", schema, Seq("id"), Seq("body"))
+    RecordLoader.loadRecordParquet(spark, ds, "body", Seq(ext), Map(
+      "id" -> expr("CAST(split(decode(value, 'UTF-8'), '\u0001', 2)[0] AS BIGINT)")))
+    (ds, ext)
+  }
+
+  /** Absolute paths of a table's record files. */
+  def recordFiles(ds: SpaceDataset): Seq[String] =
+    ds.recordManifest().collect().map(r => ds.storage.absolute(r.getString(0))).toSeq
 
   /** Every value of `column` in the Parquet file at `absPath`, by row
     * position. */

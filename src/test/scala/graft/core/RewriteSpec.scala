@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Tables, TestSpark}
+import graft.{JobCount, Tables, TestSpark}
 import graft.format.Patch
 
 /** The one file-rewrite path ([[RewriteOp.replaceFiles]]): its
@@ -94,6 +94,45 @@ class RewriteSpec extends AnyFunSuite {
       finally spark.conf.unset("spark.graft.writeCluster.advisoryBytes")
     assert(e.getMessage.contains("spark.graft.writeCluster.advisoryBytes"), e.getMessage)
     assert(ds.readAll().count() == 0)
+  }
+
+  test("a copy-on-write delete keeps the rows whose key or condition is NULL") {
+    val rows = Seq[(java.lang.Long, java.lang.Integer)](
+      (1L, 1), (2L, null), (3L, 3), (null, 4), (5L, null), (6L, 6))
+    val df = spark.createDataFrame(rows).toDF("id", "v")
+    val ds = SpaceDataset.create(spark, freshLoc(), df.schema, Seq("id"))
+    ds.append(df.coalesce(1))
+    val st = ds.storage
+    def live() = ds.readAll().collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+
+    // a NULL key matches no key, not even a NULL one
+    val keys = spark.createDataFrame(Seq[Tuple1[java.lang.Long]](Tuple1(1L), Tuple1(null)))
+      .toDF("id")
+    st.commitTransaction(policy = ConflictPolicy.Rewrite) { pinned =>
+      DmlOps.deleteByKeys(spark, st, pinned, keys)
+    }
+    assert(st.deleteVectors(st.metadata.currentSnapshotId).isEmpty, "expected a rewrite")
+    assert(live() == rows.tail.map(r => (Option(r._1), Option(r._2))).toSet)
+
+    // a NULL condition deletes nothing
+    ds.delete(col("v") >= 3)
+    assert(live() == Set((Some(2L), None), (Some(5L), None)))
+    assert(st.metadata.currentSnapshot.storageStatistics.numRows == 2)
+  }
+
+  test("a 5-row upsert into a 1,000-row table runs 6 jobs") {
+    val rows = spark.range(0, 1000).select(col("id"), (col("id") * 2).as("v"))
+    val ds = SpaceDataset.create(spark, freshLoc(), rows.schema, Seq("id"))
+    ds.append(rows.repartition(4))
+    val up = spark.range(100, 105).select(col("id"), lit(-1L).as("v"))
+    // 3 for the duplicate-key check of the input, 2 for the match bitmaps
+    // (the keys' broadcast, the scan of the candidate files), 1 for the
+    // write of survivors and new rows: the survivors are the scan minus
+    // the bitmaps, with no second join against the keys
+    val (_, jc) = JobCount.of(spark)(ds.upsert(up))
+    assert(jc.jobs == 6, jc)
+    val back = ds.readAll()
+    assert(back.count() == 1000 && back.filter(col("v") === -1L).count() == 5)
   }
 
   test("a merged patch keeps the oldest layout epoch") {
