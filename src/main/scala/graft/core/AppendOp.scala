@@ -184,15 +184,11 @@ object AppendOp {
     * order.
     *
     * `clustered` (a write-clustered shuffle) runs the write under the
-    * reduced AQE advisory of [[clusterAdvisoryConfs]]. A shuffle-free
-    * plan (scan/broadcast-join/union inputs: every delta-sized view
-    * state commit and plain append) gives AQE nothing to size, since
-    * output files = input partitions either way, yet AQE still runs
-    * each broadcast build as its own job with a replan loop around the
-    * write, so it runs with AQE off. Both scopes use a cloned session:
-    * a set/restore on the shared conf would leak into jobs planning
-    * concurrently in this session. Any other plan keeps AQE for
-    * partition coalescing and skew handling. */
+    * reduced AQE advisory of [[clusterAdvisoryConfs]], in a cloned
+    * session: a set/restore on the shared conf would leak into jobs
+    * planning concurrently in this session. Every other write runs
+    * with the session's own AQE settings (a write over a scan runs one
+    * job with AQE on or off, a write over a broadcast join two). */
   private def land(
       spark: SparkSession,
       storage: Storage,
@@ -207,12 +203,9 @@ object AppendOp {
       val w = f.write.mode("overwrite").options(writeOptions(spark, storage))
       (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(tmpAbs)
     }
-    val scoped =
-      if (clustered) clusterAdvisoryConfs(spark)
-      else if (shuffleFree(frame)) NoAqeConfs
-      else Nil
-    if (scoped.isEmpty) writeOut(frame)
-    else org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(frame, scoped)(writeOut)
+    if (clustered) org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(
+      frame, clusterAdvisoryConfs(spark))(writeOut)
+    else writeOut(frame)
 
     val fs = new Path(tmpAbs).getFileSystem(conf)
     val listed = Seq.newBuilder[Path]
@@ -317,21 +310,6 @@ object AppendOp {
   /** Transient discriminator column of [[writeSplitFiles]] — a dynamic
     * partition, so parquet drops it from the written data. */
   private val KindCol = "__graft_kind"
-
-  /** Scoped override for shuffle-free write plans (see [[land]]). */
-  private val NoAqeConfs = Seq("spark.sql.adaptive.enabled" -> "false")
-
-  /** True when `df`'s STATIC physical plan contains no shuffle
-    * exchange — the honest gate for dropping AQE around a write: with
-    * no shuffle to coalesce or skew-split, AQE cannot change the
-    * output layout, only add per-stage scheduling. The probe plans the
-    * query once on the original session (mirrors what the scoped clone
-    * will replan); tens of ms against the stage-jobs it saves. */
-  private def shuffleFree(df: DataFrame): Boolean =
-    !df.queryExecution.sparkPlan.exists {
-      case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => true
-      case _ => false
-    }
 
   /** Scoped-conf set for a write-clustered shuffle: the reduced AQE
     * advisory (`spark.graft.writeCluster.advisoryBytes`, default 8 MB —

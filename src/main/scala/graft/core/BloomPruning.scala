@@ -6,7 +6,6 @@ import org.apache.parquet.column.values.bloomfilter.BloomFilter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, Expression, In, InSet, Literal}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -166,7 +165,7 @@ object BloomPruning {
   }
 
   /** Drop candidate files whose membership evidence falsifies a point
-    * conjunct. `filters` are implicitly ANDed; `files` are
+    * conjunct. `filters` are resolved and implicitly ANDed; `files` are
     * table-root-relative. `evidence` carries the manifest's per
     * (file, column) markers when the planner has them: `false` means
     * the write path PROVED the file has no usable evidence for that
@@ -222,9 +221,9 @@ object BloomPruning {
       storage: Storage,
       filters: Seq[Expression]): Seq[(String, DataType, Seq[Any])] = {
     val eligible: Map[String, DataType] = {
-      // PHYSICAL names: both planning paths hand filters over the
-      // physical schema (renamed columns prune under their as-written
-      // name, matching the parquet footer's column paths)
+      // PHYSICAL names: the planner's filters are over the physical
+      // schema (renamed columns prune under their as-written name,
+      // matching the parquet footer's column paths)
       val schema = storage.schema
       (storage.primaryKeys ++ storage.metadata.bloomColumns).distinct.flatMap { c =>
         schema.fields.find(f => f.name == c && ManifestIO.statsEligible(f.dataType))
@@ -233,44 +232,21 @@ object BloomPruning {
     }
     if (eligible.isEmpty) return Nil
 
-    def attrName(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      case u: UnresolvedAttribute if u.nameParts.length == 1 => Some(u.nameParts.head)
+    def bloomAttr(e: Expression): Option[(String, DataType)] = e match {
+      case a: AttributeReference => eligible.get(a.name).map(a.name -> _)
       case _ => None
     }
-    def bloomAttr(e: Expression): Option[(String, DataType)] =
-      attrName(e).flatMap(n => eligible.get(n).map(n -> _))
-    // integral literals widen safely to the column's integral type; any
-    // other mismatch loses (a coerced comparison is not a raw-value probe)
+    // a literal of another type than the column is not a raw-value probe
     def litOf(e: Expression, dt: DataType): Option[Any] = e match {
-      case Literal(v, ldt) if v != null =>
-        (ldt, dt) match {
-          case (a, b) if a == b => Some(v)
-          case (IntegerType, LongType) => Some(v.asInstanceOf[Int].toLong)
-          case _ => None
-        }
+      case Literal(v, ldt) if v != null && ldt == dt => Some(v)
       case _ => None
     }
-    // Column-API predicates arrive unresolved ('`=`', '`in`', …);
-    // normalize like BucketPruning so both paths prune identically.
-    def norm(e: Expression): Expression = e match {
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction =>
-        (f.nameParts.map(_.toLowerCase).mkString("."), f.arguments) match {
-          case ("=", Seq(l, r)) => EqualTo(norm(l), norm(r))
-          case ("==", Seq(l, r)) => EqualTo(norm(l), norm(r))
-          case ("and", Seq(l, r)) => And(norm(l), norm(r))
-          case ("in", a +: vs) if vs.nonEmpty => In(norm(a), vs.map(norm))
-          case _ => e
-        }
-      case _ => e.mapChildren(norm)
-    }
-
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
     }
 
-    filters.map(norm).flatMap(conjuncts).flatMap {
+    filters.flatMap(conjuncts).flatMap {
       case EqualTo(a, v) if bloomAttr(a).isDefined =>
         val (c, dt) = bloomAttr(a).get
         litOf(v, dt).map(x => (c, dt, Seq(x)))

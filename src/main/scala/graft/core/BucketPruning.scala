@@ -1,6 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Expression, In, InSet, Literal, Murmur3HashFunction, Or}
 import org.apache.spark.sql.types.DataType
 
@@ -49,7 +48,7 @@ object BucketPruning {
     * assignments give up (keep all buckets) rather than enumerate. */
   private val MaxAssignments = 256
 
-  /** Buckets `filters` (implicitly ANDed) can reach under the
+  /** Buckets resolved `filters` (implicitly ANDed) can reach under the
     * SINGLE-HASH layout; None = all. `colTypes` must cover every bucket
     * column. */
   def reachableBuckets(
@@ -107,34 +106,15 @@ object BucketPruning {
     if (bucketCols.isEmpty || filters.isEmpty) return None
     val bucketSet = bucketCols.toSet
 
-    def attrName(e: Expression): Option[String] = e match {
-      case a: AttributeReference => Some(a.name)
-      case u: UnresolvedAttribute if u.nameParts.length == 1 => Some(u.nameParts.head)
+    def bucketAttr(e: Expression): Option[String] = e match {
+      case a: AttributeReference => Some(a.name).filter(bucketSet.contains)
       case _ => None
     }
-    def bucketAttr(e: Expression): Option[String] = attrName(e).filter(bucketSet.contains)
     def litOf(e: Expression, col: String): Option[Any] = e match {
       // a literal of a DIFFERENT type than the column hashes differently
       // than the write path did — never prune on it
       case Literal(v, dt) if v != null && dt == colTypes(col) => Some(v)
       case _ => None
-    }
-
-    // Column → expression conversion yields UnresolvedFunction nodes
-    // ('`=`', '`and`', '`or`', '`in`') before analysis; normalize them to
-    // their resolved shapes so both the API path (unresolved) and the
-    // Catalyst data-filter path (resolved) prune identically.
-    def norm(e: Expression): Expression = e match {
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction =>
-        (f.nameParts.map(_.toLowerCase).mkString("."), f.arguments) match {
-          case ("=", Seq(l, r)) => EqualTo(norm(l), norm(r))
-          case ("==", Seq(l, r)) => EqualTo(norm(l), norm(r))
-          case ("and", Seq(l, r)) => And(norm(l), norm(r))
-          case ("or", Seq(l, r)) => Or(norm(l), norm(r))
-          case ("in", a +: vs) if vs.nonEmpty => In(norm(a), vs.map(norm))
-          case _ => e
-        }
-      case _ => e.mapChildren(norm)
     }
 
     // walk returns e's DISJUNCTS as partial bucket-column assignments:
@@ -146,7 +126,7 @@ object BucketPruning {
     def capped(s: Set[Assign]): Option[Set[Assign]] =
       if (s.size > MaxAssignments) None else Some(s)
 
-    def walk(e0: Expression): Option[Set[Assign]] = norm(e0) match {
+    def walk(e: Expression): Option[Set[Assign]] = e match {
       case And(l, r) =>
         (walk(l), walk(r)) match {
           case (Some(a), Some(b)) =>

@@ -197,14 +197,10 @@ object DmlOps {
     // is released before returning.
     val proj = keys.select(pks.map(col): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // collect-type probes with bounded output (≤1025 rows / one min-max
-    // row): AQE's per-stage jobs are pure overhead — scoped off (the
-    // CacheManager lives in SharedState, so the clone sees the persist)
-    def noAqe[A](df: DataFrame)(body: DataFrame => A): A =
-      org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(df,
-        Seq("spark.sql.adaptive.enabled" -> "false"))(body)
+    // bounded probes (≤1025 rows / one min-max row) run without AQE;
+    // the CacheManager lives in SharedState, so the clone sees the persist
     try {
-      val probe = noAqe(proj.limit(MaxPointLookupKeys + 1))(_.collect())
+      val probe = withoutAqe(proj.limit(MaxPointLookupKeys + 1))(_.collect())
       if (probe.isEmpty) return None
       if (probe.length <= MaxPointLookupKeys) {
         // exact point form: every row matching the full composite key has
@@ -218,7 +214,7 @@ object DmlOps {
       } else {
         val aggs = pks.flatMap(pk =>
           Seq(min(col(pk)).as(s"__lo_$pk"), max(col(pk)).as(s"__hi_$pk")))
-        val row = noAqe(proj.agg(aggs.head, aggs.tail: _*))(_.collect())(0)
+        val row = withoutAqe(proj.agg(aggs.head, aggs.tail: _*))(_.collect())(0)
         val preds = pks.zipWithIndex.flatMap { case (pk, i) =>
           if (row.isNullAt(2 * i)) None
           else Some(col(pk) >= lit(row.get(2 * i)) && col(pk) <= lit(row.get(2 * i + 1)))
@@ -296,20 +292,14 @@ object DmlOps {
       .fold(raw)(raw.filter)
 
     // one (file, serializedBitmap) row per affected file — bitmaps are
-    // built in executors; the driver never sees row positions.
-    // On a driver-small candidate set (every MV state sweep and most
-    // keyed DML), AQE is pure overhead for this COLLECT-type query: it
-    // materializes each of the plan's exchanges (the key distinct, the
-    // semi-join build, the bitmap partial) as its OWN sequential job
-    // with a replan between — profiled at 5-7 jobs where the static
-    // plan runs 1-2 — and there is no output write whose sizing AQE
-    // could improve. Large candidate sets keep AQE (skew handling on
-    // the semi-join matters there).
+    // built in executors; the driver never sees row positions. A
+    // driver-small candidate set (every MV state sweep and most keyed
+    // DML) collects without AQE: profiled at 5-7 jobs with it, 1-2
+    // without. Large candidate sets keep AQE (skew handling on the
+    // semi-join matters there).
     val bitmapQuery = matchedBitmaps(markMatched(withPos))
     val matchedRows =
-      if (candidates.size <= DriverScanMaxFiles)
-        org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(bitmapQuery,
-          Seq("spark.sql.adaptive.enabled" -> "false"))(_.collect())
+      if (candidates.size <= DriverScanMaxFiles) withoutAqe(bitmapQuery)(_.collect())
       else bitmapQuery.collect()
     if (matchedRows.isEmpty) return None
 
@@ -614,9 +604,18 @@ object DmlOps {
   }
 
   private def failOnInternalDupes(df: DataFrame, pks: Seq[String]): Unit = {
-    val d = df.groupBy(pks.map(col): _*).count().filter(col("count") > 1).limit(1).count()
-    require(d == 0, "input contains duplicate primary keys")
+    val dupes = df.groupBy(pks.map(col): _*).count().filter(col("count") > 1)
+    require(withoutAqe(dupes)(_.limit(1).count()) == 0, "input contains duplicate primary keys")
   }
+
+  /** Runs `body` over `df` with AQE off, in a scoped session clone: the
+    * one scope for collect-type probes with bounded output (the
+    * duplicate-key check, key probes, the bitmaps of a driver-small
+    * delete). AQE would run each of their exchanges as its own job with
+    * a replan between, and there is no output write for it to size. */
+  private def withoutAqe[A](df: DataFrame)(body: DataFrame => A): A =
+    org.apache.spark.sql.graftshim.ScopedConf.withScopedConf(df,
+      Seq("spark.sql.adaptive.enabled" -> "false"))(body)
 
   def serializeBitmap(rows: Seq[Long]): String = {
     val bm = new RoaringBitmap()

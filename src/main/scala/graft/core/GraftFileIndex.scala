@@ -1,7 +1,6 @@
 package graft.core
 
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -9,12 +8,11 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, NoopCache, PartitionDirectory, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{col, element_at, split}
 import org.apache.spark.sql.types.StructType
 
 /** Catalyst-integrated scan: a [[PartitioningAwareFileIndex]] whose
-  * `listFiles` applies the falsifiable-filter manifest pruning
-  * ([[Pruning]]) to the DATA FILTERS Catalyst resolved for the query —
+  * `listFiles` runs the one scan planner ([[ReadOp.prune]]) over the
+  * DATA FILTERS Catalyst resolved for the query —
   * so `spark.sql("… WHERE pk < 100")` over a registered graft table
   * prunes files exactly like an explicit `read(filter = …)`, with no
   * eager planning step (the "deeper-integration alternative" of
@@ -27,10 +25,9 @@ import org.apache.spark.sql.types.StructType
   *
   * The index is pinned to one snapshot (graft snapshots are immutable)
   * and is LAZY along the manifest-list level: construction touches only
-  * metadata; `listFiles` first prunes WHOLE manifests from the
-  * per-manifest summaries in snapshot metadata, then loads (and caches)
-  * only the surviving manifests' rows and resolves only the surviving
-  * files' statuses (per-directory `listStatus`, memoized). A selective
+  * metadata; `listFiles` resolves only the statuses of the files the
+  * planner keeps (synthesized from manifest rows, or per-directory
+  * `listStatus`, memoized). A selective
   * query plans in O(manifests + surviving files) driver work; a full
   * scan degenerates to the old O(files) — it needs every status anyway.
   */
@@ -46,37 +43,6 @@ final class GraftFileIndex(
     storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles
   private val mSchema: StructType = ManifestIO.manifestSchema(storage)
   private val fileIdx = mSchema.fieldIndex(ManifestIO.FileCol)
-
-  /** (logical column, manifest row index) of each membership-evidence
-    * marker — consulted so evidence-less files skip footer probes. */
-  private val evidIdx: Seq[(String, Int)] =
-    ManifestIO.evidenceColumns(storage).flatMap { c =>
-      ManifestIO.fieldAtPath(storage.schema, c).map { f =>
-        c -> mSchema.fieldIndex(ManifestIO.evidColName(graft.format.FieldIds.fieldId(f)))
-      }
-    }
-
-  private def evidenceOf(rows: Seq[Row]): Map[(String, String), Boolean] =
-    if (evidIdx.isEmpty) Map.empty
-    else rows.iterator.flatMap { r =>
-      val file = r.getString(fileIdx)
-      evidIdx.iterator.collect {
-        case (c, i) if !r.isNullAt(i) => (file, c) -> r.getBoolean(i)
-      }
-    }.toMap
-
-  // ------------------------------------------ lazy manifest-row loading
-
-  /** Rows of `ms` via the PROCESS-WIDE manifest cache ([[ManifestIO
-    * .readIndexManifestRowsCached]]): manifests are immutable, so
-    * repeated plans of an unchanged table — every fresh FileIndex a new
-    * read constructs, every snapshot of a CDC walk sharing manifests —
-    * are memory-resident instead of re-reading manifest parquet
-    * (misses load on the driver). */
-  private def rowsOf(ms: Seq[String]): Seq[Row] = {
-    val byM = ManifestIO.readIndexManifestRowsCached(spark, storage, ms)
-    ms.flatMap(m => byM.get(m).map(_.toSeq).getOrElse(Nil))
-  }
 
   // --------------------------------------------- lazy status resolution
 
@@ -124,7 +90,7 @@ final class GraftFileIndex(
   }
 
   private lazy val allStatuses: Seq[FileStatus] =
-    rowsOf(manifests).map(statusFor)
+    ReadOp.manifestRows(spark, storage, manifests).map(statusFor)
 
   // ------------------------------------------------- FileIndex surface
 
@@ -146,44 +112,18 @@ final class GraftFileIndex(
   }
 
   override def inputFiles: Array[String] =
-    rowsOf(manifests).map(r => storage.absolute(r.getString(fileIdx))).toArray
+    ReadOp.manifestRows(spark, storage, manifests)
+      .map(r => storage.absolute(r.getString(fileIdx))).toArray
 
   override def refresh(): Unit = () // snapshot-pinned: nothing to refresh
 
+  /** The scan's files: [[ReadOp.prune]] over Catalyst's data filters,
+    * the same planner `ds.plan` runs. */
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val keepOpt =
-      Pruning.keepConditionForFilters(storage.schema, storage.statsColumns, dataFilters)
-
-    // manifest-LIST level: falsify whole manifests from their summaries
-    // before reading any manifest rows
-    val surviving: Seq[String] =
-      ManifestIO.pruneManifestsBySummary(spark, storage, manifests, keepOpt)
-
-    val rows = rowsOf(surviving)
-    val kept: Seq[String] = keepOpt match {
-      case None => rows.map(_.getString(fileIdx))
-      case Some(keep) =>
-        if (rows.isEmpty) Nil
-        else spark.createDataFrame(rows.asJava, mSchema)
-          .filter(keep)
-          .select(ManifestIO.FileCol)
-          .collect().map(_.getString(0)).toSeq
-    }
-    // bucket pruning: a filter pinning the bucket columns reaches only
-    // the buckets its literals hash to — stats-free O(1/n) point lookups
-    val bucketKept = BucketPruning.pruneFiles(storage, snapshotId, dataFilters, kept)
-    // bloom pruning: point predicates on bloom-carrying columns drop
-    // files whose embedded parquet blooms prove the value absent —
-    // the arbitrary-layout complement to stats and buckets. Manifest
-    // evidence markers let it skip the footer RPC for files the write
-    // path proved evidence-less.
-    val bloomKept = BloomPruning.pruneFiles(spark, storage, dataFilters, bucketKept,
-      evidenceOf(rows))
-    val rowByFile = rows.iterator.map(r => r.getString(fileIdx) -> r).toMap
-    Seq(PartitionDirectory(InternalRow.empty,
-      bloomKept.map(f => statusFor(rowByFile(f))).toArray))
+    val (rows, _) = ReadOp.prune(spark, storage, snapshotId, dataFilters)
+    Seq(PartitionDirectory(InternalRow.empty, rows.map(statusFor).toArray))
   }
 }
 
@@ -204,11 +144,11 @@ object GraftFileIndex {
   * index above. */
 object GraftRelation {
 
-  def dataFrame(spark: SparkSession, storage: Storage, snapshotId: Long): DataFrame = {
+  def dataFrame(spark: SparkSession, storage: Storage, index: GraftFileIndex): DataFrame = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val physical = ReadOp.physicalSchema(storage.schema, storage.recordFields)
     val relation = HadoopFsRelation(
-      new GraftFileIndex(spark, storage, snapshotId),
+      index,
       new StructType(),
       physical,
       None,

@@ -411,9 +411,7 @@ object ManifestIO {
     * per-manifest summaries in snapshot metadata before reading any
     * manifest rows. Conservative — returns `manifests` unchanged when
     * there is no keep-condition or any manifest lacks a summary. The
-    * ONE implementation shared by the Catalyst scan path
-    * ([[GraftFileIndex]].listFiles) and the API read path
-    * ([[ReadOp]].plan), so SQL and API prune identically. */
+    * first stage of the one scan planner ([[ReadOp.prune]]). */
   def pruneManifestsBySummary(
       spark: SparkSession,
       storage: Storage,

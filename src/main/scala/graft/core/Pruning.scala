@@ -2,10 +2,9 @@ package graft.core
 
 import scala.util.Try
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions.{array, coalesce, col, lit, not, size, filter => arrayFilter}
 import org.apache.spark.sql.types._
 
@@ -18,9 +17,9 @@ import graft.format.FieldIds
   * PROVES a file cannot contain matching rows; files where the condition
   * holds are skipped without opening them.
   *
-  * The user predicate is first resolved through Spark's analyzer against
-  * an empty relation of the table schema, so type coercion (literal
-  * casts, attribute widening) is Spark's own, then converted:
+  * The filters arrive resolved and optimized (a scan's data filters, see
+  * [[ReadOp.prune]]), so type coercion (literal casts, attribute
+  * widening) is Spark's own; each is converted:
   *
   *  - `f = v`  falsifiable ⇔ `min > v OR max < v`
   *  - `f < v`  falsifiable ⇔ `min >= v`      (`<=` ⇒ `min > v`)
@@ -35,7 +34,7 @@ import graft.format.FieldIds
   * (falsifiable_filters.py:64-75). Non-PK fields are not convertible
   * (stats exist for PKs only, :298-308).
   *
-  * Runs on the driver BEFORE `spark.read`, over the manifest DataFrame —
+  * Runs on the driver inside scan planning, over the manifest rows —
   * Catalyst prunes row groups from footers, but only this layer can prune
   * whole files from our own file index (SURVEY.md §4.1).
   */
@@ -46,22 +45,11 @@ object Pruning {
   private val InTreeMax = 32
 
   /** Column over the index-manifest schema that is true when the file may
-    * contain matching rows (i.e. NOT provably falsifiable). None when the
-    * predicate has no convertible part (⇒ scan everything). */
-  def keepCondition(
-      spark: SparkSession,
-      tableSchema: StructType,
-      primaryKeys: Seq[String],
-      predicate: Column): Option[Column] =
-    Try {
-      val resolved = resolve(spark, tableSchema, predicate)
-      resolved.flatMap(falsifiable(tableSchema, primaryKeys, _))
-    }.toOption.flatten.map(f => not(coalesce(f, lit(false))))
-
-  /** [[keepCondition]] over ALREADY-RESOLVED Catalyst expressions (the
-    * `dataFilters` Catalyst hands a FileIndex): a file is skippable when
-    * ANY filter is provably falsifiable for it, so the keep condition is
-    * `NOT (OR of falsifiable conditions)`. None ⇒ scan everything. */
+    * contain matching rows (i.e. NOT provably falsifiable), for RESOLVED
+    * Catalyst filters (the `dataFilters` Catalyst hands a FileIndex): a
+    * file is skippable when ANY filter is provably falsifiable for it, so
+    * the keep condition is `NOT (OR of falsifiable conditions)`. None
+    * when no filter has a convertible part (⇒ scan everything). */
   def keepConditionForFilters(
       tableSchema: StructType,
       primaryKeys: Seq[String],
@@ -69,18 +57,6 @@ object Pruning {
     Try {
       filters.flatMap(f => falsifiable(tableSchema, primaryKeys, f)).reduceOption(_ || _)
     }.toOption.flatten.map(f => not(coalesce(f, lit(false))))
-
-  /** Run the analyzer over `empty(schema).filter(pred)` and pull out the
-    * resolved, type-coerced condition. */
-  private def resolve(spark: SparkSession, schema: StructType, predicate: Column): Option[Expression] = {
-    val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[Row](),
-      FieldIds.strip(ReadOp.physicalSchema(schema, Nil)))
-    empty.filter(predicate).queryExecution.analyzed.collectFirst {
-      case f: Filter => f.condition
-    }
-  }
-
 
   private def falsifiable(schema: StructType, pks: Seq[String], root: Expression): Option[Column] = {
 
@@ -110,6 +86,7 @@ object Pruning {
         val dt = attr.dataType
         val eqs = values.toSeq.map(v => leaf(EqualTo(attr, Literal(v, dt))))
         if (eqs.exists(_.isEmpty)) None else Some(eqs.flatten.reduce(_ && _))
+      case Literal(false, BooleanType) => Some(lit(true)) // statically false
       case IsNotNull(_) => None // stats carry no null info: contributes nothing
       case _ => None
     }

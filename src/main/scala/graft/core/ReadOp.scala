@@ -1,17 +1,26 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.planning.ScanOperation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+
+import graft.format.FieldIds
 
 /** Scan planning + execution (reference `Storage.data_files`
   * storage.py:369-403 and `FileSetReadOp` ops/read.py:47-152).
   *
-  * Planning is driver-side: read the snapshot's index manifests, apply
-  * the falsifiable-filter pruning predicate, get the surviving file list.
-  * Execution is one declarative `spark.read.parquet(files).filter(...)`
-  * — Catalyst then pushes filters/projections into the parquet scan and
-  * Spark's own split planning replaces the reference's per-file/row-range
-  * read tasks (SURVEY.md §2.1).
+  * Planning is driver-side and has one entry, [[ReadOp.prune]]: read
+  * the snapshot's index manifests, apply the summary, stats, bucket and
+  * membership pruning to a scan's resolved filters, get the surviving
+  * file list. Execution is a Spark relation whose file index runs that
+  * same planner ([[GraftFileIndex]]) — Catalyst pushes filters and
+  * projections into the parquet scan, and Spark's own split planning
+  * replaces the reference's per-file/row-range read tasks
+  * (SURVEY.md §2.1).
   */
 object ReadOp {
 
@@ -47,62 +56,98 @@ object ReadOp {
     def prunedFiles: Int = totalFiles - files.size
   }
 
-  /** Snapshot → pruned list of table-root-relative index files.
+  /** The one scan planner: a snapshot and the resolved data filters of
+    * a scan (implicitly ANDed, as Catalyst hands them to a FileIndex) →
+    * the kept manifest rows and the plan's counts. Every scan
+    * ([[GraftFileIndex]].listFiles) and every [[plan]] runs it; each
+    * stage only drops what it proves unreachable:
     *
-    * Two-level (manifest-list design): the per-manifest summaries in
-    * snapshot metadata are consulted FIRST — a manifest whose combined
-    * min/max range is falsified by the predicate is never opened — then
-    * file-level stats prune within the surviving manifests. Driver work
-    * for a selective query is O(manifests + surviving files), not
-    * O(all files). Tables whose manifests predate summaries fall back to
-    * reading everything (conservative).
+    *  1. manifest LIST: manifests whose per-manifest summaries in
+    *     snapshot metadata falsify the filters are never opened, so a
+    *     selective plan costs O(manifests + surviving files);
+    *  2. file stats: the falsifiable keep-condition ([[Pruning]]) over
+    *     the surviving manifests' rows, which come from the
+    *     process-wide cache and are filtered as a LOCAL relation (no
+    *     Spark job; no DataFrame at all without a keep-condition);
+    *  3. buckets ([[BucketPruning]]): filters pinning the bucket
+    *     columns reach only the buckets their literals hash to;
+    *  4. membership ([[BloomPruning]]): point filters drop files whose
+    *     blooms or dictionaries prove the values absent; the manifest's
+    *     evidence markers skip the footer read of evidence-less files.
     *
-    * Manifest rows come from the process-wide cache on the driver: a
-    * repeated plan of an unchanged table costs zero Spark jobs and zero
-    * manifest IO. The stats filter runs over them as a LOCAL relation
-    * (folded driver-side by ConvertToLocalRelation); without a
-    * keep-condition no DataFrame is built at all. */
+    * Tables whose manifests predate summaries are never manifest-pruned
+    * (conservative). */
+  def prune(
+      spark: SparkSession,
+      storage: Storage,
+      snapshotId: Long,
+      filters: Seq[Expression]): (Seq[Row], ScanPlan) = {
+    val manifests = storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles
+    if (manifests.isEmpty) return (Nil, ScanPlan(Nil, 0))
+    val keep = Pruning.keepConditionForFilters(storage.schema, storage.statsColumns, filters)
+    val surviving = ManifestIO.pruneManifestsBySummary(spark, storage, manifests, keep)
+    val schema = ManifestIO.manifestSchema(storage)
+    val fileIdx = schema.fieldIndex(ManifestIO.FileCol)
+    def fileOf(r: Row): String = r.getString(fileIdx)
+    val rows = manifestRows(spark, storage, surviving)
+    val statsKept = keep match {
+      case Some(k) if rows.nonEmpty =>
+        val files = spark.createDataFrame(rows.asJava, schema).filter(k)
+          .select(ManifestIO.FileCol).collect().map(_.getString(0)).toSet
+        rows.filter(r => files(fileOf(r)))
+      case _ => rows
+    }
+    // membership-evidence markers (file, column) → usable?
+    val evidIdx = ManifestIO.evidenceColumns(storage).flatMap(c =>
+      ManifestIO.fieldAtPath(storage.schema, c).map(f =>
+        c -> schema.fieldIndex(ManifestIO.evidColName(FieldIds.fieldId(f)))))
+    val evidence = statsKept.iterator.flatMap { r =>
+      evidIdx.iterator.collect { case (c, i) if !r.isNullAt(i) => (fileOf(r), c) -> r.getBoolean(i) }
+    }.toMap
+    val files = BloomPruning.pruneFiles(spark, storage, filters,
+      BucketPruning.pruneFiles(storage, snapshotId, filters, statsKept.map(fileOf)),
+      evidence).toSet
+    val kept = statsKept.filter(r => files(fileOf(r)))
+    // unsummarized manifests are never pruned, so the loaded rows ARE the total
+    val total = ManifestIO.summarizedFileCount(storage, manifests).fold(rows.size)(_.toInt)
+    (kept, ScanPlan(kept.map(fileOf), total, manifests.size, manifests.size - surviving.size))
+  }
+
+  /** Rows of `manifests`, in manifest order, via the process-wide cache
+    * ([[ManifestIO.readIndexManifestRowsCached]]): manifests are
+    * immutable, so repeated plans of an unchanged table read none. */
+  private[core] def manifestRows(
+      spark: SparkSession, storage: Storage, manifests: Seq[String]): Seq[Row] = {
+    val byM = ManifestIO.readIndexManifestRowsCached(spark, storage, manifests)
+    manifests.flatMap(m => byM.get(m).map(_.toSeq).getOrElse(Nil))
+  }
+
+  /** Scan plan of `predicate` at a snapshot: exactly the files a scan of
+    * `scanPhysical(…, Some(predicate))` reads, because it runs [[prune]]
+    * over the same filters that scan's file index gets — the optimized
+    * conjuncts over the relation, deterministic and subquery-free
+    * (FileSourceStrategy's data filters). The delete-vector mask is left
+    * out: it never prunes, and building it would broadcast the vectors.
+    * An optimizer that removed the relation proved the filter false, so
+    * the plan keeps nothing. Without a predicate no DataFrame is built. */
   def plan(
       spark: SparkSession,
       storage: Storage,
       snapshotId: Long,
       predicate: Option[Column]): ScanPlan = {
-    import scala.jdk.CollectionConverters._
-    val manifests = storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles
-    if (manifests.isEmpty) return ScanPlan(Nil, 0)
-    val keep = predicate.flatMap(p =>
-      Pruning.keepCondition(spark, storage.schema, storage.statsColumns, p))
-    val surviving: Seq[String] =
-      ManifestIO.pruneManifestsBySummary(spark, storage, manifests, keep)
-    val prunedM = manifests.size - surviving.size
-    val schema = ManifestIO.manifestSchema(storage)
-    val byM = ManifestIO.readIndexManifestRowsCached(spark, storage, surviving)
-    val rows = surviving.flatMap(byM(_).toSeq)
-    val kept = keep.fold(rows)(k =>
-      spark.createDataFrame(rows.asJava, schema).filter(k).collect().toSeq)
-    val fIdx = schema.fieldIndex(ManifestIO.FileCol)
-    val files0 = kept.map(_.getString(fIdx))
-    val files = predicate match {
-      case Some(p) =>
-        // membership-evidence markers (file, column) → usable?, so the
-        // bloom layer can skip footer RPCs for evidence-less files
-        val evidIdx: Seq[(String, Int)] = ManifestIO.evidenceColumns(storage).flatMap(c =>
-          ManifestIO.fieldAtPath(storage.schema, c).map(f =>
-            c -> schema.fieldIndex(ManifestIO.evidColName(graft.format.FieldIds.fieldId(f)))))
-        val evidence: Map[(String, String), Boolean] = kept.iterator.flatMap { r =>
-          evidIdx.iterator.collect {
-            case (c, i) if !r.isNullAt(i) => (r.getString(fIdx), c) -> r.getBoolean(i)
-          }
-        }.toMap
-        val exprs = Seq(org.apache.spark.sql.graftshim.ColumnExpr.catalystExpression(p))
-        BloomPruning.pruneFiles(spark, storage, exprs,
-          BucketPruning.pruneFiles(storage, snapshotId, exprs, files0), evidence)
-      case None => files0
+    val filters = predicate.fold(Seq.empty[Expression]) { p =>
+      val index = new GraftFileIndex(spark, storage, snapshotId)
+      def scans(l: LogicalRelation): Boolean = l.relation match {
+        case h: HadoopFsRelation => h.location eq index
+        case _ => false
+      }
+      GraftRelation.dataFrame(spark, storage, index).filter(zeroSafe(p))
+        .queryExecution.optimizedPlan.collectFirst {
+          case ScanOperation(_, _, fs, l: LogicalRelation) if scans(l) =>
+            fs.filter(f => f.deterministic && !SubqueryExpression.hasSubquery(f))
+        }.getOrElse(Seq(Literal.FalseLiteral))
     }
-    // legacy (unsummarized) tables are never manifest-pruned, so the
-    // loaded rows ARE the total
-    val total = ManifestIO.summarizedFileCount(storage, manifests).fold(rows.size)(_.toInt)
-    ScanPlan(files, total, manifests.size, prunedM)
+    prune(spark, storage, snapshotId, filters)._2
   }
 
   /** Read a snapshot as a DataFrame of the PHYSICAL schema (record fields
@@ -117,7 +162,7 @@ object ReadOp {
       storage: Storage,
       snapshotId: Long,
       predicate: Option[Column] = None): DataFrame = {
-    val df0 = GraftRelation.dataFrame(spark, storage, snapshotId)
+    val df0 = GraftRelation.dataFrame(spark, storage, new GraftFileIndex(spark, storage, snapshotId))
     // merge-on-read: mask soft-deleted rows (no-op Column when the
     // snapshot has no delete vectors — the common steady state). The
     // mask is a plain conjunct, so the user's own filters still push
@@ -126,17 +171,19 @@ object ReadOp {
     // (DV files are immutable).
     val df = DeleteVectorOps.maskFilterForSnapshot(spark, storage, snapshotId)
       .fold(df0)(df0.filter)
-    // ±0.0 pushdown soundness even on sessions without GraftExtensions:
-    // rewrite zero-equality forms before Catalyst pushes them to parquet
-    // (see FloatingZeroRewrite — vanilla pushdown drops row groups whose
-    // zeros carry the other sign bit)
-    predicate.map { p =>
-      val e = org.apache.spark.sql.graftshim.ColumnExpr.catalystExpression(p)
-      if (org.apache.spark.sql.graftshim.FloatingZeroRewrite.mentionsFpZero(e))
-        org.apache.spark.sql.graftshim.ColumnExpr.column(
-          org.apache.spark.sql.graftshim.FloatingZeroRewrite.rewriteUnresolved(e))
-      else p
-    }.fold(df)(df.filter)
+    predicate.map(zeroSafe).fold(df)(df.filter)
+  }
+
+  /** ±0.0 pushdown soundness even on sessions without GraftExtensions:
+    * rewrite zero-equality forms before Catalyst pushes them to parquet
+    * (see FloatingZeroRewrite — vanilla pushdown drops row groups whose
+    * zeros carry the other sign bit). */
+  private def zeroSafe(p: Column): Column = {
+    val e = org.apache.spark.sql.graftshim.ColumnExpr.catalystExpression(p)
+    if (org.apache.spark.sql.graftshim.FloatingZeroRewrite.mentionsFpZero(e))
+      org.apache.spark.sql.graftshim.ColumnExpr.column(
+        org.apache.spark.sql.graftshim.FloatingZeroRewrite.rewriteUnresolved(e))
+    else p
   }
 
   def emptyDF(spark: SparkSession, schema: StructType): DataFrame =

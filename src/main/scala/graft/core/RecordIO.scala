@@ -11,7 +11,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.internal.column.columnindex.OffsetIndex
-import org.apache.parquet.internal.filter2.columnindex.RowRanges
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.internal.filter2.columnindex.{ColumnIndexStore, RowRanges}
 import org.apache.parquet.io.InputFile
 import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
 import org.apache.parquet.schema.{GroupType, MessageTypeParser}
@@ -316,12 +317,15 @@ private[graft] final class PositionalFile(
 
   def numRows: Long = groupStart.last
 
+  /** From the reader's own column-index store, the one
+    * `readFilteredRowGroup` reads the group's pages through, so each
+    * offset index is read once. The store reads every requested
+    * column's offset index and has none if any is missing. */
   private def offsetIndex(g: Int): Option[OffsetIndex] = {
     if (offsets(g) == null) {
-      val chunks = blocks(g).getColumns.asScala
-      val idx = descs.map(d => chunks.find(_.getPath.toArray.sameElements(d.getPath))
-        .flatMap(cc => Option(reader.readOffsetIndex(cc))))
-      offsets(g) = if (idx.forall(_.isDefined)) idx.head else None
+      offsets(g) =
+        try Some(reader.getColumnIndexStore(g).getOffsetIndex(ColumnPath.get(descs.head.getPath: _*)))
+        catch { case _: ColumnIndexStore.MissingOffsetIndexException => None }
     }
     offsets(g)
   }

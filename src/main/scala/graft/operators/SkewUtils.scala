@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for joins whose key distribution is heavy-tailed
@@ -20,11 +21,23 @@ object SkewUtils {
     * default parallelism — deterministic (sort-before-repartition is
     * on by default), and a no-op at scale: any corpus big enough to
     * matter already scans as ≥ defaultParallelism splits, so the
-    * branch never fires and no payload shuffle is added. */
+    * branch never fires and no payload shuffle is added. Decided from
+    * the physical plan, without running a job. */
   def fanOut(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= math.min(p, 8)) df
+    if (plannedPartitions(df.queryExecution.sparkPlan) >= math.min(p, 8)) df
     else df.repartition(p)
+  }
+
+  /** Input splits of `plan`: a file scan's split count, another leaf's
+    * RDD partitions (creating them runs no job), else the widest
+    * child's. A shuffle is sized by its input here, as AQE's coalescing
+    * sizes it by bytes; its own count is only known once the stages
+    * below it have run. */
+  private def plannedPartitions(plan: SparkPlan): Int = plan match {
+    case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    case leaf if leaf.children.isEmpty => leaf.execute().getNumPartitions
+    case node => node.children.map(plannedPartitions).max
   }
 
   def saltedJoin(

@@ -55,10 +55,13 @@ class MembershipPruningFuzzSpec extends AnyFunSuite {
         if (rnd.nextBoolean()) allKeys(rnd.nextInt(allKeys.length))
         else rnd.nextLong(3000000L) // mostly absent
       }.distinct
-      val pred = if (vals.size == 1) col("k") === vals.head
-                 else col("k").isin(vals.map(Long.box): _*)
+      // int literals against the bigint key as often as long ones
+      val lits: Seq[Any] = if (rnd.nextBoolean()) vals else vals.map(_.toInt)
+      val pred = if (vals.size == 1) col("k") === lit(lits.head)
+                 else col("k").isin(lits: _*)
       val kept = ds.plan(Some(pred)).files.size
       if (kept < total) prunedSomething = true
+      ScanFiles.assertParity(ds, pred, s"trial $trial")
       val got = ds.read(filter = Some(pred)).select("k", "tag").collect().toSet
       val exp = ds.readAll().filter(pred).select("k", "tag").collect().toSet
       assert(got == exp, s"trial $trial: pruned read diverged for $vals")

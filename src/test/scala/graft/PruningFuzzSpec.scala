@@ -27,7 +27,7 @@ class PruningFuzzSpec extends AnyFunSuite {
   }
 
   private def randomPredicate(rnd: Random, depth: Int): Column = {
-    def leaf(): Column = rnd.nextInt(7) match {
+    def leaf(): Column = rnd.nextInt(9) match {
       case 0 => col("o_orderkey") < lit(rnd.nextLong(2000))
       case 1 => col("o_orderkey") >= lit(rnd.nextLong(2000))
       case 2 => col("o_orderkey") === lit(rnd.nextLong(2000))
@@ -35,6 +35,9 @@ class PruningFuzzSpec extends AnyFunSuite {
       case 4 => col("o_orderkey").isin(Seq.fill(3)(rnd.nextLong(2000)): _*)
       case 5 => col("o_orderstatus") === lit(Seq("F", "O", "P")(rnd.nextInt(3)))
       case 6 => lit(rnd.nextLong(2000)) > col("o_orderkey") // literal-first
+      // int literals against the bigint key
+      case 7 => col("o_orderkey") === lit(rnd.nextInt(2000))
+      case 8 => col("o_orderkey").isin(Seq.fill(3)(rnd.nextInt(2000)): _*)
     }
     if (depth == 0) leaf()
     else rnd.nextInt(4) match {
@@ -52,6 +55,7 @@ class PruningFuzzSpec extends AnyFunSuite {
       val pred = randomPredicate(rnd, rnd.nextInt(3))
       val plan = ds.plan(Some(pred))
       if (plan.prunedFiles > 0) prunedAtLeastOnce = true
+      ScanFiles.assertParity(ds, pred, s"iteration $i")
       val got = ds.read(filter = Some(pred)).count()
       val exp = orders.filter(pred).count()
       assert(got == exp,
@@ -103,7 +107,10 @@ class PruningFuzzSpec extends AnyFunSuite {
     val manifests = spark.createDataFrame(rows, mSchema)
     for (nVals <- Seq(3, 40)) { // small (AND-tree) and large (HOF) forms
       val pred = col("k").isin((1 to nVals).map(i => Long.box(i.toLong)): _*)
-      val keep = Pruning.keepCondition(spark, tblSchema, Seq("k"), pred)
+      val resolved = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          graft.format.FieldIds.strip(tblSchema)).filter(pred).queryExecution.analyzed
+        .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
+      val keep = Pruning.keepConditionForFilters(tblSchema, Seq("k"), resolved.toSeq)
         .getOrElse(fail(s"IN($nVals) did not convert"))
       val kept = manifests.filter(keep).select("f")
         .collect().map(_.getString(0)).toSet
@@ -184,12 +191,15 @@ class PruningFuzzSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toIndexedSeq
     val rnd = new Random(20260813L)
     def pred(depth: Int): Column = {
-      def leaf(): Column = rnd.nextInt(5) match {
+      def leaf(): Column = rnd.nextInt(7) match {
         case 0 => col("o_custkey") === lit(custs(rnd.nextInt(custs.size)))
         case 1 => col("o_custkey").isin(Seq.fill(3)(custs(rnd.nextInt(custs.size))): _*)
         case 2 => lit(custs(rnd.nextInt(custs.size))) === col("o_custkey")
         case 3 => col("o_totalprice") > lit(rnd.nextDouble() * 500000)
         case 4 => col("o_orderkey") < lit(rnd.nextLong(2000))
+        // int literals against the bigint bucket column
+        case 5 => col("o_custkey") === lit(custs(rnd.nextInt(custs.size)).toInt)
+        case 6 => col("o_custkey").isin(Seq.fill(3)(custs(rnd.nextInt(custs.size)).toInt): _*)
       }
       if (depth == 0) leaf()
       else rnd.nextInt(4) match {
@@ -204,6 +214,7 @@ class PruningFuzzSpec extends AnyFunSuite {
       val p = pred(rnd.nextInt(3))
       val plan = d.plan(Some(p))
       if (plan.prunedFiles > 0) prunedAtLeastOnce = true
+      ScanFiles.assertParity(d, p, s"iteration $i")
       val got = d.read(filter = Some(p)).count()
       val exp = orders.filter(p).count()
       assert(got == exp,

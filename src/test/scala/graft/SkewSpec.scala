@@ -33,6 +33,16 @@ class SkewSpec extends AnyFunSuite {
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
   }
 
+  test("fanOut decides a shuffled input without running a job") {
+    // one range split, shuffled by key: AQE coalesces the shuffle of a
+    // few rows to one partition, so the input is fanned out
+    val df = spark.range(0, 1000, 1, 1).toDF().repartition(col("id") % 7)
+    val (out, jc) = JobCount.of(spark)(SkewUtils.fanOut(df))
+    assert(jc.jobs == 0, jc)
+    assert(out.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(out.exceptAll(df).isEmpty && df.exceptAll(out).isEmpty)
+  }
+
   test("left join keeps unmatched big-side rows under salting") {
     import spark.implicits._
     val big = Seq((1L, "a"), (1L, "b"), (2L, "c"), (9L, "z")).toDF("k", "v")

@@ -120,17 +120,17 @@ class RewriteSpec extends AnyFunSuite {
     assert(st.metadata.currentSnapshot.storageStatistics.numRows == 2)
   }
 
-  test("a 5-row upsert into a 1,000-row table runs 6 jobs") {
+  test("a 5-row upsert into a 1,000-row table runs 4 jobs") {
     val rows = spark.range(0, 1000).select(col("id"), (col("id") * 2).as("v"))
     val ds = SpaceDataset.create(spark, freshLoc(), rows.schema, Seq("id"))
     ds.append(rows.repartition(4))
     val up = spark.range(100, 105).select(col("id"), lit(-1L).as("v"))
-    // 3 for the duplicate-key check of the input, 2 for the match bitmaps
+    // 1 for the duplicate-key check of the input, 2 for the match bitmaps
     // (the keys' broadcast, the scan of the candidate files), 1 for the
     // write of survivors and new rows: the survivors are the scan minus
     // the bitmaps, with no second join against the keys
     val (_, jc) = JobCount.of(spark)(ds.upsert(up))
-    assert(jc.jobs == 6, jc)
+    assert(jc.jobs == 4, jc)
     val back = ds.readAll()
     assert(back.count() == 1000 && back.filter(col("v") === -1L).count() == 5)
   }
