@@ -24,6 +24,8 @@ import graft.format._
   */
 object AppendOp {
 
+  /** A landed write: its Patch and the files of its added rows (every
+    * landed file, unless the write carried rows over). */
   final case class AppendResult(patch: Patch, files: Seq[IndexFileMeta])
 
   /** Synthetic per-column bucket-id column names for the dynamic-
@@ -145,15 +147,7 @@ object AppendOp {
     * compacted or clustered anyway). */
   def writeOptions(spark: SparkSession, storage: Storage): Map[String, String] = {
     val idSchema = ReadOp.physicalSchemaWithIds(storage.schema, storage.recordFields)
-    val bloomEnabled = spark.conf
-      .getOption("spark.graft.pkBloomFilters").forall { v =>
-        v.trim.toLowerCase match {
-          case "true" => true
-          case "false" => false
-          case other => throw new IllegalArgumentException(
-            s"spark.graft.pkBloomFilters must be true or false, got '$other'")
-        }
-      }
+    val bloomEnabled = Confs.boolConf(spark, "spark.graft.pkBloomFilters", dflt = true)
     val bloomCols =
       if (!bloomEnabled) Nil
       else (storage.primaryKeys ++ storage.metadata.bloomColumns).distinct.filter(c =>
@@ -230,7 +224,17 @@ object AppendOp {
     * table's `write_cluster_by` columns: the batch is range-partitioned
     * + sorted so it lands as an internally-disjoint tier. Maintenance
     * rewrites (compact/cluster/CoW survivors) pass false — they arrange
-    * their own layout and must not be re-shuffled. */
+    * their own layout and must not be re-shuffled.
+    *
+    * `carryover` (a delete's CoW survivors, physical schema) lands in
+    * the SAME Spark write job as `df` but in separate files: both frames
+    * are unioned under a transient kind column that is a dynamic
+    * partition, so every task writes at most one file per kind (under
+    * its bucket id on bucketed layouts). The patch carries the manifest
+    * and stats of both groups; its changelog and [[AppendResult.files]]
+    * list only the files of `df` (carryover rows are CDC-silent). On a
+    * write-clustered table both groups range-sort on (kind, cluster
+    * columns), so the survivors regain tier shape too. */
   def writeFilesWithMeta(
       spark: SparkSession,
       storage: Storage,
@@ -240,7 +244,9 @@ object AppendOp {
         * layout instead of the table's current one (the metadata
         * switches to it in the same commit that references the written
         * files). */
-      bucketLayoutOverride: Option[(Seq[String], Seq[Int])] = None): AppendResult = {
+      bucketLayoutOverride: Option[(Seq[String], Seq[Int])] = None,
+      carryover: Option[DataFrame] = None): AppendResult = {
+    import org.apache.spark.sql.functions.{col, lit}
     // Bucketed tables: EVERY write shuffles rows to
     // pmod(murmur3(bucketColumns), numBuckets) — partition index IS the
     // bucket id (HashPartitioning semantics), and the output file name
@@ -259,33 +265,37 @@ object AppendOp {
     // files whose directory names carry the ids
     val perColumn = numBuckets > 0 && bucketCounts.nonEmpty
     val wcb = storage.metadata.writeClusterBy
+    val clustered = writeClustered && wcb.nonEmpty && numBuckets == 0
     // align to schema order + upcast frame types (see [[alignToSchema]]).
     // Alignment happens BEFORE bucketing: bucket ids hash the STORED
     // type (murmur3-of-long ≠ murmur3-of-int for the same value), so an
     // int frame appended to a widened-bigint bucket column must be cast
     // first or its files land under ids BucketPruning/SPJ would never
     // probe — a silent layout corruption instead of a wrong hash.
-    val alignedDf = alignToSchema(storage, df)
+    val alignedDf = carryover.fold(alignToSchema(storage, df))(c =>
+      alignToSchema(storage, c).withColumn(KindCol, lit(0))
+        .unionByName(alignToSchema(storage, df).withColumn(KindCol, lit(1))))
+    val kindCols = carryover.map(_ => KindCol).toSeq
     // the per-column layout keeps its (synthetic) bucket-id columns
     // through the repartition for the dynamic-partition write;
     // partitionBy excludes them from the written data files
     val aligned =
       if (perColumn) {
         val bCols = AppendOp.perColumnBucketExprs(storage, bucketColumns, bucketCounts)
-        alignedDf.select((alignedDf.columns.map(org.apache.spark.sql.functions.col) ++ bCols).toIndexedSeq: _*)
+        alignedDf.select((alignedDf.columns.map(col) ++ bCols).toIndexedSeq: _*)
           .repartition(numBuckets, AppendOp.bucketDirCols(bucketCounts.size): _*)
       } else if (numBuckets > 0)
-        alignedDf.repartition(numBuckets,
-          storage.metadata.bucketColumns.map(org.apache.spark.sql.functions.col): _*)
-      else if (writeClustered && wcb.nonEmpty) {
+        alignedDf.repartition(numBuckets, storage.metadata.bucketColumns.map(col): _*)
+      else if (clustered) {
         // cluster-on-write: the batch lands as an internally-disjoint
         // sorted tier with tight per-file stats. NO explicit partition
         // count — AQE coalesces tiny range partitions (a small batch
         // becomes one sorted file, a large ingest fans out), under the
         // REDUCED advisory size set around the write below: pruning
         // granularity needs several files per tier, and AQE's default
-        // 64 MB advisory would fold a whole mid-size tier into one
-        val cols = wcb.map(org.apache.spark.sql.functions.col)
+        // 64 MB advisory would fold a whole mid-size tier into one. A
+        // leading kind column keeps tasks kind-contiguous.
+        val cols = (kindCols ++ wcb).map(col)
         alignedDf.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
       } else alignedDf
     // part-NNNNN task numbering = partition index = bucket id (an
@@ -293,9 +303,8 @@ object AppendOp {
     // per-column layout reads the tuple from the directory names and
     // flattens it row-major into the file-name id
     val partIdxRe = "part-(\\d+)-.*".r
-    val (patch, landed) = land(spark, storage, aligned,
-      clustered = writeClustered && wcb.nonEmpty && numBuckets == 0,
-      partitionCols = if (perColumn) bucketDirNames(bucketCounts.size) else Nil) { p =>
+    val (patch, landed) = land(spark, storage, aligned, clustered,
+      partitionCols = (if (perColumn) bucketDirNames(bucketCounts.size) else Nil) ++ kindCols) { p =>
       if (perColumn)
         StoragePaths.newIndexDataFile(bucket = flatBucketOfDir(p, bucketCounts))
       else if (numBuckets > 0) p.getName match {
@@ -304,12 +313,22 @@ object AppendOp {
       }
       else StoragePaths.newIndexDataFile()
     }
-    AppendResult(patch, landed.map(_._2))
+    val adds = landed.collect { case (p, m) if carryover.isEmpty || isAddFile(p) => m }
+    val addFiles = adds.map(_.file).toSet
+    AppendResult(patch.copy(changeLog = patch.changeLog.map(cl =>
+      cl.copy(addedRows = cl.addedRows.filter(b => addFiles(b.file))))), adds)
   }
 
-  /** Transient discriminator column of [[writeSplitFiles]] — a dynamic
-    * partition, so parquet drops it from the written data. */
+  /** Transient kind column of a write with a carryover (0 = carried
+    * over, 1 = added) — a dynamic partition, so parquet drops it from
+    * the written data. */
   private val KindCol = "__graft_kind"
+
+  /** Whether a landed part file holds added rows: its kind directory,
+    * read from its ancestors like [[flatBucketOfDir]] reads bucket ids. */
+  private def isAddFile(p: Path): Boolean =
+    Iterator.iterate(p.getParent)(_.getParent).takeWhile(_ != null)
+      .exists(_.getName == s"$KindCol=1")
 
   /** Scoped-conf set for a write-clustered shuffle: the reduced AQE
     * advisory (`spark.graft.writeCluster.advisoryBytes`, default 8 MB —
@@ -326,51 +345,5 @@ object AppendOp {
     Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory.toString,
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
         math.min(advisory, 1L * 1024 * 1024).toString)
-  }
-
-  /** FUSED carryover + append: land CoW `survivors` and fresh `adds`
-    * in ONE Spark write job but in SEPARATE files (dynamic partition on
-    * a transient kind column), so a view state commit's delete+append
-    * costs one write pass instead of two while the changelog still
-    * tells carryover rewrites (CDC-silent) from genuine ADDs (VERDICT
-    * r14 next #3).
-    *
-    * Plain AND write-clustered layouts (VERDICT r15 #2 — the engine's
-    * flagship MVs are write-clustered: the text-index postings table,
-    * the streaming band index). A clustered table's union range-
-    * partitions and sorts on (kind, clusterColumns): the dynamic
-    * partition keeps the files kind-pure, the leading kind keeps tasks
-    * kind-contiguous, and within each kind the files come out range-
-    * disjoint and sorted — the same tight-stats tier shape the append
-    * path produces, for BOTH groups (survivors regain tier shape too,
-    * strictly better than the classic unclustered carryover). Bucketed
-    * and record-field layouts still take the two-pass fallback — their
-    * file naming / payload plumbing lives in [[writeFilesWithMeta]] /
-    * RecordIO.
-    *
-    * The returned patch carries the manifest, stats and summaries for
-    * BOTH file groups; its changelog logs only the add files as ADDs
-    * (survivors are CDC-silent carryover). */
-  private[core] def writeSplitFiles(
-      spark: SparkSession,
-      storage: Storage,
-      survivors: DataFrame,
-      adds: DataFrame): Patch = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val union = alignToSchema(storage, survivors).withColumn(KindCol, lit(0))
-      .unionByName(alignToSchema(storage, adds).withColumn(KindCol, lit(1)))
-    val wcb = storage.metadata.writeClusterBy
-    val clustered = wcb.nonEmpty && storage.metadata.numBuckets == 0
-    val shaped =
-      if (!clustered) union
-      else {
-        val cols = (KindCol +: wcb).map(col)
-        union.repartitionByRange(cols: _*).sortWithinPartitions(cols: _*)
-      }
-    val (patch, landed) = land(spark, storage, shaped, clustered, Seq(KindCol))(
-      _ => StoragePaths.newIndexDataFile())
-    val addFiles = landed.collect { case (p, m) if p.getParent.getName == s"$KindCol=1" => m.file }.toSet
-    patch.copy(changeLog = patch.changeLog.map(cl =>
-      cl.copy(addedRows = cl.addedRows.filter(b => addFiles(b.file)))))
   }
 }

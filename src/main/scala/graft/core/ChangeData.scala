@@ -88,13 +88,11 @@ object ChangeData {
       else {
         // FULL normalized path → serialized bitmap (basenames collide for
         // zero-copy-ingested external files)
-        val conf = spark.sparkContext.hadoopConfiguration
-        val byKey = maskedFiles.map { r =>
-          val abs = new org.apache.hadoop.fs.Path(storage.absolute(r.file))
-          DmlOps.pathKey(abs.getFileSystem(conf).makeQualified(abs).toString) -> r.bitmapB64.get
-        }.toMap
-        val bc = spark.sparkContext.broadcast(byKey)
-        // native codegen'd membership test (no UDF boundary in the scan)
+        val bc = DeleteVectorOps.broadcastMap(spark, storage,
+          maskedFiles.map(r => r.file -> r).toMap)
+        // native codegen'd membership test (no UDF boundary in the scan);
+        // strict, unlike the read mask's lenient form: a row set KEEPS
+        // the rows of its bitmaps, and every scanned file has one
         val inBitmap = org.apache.spark.sql.graftshim.BitmapContains(
           col("_metadata.file_path"), col("_metadata.row_index"), bc)
         Some(spark.read.schema(physical)

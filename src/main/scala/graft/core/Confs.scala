@@ -20,6 +20,16 @@ object Confs {
       v
     }.getOrElse(dflt)
 
+  /** Boolean conf (`true`/`false`, any case) with a default. */
+  def boolConf(spark: SparkSession, key: String, dflt: Boolean): Boolean =
+    spark.conf.getOption(key).map { raw =>
+      raw.trim.toLowerCase match {
+        case "true" => true
+        case "false" => false
+        case _ => throw new IllegalArgumentException(s"$key must be true or false, got '$raw'")
+      }
+    }.getOrElse(dflt)
+
   /** Fraction conf in [0, 1] with a default. */
   def fractionConf(spark: SparkSession, key: String, dflt: Double): Double =
     spark.conf.getOption(key).map { raw =>

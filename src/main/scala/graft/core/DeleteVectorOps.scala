@@ -50,7 +50,7 @@ object DeleteVectorOps {
   /** Normalized-path → serialized-bitmap map for a vector set, keyed
     * exactly like `_metadata.file_path` renders (the one idiom every
     * file↔executor match uses — see [[DmlOps.pathKey]]). */
-  private def broadcastMap(
+  private[core] def broadcastMap(
       spark: SparkSession,
       storage: Storage,
       dvs: Map[String, RowBitmap]): org.apache.spark.broadcast.Broadcast[Map[String, String]] = {

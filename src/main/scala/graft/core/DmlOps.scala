@@ -43,10 +43,11 @@ object DmlOps {
     * session never observes it). */
   def delete(spark: SparkSession, storage: Storage, snapshotId: Long, cond: Column,
       dvMaxFraction: Option[Double] = None,
-      /** UPDATE's fusion hook (see [[deleteByKeysOn]]'s same param):
-        * rewritten rows appended inside the delete's write pass. Not
-        * written when nothing matched (an UPDATE matching zero rows is
-        * a no-op and produces zero rewritten rows anyway). */
+      /** Rows appended inside the delete's write pass, in files of
+        * their own (UPDATE's rewritten rows, overwriteWhere's
+        * replacement; see [[deleteByKeysOn]]'s same param). Not written
+        * when nothing matched: the caller appends them itself if it
+        * needs to (an UPDATE matching zero rows has none). */
       extraAdds: Option[DataFrame] = None): Option[Patch] =
     deleteCore(spark, storage, snapshotId,
       candidates = ReadOp.plan(spark, storage, snapshotId, Some(cond)).files,
@@ -73,9 +74,9 @@ object DmlOps {
       keys: DataFrame,
       keyCols: Seq[String],
       /** [[deleteByKeysAndAppend]]'s fusion hook: rows appended INSIDE
-        * the delete's write pass (plain layouts; None = classic). When
-        * the sweep short-circuits (empty table / zero matches) the
-        * adds are NOT written and the caller appends them itself. */
+        * the delete's write pass (None = delete only). When the sweep
+        * short-circuits (empty table / zero matches) the adds are NOT
+        * written and the caller appends them itself. */
       extraAdds: Option[DataFrame] = None,
       /** Per-call merge-on-read threshold (see [[delete]]'s same
         * param) — view maintenance passes its state-sweep fraction so
@@ -99,8 +100,7 @@ object DmlOps {
     // this on every refresh commit.
     val candidates = ManifestIO.summarizedFileCount(storage, manifests) match {
       case Some(n) if n <= DriverScanMaxFiles =>
-        ManifestIO.fileRowCounts(storage, spark.sparkContext.hadoopConfiguration, manifests)
-          .map(_._1)
+        ManifestIO.liveFileRowCounts(spark, storage, manifests).map(_._1)
       case _ =>
         ReadOp.plan(spark, storage, snapshotId,
           keyLookupPredicate(spark, k, storage, keyCols)).files
@@ -116,15 +116,12 @@ object DmlOps {
     * `keyCols`) and an append (`adds`) as ONE patch, already merged —
     * what every view state commit, upsert and merge goes through. With
     * both present, the sweep's CoW survivor rewrite and the replacement
-    * rows land in a single write pass (separate files via [[AppendOp
-    * .writeSplitFiles]], so the changelog still tells carryover from
-    * ADDs) — the two-pass commit was every refresh's residual cost
-    * (VERDICT r14 next #3). Write-clustered tables fuse too — the split
-    * write range-sorts both groups into tier shape (VERDICT r15 #2).
-    * The fused pass falls back to sweep-then-append when [[fusesAdds]]
-    * refuses the layout or when the sweep matches nothing. One side
-    * alone is a plain [[deleteByKeysOn]] or [[RecordIO.writeWithRecords]];
-    * with neither side the result is None. */
+    * rows land in a single write job on every table layout (the
+    * carryover of [[AppendOp.writeFilesWithMeta]]: separate files, so
+    * the changelog still tells carryover from ADDs). When the sweep
+    * matches nothing the adds are appended alone. One side alone is a
+    * plain [[deleteByKeysOn]] or [[RecordIO.writeWithRecords]]; with
+    * neither side the result is None. */
   def deleteByKeysAndAppend(
       spark: SparkSession,
       storage: Storage,
@@ -137,20 +134,12 @@ object DmlOps {
         * so steady-state maintenance soft-deletes instead of CoW-
         * rewriting every touched state file. */
       dvFracOverride: Option[Double] = None): Option[Patch] = {
-    val fused = adds.filter(_ => keys.isDefined && fusesAdds(storage))
     val swept = keys.flatMap(k =>
-      deleteByKeysOn(spark, storage, snapshotId, k, keyCols, fused, dvFracOverride))
+      deleteByKeysOn(spark, storage, snapshotId, k, keyCols, adds, dvFracOverride))
     // the fused pass wrote the adds only when its sweep matched something
-    val appended = adds.filterNot(_ => fused.isDefined && swept.isDefined)
-      .map(RecordIO.writeWithRecords(spark, storage, _))
+    val appended = adds.filter(_ => swept.isEmpty).map(RecordIO.writeWithRecords(spark, storage, _))
     Patch.merge(swept.toSeq ++ appended)
   }
-
-  /** Whether a delete and its adds can share one write pass
-    * ([[AppendOp.writeSplitFiles]]): plain and write-clustered layouts.
-    * Bucketed and record-field layouts need the full append path. */
-  private[core] def fusesAdds(storage: Storage): Boolean =
-    storage.recordFields.isEmpty && storage.metadata.numBuckets == 0
 
   /** Up to this many FILES in a snapshot, a key delete skips stats
     * pruning (every file is a candidate) and its bitmap query runs with
@@ -327,7 +316,7 @@ object DmlOps {
         v
       case None => DeleteVectorOps.dvMaxFraction(spark)
     }
-    val physRows = ManifestIO.fileRowCounts(storage, conf,
+    val physRows = ManifestIO.liveFileRowCounts(spark, storage,
         storage.snapshotOrFail(snapshotId).manifestFiles.indexManifestFiles)
       .filter { case (f, _) => affectedRel.contains(f) }.toMap
     val (morFiles, cowFiles) =
@@ -349,21 +338,20 @@ object DmlOps {
     // analog, delete.py:103). The rewrite scan masks the matched rows by
     // their bitmaps, so the match is not evaluated a second time: a row
     // whose condition or key is NULL never matched and so survives.
-    // With `extraAdds` the adds ride the same write in their own files
-    // (ADD bitmaps; survivors stay CDC-silent); a pure-MoR sweep writes
-    // them alone, cluster-shaped.
+    // With `extraAdds` the adds ride the same write as the survivors'
+    // carryover, in their own files (ADD bitmaps; survivors stay
+    // CDC-silent); a pure-MoR sweep appends them alone.
     def addsOf(p: Patch) = p.changeLog.toList.flatMap(_.addedRows)
     val (cowPatch, addBitmaps) =
       if (cowFiles.isEmpty) {
-        val ap = extraAdds.fold(Patch())(adds =>
-          AppendOp.writeFilesWithMeta(spark, storage, adds, writeClustered = true).patch)
+        val ap = extraAdds.fold(Patch())(RecordIO.writeWithRecords(spark, storage, _))
         (ap, addsOf(ap))
       } else {
         val (patch, written) = RewriteOp.replaceFiles(spark, storage, snapshotId,
             cowFiles.toSeq, deleted = deletedByFile.view.filterKeys(cowFiles).toMap) { survivors =>
           extraAdds match {
             case Some(adds) =>
-              val p = AppendOp.writeSplitFiles(spark, storage, survivors, adds)
+              val p = RecordIO.writeWithRecords(spark, storage, adds, Some(survivors))
               (p, p.statsDelta.numRows - addsOf(p).map(_.numRows).sum)
             case None =>
               val p = AppendOp.writeFilesWithMeta(spark, storage, survivors).patch
@@ -473,7 +461,7 @@ object DmlOps {
     try {
       failOnInternalDupes(pinned, storage.primaryKeys)
       // fused: the matched-key CoW sweep and the incoming rows land in
-      // one write pass (plain layouts; see deleteByKeysAndAppend)
+      // one write pass (see deleteByKeysAndAppend)
       deleteByKeysAndAppend(spark, storage, snapshotId,
         Some(pinned), storage.primaryKeys, Some(pinned)).get
     } finally { pinned.unpersist(); () }

@@ -542,15 +542,35 @@ object ManifestIO {
       DriverParquet.read(conf, storage.absolute(m), schema).map(m -> _))
   }
 
+  /** [[readIndexManifestRowsCached]] as (manifestRel, row) pairs in
+    * manifest order, the shape of [[readIndexManifestRowsDriver]]: the
+    * loader of one snapshot's manifests for DML metadata passes. */
+  def readIndexManifestRowsLive(
+      spark: SparkSession,
+      storage: Storage,
+      manifests: Seq[String]): Seq[(String, Row)] = {
+    val byM = readIndexManifestRowsCached(spark, storage, manifests)
+    manifests.flatMap(m => byM(m).map(m -> _))
+  }
+
   /** (file, physical row count) of every row of `manifests`, off the
     * uncached loader. */
   def fileRowCounts(
       storage: Storage,
       conf: Configuration,
-      manifests: Seq[String]): Seq[(String, Long)] = {
+      manifests: Seq[String]): Seq[(String, Long)] =
+    rowCounts(storage, readIndexManifestRowsDriver(storage, conf, manifests))
+
+  /** [[fileRowCounts]] of one snapshot's `manifests`, off the cache. */
+  def liveFileRowCounts(
+      spark: SparkSession,
+      storage: Storage,
+      manifests: Seq[String]): Seq[(String, Long)] =
+    rowCounts(storage, readIndexManifestRowsLive(spark, storage, manifests))
+
+  private def rowCounts(storage: Storage, rows: Seq[(String, Row)]): Seq[(String, Long)] = {
     val schema = manifestSchema(storage)
     val (f, n) = (schema.fieldIndex(FileCol), schema.fieldIndex(NumRowsCol))
-    readIndexManifestRowsDriver(storage, conf, manifests)
-      .map { case (_, r) => r.getString(f) -> r.getLong(n) }
+    rows.map { case (_, r) => r.getString(f) -> r.getLong(n) }
   }
 }

@@ -42,15 +42,8 @@ final class RandomAccessReader(ds: SpaceDataset, field: String) {
       case (rel, bm) if bm.bitmapB64.isDefined =>
         rel -> DmlOps.deserializeBitmap(bm.bitmapB64.get)
     }
-    val ms = snapshot.manifestFiles.indexManifestFiles
-    val schema = ManifestIO.manifestSchema(storage)
-    val fileIdx = schema.fieldIndex(ManifestIO.FileCol)
-    val rowsIdx = schema.fieldIndex(ManifestIO.NumRowsCol)
-    val rows = ManifestIO.readIndexManifestRowsCached(ds.spark, storage, ms)
-    ms.toIndexedSeq.flatMap(m => rows.getOrElse(m, Array.empty[org.apache.spark.sql.Row]))
-      .map { r =>
-        val rel = r.getString(fileIdx)
-        val n = r.getLong(rowsIdx)
+    ManifestIO.liveFileRowCounts(ds.spark, storage, snapshot.manifestFiles.indexManifestFiles)
+      .toIndexedSeq.map { case (rel, n) =>
         val live = deadByFile.get(rel).map { dead =>
           val l = RoaringBitmap.flip(dead, 0L, n)
           l.runOptimize()

@@ -117,10 +117,8 @@ object ReadOp {
     * ([[ManifestIO.readIndexManifestRowsCached]]): manifests are
     * immutable, so repeated plans of an unchanged table read none. */
   private[core] def manifestRows(
-      spark: SparkSession, storage: Storage, manifests: Seq[String]): Seq[Row] = {
-    val byM = ManifestIO.readIndexManifestRowsCached(spark, storage, manifests)
-    manifests.flatMap(m => byM.get(m).map(_.toSeq).getOrElse(Nil))
-  }
+      spark: SparkSession, storage: Storage, manifests: Seq[String]): Seq[Row] =
+    ManifestIO.readIndexManifestRowsLive(spark, storage, manifests).map(_._2)
 
   /** Scan plan of `predicate` at a snapshot: exactly the files a scan of
     * `scanPhysical(…, Some(predicate))` reads, because it runs [[prune]]

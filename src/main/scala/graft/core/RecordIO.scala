@@ -65,11 +65,16 @@ object RecordIO {
   val RecordPageBytes: Int = 64 * 1024
 
   /** Append `df` (logical schema) writing record payloads + index files +
-    * both manifests; returns the merged Patch. */
-  def writeWithRecords(spark: SparkSession, storage: Storage, df: DataFrame): Patch = {
+    * both manifests; returns the merged Patch. `carryover` (physical
+    * rows, record addresses as-is) lands in the same write job, in files
+    * of its own ([[AppendOp.writeFilesWithMeta]]): only `df` writes
+    * payloads, and only its files are harvested for the record
+    * manifest, whose carried-over record files are listed already. */
+  def writeWithRecords(spark: SparkSession, storage: Storage, df: DataFrame,
+      carryover: Option[DataFrame] = None): Patch = {
     val recordFields = storage.recordFields
-    if (recordFields.isEmpty)
-      return AppendOp.writeFilesWithMeta(spark, storage, df, writeClustered = true).patch
+    if (recordFields.isEmpty) return AppendOp.writeFilesWithMeta(spark, storage, df,
+      writeClustered = true, carryover = carryover).patch
 
     val schema = storage.schema
     val physical = ReadOp.physicalSchema(schema, recordFields)
@@ -123,12 +128,13 @@ object RecordIO {
     val clustered = storage.metadata.writeClusterBy.nonEmpty && storage.metadata.numBuckets == 0
     if (clustered) indexDF.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val result =
-      try AppendOp.writeFilesWithMeta(spark, storage, indexDF, writeClustered = true)
+      try AppendOp.writeFilesWithMeta(spark, storage, indexDF, writeClustered = true,
+        carryover = carryover)
       finally if (clustered) indexDF.unpersist(blocking = false)
     if (result.files.isEmpty) return result.patch
 
-    // record manifest: distinct record files referenced by the new index
-    // files, footer-harvested (record.py:27-32)
+    // record manifest: distinct record files referenced by the new ADD
+    // index files, footer-harvested (record.py:27-32)
     val newIndexAbs = result.files.map(f => storage.absolute(f.file))
     val idxDF = spark.read.schema(physical).parquet(newIndexAbs: _*)
     val toHarvest = recordFields.flatMap { rf =>

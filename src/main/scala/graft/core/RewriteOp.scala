@@ -89,8 +89,8 @@ object RewriteOp {
   /** Drop the manifests that list `affectedRel` and re-emit their
     * UNTOUCHED rows as one carryover manifest. Also returns the negative
     * stats delta of the affected files and their per-file row counts.
-    * Pure set arithmetic over the driver-loaded manifest rows: no Spark
-    * job. */
+    * Pure set arithmetic over the snapshot's cached manifest rows: no
+    * Spark job. */
   private[core] def manifestCarryover(
       spark: SparkSession,
       storage: Storage,
@@ -103,7 +103,7 @@ object RewriteOp {
     val nIdx = schema.fieldIndex(ManifestIO.NumRowsCol)
     val cIdx = schema.fieldIndex(ManifestIO.CompressedCol)
     val uIdx = schema.fieldIndex(ManifestIO.UncompressedCol)
-    val rows = ManifestIO.readIndexManifestRowsDriver(storage, conf, manifests)
+    val rows = ManifestIO.readIndexManifestRowsLive(spark, storage, manifests)
     val affected = rows.filter { case (_, r) => affectedRel.contains(r.getString(fIdx)) }
     val affectedManifests = affected.map(_._1).toSet
     val removedManifests = manifests.filter(affectedManifests.contains).toList

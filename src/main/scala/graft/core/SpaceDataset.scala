@@ -302,9 +302,11 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
         "overwriteWhere: replacement rows must satisfy the predicate " +
           "(NULL predicate values count as violations)")
       storage.commitTransaction(branch, ConflictPolicy.Rewrite) { pinned =>
-        val del = DmlOps.delete(spark, storage, pinned, toPhysicalCol(cond))
-        val app = RecordIO.writeWithRecords(spark, storage, toPhysicalDf(pinnedDf))
-        Patch.merge(del.toSeq :+ app)
+        // fused: the CoW sweep and the replacement rows share one write
+        // pass; when nothing matched the replacement is appended alone
+        val adds = toPhysicalDf(pinnedDf)
+        DmlOps.delete(spark, storage, pinned, toPhysicalCol(cond), extraAdds = Some(adds))
+          .orElse(Some(RecordIO.writeWithRecords(spark, storage, adds)))
       }
     } finally { pinnedDf.unpersist(); () }
   }
@@ -382,17 +384,10 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
         }
       }
       val updated = toPhysicalDf(applied.drop(tmp.map(_._3): _*))
-      if (DmlOps.fusesAdds(storage))
-        // fused: the CoW sweep and the rewritten rows share one write
-        // pass (None = nothing matched: no-op, returns the current head
-        // — zero matches also means zero rewritten rows)
-        DmlOps.delete(spark, storage, pinned, physCond, dvMaxFraction, Some(updated))
-      else DmlOps.delete(spark, storage, pinned, physCond, dvMaxFraction) match {
-        case None => None
-        case Some(delPatch) =>
-          val addPatch = RecordIO.writeWithRecords(spark, storage, updated)
-          Patch.merge(Seq(delPatch, addPatch))
-      }
+      // fused: the CoW sweep and the rewritten rows share one write
+      // pass (None = nothing matched: no-op, returns the current head
+      // — zero matches also means zero rewritten rows)
+      DmlOps.delete(spark, storage, pinned, physCond, dvMaxFraction, Some(updated))
     }
   }
 
@@ -642,8 +637,8 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
   /** Filterable index-manifest table (storage.py:459-480). */
   def indexManifest(): DataFrame = {
     val ms = storage.metadata.currentSnapshot.manifestFiles.indexManifestFiles
-    val byM = ManifestIO.readIndexManifestRowsCached(spark, storage, ms)
-    spark.createDataFrame(ms.flatMap(byM(_)).asJava, ManifestIO.manifestSchema(storage))
+    spark.createDataFrame(ReadOp.manifestRows(spark, storage, ms).asJava,
+      ManifestIO.manifestSchema(storage))
   }
 
   /** Filterable record-manifest table (`_FILE,_FIELD_ID,_NUM_ROWS,

@@ -297,9 +297,7 @@ object ViewMaintenance {
       .filter(JoinPlan.isJoin).map(JoinPlan.fromJson)
       .filter(_.joinType != JoinView.Inner)
       .foreach { p =>
-        val allowed = spark.conf.getOption(AllowOuterStateChainKey)
-          .exists(_.trim.equalsIgnoreCase("true"))
-        require(allowed,
+        require(graft.core.Confs.boolConf(spark, AllowOuterStateChainKey, dflt = false),
           s"cannot create a view over ${ds.location}: it is the bare STATE " +
             s"table of a '${p.joinType}' join view and holds only MATCHED rows — " +
             s"the unmatched rows live in ${(p.unmatchedLocation.toSeq ++

@@ -1049,6 +1049,25 @@ class JoinViewSpec extends AnyFunSuite {
     assert(chained.refresh() == 1)
   }
 
+  test("a malformed allowOuterStateChain value fails with the key named") {
+    val l = leftTable(200L)
+    val o = orders.filter(col("o_orderkey") <= 200L)
+      .selectExpr("o_orderkey AS okey", "o_custkey", "o_totalprice")
+    val r = SpaceDataset.create(spark, freshLoc("jvrcb"), o.schema, Seq("okey"))
+    r.append(o)
+    val jv = createOuterView(l, r)
+    jv.refresh()
+    val state = SpaceDataset.load(spark, jv.dataset.location)
+    // "yes" is neither true nor false: refused loudly, never read as false
+    spark.conf.set(ViewMaintenance.AllowOuterStateChainKey, "yes")
+    try {
+      val e = intercept[IllegalArgumentException](AggregateView.create(
+        spark, freshLoc("chainbad"), state, Seq("okey"), Seq(AggSpec.sum("l_quantity", "q"))))
+      assert(e.getMessage.contains(ViewMaintenance.AllowOuterStateChainKey) &&
+        e.getMessage.contains("'yes'"), e.getMessage)
+    } finally spark.conf.unset(ViewMaintenance.AllowOuterStateChainKey)
+  }
+
   test("deep backlog auto-coalesces under the default refresh call") {
     spark.conf.set(ViewMaintenance.AutoCoalesceSnapshotsKey, "3")
     try {

@@ -14,19 +14,23 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 import graft.core._
 
-/** Spark jobs started inside a block, and the shuffle bytes they wrote.
-  * `calls` names every job, so a failed count assertion that prints the
-  * JobCount shows which job appeared. */
-final case class JobCount(jobs: Int, stages: Int, shuffleBytes: Long, calls: Seq[JobCount.Call]) {
+/** Spark jobs started inside a block, the shuffle bytes they wrote, and
+  * the file writes (SQL executions of a file-writing command) among
+  * them. `calls` names every job, so a failed count assertion that
+  * prints the JobCount shows which job appeared. */
+final case class JobCount(jobs: Int, stages: Int, shuffleBytes: Long, calls: Seq[JobCount.Call],
+    writes: Int = 0) {
   override def toString: String =
-    s"JobCount(jobs = $jobs, stages = $stages, shuffleBytes = $shuffleBytes)" +
+    s"JobCount(jobs = $jobs, stages = $stages, shuffleBytes = $shuffleBytes, writes = $writes)" +
       calls.map("\n  " + _).mkString
 }
 
@@ -51,6 +55,7 @@ object JobCount {
     val sc = spark.sparkContext
     var stages = 0
     var shuffle = 0L
+    var writes = 0
     val calls = mutable.ArrayBuffer[Call]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
@@ -65,13 +70,19 @@ object JobCount {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
         shuffle += Option(e.stageInfo.taskMetrics).map(_.shuffleWriteMetrics.bytesWritten).getOrElse(0L)
       }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          synchronized(writes += 1)
+        case _ =>
+      }
     }
     org.apache.spark.sql.graftshim.ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try {
       val out = body
       org.apache.spark.sql.graftshim.ListenerBusDrain(sc)
-      (out, listener.synchronized(JobCount(calls.size, stages, shuffle, calls.toList)))
+      (out, listener.synchronized(JobCount(calls.size, stages, shuffle, calls.toList, writes)))
     } finally sc.removeSparkListener(listener)
   }
 }

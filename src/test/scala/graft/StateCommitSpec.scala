@@ -11,9 +11,8 @@ import graft.views._
 
 /** The shared state-commit path of every view kind
   * (`ViewMaintenance.commitUnlessApplied` + `DmlOps.deleteByKeysAndAppend`):
-  * one state commit per source snapshot and state table, the fused
-  * delete+append shape on plain state tables, and the sweep-then-append
-  * leg on state tables the fused pass cannot write (record fields). */
+  * one state commit per source snapshot and state table, and the fused
+  * delete+append shape on plain and record-field state tables. */
 class StateCommitSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -105,14 +104,14 @@ class StateCommitSpec extends AnyFunSuite {
       .select("o_custkey", "o_orderkey", "o_totalprice", "c_nationkey"), "left-outer join")
   }
 
-  test("non-fusible leg: a record-field MV over delete-only, add-only, upsert and coalesced windows") {
+  test("fused record-field leg: an MV over delete-only, add-only, upsert and coalesced windows") {
     val docs = Tables.read(spark, sfDir, "documents")
       .selectExpr("doc_id", "source", "encode(text, 'UTF-8') AS body")
     val src = SpaceDataset.create(spark, freshLoc("scdocs"), docs.schema, Seq("doc_id"))
     src.append(docs.filter(col("doc_id") < 400L))
     val v = View.ofDataset(src)
       .selectExprs("doc_id", "upper(source) AS src", "body")
-    // the record field keeps the state table off the fused write pass
+    // the record field takes the payload-writing path of the fused write
     val mv = v.materialize(spark, freshLoc("screcmv"), Seq("doc_id"), recordFields = Seq("body"))
     assert(mv.dataset.storage.recordFields == Seq("body"))
     def check(what: String): Unit =
@@ -129,10 +128,23 @@ class StateCommitSpec extends AnyFunSuite {
 
     src.upsert(docs.filter(col("doc_id") >= 100L && col("doc_id") < 180L)
       .withColumn("body", concat(col("body"), lit("!").cast("binary"))))
-    assert(mv.refresh() == 1)
-    val cl = mv.dataset.storage.changeLog(mv.dataset.storage.metadata.currentSnapshotId).get
+    // a pure-CoW sweep: a merge-on-read sweep writes no file, so only a
+    // CoW sweep shows the fused shape
+    val st = mv.dataset.storage
+    def manifests: Set[String] =
+      st.snapshotOrFail(st.metadata.currentSnapshotId).manifestFiles.indexManifestFiles.toSet
+    val before = manifests
+    spark.conf.set(ViewMaintenance.StateDvMaxFractionKey, "0")
+    try assert(mv.refresh() == 1)
+    finally spark.conf.unset(ViewMaintenance.StateDvMaxFractionKey)
+    val cl = st.changeLog(st.metadata.currentSnapshotId).get
     assert(cl.deletedRows.nonEmpty && cl.addedRows.nonEmpty,
       "the upsert's state commit must both sweep and add")
+    assert((manifests -- before).size <= 2,
+      "a fused state commit mints at most a carryover and ONE data manifest")
+    assert(cl.addedRows.map(_.file).toSet.intersect(cl.deletedRows.map(_.file).toSet).isEmpty,
+      "ADD files must be disjoint from the swept files")
+    assert(cl.addedRows.forall(_.allRows), "survivors must live in their own files")
     check("upsert snapshot")
 
     // a backlog of every shape, folded into one coalesced commit

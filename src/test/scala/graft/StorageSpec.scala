@@ -176,46 +176,151 @@ class StorageSpec extends AnyFunSuite {
     assert(cl.addedRows.isEmpty)
   }
 
-  test("fused upsert/update: one write pass, one data manifest, exact CDC") {
-    val loc = freshLoc()
-    val ds = SpaceDataset.create(spark, loc, orders.schema, Seq("o_orderkey"))
-    ds.append(orders.repartitionByRange(4, col("o_orderkey")))
-    def manifests: Set[String] = ds.storage
-      .snapshotOrFail(ds.storage.metadata.currentSnapshotId)
-      .manifestFiles.indexManifestFiles.toSet
+  /** A table layout of the fused-write specs: how to create the table
+    * over `schema`, the record field it stores apart, if any, and the
+    * Spark jobs its fused upsert runs. */
+  private final case class Layout(name: String, upsertJobs: Int,
+      recordField: Option[String] = None)(
+      val create: (String, org.apache.spark.sql.types.StructType) => SpaceDataset)
 
-    // UPSERT: the matched-key CoW sweep and the incoming rows land in
-    // ONE write job — the commit adds exactly ONE data manifest beyond
-    // the untouched-survivor carryover (two-pass minted two)
-    val before = manifests
-    val incoming = orders.filter(col("o_orderkey") < 500L)
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-    ds.upsert(incoming)
-    val added = manifests -- before
+  // upsert jobs: the duplicate-key check (one), the sweep's bitmap
+  // query (two), the write (one; plus its shuffle on bucketed layouts,
+  // its range sample and shuffle on clustered ones) and, on record
+  // fields, the record-manifest harvest (two). Sweep-then-append ran
+  // two writes on bucketed and record-field layouts: 7 jobs each.
+  private val layouts = Seq(
+    Layout("plain", 4)((loc, schema) =>
+      SpaceDataset.create(spark, loc, schema, Seq("o_orderkey"))),
+    Layout("write-clustered", 6)((loc, schema) =>
+      SpaceDataset.create(spark, loc, schema, Seq("o_orderkey"), writeClusterBy = Seq("o_custkey"))),
+    Layout("flat-bucketed", 5)((loc, schema) =>
+      SpaceDataset.create(spark, loc, schema, Seq("o_orderkey"),
+        bucketColumns = Seq("o_custkey"), numBuckets = 4)),
+    Layout("per-column-bucketed", 5)((loc, schema) =>
+      SpaceDataset.create(spark, loc, schema, Seq("o_orderkey"),
+        bucketColumns = Seq("o_custkey", "o_orderstatus"), numBuckets = 8,
+        bucketCounts = Seq(4, 2))),
+    Layout("record-field", 6, Some("o_body"))((loc, schema) =>
+      SpaceDataset.create(spark, loc, schema, Seq("o_orderkey"), recordFields = Seq("o_body"))))
+
+  /** What a fused delete+append must commit: ADD files disjoint from
+    * the swept files and holding adds only, and at most a carryover
+    * plus ONE data manifest beyond the manifests it started from. */
+  private def assertFusedShape(ds: SpaceDataset, before: Set[String], what: String): Unit = {
+    val added = manifestsOf(ds) -- before
     assert(added.size <= 2, // fused manifest + at most one carryover
-      s"fused upsert must mint at most carryover + ONE data manifest, got ${added.size}")
+      s"$what must mint at most carryover + ONE data manifest, got ${added.size}")
     // the UPDATE encoding survives fusion: DELETE then ADD of the keys,
     // one snapshot, adds disjoint from the swept originals
     val cl = ds.storage.changeLog(ds.storage.metadata.currentSnapshotId).get
-    assert(cl.deletedRows.nonEmpty && cl.addedRows.nonEmpty)
-    assert(cl.addedRows.map(_.file).toSet
-      .intersect(cl.deletedRows.map(_.file).toSet).isEmpty,
-      "fused adds must land in files separate from the swept originals")
+    assert(cl.deletedRows.nonEmpty && cl.addedRows.nonEmpty, s"$what must both sweep and add")
+    assert(cl.addedRows.map(_.file).toSet.intersect(cl.deletedRows.map(_.file).toSet).isEmpty,
+      s"$what: fused adds must land in files separate from the swept originals")
     assert(cl.addedRows.forall(_.allRows),
-      "every fused add file is all-adds (survivors live in their own files)")
-    assert(cl.addedRows.map(_.numRows).sum == incoming.count())
-    assert(ds.readAll().count() == orders.count())
+      s"$what: every fused add file is all-adds (survivors live in their own files)")
+  }
 
-    // UPDATE: same fused shape through the condition-delete path
-    val before2 = manifests
-    ds.update(col("o_orderkey") % 11 === 3, Map("o_totalprice" -> lit(1.0)))
-    assert((manifests -- before2).size <= 2,
-      "fused update must mint at most carryover + ONE data manifest")
-    val cl2 = ds.storage.changeLog(ds.storage.metadata.currentSnapshotId).get
-    assert(cl2.deletedRows.map(_.numRows).sum == cl2.addedRows.map(_.numRows).sum,
-      "UPDATE deletes and re-adds exactly the matched rows")
-    assert(ds.readAll().filter(col("o_orderkey") % 11 === 3 &&
-      col("o_totalprice") =!= 1.0).count() == 0)
+  private def manifestsOf(ds: SpaceDataset): Set[String] = ds.storage
+    .snapshotOrFail(ds.storage.metadata.currentSnapshotId)
+    .manifestFiles.indexManifestFiles.toSet
+
+  /** Every file's rows hash to the bucket its name carries. */
+  private def assertBucketLayout(ds: SpaceDataset, what: String): Unit = {
+    val meta = ds.storage.metadata
+    val counts = if (meta.bucketCounts.nonEmpty) meta.bucketCounts.toSeq else Seq(meta.numBuckets)
+    val hashes =
+      if (meta.bucketCounts.nonEmpty) meta.bucketColumns.zip(counts).map { case (c, n) =>
+        pmod(hash(col(c)), lit(n)) }
+      else Seq(pmod(hash(meta.bucketColumns.map(col): _*), lit(meta.numBuckets)))
+    ds.indexFiles().foreach { f =>
+      val b = graft.format.StoragePaths.bucketOf(f)
+      assert(b.isDefined, s"$what: unbucketed file $f")
+      val want = AppendOp.tupleOfFlat(b.get, counts)
+      val got = spark.read.parquet(ds.storage.absolute(f)).select(hashes: _*).distinct()
+        .collect().map(r => counts.indices.map(r.getInt))
+      assert(got.forall(_ == want), s"$what: rows of $f hash to ${got.toSeq}, not bucket $want")
+    }
+  }
+
+  for (layout <- layouts) {
+    val suffix = if (layout.name == "plain") "" else s" (${layout.name})"
+    test("fused upsert/update: one write pass, one data manifest, exact CDC" + suffix) {
+      val base = orders.withColumn("o_body",
+        encode(concat_ws(":", col("o_orderkey"), col("o_orderstatus"), col("o_orderdate")), "UTF-8"))
+      val ds = layout.create(freshLoc(), base.schema)
+      ds.append(base.repartitionByRange(4, col("o_orderkey")))
+      def same(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame,
+          what: String): Unit = {
+        val g = got.select(want.columns.map(col): _*)
+        assert(g.count() == want.count() && g.exceptAll(want).isEmpty &&
+          want.exceptAll(g).isEmpty, s"${layout.name}: $what")
+      }
+
+      // UPSERT: the matched-key CoW sweep and the incoming rows land in
+      // ONE write job — the commit adds exactly ONE data manifest beyond
+      // the untouched-survivor carryover (two-pass minted two)
+      val before = manifestsOf(ds)
+      val incoming = base.filter(col("o_orderkey") < 500L)
+        .withColumn("o_totalprice", col("o_totalprice") * 2)
+      val (_, upsertJobs) = JobCount.of(spark)(ds.upsert(incoming))
+      assert(upsertJobs.writes == 1 && upsertJobs.jobs == layout.upsertJobs,
+        s"${layout.name}: fused upsert ran $upsertJobs")
+      assertFusedShape(ds, before, s"${layout.name} upsert")
+      val cl = ds.storage.changeLog(ds.storage.metadata.currentSnapshotId).get
+      assert(cl.addedRows.map(_.numRows).sum == incoming.count())
+      assert(ds.readAll().count() == orders.count())
+      var want = base.filter(col("o_orderkey") >= 500L).unionByName(incoming)
+      same(ds.readAll(), want, "rows after the upsert")
+
+      // UPDATE: same fused shape through the condition-delete path
+      val before2 = manifestsOf(ds)
+      val (_, updateJobs) = JobCount.of(spark)(
+        ds.update(col("o_orderkey") % 11 === 3, Map("o_totalprice" -> lit(1.0))))
+      assert(updateJobs.writes == 1, s"${layout.name}: fused update ran $updateJobs")
+      assertFusedShape(ds, before2, s"${layout.name} update")
+      val cl2 = ds.storage.changeLog(ds.storage.metadata.currentSnapshotId).get
+      assert(cl2.deletedRows.map(_.numRows).sum == cl2.addedRows.map(_.numRows).sum,
+        "UPDATE deletes and re-adds exactly the matched rows")
+      assert(ds.readAll().filter(col("o_orderkey") % 11 === 3 &&
+        col("o_totalprice") =!= 1.0).count() == 0)
+      want = want.withColumn("o_totalprice",
+        when(col("o_orderkey") % 11 === 3, lit(1.0)).otherwise(col("o_totalprice")))
+
+      // OVERWRITE WHERE: the predicate sweep and the replacement rows
+      // share the same fused write
+      val before3 = manifestsOf(ds)
+      val range = col("o_orderkey") >= 1000L && col("o_orderkey") < 2000L
+      val replacement = base.filter(range).withColumn("o_orderstatus", lit("X"))
+      val (_, overwriteJobs) = JobCount.of(spark)(ds.overwriteWhere(range, replacement))
+      assert(overwriteJobs.writes == 1, s"${layout.name}: fused overwriteWhere ran $overwriteJobs")
+      assertFusedShape(ds, before3, s"${layout.name} overwriteWhere")
+      want = want.filter(!range).unionByName(replacement)
+      same(ds.readAll(), want, "rows after overwriteWhere")
+
+      if (ds.storage.metadata.numBuckets > 0) {
+        assertBucketLayout(ds, layout.name)
+        // bucket-pruned point reads equal the full filter
+        for (cust <- base.select("o_custkey").distinct().orderBy("o_custkey").limit(5)
+            .collect().map(_.getLong(0))) {
+          val point = col("o_custkey") === cust
+          val p = ds.plan(Some(point))
+          assert(p.files.size < p.totalFiles, s"${layout.name}: bucket pruning must engage")
+          same(ds.read(filter = Some(point)), want.filter(point), s"point read of o_custkey $cust")
+        }
+      }
+      layout.recordField.foreach { rf =>
+        // the record manifest lists each record file once, and the
+        // statistics count each once: carried-over index files keep
+        // addresses into files that are listed already
+        val rm = ds.recordManifest().collect()
+        val files = rm.map(_.getString(0))
+        assert(files.distinct.length == files.length,
+          s"record files listed twice: ${files.diff(files.distinct).toSeq}")
+        assert(ds.storage.metadata.currentSnapshot.storageStatistics.recordUncompressedBytes ==
+          rm.map(_.getLong(3)).sum)
+        RecordScans.check(ds, rf, "o_orderkey")
+      }
+    }
   }
 
   test("delete bitmaps are built executor-side: no row-position collect in the plan") {

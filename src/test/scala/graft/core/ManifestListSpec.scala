@@ -246,6 +246,23 @@ class ManifestListSpec extends AnyFunSuite {
       s"only the new manifest should load after an append, loaded $delta")
   }
 
+  test("a small key upsert reads the live manifests through the process cache") {
+    val (ds, orders) = quartered("mlups_")
+    val live = ds.storage.metadata.currentSnapshot.manifestFiles.indexManifestFiles.size
+    // warm: a planned read loads each live manifest once
+    assert(ds.readAll().count() == orders.count())
+    val opens0 = ManifestIO.manifestParquetOpens
+    // the key sweep's candidates, its physical row counts and the
+    // carryover of the manifests it rewrites all read the same
+    // immutable manifests: each loads at most once (three times when
+    // every pass opened them anew)
+    ds.upsert(orders.filter(col("o_orderkey") < 40L).limit(5)
+      .withColumn("o_totalprice", col("o_totalprice") + 1.0))
+    val opens = ManifestIO.manifestParquetOpens - opens0
+    assert(opens <= live, s"a 5-row upsert opened $opens manifests; $live are live")
+    assert(ds.readAll().count() == orders.count())
+  }
+
   test("snapshot expiry drops summaries of stranded manifests") {
     val (ds, _) = quartered("mliste_")
     ds.delete(col("o_orderkey") % 2 === 0) // rewrites → old manifests stranded on old snapshots
