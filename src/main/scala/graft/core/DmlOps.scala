@@ -564,11 +564,7 @@ object DmlOps {
         base.filter(cond)
       }
       val nmbsUpdatedRows = notMatchedBySourceUpdate.map { case (_, assigns) =>
-        // stage every RHS first so later assignments read PRE-update values
-        val tmp = assigns.zipWithIndex.map { case ((k, v), i) => (k, v, s"__graft_set_$i") }
-        val staged = tmp.foldLeft(nmbsUpdVictims.get) { case (df, (_, v, t)) => df.withColumn(t, v) }
-        val applied = tmp.foldLeft(staged) { case (df, (k, _, t)) => df.withColumn(k, col(t)) }
-        applied.drop(tmp.map(_._3): _*)
+        assign(nmbsUpdVictims.get, assigns.map { case (k, v) => Seq(k) -> v })
       }
 
       // ONE CoW delete pass over the union of every leg's victim keys
@@ -589,6 +585,23 @@ object DmlOps {
       src.unpersist()
       ()
     }
+  }
+
+  /** SQL assignment semantics for UPDATE and MERGE's NOT MATCHED BY
+    * SOURCE UPDATE: every right-hand side sees the PRE-update row. All
+    * values are staged as temp columns first, then applied — a
+    * sequential withColumn would let later assignments read earlier
+    * ones' results (SET a = b, b = a would not swap). A one-name path
+    * assigns a top-level column, a longer one a struct member (rows
+    * whose struct is NULL stay NULL). */
+  private[core] def assign(df: DataFrame, assignments: Seq[(Seq[String], Column)]): DataFrame = {
+    val tmp = assignments.zipWithIndex.map { case ((path, v), i) => (path, v, s"__graft_set_$i") }
+    val staged = tmp.foldLeft(df) { case (d, (_, v, t)) => d.withColumn(t, v) }
+    tmp.foldLeft(staged) {
+      case (d, (Seq(top), _, t)) => d.withColumn(top, col(t))
+      case (d, (parts, _, t)) => d.withColumn(parts.head,
+        col(s"`${parts.head}`").withField(parts.tail.mkString("."), col(t)))
+    }.drop(tmp.map(_._3): _*)
   }
 
   private def failOnInternalDupes(df: DataFrame, pks: Seq[String]): Unit = {

@@ -187,10 +187,19 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
 
   // --------------------------------------------------------- mutations
 
-  def append(df: DataFrame, branch: String = currentBranch): Long = {
-    val sid = storage.commitTransaction(branch, ConflictPolicy.Append) { _ =>
-      Some(RecordIO.writeWithRecords(spark, storage, toPhysicalDf(df)))
-    }
+  def append(df: DataFrame, branch: String = currentBranch): Long =
+    commitAppend(branch)(Some(RecordIO.writeWithRecords(spark, storage, toPhysicalDf(df))))
+
+  /** The one append-shaped commit: commits `patch` (re-evaluated on a
+    * retry; None commits nothing and returns the head) under
+    * [[ConflictPolicy.Append]], then self-packs the manifest tail.
+    * [[append]], [[appendFrom]], [[appendOnce]] and the streaming
+    * sink's epoch commit all go through it; public because the sink
+    * commits from outside the `graft` package. A patch tagged with an
+    * already-applied txn throws [[DuplicateTransactionException]] and
+    * packs nothing. */
+  def commitAppend(branch: String)(patch: => Option[Patch]): Long = {
+    val sid = storage.commitTransaction(branch, ConflictPolicy.Append)(_ => patch)
     maybeAutoPackManifests(branch)
     sid
   }
@@ -199,19 +208,19 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
     * [[ClusterOp]] shape, for the METADATA plane): every trickle append
     * mints one small index manifest, and past a few dozen of them a
     * full scan's planning pays one read per manifest. When an append
-    * leaves at least `spark.graft.manifest.autoPackManifests` (default
-    * 64, 0 disables) UNDER-FILLED index manifests, the already-
-    * incremental [[RewriteManifestsOp]] bin-pack runs right after the
-    * commit — CDC-silent, so CDC feeds and chained views see nothing.
-    * The check is O(1) off the manifest-list summaries; unsummarized
-    * (legacy) manifests never trigger. Best-effort: a racing writer or
-    * a transient failure just defers the pack to a later append. */
+    * ([[commitAppend]]) leaves at least
+    * `spark.graft.manifest.autoPackManifests` (default 64, 0 disables)
+    * UNDER-FILLED index manifests, the already-incremental
+    * [[RewriteManifestsOp]] bin-pack runs right after the commit —
+    * CDC-silent, so CDC feeds and chained views see nothing. The check
+    * is O(1) off the manifest-list summaries; unsummarized (legacy)
+    * manifests never trigger. Best-effort: a racing writer or a
+    * transient failure just defers the pack to a later append. */
   private def maybeAutoPackManifests(branch: String): Unit = {
     val threshold = Confs.longConf(spark,
       SpaceDataset.AutoPackManifestsKey, SpaceDataset.DefaultAutoPackManifests)
     if (threshold <= 0) return
-    val target = Confs.longConf(spark,
-      SpaceDataset.AutoPackTargetFilesKey, SpaceDataset.DefaultAutoPackTargetFiles)
+    val target = SpaceDataset.AutoPackTargetFiles
     val snap = storage.metadata.snapshot(storage.branchHead(branch))
       .getOrElse(return)
     val summaries = storage.metadata.manifestSummaries
@@ -230,10 +239,8 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
     * source's write is its own distributed job, patches merge into a
     * single atomic commit whose changelog covers all sources. */
   def appendFrom(sources: Seq[() => DataFrame], branch: String = currentBranch): Long =
-    storage.commitTransaction(branch, ConflictPolicy.Append) { _ =>
-      Patch.merge(sources.map(fn =>
-        RecordIO.writeWithRecords(spark, storage, toPhysicalDf(fn()))))
-    }
+    commitAppend(branch)(Patch.merge(sources.map(fn =>
+      RecordIO.writeWithRecords(spark, storage, toPhysicalDf(fn())))))
 
   /** Idempotent append for exactly-once sinks (the foreachBatch /
     * streaming-restart pattern): the commit records `appId → version`,
@@ -248,7 +255,7 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
       branch: String = currentBranch): Option[Long] = {
     storage.reload()
     if (storage.metadata.txnVersions.get(appId).exists(_ >= version)) return None
-    try Some(storage.commitTransaction(branch, ConflictPolicy.Append) { _ =>
+    try Some(commitAppend(branch) {
       val patch = RecordIO.writeWithRecords(spark, storage, toPhysicalDf(df))
       Some(patch.copy(txn = Some(TxnTag(appId, version))))
     }) catch {
@@ -366,24 +373,8 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
       // updated rows, built from the same pinned snapshot (CoW: the
       // delete rewrites files, it never mutates the pinned inputs)
       val matched = read(filter = Some(cond), version = Some(pinned.toString))
-      // SQL UPDATE semantics: every RHS sees the PRE-update row.
-      // Stage all RHS values as temp columns first, then apply —
-      // a sequential withColumn would let later assignments read
-      // earlier ones' results (SET a = b, b = a would not swap).
-      val tmp = ordered.zipWithIndex.map {
-        case ((k, v), i) => (k, v, s"__graft_set_$i")
-      }
-      val staged = tmp.foldLeft(matched) {
-        case (df, (_, v, t)) => df.withColumn(t, v)
-      }
-      val applied = tmp.foldLeft(staged) {
-        case (df, (k, _, t)) => assignPath(k) match {
-          case Seq(top) => df.withColumn(top, col(t))
-          case parts => df.withColumn(parts.head,
-            col(s"`${parts.head}`").withField(parts.tail.mkString("."), col(t)))
-        }
-      }
-      val updated = toPhysicalDf(applied.drop(tmp.map(_._3): _*))
+      val updated = toPhysicalDf(DmlOps.assign(matched,
+        ordered.map { case (k, v) => assignPath(k) -> v }))
       // fused: the CoW sweep and the rewritten rows share one write
       // pass (None = nothing matched: no-op, returns the current head
       // — zero matches also means zero rewritten rows)
@@ -725,14 +716,13 @@ final class MergeBuilder private[core] (ds: SpaceDataset, source: DataFrame) {
 object SpaceDataset {
 
   /** Under-filled index-manifest count that makes an append self-pack
-    * the manifest tail ([[SpaceDataset.append]]); `0` disables. */
+    * the manifest tail ([[SpaceDataset.commitAppend]]); `0` disables. */
   val AutoPackManifestsKey = "spark.graft.manifest.autoPackManifests"
   val DefaultAutoPackManifests = 64L
 
   /** Target rows (= data files) per packed manifest for the self-pack
     * — also the under-filled threshold, like `rewrite_manifests`. */
-  val AutoPackTargetFilesKey = "spark.graft.manifest.autoPackTargetFiles"
-  val DefaultAutoPackTargetFiles = 100L * 1000
+  val AutoPackTargetFiles = 100L * 1000
 
   def create(
       spark: SparkSession,

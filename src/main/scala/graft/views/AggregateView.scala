@@ -73,63 +73,6 @@ final case class AggPlan(
     else aggs.filter(a => a.kind == "min" || a.kind == "max")
 }
 
-/** Common refresh surface of every view kind (row-wise, aggregate and
-  * join views) — what `CALL system.refresh_mv` dispatches over.
-  *
-  * [[refresh]] is the one shared wrapper: it runs the view kind's own
-  * maintenance walk ([[refreshInner]]) and, when that committed
-  * anything, self-maintains each of the view's [[stateDatasets]]
-  * (bin-pack past the file threshold, [[ViewMaintenance
-  * .maybeCompactState]]; CDC-silent, so chained views are unaffected).
-  * Every state commit of a walk goes through
-  * [[ViewMaintenance.commitUnlessApplied]]. */
-trait Refreshable {
-  def spark: SparkSession
-  /** The view's main state table (a join view's inner state). */
-  def dataset: SpaceDataset
-  /** Every state table the view maintains, in auto-compaction order. */
-  protected def stateDatasets: Seq[SpaceDataset] = Seq(dataset)
-
-  /** The view kind's maintenance walk; returns the state commits made. */
-  protected def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int
-
-  def refresh(targetVersion: Option[String] = None): Int =
-    refresh(targetVersion, coalesce = false)
-  /** Refresh to `targetVersion` (default: the source head). Returns
-    * the number of state commits made.
-    *
-    * A refresh is a list of CDC WINDOWS `(from, to]`
-    * ([[ViewMaintenance.windows]]), each applied to a state table by
-    * ONE step as ONE state commit stamping the watermark `to` — a
-    * window without change rows still commits its watermark. By
-    * default there is one window per data-bearing source snapshot
-    * `sid`, `(parent(sid), sid]`: the reference contract of one state
-    * commit per source snapshot (runners.py:204-215), which chained
-    * views observe as finer-grained CDC. `coalesce = true` makes the
-    * whole backlog ONE window `(watermark, target]` (per side, for a
-    * join view): a view that fell N commits behind pays one
-    * maintenance pass, not N commit cycles. A backlog of at least
-    * `spark.graft.mv.autoCoalesceSnapshots` (default 8) data snapshots
-    * coalesces on its own (0 forces per-snapshot windows), and chained
-    * views then see the window as one coarser commit.
-    *
-    * Tables keyed by the source PK (row-wise views, the inner join
-    * state, unmatched-own tables) apply a window in delta form
-    * ([[ViewMaintenance.delta]]): sweep the PKs of its DELETE batches,
-    * then append its ADD rows — transformed, joined or anti-joined —
-    * minus any row whose PK a strictly later snapshot of the window
-    * deletes. Exact under source-PK uniqueness, and a one-snapshot
-    * window's plan is the per-snapshot plan. Aggregate state merges a
-    * window's batches arithmetically; an unmatched-other table splits
-    * the window's touched keys by liveness at `to`. */
-  def refresh(targetVersion: Option[String], coalesce: Boolean): Int = {
-    val commits = refreshInner(targetVersion, coalesce)
-    if (commits > 0) stateDatasets.foreach(ViewMaintenance.maybeCompactState(spark, _))
-    commits
-  }
-  def refreshedTo: Option[Long]
-}
-
 object AggPlan {
   /** Cheap plan-kind probe (for loaders dispatching by table). */
   def isAggregate(planJson: String): Boolean =
@@ -311,39 +254,29 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
       val observed = refreshedTo
       if (built > 0 || observed.isEmpty || observed.exists(_ >= target)) return built
     }
-    // expired watermark snapshot: one-commit rebuild at the target
-    val walk = ViewMaintenance.walk(source.storage, refreshedTo.getOrElse(0L), target)
-      .getOrElse(return fullBuild(source, target, overwrite = true))
     // the maintenance arithmetic is additive, so a multi-snapshot
     // window merges exactly like one snapshot (an add-then-delete
-    // within it cancels — delete batches carry full values)
-    ViewMaintenance.refreshWindows(spark, dataset.storage, source.storage, walk, coalesce) {
-      w =>
-        val estRows = w.changeRows(source.storage, addsOnly = false)
-        ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(w.to)) {
-          pinned =>
-            // full delete rows: the state must SUBTRACT their contribution
-            val batches = ChangeData.diff(spark, source.storage,
-              w.pendingFrom(dataset.storage.metadata.mvSourceSnapshotId), w.to,
-              deletesPksOnly = false)
-            applyBatches(source, w.to, batches, pinned, estRows)
-              .copy(sourceSnapshotId = Some(w.to))
-        }
-    }
+    // within it cancels — delete batches carry full values); full
+    // delete rows: the state must SUBTRACT their contribution. Expired
+    // watermark snapshot: one-commit rebuild at the target.
+    ViewMaintenance.refreshPass(spark, source.storage, target, Seq(ViewMaintenance.StateTable(
+        dataset.storage, ViewMaintenance.Watermark.Source, (w, pinned) =>
+          applyBatches(source, w.to,
+            ChangeData.diff(spark, source.storage, w.from, w.to, deletesPksOnly = false),
+            pinned, w.changeRows(source.storage, addsOnly = false)))), coalesce)
+      .fold(fullBuild(source, target, overwrite = true))(_.sum)
   }
 
   /** One-commit whole-state (re)build: a single aggregation scan of
     * the source at `target`. `overwrite = false` is the FIRST refresh
     * (append into the empty state table); `overwrite = true` is the
     * expired-history fallback (atomic truncate + write, see
-    * [[refresh]]). */
+    * [[ViewMaintenance.buildState]]). */
   private def fullBuild(source: SpaceDataset, target: Long, overwrite: Boolean): Int = {
     val stateSchema = dataset.storage.logicalSchema
     val pexprs = partialExprs(plan)
-    // a non-overwrite build never lands on an already-built state
-    ViewMaintenance.commitUnlessApplied(dataset.storage, m =>
-      m.mvSourceSnapshotId.exists(_ >= target) ||
-        (m.mvSourceSnapshotId.isDefined && !overwrite)) { pinned =>
+    ViewMaintenance.buildState(spark, dataset.storage,
+        Seq(ViewMaintenance.Watermark.Source -> target), overwrite) { write =>
       val srcRows = source.read(version = Some(target.toString))
       val partial = srcFilter.fold(srcRows)(srcRows.filter)
         .groupBy(groups.map(col): _*).agg(pexprs.head, pexprs.tail: _*)
@@ -354,12 +287,8 @@ final class AggregateView(val spark: SparkSession, val dataset: SpaceDataset)
         require(bad.isNullAt(0) || bad.getInt(0) == 0,
           s"aggregate view ${dataset.location}: NULL group-by key in source " +
             s"snapshot $target (null groups are unsupported — filter them in a view)")
-        val rows = partial.select(stateSchema.fields.toSeq.map(f =>
-          col(f.name).cast(f.dataType).as(f.name)): _*)
-        val patch =
-          if (overwrite) DmlOps.overwriteAll(spark, dataset.storage, pinned, rows)
-          else RecordIO.writeWithRecords(spark, dataset.storage, rows)
-        patch.copy(sourceSnapshotId = Some(target))
+        write(partial.select(stateSchema.fields.toSeq.map(f =>
+          col(f.name).cast(f.dataType).as(f.name)): _*))
       } finally partial.unpersist()
     }
   }

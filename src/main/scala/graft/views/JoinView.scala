@@ -214,6 +214,10 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       unmatchedRightDataset.map(d =>
         UmRightPin -> d.storage.metadata.currentSnapshotId)).toMap
 
+  /** Stamp of every inner-table commit: the companions' fresh ids. */
+  private def withCompanions(p: Patch): Patch =
+    p.copy(sourceSnapshotIds = p.sourceSnapshotIds ++ companionIds())
+
   override protected def stateDatasets: Seq[SpaceDataset] =
     dataset +: (unmatchedDataset.toSeq ++ unmatchedRightDataset.toSeq)
 
@@ -277,20 +281,6 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
     * consumes the same frames unchanged). */
   private def diffPksOnly: Boolean = !isOuter
 
-  /** `side`'s change batches of window `w` still pending on `st` (its
-    * freshly reloaded watermark, inside the state transaction). */
-  private def pendingDiff(cache: DiffCache, src: Storage, st: Storage, side: String,
-      w: ViewMaintenance.Window, pksOnly: Boolean): Seq[ChangeBatch] =
-    cache.diff(src, w.pendingFrom(st.metadata.mvSourceSnapshotIds.get(side)), w.to, pksOnly)
-
-  /** One state table's participation in one side pass: its window step
-    * with the frozen other-side frame already bound, plus the check
-    * that the frame's snapshot still exists. */
-  private final case class PassTable(
-      st: Storage,
-      step: ViewMaintenance.Window => Int,
-      frameOk: () => Boolean)
-
   private def refreshSides(
       left: SpaceDataset,
       right: SpaceDataset,
@@ -305,41 +295,31 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
     val umAll = umL.toSeq ++ umR.toSeq
     var umCommits = 0
     var innerCommits = 0
-    def um_+(n: Int): Int = { umCommits += n; n }
-    def in_+(n: Int): Int = { innerCommits += n; n }
+    def um_+(n: Int): Unit = umCommits += n
+    def in_+(n: Int): Unit = innerCommits += n
 
     def rebuildAll(): Int = {
       umL.foreach(u => um_+(umBuild(u, lT, rT, overwrite = true)))
       umR.foreach(u => um_+(umBuild(u, rT, lT, overwrite = true)))
-      in_+(rebuild(left, right, lT, rT))
+      in_+(fullBuild(left, right, lT, rT, overwrite = true))
       umCommits + innerCommits
     }
 
-    /** One source side across every table: each table's windows from
-      * its OWN watermark, applied in window-end order with companions
-      * committing before the inner table (the inner entry is LAST in
-      * `tables`). One coalesce decision for the whole pass — mixed
-      * per-table modes would break the per-window pairing. False when
-      * source history expired (the caller rebuilds all). */
-    def sidePass(src: SpaceDataset, side: String, t: Long, tables: Seq[PassTable]): Boolean = {
-      val walks = tables.map(tb => ViewMaintenance.walk(
-        src.storage, tb.st.metadata.mvSourceSnapshotIds(side), t).getOrElse(return false))
-      val windows = ViewMaintenance.windows(spark, src.storage, walks, coalesce)
-      if (windows.exists(_.nonEmpty) && tables.exists(tb => !tb.frameOk())) return false
-      for (to <- windows.flatten.map(_.to).distinct.sorted;
-           (tb, ws) <- tables.zip(windows); w <- ws if w.to == to)
-        tb.step(w)
-      // silent-tail advance, same companions-first order; the inner
-      // advance (last) stamps the fresh pins
-      for (((tb, walk), ws) <- tables.zip(walks).zip(windows)) {
-        val isInner = tb.st eq dataset.storage
-        val n = ViewMaintenance.advanceSilent(spark, tb.st, walk, ws,
-          ViewMaintenance.reached(side, t))(Patch(sourceSnapshotIds = Map(side -> t) ++
-            (if (isInner) companionIds() else Map.empty)))
-        if (isInner) in_+(n) else um_+(n)
-      }
-      true
+    // the commits of one side pass of the refresh driver, per table of
+    // its list: the companions, then the inner table LAST (so companions
+    // commit first per window end)
+    def tally(commits: Seq[Int]): Unit = { um_+(commits.init.sum); in_+(commits.last) }
+    // one state table of a side pass: its step against the other
+    // side's frame frozen at `frameAt` (read at the table's first step)
+    def table(st: SpaceDataset, side: String, frameOf: SpaceDataset, frameAt: Long,
+        frame: DataFrame => DataFrame, stamp: Patch => Patch = identity)(
+        step: (DataFrame, ViewMaintenance.Window, Long) => Patch) = {
+      lazy val f = frame(frameOf.read(version = Some(frameAt.toString)))
+      ViewMaintenance.StateTable(st.storage, ViewMaintenance.Watermark.side(side),
+        (w, pinned) => step(f, w, pinned), stamp,
+        () => frameOf.storage.metadata.snapshot(frameAt).isDefined)
     }
+    def keysOnly(df: DataFrame) = df.select(plan.keys.map(col): _*)
 
     def run(): Int = {
       // ---- build phase: companions first; the inner build commit
@@ -355,57 +335,34 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
         // a concurrent build at older heads won, the walks advance
         // from the observed watermarks (first-refresh race, ADVICE r14)
       }
+      def wm(st: SpaceDataset, side: String) = st.storage.metadata.mvSourceSnapshotIds(side)
 
       // ---- LEFT pass: Δleft joins RIGHT frozen at each table's RIGHT
-      // watermark (the bi-delta pre-window frame)
+      // watermark (the bi-delta pre-window frame); umR sees its OTHER
+      // side first, so its own-side frame is frozen at its own
+      // watermark (the other-first bi-delta mirror)
       val leftTables =
-        umL.toSeq.map { u =>
-          val otherW = u.um.storage.metadata.mvSourceSnapshotIds(u.otherSide)
-          lazy val frame = u.other.read(version = Some(otherW.toString))
-            .select(plan.keys.map(col): _*)
-          PassTable(u.um.storage, w => um_+(umOwnStep(u, w, frame, cache)),
-            () => u.other.storage.metadata.snapshot(otherW).isDefined)
-        } ++
-        umR.toSeq.map { u =>
-          // umR sees its OTHER side first; its own-side frame is frozen
-          // at its own watermark (the other-first bi-delta mirror)
-          val ownW = u.um.storage.metadata.mvSourceSnapshotIds(u.ownSide)
-          lazy val frame = u.ownProjection(u.own.read(version = Some(ownW.toString)))
-          PassTable(u.um.storage, w => um_+(umOtherStep(u, w, frame, cache)),
-            () => u.own.storage.metadata.snapshot(ownW).isDefined)
-        } :+ {
-          val rW = dataset.storage.metadata.mvSourceSnapshotIds(RightSide)
-          lazy val frame = sideProjection(
-            right.read(version = Some(rW.toString)), plan.rightFields)
-          PassTable(dataset.storage,
-            w => in_+(step(left, LeftSide, w, plan.leftFields, frame,
-              deltaIsLeft = true, cache)),
-            () => right.storage.metadata.snapshot(rW).isDefined)
-        }
-      if (!sidePass(left, LeftSide, lT, leftTables)) return rebuildAll()
+        umL.toSeq.map(u => table(u.um, LeftSide, u.other, wm(u.um, u.otherSide), keysOnly)(
+          umOwnStep(u, _, _, _, cache))) ++
+        umR.toSeq.map(u => table(u.um, LeftSide, u.own, wm(u.um, u.ownSide), u.ownProjection)(
+          umOtherStep(u, _, _, _, cache))) :+
+        table(dataset, LeftSide, right, wm(dataset, RightSide),
+          sideProjection(_, plan.rightFields), withCompanions)(step(left, LeftSide, _, _, _, cache))
+      // expired source history or a gone frame: rebuild every table
+      tally(ViewMaintenance.refreshPass(spark, left.storage, lT, leftTables, coalesce)
+        .getOrElse(return rebuildAll()))
 
       // ---- RIGHT pass: Δright joins LEFT frozen at lT (the post-
       // window frame, for every table)
       val rightTables =
-        umL.toSeq.map { u =>
-          lazy val frame = u.ownProjection(u.own.read(version = Some(lT.toString)))
-          PassTable(u.um.storage, w => um_+(umOtherStep(u, w, frame, cache)),
-            () => u.own.storage.metadata.snapshot(lT).isDefined)
-        } ++
-        umR.toSeq.map { u =>
-          lazy val frame = u.other.read(version = Some(lT.toString))
-            .select(plan.keys.map(col): _*)
-          PassTable(u.um.storage, w => um_+(umOwnStep(u, w, frame, cache)),
-            () => u.other.storage.metadata.snapshot(lT).isDefined)
-        } :+ {
-          lazy val frame = sideProjection(
-            left.read(version = Some(lT.toString)), plan.leftFields)
-          PassTable(dataset.storage,
-            w => in_+(step(right, RightSide, w, plan.rightFields, frame,
-              deltaIsLeft = false, cache)),
-            () => left.storage.metadata.snapshot(lT).isDefined)
-        }
-      if (!sidePass(right, RightSide, rT, rightTables)) return rebuildAll()
+        umL.toSeq.map(u => table(u.um, RightSide, u.own, lT, u.ownProjection)(
+          umOtherStep(u, _, _, _, cache))) ++
+        umR.toSeq.map(u => table(u.um, RightSide, u.other, lT, keysOnly)(
+          umOwnStep(u, _, _, _, cache))) :+
+        table(dataset, RightSide, left, lT, sideProjection(_, plan.leftFields), withCompanions)(
+          step(right, RightSide, _, _, _, cache))
+      tally(ViewMaintenance.refreshPass(spark, right.storage, rT, rightTables, coalesce)
+        .getOrElse(return rebuildAll()))
       umCommits + innerCommits
     }
 
@@ -443,49 +400,35 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
   private def sideProjection(df: DataFrame, fields: Seq[String]): DataFrame =
     df.select((plan.keys ++ fields).map(col): _*)
 
-  /** One CDC window of `side` applied to the inner state as one commit
-    * (exactly-once via the per-side watermark re-check inside the
-    * transaction): sweep the window's deleted source PKs, append its
-    * surviving ADD rows (see [[ViewMaintenance.delta]]) ⋈ the frozen
-    * other side. */
+  /** One CDC window of `side`'s data change on the inner state: sweep
+    * the window's deleted source PKs (part of the state PK by
+    * construction, so exactly this source row's derived join rows
+    * disappear), append its surviving ADD rows (see
+    * [[ViewMaintenance.applyDelta]]) ⋈ the frozen other side. */
   private def step(
       src: SpaceDataset,
       side: String,
-      w: ViewMaintenance.Window,
-      sideFields: Seq[String],
       other: DataFrame,
-      deltaIsLeft: Boolean,
-      cache: DiffCache): Int = {
+      w: ViewMaintenance.Window,
+      pinned: Long,
+      cache: DiffCache): Patch = {
+    val sideFields = if (side == LeftSide) plan.leftFields else plan.rightFields
     // O(1) ADD-side size from the changelog bitmaps — gates the
     // broadcast hint below (a fat backfill commit must NOT be
     // force-broadcast)
     val addRows = w.changeRows(src.storage, addsOnly = true)
-    ViewMaintenance.commitUnlessApplied(dataset.storage,
-        ViewMaintenance.reached(side, w.to)) { pinned =>
-      ViewMaintenance.delta(
-          pendingDiff(cache, src.storage, dataset.storage, side, w, diffPksOnly),
-          src.primaryKeys) { (dels, adds) =>
+    ViewMaintenance.applyDelta(spark, dataset.storage, pinned,
+        cache.diff(src.storage, w.from, w.to, diffPksOnly), src.primaryKeys, src.primaryKeys) {
+      a =>
         // ADD rows → join rows to append: broadcast only under the
-        // configured row bound; above it the join is left to AQE
-        // (still delta ⋈ big-side, just shuffled) — correctness is
+        // configured row bound; above it the join is left to AQE (still
+        // delta ⋈ big-side, just shuffled) — correctness is
         // hint-independent
-        val joined = adds.map { a =>
-          val delta = ViewMaintenance.maybeBroadcast(
-            spark, sideProjection(a, sideFields), addRows)
-          val j =
-            if (deltaIsLeft) delta.join(other, plan.keys, "inner")
-            else other.join(delta, plan.keys, "inner")
-          j.select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
-        }
-        // the sweep by the SOURCE's PK columns (part of the state PK by
-        // construction, so exactly this source row's derived join rows
-        // disappear) and the delta-join append land in ONE write pass
-        // (VERDICT r14 #3)
-        DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
-          dels, src.primaryKeys, joined,
-          dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-      }.getOrElse(Patch())
-        .copy(sourceSnapshotIds = Map(side -> w.to) ++ companionIds())
+        val delta = ViewMaintenance.maybeBroadcast(spark, sideProjection(a, sideFields), addRows)
+        val j =
+          if (side == LeftSide) delta.join(other, plan.keys, "inner")
+          else other.join(delta, plan.keys, "inner")
+        j.select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
     }
   }
 
@@ -497,29 +440,14 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
       lT: Long,
       rT: Long,
       overwrite: Boolean): Int =
-    // Non-overwrite build: ANY existing watermark means the state was
-    // already built — a concurrent refresher that landed at OLDER
-    // source heads included. Appending another full live⋈live join on
-    // top would permanently duplicate every row alive at both
-    // snapshots (ADVICE r14 high); the caller's incremental walk
-    // advances from the observed watermarks instead.
-    ViewMaintenance.commitUnlessApplied(dataset.storage, m =>
-      (ViewMaintenance.reached(LeftSide, lT)(m) && ViewMaintenance.reached(RightSide, rT)(m)) ||
-        (m.mvSourceSnapshotIds.nonEmpty && !overwrite)) { pinned =>
-      val joined = sideProjection(left.read(version = Some(lT.toString)),
-          plan.leftFields)
+    ViewMaintenance.buildState(spark, dataset.storage,
+        Seq(ViewMaintenance.Watermark.side(LeftSide) -> lT,
+          ViewMaintenance.Watermark.side(RightSide) -> rT), overwrite, withCompanions) {
+      _(sideProjection(left.read(version = Some(lT.toString)), plan.leftFields)
         .join(sideProjection(right.read(version = Some(rT.toString)),
           plan.rightFields), plan.keys, "inner")
-        .select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*)
-      val patch =
-        if (overwrite) DmlOps.overwriteAll(spark, dataset.storage, pinned, joined)
-        else RecordIO.writeWithRecords(spark, dataset.storage, joined)
-      patch.copy(sourceSnapshotIds =
-        Map(LeftSide -> lT, RightSide -> rT) ++ companionIds())
+        .select((plan.keys ++ plan.leftFields ++ plan.rightFields).map(col): _*))
     }
-
-  private def rebuild(left: SpaceDataset, right: SpaceDataset, lT: Long, rT: Long): Int =
-    fullBuild(left, right, lT, rT, overwrite = true)
 
   // ----------------------------------------- unmatched-side maintenance
   //
@@ -555,88 +483,70 @@ final class JoinView(val spark: SparkSession, val dataset: SpaceDataset)
   }
 
   /** One-commit (re)build of an unmatched table: `OWN@ownT anti
-    * OTHER@otherT`. Same non-overwrite no-op rule as the inner
-    * [[fullBuild]]. */
+    * OTHER@otherT`. */
   private def umBuild(u: UmSide, ownT: Long, otherT: Long, overwrite: Boolean): Int =
-    ViewMaintenance.commitUnlessApplied(u.um.storage, m =>
-      (ViewMaintenance.reached(u.ownSide, ownT)(m) &&
-        ViewMaintenance.reached(u.otherSide, otherT)(m)) ||
-        (m.mvSourceSnapshotIds.nonEmpty && !overwrite)) { pinned =>
-      val rows = u.ownProjection(u.own.read(version = Some(ownT.toString)))
+    ViewMaintenance.buildState(spark, u.um.storage,
+        Seq(ViewMaintenance.Watermark.side(u.ownSide) -> ownT,
+          ViewMaintenance.Watermark.side(u.otherSide) -> otherT), overwrite) {
+      _(u.ownProjection(u.own.read(version = Some(ownT.toString)))
         .join(u.other.read(version = Some(otherT.toString))
-          .select(plan.keys.map(col): _*), plan.keys, "left_anti")
-      val patch =
-        if (overwrite) DmlOps.overwriteAll(spark, u.um.storage, pinned, rows)
-        else RecordIO.writeWithRecords(spark, u.um.storage, rows)
-      patch.copy(sourceSnapshotIds = Map(u.ownSide -> ownT, u.otherSide -> otherT))
+          .select(plan.keys.map(col): _*), plan.keys, "left_anti"))
     }
 
-  /** Δown window applied to an unmatched table: the exact mirror of
-    * [[step]] with the join replaced by an anti-join on the keys. */
+  /** Δown window's data change on an unmatched table: the exact mirror
+    * of [[step]] with the join replaced by an anti-join on the keys. */
   private def umOwnStep(
       u: UmSide,
-      w: ViewMaintenance.Window,
       otherKeysAtW: DataFrame,
-      cache: DiffCache): Int =
-    ViewMaintenance.commitUnlessApplied(u.um.storage,
-        ViewMaintenance.reached(u.ownSide, w.to)) { pinned =>
-      ViewMaintenance.delta(
-          pendingDiff(cache, u.own.storage, u.um.storage, u.ownSide, w, diffPksOnly),
-          u.own.primaryKeys) { (dels, adds) =>
-        // PK sweep + anti-join append in one write pass (VERDICT r14 #3)
-        DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
-          dels, u.own.primaryKeys,
-          adds.map(a => u.ownProjection(a).join(otherKeysAtW, plan.keys, "left_anti")),
-          dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-      }.getOrElse(Patch())
-        .copy(sourceSnapshotIds = Map(u.ownSide -> w.to))
-    }
+      w: ViewMaintenance.Window,
+      pinned: Long,
+      cache: DiffCache): Patch =
+    ViewMaintenance.applyDelta(spark, u.um.storage, pinned,
+        cache.diff(u.own.storage, w.from, w.to, diffPksOnly),
+        u.own.primaryKeys, u.own.primaryKeys)(
+      u.ownProjection(_).join(otherKeysAtW, plan.keys, "left_anti"))
 
-  /** Δother window applied to an unmatched table: split the window's
-    * AFFECTED keys by liveness at OTHER@to — own-rows of dead keys
-    * enter (minus those already unmatched), unmatched rows of live
+  /** Δother window's data change on an unmatched table: split the
+    * window's AFFECTED keys by liveness at OTHER@to — own-rows of dead
+    * keys enter (minus those already unmatched), unmatched rows of live
     * keys leave. Liveness at the window's end, not per-snapshot
     * transitions: a key that came alive and died again inside one
     * window must keep its own-rows. */
   private def umOtherStep(
       u: UmSide,
-      w: ViewMaintenance.Window,
       ownAtT: DataFrame,
-      cache: DiffCache): Int = {
+      w: ViewMaintenance.Window,
+      pinned: Long,
+      cache: DiffCache): Patch = {
     val ownPks = u.um.primaryKeys
     val estRows = w.changeRows(u.other.storage, addsOnly = false)
-    ViewMaintenance.commitUnlessApplied(u.um.storage,
-        ViewMaintenance.reached(u.otherSide, w.to)) { pinned =>
-      // full-value deletes: the dying rows' JOIN KEYS drive the update
-      val affectedKeys = pendingDiff(cache, u.other.storage, u.um.storage, u.otherSide, w,
-          pksOnly = false)
-        .map(b => b.data.select(plan.keys.map(col): _*))
-        .reduceOption(_.unionByName(_)).map(_.distinct().persist())
-      try {
-        val swap = affectedKeys.map { affected =>
-          val otherKeysAtT = u.other.read(version = Some(w.to.toString))
-            .select(plan.keys.map(col): _*)
-          val umPinned = u.um.read(version = Some(pinned.toString))
-          val liveAffected = ViewMaintenance.maybeBroadcast(spark,
-            affected.join(otherKeysAtT, plan.keys, "left_semi"), estRows)
-          val deadAffected = ViewMaintenance.maybeBroadcast(spark,
-            affected.join(otherKeysAtT, plan.keys, "left_anti"), estRows)
-          val matched = umPinned.join(liveAffected, plan.keys, "left_semi")
-            .select(ownPks.map(col): _*)
-          val entrants = ownAtT.join(deadAffected, plan.keys, "left_semi")
-            .join(umPinned.select(ownPks.map(col): _*), ownPks, "left_anti")
-          (matched, entrants)
-        }
-        // fused: the re-matched sweep and the newly-dead entrants
-        // share one write pass (disjoint keys — a key cannot be both
-        // live and dead at the window end)
-        DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
-          swap.map(_._1), ownPks, swap.map(_._2),
-          dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-          .getOrElse(Patch())
-          .copy(sourceSnapshotIds = Map(u.otherSide -> w.to))
-      } finally affectedKeys.foreach(_.unpersist())
-    }
+    // full-value deletes: the dying rows' JOIN KEYS drive the update
+    val affectedKeys = cache.diff(u.other.storage, w.from, w.to, pksOnly = false)
+      .map(b => b.data.select(plan.keys.map(col): _*))
+      .reduceOption(_.unionByName(_)).map(_.distinct().persist())
+    try {
+      val swap = affectedKeys.map { affected =>
+        val otherKeysAtT = u.other.read(version = Some(w.to.toString))
+          .select(plan.keys.map(col): _*)
+        val umPinned = u.um.read(version = Some(pinned.toString))
+        val liveAffected = ViewMaintenance.maybeBroadcast(spark,
+          affected.join(otherKeysAtT, plan.keys, "left_semi"), estRows)
+        val deadAffected = ViewMaintenance.maybeBroadcast(spark,
+          affected.join(otherKeysAtT, plan.keys, "left_anti"), estRows)
+        val matched = umPinned.join(liveAffected, plan.keys, "left_semi")
+          .select(ownPks.map(col): _*)
+        val entrants = ownAtT.join(deadAffected, plan.keys, "left_semi")
+          .join(umPinned.select(ownPks.map(col): _*), ownPks, "left_anti")
+        (matched, entrants)
+      }
+      // fused: the re-matched sweep and the newly-dead entrants share
+      // one write pass (disjoint keys — a key cannot be both live and
+      // dead at the window end)
+      DmlOps.deleteByKeysAndAppend(spark, u.um.storage, pinned,
+        swap.map(_._1), ownPks, swap.map(_._2),
+        dvFracOverride = ViewMaintenance.stateDvFraction(spark))
+        .getOrElse(Patch())
+    } finally affectedKeys.foreach(_.unpersist())
   }
 }
 

@@ -43,52 +43,32 @@ final class MaterializedView(val spark: SparkSession, val dataset: SpaceDataset)
     // transform(live source rows) — rebuild it at the target in one
     // atomic overwrite commit instead of failing until someone drops
     // and recreates the view
-    val walk = ViewMaintenance.walk(source.storage, refreshedTo.getOrElse(0L), target)
-      .getOrElse(return rebuild(source, target))
-    ViewMaintenance.refreshWindows(spark, dataset.storage, source.storage, walk, coalesce)(
-      step(source, _))
+    ViewMaintenance.refreshPass(spark, source.storage, target, Seq(ViewMaintenance.StateTable(
+        dataset.storage, ViewMaintenance.Watermark.Source, step(source))), coalesce)
+      .fold(rebuild(source, target))(_.sum)
   }
 
-  /** One CDC window as one MV commit (exactly-once via the watermark
-    * re-check inside the transaction). */
-  private def step(source: SpaceDataset, w: ViewMaintenance.Window): Int =
-    ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(w.to)) {
-      pinned =>
-        // Branch on the FRESHLY RELOADED watermark: unset means the
-        // state is still empty — one transform pass over the source at
-        // `to`, no CDC replay. A stale handle or a concurrent first
-        // refresh that already built sees it set and applies only the
-        // pending part of the window instead of appending
-        // transform(source@to) onto built state (ADVICE r14).
-        val patch = dataset.storage.metadata.mvSourceSnapshotId match {
-          case None =>
-            RecordIO.writeWithRecords(spark, dataset.storage, plan.processSource(
-              spark, source.read(version = Some(w.to.toString))))
-          case observed =>
-            ViewMaintenance.delta(
-              ChangeData.diff(spark, source.storage, w.pendingFrom(observed), w.to),
-              source.primaryKeys) { (dels, adds) =>
-              // delete by the SOURCE-pk columns that survived the
-              // transform (they do by contract). For row-wise views
-              // these are exactly the MV's own PKs; for EXPAND
-              // transforms (one source row → N view rows, e.g. a
-              // postings index) the MV PK is a superset and the
-              // source key must sweep every derived row.
-              val delKeyCols = dels.fold(Seq.empty[String]) { d =>
-                val keyCols = d.columns.toSeq.filter(dataset.storage.schema.fieldNames.contains)
-                require(keyCols.nonEmpty,
-                  s"MV refresh: no source key column of (${d.columns.mkString(", ")}) " +
-                    s"survives the transform — cannot apply source deletes")
-                keyCols
-              }
-              DmlOps.deleteByKeysAndAppend(spark, dataset.storage, pinned,
-                dels, delKeyCols, adds.map(plan.processSource(spark, _)),
-                dvFracOverride = ViewMaintenance.stateDvFraction(spark))
-                .getOrElse(Patch()) // a zero-row window still advances the MV
-            }
-        }
-        patch.copy(sourceSnapshotId = Some(w.to))
-    }
+  /** One CDC window's data change on the MV. */
+  private def step(source: SpaceDataset)(w: ViewMaintenance.Window, pinned: Long): Patch =
+    // Branch on the FRESHLY RELOADED watermark: unset means the state
+    // is still empty — one transform pass over the source at `to`, no
+    // CDC replay. A stale handle or a concurrent first refresh that
+    // already built sees it set and applies only the pending part of
+    // the window instead of appending transform(source@to) onto built
+    // state (ADVICE r14).
+    if (refreshedTo.isEmpty)
+      RecordIO.writeWithRecords(spark, dataset.storage, plan.processSource(
+        spark, source.read(version = Some(w.to.toString))))
+    else
+      // sweep by the SOURCE-pk columns that survived the transform
+      // (they do by contract). For row-wise views these are exactly the
+      // MV's own PKs; for EXPAND transforms (one source row → N view
+      // rows, e.g. a postings index) the MV PK is a superset and the
+      // source key must sweep every derived row.
+      ViewMaintenance.applyDelta(spark, dataset.storage, pinned,
+        ChangeData.diff(spark, source.storage, w.from, w.to), source.primaryKeys,
+        source.storage.primaryKeys.filter(dataset.storage.schema.fieldNames.contains))(
+        plan.processSource(spark, _))
 
   /** Expired-history fallback: one transform pass over the source AT
     * `target`, committed as an atomic whole-state overwrite with the
@@ -96,13 +76,9 @@ final class MaterializedView(val spark: SparkSession, val dataset: SpaceDataset)
     * Sound because a row-wise/EXPAND view's state is exactly
     * transform(live source rows), independent of arrival order. */
   private def rebuild(source: SpaceDataset, target: Long): Int =
-    ViewMaintenance.commitUnlessApplied(dataset.storage, ViewMaintenance.reached(target)) {
-      pinned =>
-        val transformed = plan.processSource(
-          spark, source.read(version = Some(target.toString)))
-        DmlOps.overwriteAll(spark, dataset.storage, pinned, transformed)
-          .copy(sourceSnapshotId = Some(target))
-    }
+    ViewMaintenance.buildState(spark, dataset.storage,
+        Seq(ViewMaintenance.Watermark.Source -> target), overwrite = true)(
+      _(plan.processSource(spark, source.read(version = Some(target.toString)))))
 
   /** CONTINUOUS MV maintenance through Structured Streaming: each
     * micro-batch of the source's CDC stream triggers an incremental

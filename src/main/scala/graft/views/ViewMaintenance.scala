@@ -6,14 +6,82 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, max}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.{ChangeBatch, ChangeType, ExpiredHistoryException, ManifestIO, SpaceDataset, Storage}
+import graft.core.{ChangeBatch, ChangeType, DmlOps, ExpiredHistoryException, ManifestIO, RecordIO,
+  SpaceDataset, Storage}
 import graft.format.{Patch, StorageMetadata}
 
-/** Maintenance shared by the refreshable views: the refresh's CDC
-  * windows ([[walk]], [[windows]], [[delta]]), the one watermark-
-  * guarded state commit ([[commitUnlessApplied]]), the silent-tail
-  * watermark advance, the CDC-stream refresh trigger, and state
-  * self-maintenance.
+/** Common refresh surface of every view kind (row-wise, aggregate and
+  * join views) — what `CALL system.refresh_mv` dispatches over.
+  *
+  * [[refresh]] is the one shared wrapper: it runs the view kind's own
+  * maintenance ([[refreshInner]]) and, when that committed anything,
+  * self-maintains each of the view's [[stateDatasets]] (bin-pack past
+  * the file threshold, [[ViewMaintenance.maybeCompactState]];
+  * CDC-silent, so chained views are unaffected). */
+trait Refreshable {
+  def spark: SparkSession
+  /** The view's main state table (a join view's inner state). */
+  def dataset: SpaceDataset
+  /** Every state table the view maintains, in auto-compaction order. */
+  protected def stateDatasets: Seq[SpaceDataset] = Seq(dataset)
+
+  /** The view kind's maintenance: its state builds and its refresh
+    * passes ([[ViewMaintenance.refreshPass]]); returns the state
+    * commits made. */
+  protected def refreshInner(targetVersion: Option[String], coalesce: Boolean): Int
+
+  def refresh(targetVersion: Option[String] = None): Int =
+    refresh(targetVersion, coalesce = false)
+  /** Refresh to `targetVersion` (default: the source head). Returns
+    * the number of state commits made.
+    *
+    * One driver, [[ViewMaintenance.refreshPass]], runs every view
+    * kind's refresh: the view kind hands it one
+    * [[ViewMaintenance.StateTable]] per state table — its watermark,
+    * its stamp, its frame check and a step that returns only a
+    * window's data change — and the driver owns the walk, the windows,
+    * every watermark-guarded state commit and the silent-tail advance.
+    *
+    * A refresh is a list of CDC WINDOWS `(from, to]`, each applied to
+    * a state table by ONE step as ONE state commit stamping the
+    * watermark `to` — a
+    * window without change rows still commits its watermark. By
+    * default there is one window per data-bearing source snapshot
+    * `sid`, `(parent(sid), sid]`: the reference contract of one state
+    * commit per source snapshot (runners.py:204-215), which chained
+    * views observe as finer-grained CDC. `coalesce = true` makes the
+    * whole backlog ONE window `(watermark, target]` (per side, for a
+    * join view): a view that fell N commits behind pays one
+    * maintenance pass, not N commit cycles. A backlog of at least
+    * `spark.graft.mv.autoCoalesceSnapshots` (default 8) data snapshots
+    * coalesces on its own (0 forces per-snapshot windows), and chained
+    * views then see the window as one coarser commit.
+    *
+    * Tables keyed by the source PK (row-wise views, the inner join
+    * state, unmatched-own tables) apply a window in delta form
+    * ([[ViewMaintenance.applyDelta]]): sweep the PKs of its DELETE
+    * batches, then append its ADD rows — transformed, joined or
+    * anti-joined — minus any row whose PK a strictly later snapshot of
+    * the window deletes. Exact under source-PK uniqueness, and a
+    * one-snapshot window's plan is the per-snapshot plan. Aggregate
+    * state merges a window's batches arithmetically; an
+    * unmatched-other table splits the window's touched keys by
+    * liveness at `to`. Whole-state builds (a first refresh, an
+    * expired-history rebuild) go through [[ViewMaintenance.buildState]]. */
+  def refresh(targetVersion: Option[String], coalesce: Boolean): Int = {
+    val commits = refreshInner(targetVersion, coalesce)
+    if (commits > 0) stateDatasets.foreach(ViewMaintenance.maybeCompactState(spark, _))
+    commits
+  }
+  def refreshedTo: Option[Long]
+}
+
+/** The refresh driver of every view kind and the maintenance it
+  * shares: the refresh pass over one source ([[refreshPass]]) with its
+  * CDC windows ([[walk]], [[windows]]) and its one watermark-guarded
+  * state commit, the delta form of a window ([[applyDelta]]), the
+  * whole-state build ([[buildState]]), the CDC-stream refresh trigger,
+  * and state self-maintenance.
   *
   * Every refresh commits one state snapshot per CDC window, and
   * each commit mints at least one small state file — a view refreshed
@@ -35,8 +103,7 @@ object ViewMaintenance {
     * over a fact table) bin-packs its trickle files into bounded
     * outputs instead of one giant file, while backbone files above
     * half the target are left alone (incremental shape). */
-  val CompactTargetRowsKey = "spark.graft.mv.compactTargetRows"
-  val DefaultCompactTargetRows = 4L * 1000 * 1000
+  val CompactTargetRows = 4L * 1000 * 1000
 
   /** Row bound for the `broadcast()` hints view maintenance places on
     * delta-sized join inputs. At steady state a CDC delta is tiny and
@@ -70,28 +137,136 @@ object ViewMaintenance {
   val SilentTailMaxSnapshotsKey = "spark.graft.mv.silentTailMaxSnapshots"
   val DefaultSilentTailMaxSnapshots = 32L
 
-  /** The one state commit of every view kind: a transaction on `st`
-    * that re-checks `applied` against the FRESHLY RELOADED metadata
-    * (the refreshed-to watermark) and commits `build(pinned)` only when
-    * the work is still pending. This re-check is what makes refresh
-    * exactly-once across overlapping refreshers (a `refreshStream`
-    * micro-batch racing a manual refresh, a stale view handle): the op
-    * re-runs on a Strict-conflict retry from the new head, and a
-    * snapshot another refresher already applied becomes a no-op instead
-    * of a second application. Returns the number of commits made (0/1). */
-  def commitUnlessApplied(st: Storage, applied: StorageMetadata => Boolean)(
+  /** Where a state table records the last source snapshot it applied:
+    * `mvSourceSnapshotId` for a single-source view (`side = None`),
+    * `mvSourceSnapshotIds(side)` for each side of a join view's
+    * tables. */
+  final case class Watermark(side: Option[String]) {
+    def of(m: StorageMetadata): Option[Long] =
+      side.fold(m.mvSourceSnapshotId)(m.mvSourceSnapshotIds.get)
+    def stamp(p: Patch, sid: Long): Patch = side.fold(p.copy(sourceSnapshotId = Some(sid)))(
+      s => p.copy(sourceSnapshotIds = p.sourceSnapshotIds + (s -> sid)))
+  }
+  object Watermark {
+    val Source: Watermark = Watermark(None)
+    def side(s: String): Watermark = Watermark(Some(s))
+  }
+
+  /** One state table of a refresh pass, as its view kind describes it:
+    * its `watermark`; `step`, the data change of one pending window
+    * `(from, to]` on the transaction's `pinned` snapshot (a zero-row
+    * change is `Patch()`); `stamp`, applied after the watermark inside
+    * the transaction (the inner join table records its companions'
+    * fresh snapshot ids); `frameOk`, false when the snapshot a step
+    * joins against has expired. */
+  final case class StateTable(
+      storage: Storage,
+      watermark: Watermark,
+      step: (Window, Long) => Patch,
+      stamp: Patch => Patch = identity,
+      frameOk: () => Boolean = () => true)
+
+  /** The refresh of `tables` over one `source` up to `target`: each
+    * table's windows from its OWN watermark, under one coalesce
+    * decision for the pass (mixed per-table modes would break a join
+    * view's per-window pairing), applied in window-end order and, within
+    * one window end, in the order of `tables` (a join view lists its
+    * companions before the inner table). Each window is one state
+    * commit, then the silent-tail advance follows. Returns the commits
+    * made per table, or None when the source history expired or a step's
+    * frame is gone: the caller rebuilds its state. */
+  def refreshPass(
+      spark: SparkSession,
+      source: Storage,
+      target: Long,
+      tables: Seq[StateTable],
+      coalesce: Boolean): Option[Seq[Int]] = {
+    val walks = tables.map(tb =>
+      walk(source, tb.watermark.of(tb.storage.metadata).getOrElse(0L), target)
+        .getOrElse(return None))
+    val tableWindows = windows(spark, source, walks, coalesce)
+    if (tableWindows.exists(_.nonEmpty) && tables.exists(!_.frameOk())) return None
+    val commits = Array.fill(tables.size)(0)
+    for (to <- tableWindows.flatten.map(_.to).distinct.sorted;
+         ((tb, ws), i) <- tables.zip(tableWindows).zipWithIndex; w <- ws if w.to == to)
+      commits(i) += commit(tb, to)(pinned =>
+        tb.step(w.copy(from = w.pendingFrom(tb.watermark.of(tb.storage.metadata))), pinned))
+    // ONE empty (CDC-silent) commit advancing the watermark when the
+    // walk's silent tail — its snapshots after the last window —
+    // crossed SilentTailMaxSnapshotsKey: keeps a long-silent source
+    // (hourly compactions, no data) from expiring the recorded
+    // watermark snapshot and forcing a data-identical full rebuild
+    // (VERDICT r14 #3)
+    val bound = longConf(spark, SilentTailMaxSnapshotsKey, DefaultSilentTailMaxSnapshots)
+    for ((((tb, w), ws), i) <- tables.zip(walks).zip(tableWindows).zipWithIndex) {
+      val tail = w.all.size - 1 - ws.lastOption.fold(-1)(last => w.all.indexOf(last.to))
+      if (bound > 0 && tail >= bound) commits(i) += commit(tb, target)(_ => Patch())
+    }
+    Some(commits.toSeq)
+  }
+
+  /** One-commit whole-state build of `st` at the source snapshots `at`
+    * (one per watermark the table keeps), all stamped with the commit,
+    * then `stamp`. `rows` gets the write of the built rows.
+    * `overwrite = true` is the expired-history rebuild (atomic truncate
+    * + write). `overwrite = false` is a FIRST refresh, an append into
+    * the empty state: ANY watermark already set means the state was
+    * built — a concurrent refresher that landed at OLDER source heads
+    * included — and appending a second whole state would duplicate
+    * every row (ADVICE r14), so the build no-ops and the caller's
+    * refresh pass advances from the observed watermarks. */
+  def buildState(
+      spark: SparkSession,
+      st: Storage,
+      at: Seq[(Watermark, Long)],
+      overwrite: Boolean,
+      stamp: Patch => Patch = identity)(rows: (DataFrame => Patch) => Patch): Int =
+    commitUnlessApplied(st, m => at.forall { case (wm, t) => wm.of(m).exists(_ >= t) } ||
+        (!overwrite && at.exists(_._1.of(m).isDefined))) { pinned =>
+      val patch = rows(df =>
+        if (overwrite) DmlOps.overwriteAll(spark, st, pinned, df)
+        else RecordIO.writeWithRecords(spark, st, df))
+      stamp(at.foldLeft(patch) { case (p, (wm, t)) => wm.stamp(p, t) })
+    }
+
+  /** A window's change on a table keyed by the source PK `pks`, in
+    * delta form ([[delta]]): ONE write pass sweeps the state rows whose
+    * `sweepKeys` the window deletes and appends `adds` of its surviving
+    * ADD rows, the sweep merge-on-read under [[stateDvFraction]]. */
+  def applyDelta(
+      spark: SparkSession,
+      st: Storage,
+      pinned: Long,
+      batches: Seq[ChangeBatch],
+      pks: Seq[String],
+      sweepKeys: Seq[String])(adds: DataFrame => DataFrame): Patch =
+    delta(batches, pks) { (dels, appends) =>
+      require(dels.isEmpty || sweepKeys.nonEmpty,
+        s"refresh of ${st.location}: no source key column of (${pks.mkString(", ")}) " +
+          "survives the transform — cannot apply source deletes")
+      DmlOps.deleteByKeysAndAppend(spark, st, pinned, dels, sweepKeys, appends.map(adds),
+        dvFracOverride = stateDvFraction(spark))
+        .getOrElse(Patch()) // a zero-row window still advances the watermark
+    }
+
+  /** `data` as `tb`'s state commit stamped `to`, in a transaction that
+    * re-checks the watermark against the FRESHLY RELOADED metadata and
+    * commits only when the work is still pending. This re-check is what
+    * makes refresh exactly-once across overlapping refreshers (a
+    * `refreshStream` micro-batch racing a manual refresh, a stale view
+    * handle): the op re-runs on a Strict-conflict retry from the new
+    * head, and a snapshot another refresher already applied becomes a
+    * no-op instead of a second application. Returns the commits made
+    * (0/1). */
+  private def commit(tb: StateTable, to: Long)(data: Long => Patch): Int =
+    commitUnlessApplied(tb.storage, tb.watermark.of(_).exists(_ >= to))(pinned =>
+      tb.stamp(tb.watermark.stamp(data(pinned), to)))
+
+  private def commitUnlessApplied(st: Storage, applied: StorageMetadata => Boolean)(
       build: Long => Patch): Int =
     st.transaction() { pinned =>
       if (applied(st.metadata)) (None, 0) else (Some(build(pinned)), 1)
     }
-
-  /** `applied` predicate of a single-source view: its watermark reached `sid`. */
-  def reached(sid: Long): StorageMetadata => Boolean =
-    _.mvSourceSnapshotId.exists(_ >= sid)
-
-  /** `applied` predicate of a join-view table: `side`'s watermark reached `sid`. */
-  def reached(side: String, sid: Long): StorageMetadata => Boolean =
-    _.mvSourceSnapshotIds.get(side).exists(_ >= sid)
 
   /** One source's walk for one state table: every snapshot id in
     * `(from, to]` (`from` = the table's watermark, `to` = the refresh
@@ -100,7 +275,7 @@ object ViewMaintenance {
     * (VERDICT r13 #3): the watermark folds into the next data-bearing
     * commit, and a purely silent tail costs an O(1) metadata re-check
     * per refresh until it crosses [[SilentTailMaxSnapshotsKey]]. */
-  final case class Walk(from: Long, to: Long, all: Seq[Long], data: Seq[Long])
+  private final case class Walk(from: Long, to: Long, all: Seq[Long], data: Seq[Long])
 
   /** The walk `(from, to]`, or None when `from` was expired out of the
     * source's metadata: the CDC walk is impossible and the caller
@@ -108,7 +283,7 @@ object ViewMaintenance {
     * back — any other failure (a target below the watermark, an
     * unrelated lineage) is a caller bug and propagates instead of
     * silently becoming a full source rescan (ADVICE r10). */
-  def walk(source: Storage, from: Long, to: Long): Option[Walk] =
+  private def walk(source: Storage, from: Long, to: Long): Option[Walk] =
     try {
       val all = source.orderedSnapshotIds(from, to)
       Some(Walk(from, to, all,
@@ -136,7 +311,7 @@ object ViewMaintenance {
     * coalescing — one window `(watermark, target]` per table. One
     * [[shouldCoalesce]] decision covers the whole pass, from its
     * deepest walk. */
-  def windows(
+  private def windows(
       spark: SparkSession,
       source: Storage,
       walks: Seq[Walk],
@@ -151,15 +326,6 @@ object ViewMaintenance {
       else w.data.map(sid => Window(
         source.snapshotOrFail(sid).parentSnapshotId.getOrElse(0L), sid, Seq(sid)))
     }
-  }
-
-  /** A single-source view's refresh of `st`: `step` applies each window
-    * of `walk` (one commit each), then the silent-tail advance. */
-  def refreshWindows(spark: SparkSession, st: Storage, source: Storage, walk: Walk,
-      coalesce: Boolean)(step: Window => Int): Int = {
-    val ws = windows(spark, source, Seq(walk), coalesce).head
-    ws.map(step).sum + advanceSilent(spark, st, walk, ws, reached(walk.to))(
-      Patch(sourceSnapshotId = Some(walk.to)))
   }
 
   /** Applies `body` to a window's change rows in delta form for a
@@ -181,7 +347,7 @@ object ViewMaintenance {
     * sid-tagged ADD rows. Its appends are coalesced to the default
     * parallelism: one scan partition per ADD file would otherwise land
     * one state file per partition. */
-  def delta[A](batches: Seq[ChangeBatch], pks: Seq[String])(
+  private def delta[A](batches: Seq[ChangeBatch], pks: Seq[String])(
       body: (Option[DataFrame], Option[DataFrame]) => A): A = {
     val (dels, adds) = batches.partition(_.changeType == ChangeType.Delete)
     def union(dfs: Seq[DataFrame]) = dfs.reduceOption(_.unionByName(_))
@@ -204,25 +370,6 @@ object ViewMaintenance {
 
   private val SidCol = "__window_sid"
   private val LastDeleteCol = "__window_last_delete"
-
-  /** ONE empty (CDC-silent) commit advancing the watermark when the
-    * walk's silent tail — its snapshots after the last window —
-    * crossed [[SilentTailMaxSnapshotsKey]]: keeps a long-silent source
-    * (hourly compactions, no data) from expiring the recorded watermark
-    * snapshot and forcing a data-identical full rebuild (VERDICT r14
-    * #3). `stamp` is the empty patch carrying the new watermark; it is
-    * evaluated inside the transaction. */
-  def advanceSilent(
-      spark: SparkSession,
-      st: Storage,
-      walk: Walk,
-      windows: Seq[Window],
-      applied: StorageMetadata => Boolean)(stamp: => Patch): Int = {
-    val bound = longConf(spark, SilentTailMaxSnapshotsKey, DefaultSilentTailMaxSnapshots)
-    val tail = walk.all.size - 1 - windows.lastOption.fold(-1)(w => walk.all.indexOf(w.to))
-    if (bound <= 0 || tail < bound) 0
-    else commitUnlessApplied(st, applied)(_ => stamp)
-  }
 
   /** CONTINUOUS maintenance through Structured Streaming: the source's
     * CDC stream (`graft-cdc`, snapshot-id offsets) triggers an
@@ -348,9 +495,7 @@ object ViewMaintenance {
     val files = ManifestIO.summarizedFileCount(
       storage, snap.manifestFiles.indexManifestFiles)
     if (!files.exists(_ >= threshold)) return false
-    val target = math.max(1L, math.min(
-      longConf(spark, CompactTargetRowsKey, DefaultCompactTargetRows),
-      snap.storageStatistics.numRows))
+    val target = math.max(1L, math.min(CompactTargetRows, snap.storageStatistics.numRows))
     try dataset.compact(targetFileRows = target).isDefined
     catch {
       // best-effort by contract: the refresh that called us has ALREADY

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.{AppendOp, ConflictPolicy, ManifestIO, ReadOp, SpaceDataset}
+import graft.core.{AppendOp, ManifestIO, ReadOp, SpaceDataset}
 import graft.format.{StoragePaths, TxnTag}
 
 /** Native Structured Streaming SINK for graft tables —
@@ -92,14 +92,13 @@ final class GraftStreamingWrite(
     // watermark must advance or a restart would replay it forever
     val patch = ManifestIO.newFilesPatch(spark, storage, metas)
       .copy(txn = Some(TxnTag(queryId, epochId)))
-    try storage.commitTransaction(ds.getCurrentBranch, ConflictPolicy.Append)(_ => Some(patch))
+    try ds.commitAppend(ds.getCurrentBranch)(Some(patch))
     catch {
       // a racing replay of this epoch committed between the up-front
       // check and the lock: the rows are in the table; this attempt's
       // files/manifest are unreferenced (GC reaps them)
       case _: graft.core.DuplicateTransactionException => ()
     }
-    ()
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {

@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.views._
 
-/** The shared state-commit path of every view kind
-  * (`ViewMaintenance.commitUnlessApplied` + `DmlOps.deleteByKeysAndAppend`):
-  * one state commit per source snapshot and state table, and the fused
+/** The shared state-commit path of every view kind (the refresh driver
+  * `ViewMaintenance.refreshPass` + `DmlOps.deleteByKeysAndAppend`): one
+  * state commit per source snapshot and state table, the Spark jobs and
+  * state commits of one refresh per view kind, and the fused
   * delete+append shape on plain and record-field state tables. */
 class StateCommitSpec extends AnyFunSuite {
   import TestSpark._
@@ -102,6 +103,51 @@ class StateCommitSpec extends AnyFunSuite {
     assertSame(inner.read(), matched, "inner join")
     assertSame(outer.read(), fact.readAll().join(dim.readAll(), Seq("o_custkey"), "left_outer")
       .select("o_custkey", "o_orderkey", "o_totalprice", "c_nationkey"), "left-outer join")
+  }
+
+  test("jobs and state commits per refresh, every view kind: a one-snapshot and a coalesced window") {
+    val fact = SpaceDataset.create(spark, freshLoc("jcfact"),
+      orders.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice").schema,
+      Seq("o_orderkey"))
+    fact.append(orders.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+      .repartitionByRange(4, col("o_orderkey")))
+    val cust = Tables.read(spark, sfDir, "customer").filter(col("c_custkey") % 3 =!= 0)
+      .selectExpr("c_custkey AS o_custkey", "c_nationkey")
+    val dim = SpaceDataset.create(spark, freshLoc("jcdim"), cust.schema, Seq("o_custkey"))
+    dim.append(cust)
+    val mv = View.ofDataset(fact)
+      .selectExprs("o_orderkey", "o_custkey", "o_totalprice * 2 AS doubled")
+      .materialize(spark, freshLoc("jcmv"), Seq("o_orderkey"))
+    val agg = AggregateView.create(spark, freshLoc("jcagg"), fact, Seq("o_orderstatus"),
+      Seq(AggSpec.countAll("n"), AggSpec.sum("o_totalprice", "total")))
+    def join(jt: String) = JoinView.create(spark, freshLoc(s"jc$jt"), fact, dim,
+      Seq("o_custkey"), Seq("o_orderkey", "o_totalprice"), Seq("c_nationkey"), jt)
+    val views = Seq[(String, Refreshable)](
+      "mv" -> mv, "aggregate" -> agg,
+      "inner join" -> join(JoinView.Inner), "left-outer join" -> join(JoinView.LeftOuter))
+    views.foreach(_._2.refresh())
+    def bump(lo: Long, hi: Long) =
+      fact.upsert(orders.filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+          (col("o_totalprice") + 1000.0).as("o_totalprice")))
+    // (jobs, state commits) of each view's refresh over the same windows
+    def measure(coalesce: Boolean): Map[String, (Int, Int)] =
+      views.map { case (what, v) =>
+        val (commits, jc) = JobCount.of(spark)(v.refresh(None, coalesce))
+        what -> (jc.jobs, commits)
+      }.toMap
+
+    bump(100L, 300L)
+    val oneSnapshot = measure(coalesce = false)
+    bump(300L, 400L)
+    fact.delete(col("o_orderkey") % 11 === 0)
+    val coalesced = measure(coalesce = true)
+    assert((oneSnapshot, coalesced) == ((
+      Map("mv" -> (3, 1), "aggregate" -> (12, 1),
+        "inner join" -> (4, 1), "left-outer join" -> (9, 2)),
+      Map("mv" -> (5, 1), "aggregate" -> (12, 1),
+        "inner join" -> (6, 1), "left-outer join" -> (15, 2)))),
+      s"one-snapshot window $oneSnapshot, coalesced window $coalesced")
   }
 
   test("fused record-field leg: an MV over delete-only, add-only, upsert and coalesced windows") {

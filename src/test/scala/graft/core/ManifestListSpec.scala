@@ -2,6 +2,7 @@ package graft.core
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -222,6 +223,52 @@ class ManifestListSpec extends AnyFunSuite {
       assert(dataSids.size == 20, s"expected 20 data snapshots, got ${dataSids.size}")
       assert(ds.readAll().count() == orders.count())
     } finally spark.conf.unset(SpaceDataset.AutoPackManifestsKey)
+  }
+
+  /** Every append-shaped entry point besides [[SpaceDataset.append]]:
+    * name -> (table, its catalog root, batches) => commits each batch. */
+  private val appendPaths: Seq[(String, (SpaceDataset, String, Seq[DataFrame]) => Unit)] = Seq(
+    "appendOnce" -> { (ds, _, batches) =>
+      batches.zipWithIndex.foreach { case (b, i) => assert(ds.appendOnce(b, "sink", i).isDefined) }
+      // a redelivered batch commits nothing (and packs nothing)
+      assert(ds.appendOnce(batches.last, "sink", batches.size - 1).isEmpty)
+    },
+    "appendFrom" -> { (ds, _, batches) => batches.foreach(b => ds.appendFrom(Seq(() => b))) },
+    "a streaming sink's epochs" -> { (ds, root, batches) =>
+      // one parquet file per batch, one file per trigger: one epoch each
+      val src = Files.createTempDirectory("graft_mlsrc_").toString
+      batches.foreach(_.coalesce(1).write.mode("append").parquet(src))
+      val cat = s"graft_ml_${root.hashCode.abs}"
+      spark.conf.set(s"spark.sql.catalog.$cat",
+        classOf[org.apache.spark.sql.graftshim.GraftCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$cat.location", root)
+      val q = spark.readStream.schema(batches.head.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+        .writeStream
+        .option("checkpointLocation", Files.createTempDirectory("graft_mlckpt_").toString)
+        .toTable(s"$cat.tbl")
+      try q.processAllAvailable() finally q.stop()
+      ds.storage.reload()
+      val epochs = (1L to ds.storage.metadata.currentSnapshotId)
+        .count(sid => ds.storage.changeLog(sid).exists(_.addedRows.nonEmpty))
+      assert(epochs == batches.size, s"expected one epoch per batch, got $epochs")
+    })
+
+  appendPaths.foreach { case (name, commitAll) =>
+    test(s"append-shaped commits self-pack the manifest tail too: $name") {
+      val orders = Tables.read(spark, sfDir, "orders")
+      val root = Files.createTempDirectory("graft_mlonce_").toString
+      spark.conf.set(SpaceDataset.AutoPackManifestsKey, "6")
+      try {
+        val ds = new DirCatalog(spark, root).createDataset("tbl", orders.schema, Seq("o_orderkey"))
+        commitAll(ds, root, (0 until 8).map(i => orders.filter(col("o_orderkey") % 8 === i)))
+        val meta = ds.storage.metadata
+        val underFilled = meta.currentSnapshot.manifestFiles.indexManifestFiles.count(m =>
+          meta.manifestSummaries.get(m).exists(_.numFiles < SpaceDataset.AutoPackTargetFiles))
+        assert(underFilled < 6, s"self-pack must bound the manifest tail, got $underFilled")
+        assert(ds.readAll().count() == orders.count())
+      } finally spark.conf.unset(SpaceDataset.AutoPackManifestsKey)
+    }
   }
 
   test("repeated plans of an unchanged table serve manifest rows from the process cache") {
