@@ -44,12 +44,11 @@ trait Refreshable {
     *
     * A refresh is a list of CDC WINDOWS `(from, to]`, each applied to
     * a state table by ONE step as ONE state commit stamping the
-    * watermark `to` — a
-    * window without change rows still commits its watermark. By
-    * default there is one window per data-bearing source snapshot
-    * `sid`, `(parent(sid), sid]`: the reference contract of one state
-    * commit per source snapshot (runners.py:204-215), which chained
-    * views observe as finer-grained CDC. `coalesce = true` makes the
+    * watermark `to` — a window without change rows still commits its
+    * watermark. By default there is one window per data-bearing source
+    * snapshot `sid`, `(parent(sid), sid]`: the reference contract of
+    * one state commit per source snapshot (runners.py:204-215), which
+    * chained views observe as finer-grained CDC. `coalesce = true` makes the
     * whole backlog ONE window `(watermark, target]` (per side, for a
     * join view): a view that fell N commits behind pays one
     * maintenance pass, not N commit cycles. A backlog of at least
