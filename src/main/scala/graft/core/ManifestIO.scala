@@ -85,20 +85,14 @@ object ManifestIO {
   /** Resolve a stats-column name to its StructField: plain names are
     * top-level, DOTTED names walk struct members (`meta.price`) — stats
     * fields may live inside structs, and parquet footers key column
-    * chunks by the same dotted physical path. A top-level column whose
-    * name literally contains a dot (legal in Spark) wins over the
-    * struct-member walk of the same spelling. */
+    * chunks by the same dotted physical path. Names resolve by
+    * [[Storage.columnPath]]: a top-level column whose name literally
+    * contains a dot wins over the struct-member walk of the same
+    * spelling. */
   def fieldAtPath(schema: StructType, name: String): Option[StructField] = {
-    def walk(st: StructType, steps: List[String]): Option[StructField] = steps match {
-      case leaf :: Nil => st.fields.find(_.name == leaf)
-      case p :: rest => st.fields.find(_.name == p).flatMap(_.dataType match {
-        case s: StructType => walk(s, rest)
-        case _ => None
-      })
-      case Nil => None
-    }
-    schema.fields.find(_.name == name)
-      .orElse(walk(schema, name.split('.').toList))
+    val path = Storage.columnPath(schema, name)
+    Storage.editStruct(schema, path.init)(st => (st, st.fields.find(_.name == path.last)))
+      .flatMap(_._2)
   }
 
   def manifestSchema(tableSchema: StructType, primaryKeys: Seq[String]): StructType = {

@@ -21,28 +21,26 @@ import graft.format._
 final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
 
   def schema: StructType = storage.logicalSchema
-  def primaryKeys: Seq[String] = storage.primaryKeys.map(storage.logicalNameOf)
+  def primaryKeys: Seq[String] = storage.primaryKeys.map(k => storage.logicalLeafOf(Seq(k)))
   def location: String = storage.location
 
   // Column-mapping boundary (RENAME COLUMN, metadata-only): everything
   // below SpaceDataset — files, manifests, DML, CDC — speaks PHYSICAL
   // names; the public surface speaks logical. These four translators are
-  // the entire rename implementation on the data path.
-  private def renames: Map[String, String] = storage.metadata.renames
-  private def anyRenames: Boolean =
-    renames.nonEmpty || storage.metadata.nestedRenames.nonEmpty
+  // the entire rename implementation on the data path; every name goes
+  // through Storage's lookups.
 
   /** Physical frame → logical names. Nested renames apply as a
     * positional no-op cast: our scans emit struct members in canonical
     * physical order, so only names change — never data. */
   private[core] def toLogical(df: DataFrame): DataFrame =
-    if (!anyRenames) df
+    if (!storage.hasRenames) df
     else df.select(df.columns.map { c =>
       val base =
         if (storage.hasNestedRenamesUnder(c))
           col(c).cast(storage.logicalizeType(df.schema(c).dataType, Seq(c)))
         else col(c)
-      base.as(storage.logicalNameOf(c))
+      base.as(storage.logicalLeafOf(Seq(c)))
     }.toIndexedSeq: _*)
 
   /** User (logical) frame → physical names. Struct columns with nested
@@ -50,12 +48,11 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
     * positional cast would silently mis-assign members if the caller's
     * struct uses a different inner order. */
   private[core] def toPhysicalDf(df: DataFrame): DataFrame =
-    if (!anyRenames) df
+    if (!storage.hasRenames) df
     else {
-      val inv = renames.map(_.swap)
       val physFields = storage.schema.fields.map(f => f.name -> f).toMap
       df.select(df.columns.map { c =>
-        val phys = inv.getOrElse(c, c)
+        val phys = storage.physicalLeafOf(Nil, c)
         val base = physFields.get(phys) match {
           case Some(f) if storage.hasNestedRenamesUnder(phys) =>
             physStructExpr(col(c), f.dataType, Seq(phys))
@@ -81,11 +78,11 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
   }
 
   private[core] def toPhysicalCol(c: Column): Column =
-    if (!anyRenames) c
+    if (!storage.hasRenames) c
     else org.apache.spark.sql.graftshim.ColumnExpr.mapPaths(c, storage.physicalPathOf)
 
   private def toPhysicalNames(names: Seq[String]): Seq[String] =
-    names.map(storage.physicalNameOf)
+    names.map(storage.physicalLeafOf(Nil, _))
 
   /** Branch that reads and mutations target by default
     * (`set_current_branch`, reference storage.py:238-313 surface). */
@@ -352,11 +349,6 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
       dvMaxFraction: Option[Double] = None): Long = {
     require(assignments.nonEmpty, "update requires at least one assignment")
     val pkSet = primaryKeys.toSet
-    // a key addresses the top-level column of that exact name if one
-    // exists (names may legally contain dots); otherwise dots walk
-    // struct members ("meta.price")
-    def assignPath(k: String): Seq[String] =
-      if (schema.fieldNames.contains(k)) Seq(k) else k.split('.').toSeq
     assignments.keys.foreach { k =>
       // dotted keys assign struct members ("meta.price"); rows whose
       // struct is NULL stay NULL (a member update cannot materialize
@@ -366,7 +358,7 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
     }
     val ordered = assignments.toSeq.sortBy(_._1)
     for ((a, _) <- ordered; (b, _) <- ordered if a != b)
-      require(!assignPath(b).startsWith(assignPath(a)),
+      require(!columnPath(b).startsWith(columnPath(a)),
         s"conflicting assignments: $b is a member of assigned column $a")
     storage.commitTransaction(branch, ConflictPolicy.Rewrite) { pinned =>
       val physCond = toPhysicalCol(cond)
@@ -374,7 +366,7 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
       // delete rewrites files, it never mutates the pinned inputs)
       val matched = read(filter = Some(cond), version = Some(pinned.toString))
       val updated = toPhysicalDf(DmlOps.assign(matched,
-        ordered.map { case (k, v) => assignPath(k) -> v }))
+        ordered.map { case (k, v) => columnPath(k) -> v }))
       // fused: the CoW sweep and the rewritten rows share one write
       // pass (None = nothing matched: no-op, returns the current head
       // — zero matches also means zero rewritten rows)
@@ -421,50 +413,36 @@ final class SpaceDataset(val spark: SparkSession, val storage: Storage) {
     storage.removeBranch(name)
   }
 
-  /** Schema evolution: append a nullable non-key column (metadata-only;
-    * existing files null-fill on read). */
-  def addColumn(name: String, dataType: org.apache.spark.sql.types.DataType): Unit =
-    storage.addColumn(org.apache.spark.sql.types.StructField(name, dataType, nullable = true))
+  // ------------------------------------------------------------ schema
 
-  /** Schema evolution: append a nullable field INSIDE an existing struct
-    * column (metadata-only; see [[Storage.addNestedColumn]]). */
-  def addNestedColumn(
-      parentPath: Seq[String],
-      name: String,
-      dataType: org.apache.spark.sql.types.DataType): Unit =
-    storage.addNestedColumn(parentPath,
-      org.apache.spark.sql.types.StructField(name, dataType, nullable = true))
+  /** The path a column name addresses: the top-level column of exactly
+    * that name wins (names may contain dots); otherwise dots walk struct
+    * members, so "meta.price" is member `price` of struct `meta`
+    * ([[Storage.columnPath]] over the logical schema). */
+  private def columnPath(name: String): Seq[String] = Storage.columnPath(schema, name)
 
-  /** Schema evolution: RENAME COLUMN, metadata-only (see
-    * [[Storage.renameColumn]]). Time travel and CDC read every snapshot
-    * under the CURRENT logical names. */
-  def renameColumn(from: String, to: String): Unit = storage.renameColumn(from, to)
-
-  /** Schema evolution: DROP COLUMN, metadata-only (see
-    * [[Storage.dropColumn]]); the bytes are shed by the next
-    * compact/cluster rewrite or GC'd with the file. */
-  def dropColumn(name: String): Unit = storage.dropColumn(name)
-
-  /** Schema evolution: RENAME a struct member, metadata-only (see
-    * [[Storage.renameNestedColumn]]). `path` is the member's current
-    * LOGICAL dotted path, e.g. `Seq("meta", "band")`. */
-  def renameNestedColumn(path: Seq[String], to: String): Unit =
-    storage.renameNestedColumn(path, to)
-
-  /** Schema evolution: DROP a struct member (subtree), metadata-only
-    * (see [[Storage.dropNestedColumn]]). */
-  def dropNestedColumn(path: Seq[String]): Unit = storage.dropNestedColumn(path)
-
-  /** Schema evolution: TYPE WIDENING, metadata-only (see
-    * [[Storage.widenColumn]]) — int→bigint, int→double, float→double.
-    * `name` addresses the top-level column of that exact name if one
-    * exists; otherwise dots walk struct members (`meta.price`), the
-    * same rule [[update]] uses. */
-  def widenColumn(name: String, newType: org.apache.spark.sql.types.DataType): Unit = {
-    val path =
-      if (schema.fieldNames.contains(name)) Seq(name) else name.split('.').toSeq
-    storage.widenColumn(path, newType)
+  /** ADD COLUMN (see [[Storage.addColumn]]): a nullable column, or with
+    * a dotted `name` a nullable member of an existing struct; existing
+    * files null-fill it on read. */
+  def addColumn(name: String, dataType: org.apache.spark.sql.types.DataType): Unit = {
+    val path = columnPath(name)
+    storage.addColumn(path.init,
+      org.apache.spark.sql.types.StructField(path.last, dataType, nullable = true))
   }
+
+  /** RENAME COLUMN (see [[Storage.renameColumn]]): `to` is the new leaf
+    * name. Time travel and CDC read every snapshot under the CURRENT
+    * logical names. */
+  def renameColumn(name: String, to: String): Unit = storage.renameColumn(columnPath(name), to)
+
+  /** DROP COLUMN (see [[Storage.dropColumn]]); the bytes are shed by the
+    * next compact/cluster rewrite or GC'd with the file. */
+  def dropColumn(name: String): Unit = storage.dropColumn(columnPath(name))
+
+  /** TYPE WIDENING (see [[Storage.widenColumn]]): int→bigint,
+    * int→double, float→double. */
+  def widenColumn(name: String, newType: org.apache.spark.sql.types.DataType): Unit =
+    storage.widenColumn(columnPath(name), newType)
 
   // ------------------------------------------------------- maintenance
 
@@ -706,7 +684,7 @@ final class MergeBuilder private[core] (ds: SpaceDataset, source: DataFrame) {
         nmbsUpdate.map { case (c, as) =>
           (ds.toPhysicalCol(c),
             as.map { case (k, v) =>
-              ds.storage.physicalNameOf(k) -> ds.toPhysicalCol(v)
+              ds.storage.physicalLeafOf(Nil, k) -> ds.toPhysicalCol(v)
             })
         })
     }

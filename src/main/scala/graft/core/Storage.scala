@@ -83,22 +83,21 @@ final class Storage(val location: String, val conf: Configuration) {
     * ([[StorageMetadata.nestedRenames]]). */
   def logicalSchema: StructType = logicalize(schema)
 
-  def logicalNameOf(physical: String): String = meta.renames.getOrElse(physical, physical)
+  /** Whether any column or struct member is renamed: the read and write
+    * boundaries skip every name translation when none is. */
+  def hasRenames: Boolean = meta.renames.nonEmpty || meta.nestedRenames.nonEmpty
 
-  /** Inverse rename lookup; identity for never-renamed columns. */
-  def physicalNameOf(logical: String): String =
-    meta.renames.collectFirst { case (p, l) if l == logical => p }.getOrElse(logical)
-
-  /** Logical leaf name of the field at a full PHYSICAL dotted path
-    * (length 1 = top-level). */
+  /** Logical leaf name of the field at a full PHYSICAL path (length 1 =
+    * top-level); identity for never-renamed fields. */
   def logicalLeafOf(physPath: Seq[String]): String =
-    if (physPath.lengthCompare(1) == 0) logicalNameOf(physPath.head)
+    if (physPath.lengthCompare(1) == 0) meta.renames.getOrElse(physPath.head, physPath.head)
     else meta.nestedRenames.getOrElse(physPath.mkString("."), physPath.last)
 
   /** Physical leaf name of the member of `parentPhys` (a physical path;
     * empty = top level) whose current logical name is `logical`. */
   def physicalLeafOf(parentPhys: Seq[String], logical: String): String =
-    if (parentPhys.isEmpty) physicalNameOf(logical)
+    if (parentPhys.isEmpty)
+      meta.renames.collectFirst { case (p, l) if l == logical => p }.getOrElse(logical)
     else {
       val prefix = parentPhys.mkString(".") + "."
       meta.nestedRenames.collectFirst {
@@ -118,9 +117,9 @@ final class Storage(val location: String, val conf: Configuration) {
     * GIVEN struct (possibly a pruned read schema), mapping any member
     * whose physical path has a rename. Descends struct spines only —
     * renames inside array/map element structs are unsupported, matching
-    * [[addNestedColumn]]'s reach. */
+    * [[addColumn]]'s reach. */
   def logicalize(st: StructType): StructType =
-    if (meta.renames.isEmpty && meta.nestedRenames.isEmpty) st
+    if (!hasRenames) st
     else logicalizeType(st, Nil).asInstanceOf[StructType]
 
   /** [[logicalize]] for a type sitting at physical path `physPath`
@@ -136,7 +135,7 @@ final class Storage(val location: String, val conf: Configuration) {
   /** Inverse of [[logicalize]]: rename fields logical→physical
     * recursively; subset-safe. */
   def physicalize(st: StructType): StructType =
-    if (meta.renames.isEmpty && meta.nestedRenames.isEmpty) st
+    if (!hasRenames) st
     else physicalizeType(st, Nil).asInstanceOf[StructType]
 
   /** [[physicalize]] for a type whose PARENT physical path is
@@ -298,195 +297,150 @@ final class Storage(val location: String, val conf: Configuration) {
   }
 
   // ------------------------------------------------------------- schema
+  //
+  // Every schema change addresses a column by its LOGICAL path: a
+  // top-level column is a path of length 1, a struct member the path of
+  // struct names down to it (Iceberg's full-name addressing). Each step
+  // resolves against the renames at its depth ([[physicalPathOf]]), and
+  // the physical struct is edited through [[Storage.editStruct]].
 
-  /** Metadata-only schema evolution: append a NULLABLE non-key column.
-    * Existing data files are untouched — reads null-fill the column
-    * (schema-on-read; field ids are never reused, [[FieldIds.assign]]
-    * continues from the consumed-id watermark). Stats/pruning are
-    * unaffected (stats exist for primary keys only, which cannot be
-    * added after creation). The whole table — every snapshot, time
-    * travel included — reads with the evolved schema. */
-  def addColumn(field: StructField): Unit = {
-    require(field.nullable, s"added column ${field.name} must be nullable " +
-      "(existing files null-fill it)")
-    update { m =>
-      require(!logicalSchema.fieldNames.contains(field.name),
-        s"column ${field.name} already exists")
-      val start = nextFieldId
-      // a name that was EVER dropped — or that is still some renamed
-      // column's PHYSICAL name — gets a generated physical name + a
-      // rename entry: old files hold data under the original name, and
-      // name-based parquet reads must never resurrect or alias those
-      // bytes into the new field
-      val taken = m.droppedColumns.contains(field.name) ||
-        schema.fieldNames.contains(field.name)
-      // the generated name must dodge live physical AND logical names
-      // and every ever-dropped name — a user column literally named
-      // "x_f7" that was dropped earlier would otherwise resurrect its
-      // bytes into the re-added field
-      val physName =
-        if (!taken) field.name
-        else Iterator.from(0)
-          .map(i => s"${field.name}_f$start" + (if (i == 0) "" else s"_$i"))
-          .find(c => !schema.fieldNames.contains(c) &&
-            !logicalSchema.fieldNames.contains(c) &&
-            !m.droppedColumns.contains(c)).get
-      val assigned = FieldIds.assign(StructType(Seq(field.copy(name = physName))), start)
-      m.copy(schemaJson = StructType(schema.fields ++ assigned.fields).json,
-        renames = if (taken) m.renames + (physName -> field.name) else m.renames,
-        maxFieldId = FieldIds.maxAssignedId(assigned) max start)
-    }
-  }
-
-  /** Metadata-only NESTED schema evolution: append a nullable field to
-    * an existing struct column (`parentPath` walks structs depth-first;
-    * its first step is a logical top-level name). Old files null-fill
-    * the field on read — Spark's parquet reader clips nested requested
-    * schemas by name — and ids come from the same never-reused watermark
-    * as top-level adds ([[FieldIds.assign]] is depth-first ready).
-    * Re-adding a name previously dropped from the same struct gets a
-    * generated physical name + a [[StorageMetadata.nestedRenames]]
-    * entry, exactly like top-level re-adds — old files' bytes for the
-    * dropped member must never resurrect into the new field. */
-  def addNestedColumn(parentPath: Seq[String], field: StructField): Unit = {
-    require(parentPath.nonEmpty, "addNestedColumn requires a parent path")
-    require(field.nullable, s"added column ${field.name} must be nullable " +
-      "(existing files null-fill it)")
-    update { m =>
-      val start = nextFieldId
-      // every step of parentPath is a LOGICAL name (a stale physical
-      // name must not silently resolve), mapped to physical level by
-      // level as the walk descends
-      def insert(st: StructType, path: Seq[String], physWalked: Seq[String])
-          : (StructType, Option[(String, String)]) =
-        path match {
-          case Seq() =>
-            val logicalHere = st.fields.map(f => logicalLeafOf(physWalked :+ f.name))
-            require(!logicalHere.contains(field.name),
-              s"column ${physWalked.mkString(".")}.${field.name} already exists")
-            val droppedKey = (physWalked :+ field.name).mkString(".")
-            // dropped before, or still occupied by a renamed-away
-            // member's physical name → generated physical name
-            val taken = m.droppedColumns.contains(droppedKey) ||
-              st.fieldNames.contains(field.name)
-            // dodge live physical and logical member names and every
-            // ever-dropped dotted key under this struct (same
-            // resurrection guard as the top-level re-add path)
-            val physLeaf =
-              if (!taken) field.name
-              else Iterator.from(0)
-                .map(i => s"${field.name}_f$start" + (if (i == 0) "" else s"_$i"))
-                .find(c => !st.fieldNames.contains(c) &&
-                  !logicalHere.contains(c) &&
-                  !m.droppedColumns.contains((physWalked :+ c).mkString("."))).get
-            val assigned = FieldIds.assign(
-              StructType(Seq(field.copy(name = physLeaf))), start).fields.head
-            (StructType(st.fields :+ assigned),
-              if (taken) Some((physWalked :+ physLeaf).mkString(".") -> field.name)
-              else None)
-          case p +: rest =>
-            val physName = physicalLeafOf(physWalked, p)
-            val idx = st.fields.indexWhere(_.name == physName)
-            // the logical-name round-trip also rejects a renamed member's
-            // STALE physical name silently resolving
-            require(idx >= 0 && logicalLeafOf(physWalked :+ physName) == p,
-              s"struct ${(physWalked :+ p).mkString(".")} not found")
-            val f = st.fields(idx)
-            f.dataType match {
-              case s: StructType =>
-                val (inner, ren) = insert(s, rest, physWalked :+ physName)
-                (StructType(st.fields.updated(idx, f.copy(dataType = inner))), ren)
-              case other => throw new IllegalArgumentException(
-                s"$p is not a struct (${other.simpleString})")
-            }
-        }
-
-      val (newSchema, renameEntry) = insert(schema, parentPath, Vector.empty)
-      // the added member consumes ids start..start+consumed-1 (the
-      // whole-schema maxAssignedId formula assumes contiguous subtree
-      // spans, which nested adds break)
-      val addedMax = start + FieldIds.consumedIds(StructType(Seq(field))) - 1
-      m.copy(schemaJson = newSchema.json,
-        nestedRenames = m.nestedRenames ++ renameEntry,
-        maxFieldId = addedMax)
-    }
-  }
-
-  /** Locate the parent struct of a LOGICAL dotted path; returns the
-    * resolved full physical path and the parent's StructType. */
-  private def resolveNested(path: Seq[String]): (Vector[String], StructType) = {
-    require(path.lengthCompare(2) >= 0, "nested path needs at least struct.member")
-    val physPath = physicalPathOf(path).toVector
-    // every step must round-trip back to its given LOGICAL name — a
-    // renamed member's stale physical name must not silently resolve
-    physPath.indices.foreach { i =>
-      require(logicalLeafOf(physPath.take(i + 1)) == path(i),
+  /** Physical path of the LOGICAL `path`. Every step must round-trip to
+    * its given logical name, so a renamed column's stale physical name
+    * never resolves. */
+  private def resolvePath(path: Seq[String]): Vector[String] = {
+    val phys = physicalPathOf(path).toVector
+    phys.indices.foreach { i =>
+      require(logicalLeafOf(phys.take(i + 1)) == path(i),
         s"column ${path.take(i + 1).mkString(".")} not found")
     }
-    var parent: StructType = schema
-    physPath.init.zip(path.init).foreach { case (phys, logical) =>
-      val idx = parent.fields.indexWhere(_.name == phys)
-      require(idx >= 0, s"struct $logical not found")
-      parent = parent.fields(idx).dataType match {
-        case s: StructType => s
-        case other => throw new IllegalArgumentException(
-          s"$logical is not a struct (${other.simpleString})")
-      }
-    }
-    require(parent.fieldNames.contains(physPath.last),
-      s"column ${path.mkString(".")} not found")
-    (physPath, parent)
+    phys
   }
 
-  /** Metadata-only NESTED RENAME: change a struct member's logical
-    * name. Same column-mapping contract as [[renameColumn]] — the
-    * physical name in data files never changes; only the boundary map
-    * ([[StorageMetadata.nestedRenames]], keyed by full physical path)
-    * does. `path` is the member's current LOGICAL dotted path. */
-  def renameNestedColumn(path: Seq[String], to: String): Unit = update { m =>
-    val (physPath, parent) = resolveNested(path)
+  /** [[Storage.editStruct]] on the current schema at physical `parent`;
+    * `logicalParent` names it in the error. */
+  private def editSchema[A](parent: Seq[String], logicalParent: Seq[String])(
+      edit: StructType => (StructType, A)): (StructType, A) =
+    Storage.editStruct(schema, parent)(edit).getOrElse(throw new IllegalArgumentException(
+      s"no struct column ${logicalParent.mkString(".")}"))
+
+  /** The existing column at LOGICAL `path`: its physical path and the
+    * struct holding it. */
+  private def locate(path: Seq[String]): (Vector[String], StructType) = {
+    require(path.nonEmpty, "empty column path")
+    val phys = resolvePath(path)
+    val parent = editSchema(phys.init, path.init)(st => (st, st))._2
+    require(parent.fieldNames.contains(phys.last), s"column ${path.mkString(".")} not found")
+    (phys, parent)
+  }
+
+  /** Edit the rename map that holds the entry for physical path
+    * `physPath`: [[StorageMetadata.renames]] at depth 1,
+    * [[StorageMetadata.nestedRenames]] below. Both key an entry by the
+    * dotted physical path. */
+  private def editRenames(m: StorageMetadata, physPath: Seq[String])(
+      edit: Map[String, String] => Map[String, String]): StorageMetadata =
+    if (physPath.lengthCompare(1) == 0) m.copy(renames = edit(m.renames))
+    else m.copy(nestedRenames = edit(m.nestedRenames))
+
+  /** Metadata-only ADD COLUMN: append a NULLABLE field to the struct at
+    * LOGICAL `parent` (empty = the top level). Existing data files are
+    * untouched: reads null-fill the field (schema-on-read; Spark's
+    * parquet reader clips nested requested schemas by name). Field ids
+    * are never reused: [[FieldIds.assign]] continues from the
+    * consumed-id watermark. The whole table, every snapshot and time
+    * travel included, reads with the evolved schema. Stats fields are
+    * declared at creation, so an added column carries none. */
+  def addColumn(parent: Seq[String], field: StructField): Unit = {
+    require(field.nullable, s"added column ${field.name} must be nullable " +
+      "(existing files null-fill it)")
+    update { m =>
+      val parentPhys = resolvePath(parent)
+      val start = nextFieldId
+      val dropped = (leaf: String) =>
+        m.droppedColumns.contains((parentPhys :+ leaf).mkString("."))
+      val (newSchema, physLeaf) = editSchema(parentPhys, parent) { st =>
+        val logicalHere = st.fields.map(f => logicalLeafOf(parentPhys :+ f.name))
+        require(!logicalHere.contains(field.name),
+          s"column ${(parent :+ field.name).mkString(".")} already exists")
+        // a name that was EVER dropped here, or that is still a renamed
+        // field's PHYSICAL name, gets a generated physical name and a
+        // rename entry: old files hold data under the original name, and
+        // name-based parquet reads must never resurrect or alias those
+        // bytes into the new field. The generated name dodges live
+        // physical and logical names and every ever-dropped name (a
+        // dropped user field literally named "x_f7" would otherwise
+        // resurrect its bytes into the re-added field).
+        val physLeaf =
+          if (!dropped(field.name) && !st.fieldNames.contains(field.name)) field.name
+          else Iterator.from(0)
+            .map(i => s"${field.name}_f$start" + (if (i == 0) "" else s"_$i"))
+            .find(c => !st.fieldNames.contains(c) && !logicalHere.contains(c) &&
+              !dropped(c)).get
+        val assigned = FieldIds.assign(StructType(Seq(field.copy(name = physLeaf))), start)
+        (StructType(st.fields ++ assigned.fields), physLeaf)
+      }
+      val key = (parentPhys :+ physLeaf).mkString(".")
+      val renamed =
+        if (physLeaf == field.name) m
+        else editRenames(m, parentPhys :+ physLeaf)(_ + (key -> field.name))
+      // the added field consumes ids start..start+consumed-1 (the
+      // whole-schema maxAssignedId formula assumes contiguous subtree
+      // spans, which nested adds break)
+      renamed.copy(schemaJson = newSchema.json,
+        maxFieldId = start + FieldIds.consumedIds(StructType(Seq(field))) - 1)
+    }
+  }
+
+  /** Metadata-only RENAME COLUMN (column-mapping "name mode"): data
+    * files keep the physical name forever; only the rename entry, keyed
+    * by the full physical path, changes. Pruning is untouched because
+    * manifest stats are keyed by FIELD ID, not name. `path` is the
+    * column's current LOGICAL path. */
+  def renameColumn(path: Seq[String], to: String): Unit = update { m =>
+    val (phys, parent) = locate(path)
     require(path.last != to, "rename to the same name")
-    val parentPhys = physPath.init
-    val logicalSiblings = parent.fields.map(f => logicalLeafOf(parentPhys :+ f.name))
+    val logicalSiblings = parent.fields.map(f => logicalLeafOf(phys.init :+ f.name))
     require(!logicalSiblings.contains(to),
       s"column ${(path.init :+ to).mkString(".")} already exists")
-    // a new logical name may not shadow a DIFFERENT member's physical
-    // name either — the write boundary resolves logical→physical by name
-    require(to == physPath.last || !parent.fieldNames.contains(to),
-      s"$to collides with an existing physical member of ${path.init.mkString(".")}")
-    val key = physPath.mkString(".")
-    m.copy(nestedRenames =
-      if (to == physPath.last) m.nestedRenames - key // renamed back
-      else m.nestedRenames - key + (key -> to))
+    // a new logical name may not shadow a DIFFERENT field's physical
+    // name either: writes resolve logical→physical by name
+    require(to == phys.last || !parent.fieldNames.contains(to),
+      s"$to collides with an existing physical column name")
+    val key = phys.mkString(".")
+    editRenames(m, phys)(r =>
+      if (to == phys.last) r - key // renamed back to the original
+      else r + (key -> to))
   }
 
-  /** Metadata-only NESTED DROP: remove a struct member (subtree) from
-    * the schema. Reads stop requesting it (name-based parquet clipping
-    * sheds the bytes), its ids are retired via the
-    * [[StorageMetadata.maxFieldId]] high-water mark, and its physical
-    * path joins [[StorageMetadata.droppedColumns]] so a later re-add of
-    * the same name can never resurrect old files' bytes. `path` is the
-    * member's current LOGICAL dotted path. */
-  def dropNestedColumn(path: Seq[String]): Unit = update { m =>
-    val (physPath, parent) = resolveNested(path)
-    require(parent.fields.length > 1,
-      s"cannot drop the last member of struct ${path.init.mkString(".")} " +
-        "(drop the struct column instead)")
-    val key = physPath.mkString(".")
-    def remove(st: StructType, steps: Seq[String]): StructType = steps match {
-      case Seq(leaf) => StructType(st.fields.filterNot(_.name == leaf))
-      case p +: rest =>
-        val idx = st.fields.indexWhere(_.name == p)
-        val f = st.fields(idx)
-        StructType(st.fields.updated(idx, f.copy(dataType =
-          remove(f.dataType.asInstanceOf[StructType], rest))))
+  /** Metadata-only DROP COLUMN: the field (subtree) leaves the schema.
+    * Reads stop requesting it (compaction/clustering rewrites shed the
+    * bytes), its ids are retired forever via
+    * [[StorageMetadata.maxFieldId]], its stats and rename entries are
+    * cleaned up, and its physical path joins
+    * [[StorageMetadata.droppedColumns]] so a later re-add of the same
+    * name never resurrects old files' bytes. A drop may not empty its
+    * parent, and a top-level column the layout names (primary key,
+    * record field, bucket or write-cluster column) cannot be dropped.
+    * `path` is the column's current LOGICAL path. */
+  def dropColumn(path: Seq[String]): Unit = update { m =>
+    val (phys, parent) = locate(path)
+    val name = path.mkString(".")
+    val key = phys.mkString(".")
+    if (phys.lengthCompare(1) == 0) {
+      require(!m.primaryKeys.contains(key), s"cannot drop primary key $name")
+      require(!m.recordFields.contains(key), s"cannot drop record field $name")
+      require(!m.bucketColumns.contains(key), s"cannot drop bucket column $name")
+      require(!m.writeClusterBy.contains(key), s"cannot drop write-cluster column $name")
     }
-    m.copy(
-      schemaJson = remove(schema, physPath).json,
-      statsFields = m.statsFields.filterNot(s =>
-        s == key || s.startsWith(key + ".")),
-      nestedRenames = m.nestedRenames.filterNot { case (p, _) =>
-        p == key || p.startsWith(key + ".") },
+    require(parent.fields.length > 1, s"cannot drop $name: a drop may not empty its " +
+      (if (path.lengthCompare(1) == 0) "table" else s"struct ${path.init.mkString(".")}"))
+    val (newSchema, _) = editSchema(phys.init, path.init)(st =>
+      (StructType(st.fields.filterNot(_.name == phys.last)), ()))
+    val cleaned = editRenames(m, phys)(_ - key)
+    cleaned.copy(
+      schemaJson = newSchema.json,
+      statsFields = m.statsFields.filterNot(s => s == key || s.startsWith(key + ".")),
+      nestedRenames = cleaned.nestedRenames.filterNot(_._1.startsWith(key + ".")),
       maxFieldId = math.max(m.maxFieldId, FieldIds.maxAssignedId(schema)),
       droppedColumns = (m.droppedColumns :+ key).distinct)
   }
@@ -514,103 +468,41 @@ final class Storage(val location: String, val conf: Configuration) {
     * with recreate guidance instead of truncating silently
     * ([[graft.views.AggregateView]], ADVICE r11).
     *
-    * `path` is a LOGICAL dotted path (length 1 = top-level). */
+    * `path` is the column's current LOGICAL path. */
   def widenColumn(path: Seq[String], newType: DataType): Unit = update { m =>
-    require(path.nonEmpty, "widenColumn requires a column path")
-    val physPath = physicalPathOf(path).toVector
-    physPath.indices.foreach { i =>
-      require(logicalLeafOf(physPath.take(i + 1)) == path(i),
-        s"column ${path.take(i + 1).mkString(".")} not found")
-    }
-    if (physPath.lengthCompare(1) == 0) {
-      val phys = physPath.head
-      require(!m.recordFields.contains(phys),
-        s"cannot widen record field ${path.head}")
-      require(!m.bucketColumns.contains(phys),
-        s"cannot widen bucket column ${path.head}: the bucket hash of the " +
+    val (phys, _) = locate(path)
+    val name = path.mkString(".")
+    if (phys.lengthCompare(1) == 0) {
+      require(!m.recordFields.contains(phys.head), s"cannot widen record field $name")
+      require(!m.bucketColumns.contains(phys.head),
+        s"cannot widen bucket column $name: the bucket hash of the " +
           "widened type differs, which would break the bucket layout")
     }
-    def widen(st: StructType, steps: Seq[String], walked: Seq[String]): StructType =
-      steps match {
-        case Seq(leaf) =>
-          val idx = st.fields.indexWhere(_.name == leaf)
-          require(idx >= 0, s"column ${path.mkString(".")} not found")
-          val f = st.fields(idx)
-          val ok = (f.dataType, newType) match {
-            case (org.apache.spark.sql.types.IntegerType,
-                  org.apache.spark.sql.types.LongType) => true
-            case (org.apache.spark.sql.types.IntegerType,
-                  org.apache.spark.sql.types.DoubleType) => true
-            case (org.apache.spark.sql.types.FloatType,
-                  org.apache.spark.sql.types.DoubleType) => true
-            case _ => false
-          }
-          require(ok, s"unsupported type widening ${f.dataType.simpleString} -> " +
-            s"${newType.simpleString} for ${path.mkString(".")} (supported: " +
-            "int->bigint, int->double, float->double)")
-          // copy keeps the field-id metadata: stats/pruning stay keyed
-          StructType(st.fields.updated(idx, f.copy(dataType = newType)))
-        case p +: rest =>
-          val idx = st.fields.indexWhere(_.name == p)
-          require(idx >= 0, s"struct ${(walked :+ p).mkString(".")} not found")
-          val f = st.fields(idx)
-          f.dataType match {
-            case s: StructType =>
-              StructType(st.fields.updated(idx,
-                f.copy(dataType = widen(s, rest, walked :+ p))))
-            case other => throw new IllegalArgumentException(
-              s"$p is not a struct (${other.simpleString})")
-          }
+    val (newSchema, _) = editSchema(phys.init, path.init) { st =>
+      val idx = st.fieldNames.indexOf(phys.last)
+      val f = st.fields(idx)
+      val ok = (f.dataType, newType) match {
+        case (org.apache.spark.sql.types.IntegerType,
+              org.apache.spark.sql.types.LongType) => true
+        case (org.apache.spark.sql.types.IntegerType,
+              org.apache.spark.sql.types.DoubleType) => true
+        case (org.apache.spark.sql.types.FloatType,
+              org.apache.spark.sql.types.DoubleType) => true
+        case _ => false
       }
-    m.copy(schemaJson = widen(schema, physPath, Vector.empty).json)
+      require(ok, s"unsupported type widening ${f.dataType.simpleString} -> " +
+        s"${newType.simpleString} for $name (supported: " +
+        "int->bigint, int->double, float->double)")
+      // copy keeps the field-id metadata: stats/pruning stay keyed
+      (StructType(st.fields.updated(idx, f.copy(dataType = newType))), ())
+    }
+    m.copy(schemaJson = newSchema.json)
   }
 
   /** First field id not yet handed out: past both the live schema's ids
     * and the high-water mark left by dropped columns (never reuse). */
   private def nextFieldId: Int =
     math.max(meta.maxFieldId, FieldIds.maxAssignedId(schema)) + 1
-
-  /** Metadata-only RENAME COLUMN (column-mapping "name mode"): data
-    * files keep the physical name forever; only the boundary mapping in
-    * [[StorageMetadata.renames]] changes. Pruning is untouched because
-    * manifest stats are keyed by FIELD ID, not name. `from` is the
-    * current logical name. */
-  def renameColumn(from: String, to: String): Unit = update { m =>
-    val phys = physicalNameOf(from)
-    require(schema.fieldNames.contains(phys), s"column $from not found")
-    require(from != to, "rename to the same name")
-    val logicalNames = logicalSchema.fieldNames.toSet
-    require(!logicalNames.contains(to), s"column $to already exists")
-    // a new logical name may not shadow a DIFFERENT column's physical
-    // name either — appends resolve logical→physical by name
-    require(to == phys || !schema.fieldNames.contains(to),
-      s"$to collides with an existing physical column name")
-    m.copy(renames =
-      if (to == phys) m.renames - phys // renamed back to the original
-      else m.renames - phys + (phys -> to))
-  }
-
-  /** Metadata-only DROP COLUMN: the field leaves the schema (reads stop
-    * requesting it; compaction/clustering rewrites shed the bytes), its
-    * id is retired forever via [[StorageMetadata.maxFieldId]], and its
-    * stats/rename entries are cleaned up. Primary keys and record fields
-    * cannot be dropped. `name` is the current logical name. */
-  def dropColumn(name: String): Unit = update { m =>
-    val phys = physicalNameOf(name)
-    require(schema.fieldNames.contains(phys), s"column $name not found")
-    require(!m.primaryKeys.contains(phys), s"cannot drop primary key $name")
-    require(!m.recordFields.contains(phys), s"cannot drop record field $name")
-    require(!m.bucketColumns.contains(phys), s"cannot drop bucket column $name")
-    require(schema.fields.length > 1, "cannot drop the last column")
-    m.copy(
-      schemaJson = StructType(schema.fields.filterNot(_.name == phys)).json,
-      statsFields = m.statsFields.filterNot(s =>
-        s == phys || s.startsWith(phys + ".")),
-      renames = m.renames - phys,
-      nestedRenames = m.nestedRenames.filterNot(_._1.startsWith(phys + ".")),
-      maxFieldId = math.max(m.maxFieldId, FieldIds.maxAssignedId(schema)),
-      droppedColumns = (m.droppedColumns :+ phys).distinct)
-  }
 
   // --------------------------------------------------------------- refs
 
@@ -1044,6 +936,33 @@ final class Storage(val location: String, val conf: Configuration) {
 }
 
 object Storage {
+
+  /** A column name as a path: the top-level column of exactly that
+    * name wins (names may contain dots); otherwise dots walk struct
+    * members (`meta.price`). Never empty. */
+  private[core] def columnPath(schema: StructType, name: String): Seq[String] =
+    if (schema.fieldNames.contains(name)) Seq(name) else name.split("\\.", -1).toSeq
+
+  /** The one struct-path walker: descend `parent` (struct member names;
+    * empty = the top level) from `st`, hand the struct found there to
+    * `edit`, and rebuild the spine around the struct it returns (an
+    * unchanged struct is returned as is). None when a step is missing
+    * or not a struct. */
+  private[core] def editStruct[A](st: StructType, parent: Seq[String])(
+      edit: StructType => (StructType, A)): Option[(StructType, A)] =
+    parent match {
+      case Seq() => Some(edit(st))
+      case p +: rest =>
+        val idx = st.fields.indexWhere(_.name == p)
+        if (idx < 0) None
+        else st.fields(idx).dataType match {
+          case s: StructType => editStruct(s, rest)(edit).map { case (inner, a) =>
+            (if (inner eq s) st
+             else StructType(st.fields.updated(idx, st.fields(idx).copy(dataType = inner))), a)
+          }
+          case _ => None
+        }
+    }
 
   /** `rel` resolved against the table root; absolute paths and URIs
     * (zero-copy-ingested external files) pass through. */

@@ -314,7 +314,7 @@ object StorageOps {
       val ds = SpaceDataset.create(s, fresh("sfnest"), nested.schema, Seq("o_orderkey"),
         statsFields = Seq("meta.price"))
       ds.append(nested.repartitionByRange(8, col("meta.price")))
-      ds.renameNestedColumn(Seq("meta", "price"), "amount")
+      ds.renameColumn("meta.price", "amount")
       val plan = ds.plan(Some(col("meta.amount") > 400000.0))
       require(plan.prunedFiles > 0,
         s"nested stats filter kept all ${plan.totalFiles} files")
@@ -672,7 +672,7 @@ object StorageOps {
         col("o_orderstatus").as("status"), col("o_totalprice").as("price")).as("meta"))
       val ds = SpaceDataset.create(s, fresh("evon"), nested.schema, Seq("o_orderkey"))
       ds.append(nested.filter(col("o_orderkey") <= 3000L))
-      ds.addNestedColumn(Seq("meta"), "band", org.apache.spark.sql.types.StringType)
+      ds.addColumn("meta.band", org.apache.spark.sql.types.StringType)
       ds.append(nested.filter(col("o_orderkey") > 3000L)
         .withColumn("meta", struct(col("meta.status").as("status"),
           col("meta.price").as("price"),
@@ -739,10 +739,9 @@ object StorageOps {
         col("o_orderstatus").as("status"), col("o_totalprice").as("price")).as("meta"))
       val ds = SpaceDataset.create(s, fresh("evren"), nested.schema, Seq("o_orderkey"))
       ds.append(nested.filter(col("o_orderkey") <= 3000L))
-      ds.renameNestedColumn(Seq("meta", "price"), "amount")
-      ds.dropNestedColumn(Seq("meta", "status"))
-      ds.addNestedColumn(Seq("meta"), "status",
-        org.apache.spark.sql.types.StringType)
+      ds.renameColumn("meta.price", "amount")
+      ds.dropColumn("meta.status")
+      ds.addColumn("meta.status", org.apache.spark.sql.types.StringType)
       ds.append(nested.filter(col("o_orderkey") > 3000L)
         .select(col("o_orderkey"), struct(
           col("meta.price").as("amount"), col("meta.status").as("status")).as("meta")))

@@ -284,12 +284,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
     // persists immediately, so a rejected later change must not leave
     // the earlier ones committed (the TableCatalog contract is that a
     // rejected change means none were applied — and a half-applied
-    // multi-change ALTER cannot be safely re-run). Top-level name
-    // existence/collision is SIMULATED through the change sequence, so
-    // e.g. DROP COLUMNS (a, no_such) rejects before dropping `a`;
-    // nested paths rely on the storage layer's own checks (a multi-
-    // change nested ALTER is the one shape that can still half-apply).
-    val names = scala.collection.mutable.Set[String](ds.schema.fieldNames.toIndexedSeq: _*)
+    // multi-change ALTER cannot be safely re-run). Column existence and
+    // collision are SIMULATED through the change sequence over every
+    // logical column path (the empty path is the table itself), so e.g.
+    // DROP COLUMNS (a, no_such) rejects before dropping `a`.
+    val paths = scala.collection.mutable.Set[Seq[String]](Seq.empty)
+    def collect(st: StructType, prefix: Seq[String]): Unit = st.fields.foreach { f =>
+      paths += prefix :+ f.name
+      f.dataType match {
+        case s: StructType => collect(s, prefix :+ f.name)
+        case _ =>
+      }
+    }
+    collect(ds.schema, Vector.empty)
+    def requireColumn(p: Seq[String]): Unit =
+      require(paths.contains(p), s"no such column ${p.mkString(".")}")
     val skip = scala.collection.mutable.Set[Int]() // IF EXISTS no-ops
     changes.zipWithIndex.foreach { case (c, i) => c match {
       case add: TableChange.AddColumn =>
@@ -298,37 +307,37 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
         // instead of silently creating a nullable column; likewise a
         // position spec (AFTER/FIRST), which metadata-only evolution
         // appends at the end, must not silently land elsewhere
+        val p = add.fieldNames.toSeq
         require(add.isNullable,
-          s"ADD COLUMN ${add.fieldNames.mkString(".")} NOT NULL is " +
+          s"ADD COLUMN ${p.mkString(".")} NOT NULL is " +
             "unsupported: existing rows null-fill the new column")
         require(add.position == null,
-          s"ADD COLUMN ${add.fieldNames.mkString(".")} with a position " +
+          s"ADD COLUMN ${p.mkString(".")} with a position " +
             "(FIRST/AFTER) is unsupported: added columns append at the end")
-        if (add.fieldNames.length == 1) {
-          require(!names.contains(add.fieldNames()(0)),
-            s"column ${add.fieldNames()(0)} already exists")
-          names += add.fieldNames()(0)
-        }
+        requireColumn(p.init)
+        require(!paths.contains(p), s"column ${p.mkString(".")} already exists")
+        paths += p
       case ren: TableChange.RenameColumn =>
-        if (ren.fieldNames.length == 1) {
-          require(names.contains(ren.fieldNames()(0)),
-            s"no such column ${ren.fieldNames()(0)}")
-          require(!names.contains(ren.newName),
-            s"column ${ren.newName} already exists")
-          names -= ren.fieldNames()(0)
-          names += ren.newName
-        }
+        val p = ren.fieldNames.toSeq
+        val to = p.init :+ ren.newName
+        requireColumn(p)
+        require(!paths.contains(to), s"column ${to.mkString(".")} already exists")
+        val moved = paths.filter(_.startsWith(p))
+        paths --= moved
+        paths ++= moved.map(to ++ _.drop(p.length))
       case del: TableChange.DeleteColumn =>
-        if (del.fieldNames.length == 1) {
-          if (names.contains(del.fieldNames()(0))) names -= del.fieldNames()(0)
-          else if (del.ifExists) { skip += i; () }
-          else throw new IllegalArgumentException(
-            s"no such column ${del.fieldNames()(0)} (use IF EXISTS to ignore)")
+        val p = del.fieldNames.toSeq
+        if (paths.contains(p)) {
+          paths --= paths.filter(_.startsWith(p))
+          // a drop may not empty its parent (Storage.dropColumn)
+          require(paths.exists(q => q.length == p.length && q.init == p.init),
+            s"cannot drop ${p.mkString(".")}: a drop may not empty its parent")
         }
+        else if (del.ifExists) { skip += i; () }
+        else throw new IllegalArgumentException(
+          s"no such column ${p.mkString(".")} (use IF EXISTS to ignore)")
       case upd: TableChange.UpdateColumnType =>
-        if (upd.fieldNames.length == 1)
-          require(names.contains(upd.fieldNames()(0)),
-            s"no such column ${upd.fieldNames()(0)}")
+        requireColumn(upd.fieldNames.toSeq)
       case other =>
         throw new UnsupportedOperationException(s"unsupported ALTER TABLE change: $other")
     }}
@@ -339,16 +348,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
           if (add.comment == null) org.apache.spark.sql.types.Metadata.empty
           else new org.apache.spark.sql.types.MetadataBuilder()
             .putString("comment", add.comment).build()
-        val field = org.apache.spark.sql.types.StructField(
-          add.fieldNames.last, add.dataType, nullable = true, meta)
-        if (add.fieldNames.length == 1) ds.storage.addColumn(field)
-        else ds.storage.addNestedColumn(add.fieldNames.init.toSeq, field)
+        ds.storage.addColumn(add.fieldNames.init.toSeq, org.apache.spark.sql.types.StructField(
+          add.fieldNames.last, add.dataType, nullable = true, meta))
       case ren: TableChange.RenameColumn =>
-        if (ren.fieldNames.length == 1) ds.renameColumn(ren.fieldNames()(0), ren.newName)
-        else ds.renameNestedColumn(ren.fieldNames.toSeq, ren.newName)
+        ds.storage.renameColumn(ren.fieldNames.toSeq, ren.newName)
       case del: TableChange.DeleteColumn =>
-        if (del.fieldNames.length == 1) ds.dropColumn(del.fieldNames()(0))
-        else ds.dropNestedColumn(del.fieldNames.toSeq)
+        ds.storage.dropColumn(del.fieldNames.toSeq)
       case upd: TableChange.UpdateColumnType =>
         // metadata-only type widening (int->bigint, int->double,
         // float->double); Storage validates the promotion
@@ -467,15 +472,18 @@ final class GraftTable(
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.STREAMING_WRITE)
 
-  // logical-name translation lives in ONE place (SpaceDataset /
-  // logicalNameOf) — record_fields previously leaked raw physical names
+  // logical-name translation lives in ONE place (Storage's rename
+  // lookups) — record_fields previously leaked raw physical names
+  private def logicalNames(cols: Seq[String]): String =
+    cols.map(c => storage.logicalLeafOf(Seq(c))).mkString(",")
+
   override def properties(): util.Map[String, String] = Map(
     "location" -> storage.location,
     "primary_keys" -> ds.primaryKeys.mkString(","),
-    "record_fields" -> storage.recordFields.map(storage.logicalNameOf).mkString(","),
-    "bucket_columns" -> storage.metadata.bucketColumns.map(storage.logicalNameOf).mkString(","),
-    "bloom_columns" -> storage.metadata.bloomColumns.map(storage.logicalNameOf).mkString(","),
-    "write_cluster_by" -> storage.metadata.writeClusterBy.map(storage.logicalNameOf).mkString(","),
+    "record_fields" -> logicalNames(storage.recordFields),
+    "bucket_columns" -> logicalNames(storage.metadata.bucketColumns),
+    "bloom_columns" -> logicalNames(storage.metadata.bloomColumns),
+    "write_cluster_by" -> logicalNames(storage.metadata.writeClusterBy),
     "num_buckets" -> storage.metadata.numBuckets.toString,
     "bucket_counts" -> storage.metadata.bucketCounts.mkString(","),
     "provider" -> "graft",
@@ -552,26 +560,22 @@ final class GraftScanBuilder(
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
   with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
-  // Catalyst addresses this table by LOGICAL names; the parquet
-  // delegate must see PHYSICAL ones (and residual filters must go back
-  // logical, bound to the ORIGINAL attribute ids).
-  private val toPhys: Map[String, String] = storage.metadata.renames.map(_.swap)
-  private val toLog: Map[String, String] = storage.metadata.renames
-  private def anyRenames: Boolean =
-    toPhys.nonEmpty || storage.metadata.nestedRenames.nonEmpty
-
-  /** Rename an expression's attributes logical→physical (`phys=true`)
-    * or back. Attribute names AND struct dataTypes translate (nested
+  /** Catalyst addresses this table by LOGICAL names; the parquet
+    * delegate must see PHYSICAL ones (and residual filters must go back
+    * logical, bound to the ORIGINAL attribute ids). So rename an
+    * expression's attributes logical→physical (`phys=true`) or back,
+    * through Storage's rename lookups. Attribute names AND struct dataTypes translate (nested
     * renames live inside the type); transformUp so a GetStructField's
     * name hint can be re-derived from its already-translated child —
     * the parquet pushdown builds dotted V2 references from those. */
   private def renameExpr(
       e: org.apache.spark.sql.catalyst.expressions.Expression,
       phys: Boolean): org.apache.spark.sql.catalyst.expressions.Expression =
-    if (!anyRenames) e
+    if (!storage.hasRenames) e
     else e.transformUp {
       case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-        val name = (if (phys) toPhys else toLog).getOrElse(a.name, a.name)
+        val name =
+          if (phys) storage.physicalLeafOf(Nil, a.name) else storage.logicalLeafOf(Seq(a.name))
         val dt =
           if (phys) storage.physicalizeType(a.dataType, Seq(name))
           else storage.logicalizeType(a.dataType, Seq(a.name))
@@ -598,45 +602,24 @@ final class GraftScanBuilder(
       .map(renameExpr(_, phys = false))
   }
 
-  /** EXPLAIN displays pushedFilters(); the delegate speaks PHYSICAL
-    * column names while the rest of the plan speaks logical ones — on a
-    * renamed table the stale pre-rename names would mislead anyone
-    * debugging pushdown, so translate references back (top-level
-    * segment; nested renames live inside the translated struct types). */
-  override def pushedFilters(): Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
-    if (!anyRenames) delegate.pushedFilters
-    else delegate.pushedFilters.map(renameV2(_)
-      .asInstanceOf[org.apache.spark.sql.connector.expressions.filter.Predicate])
-
-  private def renameV2(e: org.apache.spark.sql.connector.expressions.Expression)
-      : org.apache.spark.sql.connector.expressions.Expression = e match {
-    case f: org.apache.spark.sql.connector.expressions.FieldReference =>
-      val parts = f.fieldNames.toIndexedSeq
-      val head = toLog.getOrElse(parts.head, parts.head)
-      if (head == parts.head) f
-      else org.apache.spark.sql.connector.expressions.FieldReference(head +: parts.tail)
-    case p: org.apache.spark.sql.connector.expressions.filter.Predicate =>
-      new org.apache.spark.sql.connector.expressions.filter.Predicate(
-        p.name, p.children.map(renameV2))
-    case g: org.apache.spark.sql.connector.expressions.GeneralScalarExpression =>
-      new org.apache.spark.sql.connector.expressions.GeneralScalarExpression(
-        g.name, g.children.map(renameV2))
-    case other => other
-  }
+  /** The delegate's predicates, in PHYSICAL names (EXPLAIN prints the
+    * delegate scan's own description, which speaks them too). */
+  override def pushedFilters: Array[org.apache.spark.sql.connector.expressions.filter.Predicate] =
+    delegate.pushedFilters
 
   private var aggPushed = false
   private var filtersPushed = false
 
   override def pushAggregation(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    val pushed = !anyRenames && delegate.pushAggregation(aggregation)
+    val pushed = !storage.hasRenames && delegate.pushAggregation(aggregation)
     if (pushed) aggPushed = true
     pushed
   }
 
   override def supportCompletePushDown(
       aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    !anyRenames && delegate.supportCompletePushDown(aggregation)
+    !storage.hasRenames && delegate.supportCompletePushDown(aggregation)
 
   override def build(): Scan = new GraftDelegatingScan(
     spark, storage, delegate.build(), options,
@@ -712,12 +695,12 @@ final class GraftDelegatingScan(
         if (bucketCounts.nonEmpty)
           storage.metadata.bucketColumns.zip(bucketCounts).map { case (c, n) =>
             org.apache.spark.sql.connector.expressions.Expressions.bucket(
-              n, storage.logicalNameOf(c))
+              n, storage.logicalLeafOf(Seq(c)))
           }.toArray
         else
           Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(
             numBuckets,
-            storage.metadata.bucketColumns.map(storage.logicalNameOf): _*))
+            storage.metadata.bucketColumns.map(c => storage.logicalLeafOf(Seq(c))): _*))
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
         transforms, bucketedBatch.partitions.length)
     } else new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)

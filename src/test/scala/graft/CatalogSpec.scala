@@ -326,7 +326,7 @@ class CatalogSpec extends AnyFunSuite {
 
     // API spelling with a dotted key — and it follows nested renames
     val ds = SpaceDataset.load(spark, s"$root/nupd")
-    ds.renameNestedColumn(Seq("meta", "b"), "price")
+    ds.renameColumn("meta.b", "price")
     ds.update(col("id") === 2L, Map("meta.price" -> (col("meta.price") + 0.5)))
     assert(ds.readAll().filter(col("meta.price") === 2.5).count() == 1)
     intercept[IllegalArgumentException] {

@@ -27,19 +27,22 @@ class CoreHardeningSpec extends AnyFunSuite {
 
   /** Every metadata mutation, run from a STALE handle: its edit and the
     * state it must leave. Setup: snapshot 1 holds rows 0..9 and carries
-    * tag t0 and branch b0; the concurrent append is the snapshot after. */
+    * tag t0 and branch b0; the concurrent append is the snapshot after.
+    * Each schema change runs at depth 1 and, under a `Nested` label, at
+    * depth 2. */
   private val staleMutations: Seq[(String, Storage => Unit, (Storage, Long) => Boolean)] = Seq(
-    ("addColumn", _.addColumn(StructField("c", StringType, nullable = true)),
+    ("addColumn", _.addColumn(Nil, StructField("c", StringType, nullable = true)),
       (st, _) => st.logicalSchema.fieldNames.contains("c")),
     ("addNestedColumn",
-      _.addNestedColumn(Seq("s"), StructField("c", IntegerType, nullable = true)),
+      _.addColumn(Seq("s"), StructField("c", IntegerType, nullable = true)),
       (st, _) => st.schema("s").dataType.asInstanceOf[StructType].fieldNames.contains("c")),
-    ("renameColumn", _.renameColumn("v", "w"),
+    ("renameColumn", _.renameColumn(Seq("v"), "w"),
       (st, _) => st.logicalSchema.fieldNames.toSeq == Seq("id", "w", "s")),
-    ("renameNestedColumn", _.renameNestedColumn(Seq("s", "a"), "z"),
+    ("renameNestedColumn", _.renameColumn(Seq("s", "a"), "z"),
       (st, _) => st.metadata.nestedRenames == Map("s.a" -> "z")),
-    ("dropColumn", _.dropColumn("v"), (st, _) => st.schema.fieldNames.toSeq == Seq("id", "s")),
-    ("dropNestedColumn", _.dropNestedColumn(Seq("s", "b")),
+    ("dropColumn", _.dropColumn(Seq("v")),
+      (st, _) => st.schema.fieldNames.toSeq == Seq("id", "s")),
+    ("dropNestedColumn", _.dropColumn(Seq("s", "b")),
       (st, _) => st.metadata.droppedColumns == List("s.b")),
     ("widenColumn", _.widenColumn(Seq("v"), LongType),
       (st, _) => st.schema("v").dataType == LongType),

@@ -87,7 +87,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     ds.append(nested.filter(col("doc_id") % 2 === 0))
     // rename the STRUCT column, then add a nested field under the NEW name
     ds.renameColumn("meta", "info")
-    ds.addNestedColumn(Seq("info"), "lang", StringType)
+    ds.addColumn("info.lang", StringType)
     ds.append(nested.filter(col("doc_id") % 2 =!= 0)
       .select(col("doc_id"),
         struct(col("meta.src").as("src"), lit("en").as("lang")).as("info")))
@@ -96,7 +96,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(out.filter(col("doc_id") % 2 === 0 && col("lang").isNotNull).count() == 0)
     assert(out.filter(col("doc_id") % 2 =!= 0 && col("lang") =!= "en").count() == 0)
     // the old logical name is gone
-    intercept[IllegalArgumentException] { ds.addNestedColumn(Seq("meta"), "x", StringType) }
+    intercept[IllegalArgumentException] { ds.addColumn("meta.x", StringType) }
   }
 
   test("SQL UPDATE and MERGE work through renamed columns") {

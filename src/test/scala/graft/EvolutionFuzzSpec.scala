@@ -124,12 +124,12 @@ class EvolutionFuzzSpec extends AnyFunSuite {
           ds.addColumn(n, StringType); m.top += new MField(m.freshId(), n)
         case 3 => // add member of s
           val n = pickName(m.droppedS, "m")
-          ds.addNestedColumn(Seq(m.sName), n, StringType)
+          ds.addColumn(s"${m.sName}.$n", StringType)
           m.sFields += new MField(m.freshId(), n)
         case 4 => // add member of s.t
           m.tName.foreach { t =>
             val n = pickName(m.droppedT, "n")
-            ds.addNestedColumn(Seq(m.sName, t), n, StringType)
+            ds.addColumn(s"${m.sName}.$t.$n", StringType)
             m.tFields += new MField(m.freshId(), n)
           }
         case 5 => // rename a top-level scalar
@@ -140,14 +140,14 @@ class EvolutionFuzzSpec extends AnyFunSuite {
         case 6 => // rename a member of s
           if (m.sFields.nonEmpty) {
             val f = m.sFields(rnd.nextInt(m.sFields.size)); val to = m.fresh("m")
-            ds.renameNestedColumn(Seq(m.sName, f.logical), to)
+            ds.renameColumn(s"${m.sName}.${f.logical}", to)
             m.droppedS += f.logical; f.logical = to
           }
         case 7 => // rename a member of s.t
           m.tName.foreach { t =>
             if (m.tFields.nonEmpty) {
               val f = m.tFields(rnd.nextInt(m.tFields.size)); val to = m.fresh("n")
-              ds.renameNestedColumn(Seq(m.sName, t, f.logical), to)
+              ds.renameColumn(s"${m.sName}.$t.${f.logical}", to)
               m.droppedT += f.logical; f.logical = to
             }
           }
@@ -156,7 +156,7 @@ class EvolutionFuzzSpec extends AnyFunSuite {
             val to = m.fresh("s"); ds.renameColumn(m.sName, to); m.sName = to
           } else m.tName.foreach { t =>
             val to = m.fresh("t")
-            ds.renameNestedColumn(Seq(m.sName, t), to); m.tName = Some(to)
+            ds.renameColumn(s"${m.sName}.$t", to); m.tName = Some(to)
           }
         case 9 => // drop a scalar somewhere
           rnd.nextInt(3) match {
@@ -166,22 +166,22 @@ class EvolutionFuzzSpec extends AnyFunSuite {
               m.droppedTop += m.top.remove(i).logical
             case 1 if m.sFields.size > 1 =>
               val i = rnd.nextInt(m.sFields.size)
-              ds.dropNestedColumn(Seq(m.sName, m.sFields(i).logical))
+              ds.dropColumn(s"${m.sName}.${m.sFields(i).logical}")
               m.droppedS += m.sFields.remove(i).logical
             case 2 if m.tName.isDefined && m.tFields.size > 1 =>
               val i = rnd.nextInt(m.tFields.size)
-              ds.dropNestedColumn(Seq(m.sName, m.tName.get, m.tFields(i).logical))
+              ds.dropColumn(s"${m.sName}.${m.tName.get}.${m.tFields(i).logical}")
               m.droppedT += m.tFields.remove(i).logical
             case _ =>
           }
         case 10 => // drop / re-add the whole nested struct subtree
           m.tName match {
             case Some(t) if rnd.nextInt(4) == 0 =>
-              ds.dropNestedColumn(Seq(m.sName, t))
+              ds.dropColumn(s"${m.sName}.$t")
               m.droppedS += t; m.tName = None; m.tFields.clear()
             case None =>
               val t = pickName(m.droppedS, "t"); val n0 = m.fresh("n")
-              ds.addNestedColumn(Seq(m.sName), t,
+              ds.addColumn(s"${m.sName}.$t",
                 StructType(Seq(StructField(n0, StringType))))
               m.tName = Some(t); m.tFields += new MField(m.freshId(), n0)
             case _ =>
@@ -249,8 +249,8 @@ class EvolutionFuzzSpec extends AnyFunSuite {
     val ds = SpaceDataset.create(spark, dir + "/tbl", schema, Seq("id"))
     ds.append(Seq((1L, "t1", "k1"), (2L, "t2", "k2")).toDF("id", "t", "k")
       .select(col("id"), struct(col("t"), col("k")).as("s")))
-    ds.renameNestedColumn(Seq("s", "t"), "u")
-    ds.addNestedColumn(Seq("s"), "t", StringType)
+    ds.renameColumn("s.t", "u")
+    ds.addColumn("s.t", StringType)
 
     // the renamed member still reads its old data; the re-added one is null
     assert(ds.readAll().filter(col("s").getField("u") === "t1").count() == 1)

@@ -54,7 +54,7 @@ class EvolutionSpec extends AnyFunSuite {
     ds.append(kv(1L -> "a"))
     intercept[IllegalArgumentException] { ds.addColumn("v", StringType) }
     intercept[IllegalArgumentException] {
-      ds.storage.addColumn(StructField("x", LongType, nullable = false))
+      ds.storage.addColumn(Nil, StructField("x", LongType, nullable = false))
     }
 
     ds.addColumn("score", DoubleType)
@@ -94,7 +94,7 @@ class EvolutionSpec extends AnyFunSuite {
 
     val beforeMax = ds.storage.metadata.maxFieldId max
       graft.format.FieldIds.maxAssignedId(ds.storage.schema)
-    ds.addNestedColumn(Seq("meta"), "band", StringType)
+    ds.addColumn("meta.band", StringType)
     // the nested field got a FRESH id past the watermark
     val metaField = ds.storage.schema("meta").dataType.asInstanceOf[StructType]("band")
     assert(graft.format.FieldIds.fieldId(metaField) > beforeMax)
@@ -112,9 +112,9 @@ class EvolutionSpec extends AnyFunSuite {
     assert(out.filter(col("o_orderkey") > 1000L && col("band").isNull).count() == 0)
 
     // duplicate / missing-parent / non-struct-parent all fail loudly
-    intercept[IllegalArgumentException] { ds.addNestedColumn(Seq("meta"), "band", StringType) }
-    intercept[IllegalArgumentException] { ds.addNestedColumn(Seq("nope"), "x", StringType) }
-    intercept[IllegalArgumentException] { ds.addNestedColumn(Seq("o_orderkey"), "x", StringType) }
+    intercept[IllegalArgumentException] { ds.addColumn("meta.band", StringType) }
+    intercept[IllegalArgumentException] { ds.addColumn("nope.x", StringType) }
+    intercept[IllegalArgumentException] { ds.addColumn("o_orderkey.x", StringType) }
 
     // SQL: ALTER TABLE ADD COLUMNS (meta.src STRING) through the catalog
     val cat = "gnest" + java.util.UUID.randomUUID().toString.replace("-", "").take(6)
@@ -210,6 +210,49 @@ class EvolutionSpec extends AnyFunSuite {
     // and the physical schema holds no duplicate names
     val phys = ds.storage.schema.fieldNames.toSeq
     assert(phys.distinct == phys)
+
+    // the same dodge at depth 2: a struct member whose literal name is
+    // the one generated when member "b" is re-added
+    val nds = SpaceDataset.create(spark,
+      Files.createTempDirectory("graft_dodge_n_").toString + "/tbl",
+      StructType(Seq(StructField("id", LongType, nullable = false),
+        StructField("meta", StructType(Seq(
+          StructField("a", StringType), StructField("b", StringType)))))),
+      Seq("id"))
+    nds.append(Seq((1L, "a1", "b1")).toDF("id", "a", "b")
+      .select(col("id"), struct(col("a"), col("b")).as("meta")))
+    val nDecoy = "b_f" + (math.max(nds.storage.metadata.maxFieldId,
+      graft.format.FieldIds.maxAssignedId(nds.storage.schema)) + 2)
+    nds.addColumn(s"meta.$nDecoy", StringType)
+    nds.append(Seq((2L, "a2", "b2", "d2")).toDF("id", "a", "b", nDecoy)
+      .select(col("id"), struct(col("a"), col("b"), col(nDecoy)).as("meta")))
+    nds.dropColumn(s"meta.$nDecoy")
+    nds.dropColumn("meta.b")
+
+    nds.addColumn("meta.b", StringType)
+    assert(nds.schema("meta").dataType.asInstanceOf[StructType].fieldNames.toSeq ==
+      Seq("a", "b"))
+    val nGot = nds.readAll().select(col("id"), col("meta.b")).collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)))).toSet
+    assert(nGot == Set((1L, None), (2L, None)),
+      "dropped member bytes resurrected into the re-added member")
+    val nPhys = nds.storage.schema("meta").dataType.asInstanceOf[StructType].fieldNames.toSeq
+    assert(nPhys.distinct == nPhys && !nPhys.contains(nDecoy), nPhys)
+  }
+
+  test("a write-cluster column cannot be dropped; the table keeps appending") {
+    import spark.implicits._
+    val rows = (lo: Long) => Seq((lo, "a", 3), (lo + 1, "b", 1)).toDF("id", "v", "c")
+    val ds = SpaceDataset.create(spark,
+      Files.createTempDirectory("graft_drop_wc_").toString + "/tbl",
+      rows(0L).schema, Seq("id"), writeClusterBy = Seq("c"))
+    ds.append(rows(1L))
+    intercept[IllegalArgumentException] { ds.dropColumn("c") }
+    assert(ds.schema.fieldNames.toSeq == Seq("id", "v", "c"))
+    assert(ds.storage.metadata.writeClusterBy == Seq("c"))
+    // the write-cluster repartition still resolves its column
+    ds.append(rows(10L))
+    assert(ds.countRows() == 4)
   }
 
   test("nested RENAME is metadata-only: reads, appends, DML and SQL speak the new name") {
@@ -220,7 +263,7 @@ class EvolutionSpec extends AnyFunSuite {
     val ds = SpaceDataset.create(spark, dir + "/tbl", nested.schema, Seq("o_orderkey"))
     ds.append(nested.filter(col("o_orderkey") <= 1000L))
 
-    ds.renameNestedColumn(Seq("meta", "price"), "amount")
+    ds.renameColumn("meta.price", "amount")
     assert(ds.schema("meta").dataType.asInstanceOf[StructType].fieldNames.toSeq ==
       Seq("status", "amount"))
     // physical member name in files/metadata never changes
@@ -248,9 +291,9 @@ class EvolutionSpec extends AnyFunSuite {
     assert(ds.readAll().count() == nested.count() - hi)
 
     // stale physical name no longer resolves; collisions rejected
-    intercept[IllegalArgumentException] { ds.renameNestedColumn(Seq("meta", "price"), "x") }
-    intercept[IllegalArgumentException] { ds.renameNestedColumn(Seq("meta", "amount"), "status") }
-    intercept[IllegalArgumentException] { ds.addNestedColumn(Seq("meta"), "amount", StringType) }
+    intercept[IllegalArgumentException] { ds.renameColumn("meta.price", "x") }
+    intercept[IllegalArgumentException] { ds.renameColumn("meta.amount", "status") }
+    intercept[IllegalArgumentException] { ds.addColumn("meta.amount", StringType) }
 
     // SQL surface: logical schema, nested WHERE/projection, ALTER RENAME
     val cat = "gnren" + java.util.UUID.randomUUID().toString.replace("-", "").take(6)
@@ -299,12 +342,12 @@ class EvolutionSpec extends AnyFunSuite {
       .toDF("id", "meta").select(col("id"),
         struct(col("meta._1").as("a"), col("meta._2").as("b")).as("meta")))
 
-    ds.dropNestedColumn(Seq("meta", "b"))
+    ds.dropColumn("meta.b")
     assert(ds.schema("meta").dataType.asInstanceOf[StructType].fieldNames.toSeq == Seq("a"))
     assert(ds.readAll().select("meta.*").columns.toSeq == Seq("a"))
 
     // re-add under the SAME name: old files' "b" bytes must NOT leak back
-    ds.addNestedColumn(Seq("meta"), "b", StringType)
+    ds.addColumn("meta.b", StringType)
     assert(ds.readAll().filter(col("meta.b").isNotNull).count() == 0,
       "dropped member's bytes resurrected")
     // the re-added member lives under a GENERATED physical name + mapping
@@ -317,12 +360,17 @@ class EvolutionSpec extends AnyFunSuite {
     assert(got == Set((1L, "a1", None), (2L, "a2", None), (3L, "a3", Some("b3"))))
 
     // guards: last member, unknown member, drop through SQL
-    intercept[IllegalArgumentException] { ds.dropNestedColumn(Seq("meta", "nope")) }
+    intercept[IllegalArgumentException] { ds.dropColumn("meta.nope") }
     val cat = "gndrop" + java.util.UUID.randomUUID().toString.replace("-", "").take(6)
     spark.conf.set(s"spark.sql.catalog.$cat",
       classOf[org.apache.spark.sql.graftshim.GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.location", dir)
     try {
+      // a rejected nested change applies none of the ALTER's changes
+      intercept[Exception] { spark.sql(s"ALTER TABLE $cat.tbl DROP COLUMNS (meta.b, meta.nope)") }
+      ds.refresh()
+      assert(ds.schema("meta").dataType.asInstanceOf[StructType].fieldNames.toSeq ==
+        Seq("a", "b"))
       spark.sql(s"ALTER TABLE $cat.tbl DROP COLUMN meta.b")
       ds.refresh()
       assert(ds.schema("meta").dataType.asInstanceOf[StructType].fieldNames.toSeq == Seq("a"))
